@@ -1469,10 +1469,11 @@ def write_lm_snapshot(
     concurrently — independent jobs); snapshot size is the distinct
     n-gram count (after pruning for JM, which the floor is the knob
     for). ``durable_derive=True`` (KN only) trades the single-wave
-    write shape for the write-then-read pattern so the derived
-    c{k}/scal jobs read durable t{k} parquet instead of executor-local
-    checkpoint blocks — the preemptible-cluster arm (ADVICE r12; see
-    :func:`_write_kn_snapshot`)."""
+    write shape for the write-then-read pattern so the adjusted t{k}
+    tables are durable parquet before the derived c{k}/scal jobs read
+    them — the preemptible-cluster arm (ADVICE r12). Only the adjusted
+    tables become durable: the scalar jobs still read the
+    executor-local position stream (see :func:`_write_kn_snapshot`)."""
     import os
 
     if order < 2:
@@ -1674,10 +1675,12 @@ def _write_kn_snapshot(
     snapshot build (ADVICE r12). ``durable_derive=True`` opts into the
     write-then-read pattern for very long-running builds on
     preemptible clusters: the t{k} parquet writes land FIRST and the
-    c{k}/scal derivation reads the already-durable files back, so an
-    executor loss after the t-wave only re-runs the in-flight derived
-    job (the cost is the re-added read-back barrier plus one extra
-    pass over the top-order table)."""
+    c{k} derivation reads the already-durable files back (the cost is
+    the re-added read-back barrier plus one extra pass over the
+    top-order table). Only the adjusted tables become durable: the
+    ``scal`` aggregate and the final ``n_total`` count still read the
+    executor-local localCheckpointed position stream, so an executor
+    loss after the t-wave can still fail the build there."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1709,10 +1712,10 @@ def _write_kn_snapshot(
 
     if durable_derive:
         # preemptible-cluster arm: land the t{k} parquet first (one
-        # concurrent wave from the checkpoints), then re-point every
-        # derived aggregate at the DURABLE files — from here on an
-        # executor loss can only cost the in-flight derived job, never
-        # the adjusted tables themselves
+        # concurrent wave from the checkpoints), then re-point the
+        # adjusted-table aggregates at the DURABLE files — an executor
+        # loss can no longer cost the adjusted tables themselves (scal's
+        # position-stream columns and n_total still read checkpoints)
         def _write_t(item: tuple[int, DataFrame]) -> None:
             k, df_k = item
             df_k.write.mode("overwrite").parquet(

@@ -24,27 +24,30 @@ from magicxml_spark.sinks.json_sink import write_json_array
 from magicxml_spark.sinks.xml_sink import write_simple_catalog, write_yml_catalog
 from magicxml_spark.sources.csv_source import read_csv
 from magicxml_spark.sources.json_source import read_json
-from magicxml_spark.sources import xml_source as _xml_source
+from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 from magicxml_spark.sources.xml_source import (
     read_categories,
     read_xml_records,
 )
 
 
-def flatten_xml(spark: SparkSession, path: str, dialect: str | None = None) -> DataFrame:
+def flatten_xml(
+    spark: SparkSession,
+    path: str,
+    dialect: str | None = None,
+    ckey: str | None = None,
+) -> DataFrame:
     """XML file -> flat string-typed DataFrame (dialect-dispatched).
 
     A single XML file scans as ONE partition (the XML source splits by
     file, not rowTag) — everything downstream would run serially, so an
     under-parallel scan is re-partitioned once up front. For repeated
     processing of one giant file, pre-split it on disk instead
-    (sources.xml_split.presplit_xml)."""
-    from magicxml_spark.sources.schema_registry import (
-        content_key,
-        meta_get,
-        meta_put,
-    )
+    (sources.xml_split.presplit_xml).
 
+    ``ckey`` (``schema_registry.content_key(path)``) keys the derived
+    artifacts — category paths, pivot keys — in the ingest cache; None
+    derives them afresh and caches nothing."""
     records, detected = read_xml_records(spark, path, dialect)
     target = spark.sparkContext.defaultParallelism
     if records.rdd.getNumPartitions() < max(2, target // 2):
@@ -53,11 +56,10 @@ def flatten_xml(spark: SparkSession, path: str, dialect: str | None = None) -> D
     # Q5 prune aggregate, final projection+write) — cache the typed
     # records so the XML text parses exactly once. On a re-ingest of
     # byte-identical content every derived artifact (pivot keys,
-    # category paths, prune columns) replays from the metadata cache and
+    # category paths, prune columns) replays from the ingest cache and
     # the whole conversion collapses to ONE parse+project+write pass.
     records = records.persist()
     cached = records
-    ckey = content_key(path)
     if detected == "russian":
         flat = flatten_russian_records(records)
     elif detected == "service":
@@ -65,38 +67,33 @@ def flatten_xml(spark: SparkSession, path: str, dialect: str | None = None) -> D
     else:
         paths = None
         if detected == "offer":
-            path_rows = meta_get("category_paths", ckey)
+            path_rows = INGEST_CACHE.get(ckey, "category_paths")
             if path_rows is None:
                 cats = read_categories(spark, path)
-                if not cats.isEmpty():
-                    paths = build_category_paths(cats, skip_undefined_names=True)
-                    # dimension-sized path maps replay from the driver
-                    # metadata cache on re-ingest; an oversized dimension
-                    # (same cap as read_categories' own cache,
-                    # xml_source._CATEGORY_CACHE_MAX_ROWS) stays a lazy
-                    # frame and is never collected — a catalog with
-                    # millions of categories must not OOM the driver
-                    # just to warm a convenience cache
-                    cap = _xml_source._CATEGORY_CACHE_MAX_ROWS
-                    sample = paths.limit(cap + 1).collect()
-                    if len(sample) <= cap:
-                        meta_put("category_paths", ckey, tuple(sample))
+                if cats.isEmpty():
+                    INGEST_CACHE.put(ckey, "category_paths", ())
                 else:
-                    meta_put("category_paths", ckey, ())
+                    paths = build_category_paths(cats, skip_undefined_names=True)
+                    # an oversized dimension stays a lazy frame and is
+                    # never cached — a catalog with millions of
+                    # categories must not OOM the driver just to warm
+                    # a convenience cache
+                    INGEST_CACHE.put(
+                        ckey, "category_paths", INGEST_CACHE.collect_rows(paths)
+                    )
             elif path_rows:
                 paths = spark.createDataFrame(
                     list(path_rows), "id string, category_path string"
                 )
-        pivots = meta_get("pivot_keys", ckey)
+        pivots = INGEST_CACHE.get(ckey, "pivot_keys")
         flat = flatten_offer_records(
             records, detected, category_paths=paths, pivot_keys=pivots
         )
         if pivots is None:
-            meta_put("pivot_keys", ckey, getattr(flat, "_mxs_pivot_keys", None))
+            INGEST_CACHE.put(ckey, "pivot_keys", getattr(flat, "_mxs_pivot_keys", None))
     # hand the cache handle to the caller so one-shot pipelines can
     # unpersist after their final action (long sessions don't leak)
     flat._mxs_cached = cached  # type: ignore[attr-defined]
-    flat._mxs_content_key = ckey  # type: ignore[attr-defined]
     return flat
 
 
@@ -115,19 +112,13 @@ def xml_to_csv(
     100 KB fixture run the same code and each get a sane stage width."""
     from magicxml_spark.plans.partitioning import scoped_shuffle_partitions
 
-    flat = flatten_xml(spark, src, dialect)
+    ckey = content_key(src)
+    flat = flatten_xml(spark, src, dialect, ckey=ckey)
     try:
         with scoped_shuffle_partitions(spark, flat):
-            return write_csv(
-                flat,
-                dst,
-                single_file=single_file,
-                meta_key=getattr(flat, "_mxs_content_key", None),
-            )
+            return write_csv(flat, dst, single_file=single_file, meta_key=ckey)
     finally:
-        cached = getattr(flat, "_mxs_cached", None)
-        if cached is not None:
-            cached.unpersist()
+        flat._mxs_cached.unpersist()
 
 
 def csv_to_xml(

@@ -28,6 +28,7 @@ def get_spark(
     cliff).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]" if cpus else "local[*]")
     if shuffle_partitions is None:
@@ -50,7 +51,7 @@ def get_spark(
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
         # nanos timestamp type — read as long, converted in tables.table()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -59,6 +60,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 32g: a local-mode heap sized past
+    the machine gets the JVM OOM-killed instead of spilling."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{min(ram // 2, 32 << 30) >> 20}m"
 
 
 def release_persisted_rdds(spark: SparkSession) -> int:

@@ -56,10 +56,10 @@ def write_csv(
     column list per exact input content: a re-ingest of identical bytes
     skips the prune aggregate pass — and with it the persist — leaving
     a single project+write pass."""
-    from magicxml_spark.sources.schema_registry import meta_get, meta_put
+    from magicxml_spark.sources.schema_registry import INGEST_CACHE
 
     cached = None
-    cols = meta_get("prune_cols", meta_key) if prune else None
+    cols = INGEST_CACHE.get(meta_key, "prune_cols") if prune else None
     if prune and cols is None:
         # pruning needs the Q5 all-blank aggregate (one pass) before the
         # write (second pass); without a persist both passes recompute
@@ -70,7 +70,7 @@ def write_csv(
     try:
         if prune and cols is None:
             cols = select_output_columns(df)
-            meta_put("prune_cols", meta_key, list(cols))
+            INGEST_CACHE.put(meta_key, "prune_cols", list(cols))
         out = df.select(*[_c(c) for c in cols if c in df.columns]) if prune else df
         out = normalize_for_csv(out)
         # repartition(1), NOT coalesce(1): coalesce would collapse the

@@ -25,10 +25,14 @@ late in the file AND after registration is the residual blind spot;
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import re
+import shutil
+import tempfile
 import threading
+from collections import OrderedDict
 
 from pyspark.sql.types import StructType
 
@@ -104,41 +108,100 @@ DEFAULT_REGISTRY = SchemaRegistry()
 
 
 # ---------------------------------------------------------------------------
-# Ingest metadata cache: small derived artifacts (pivot key lists, prune
-# column lists, category-path rows) keyed by EXACT file content
-# (abspath:size:mtime). Byte-identical input implies identical derived
-# metadata, so replaying these on re-ingest is a pure optimization: it
-# turns the steady-state conversion's 3 discovery passes (pivot-key
-# distinct, Q5 prune aggregate, category scan) into zero. Any content
-# change misses the key and re-derives. Bounded FIFO — dimension-sized
-# values only (callers must not cache row data proportional to input).
+# Ingest cache: everything a re-ingest of the SAME bytes can replay
+# instead of re-deriving — presplit parts, the "these bytes already parsed
+# under this schema" mark, category paths, pivot keys, pruned columns.
+# Byte-identical input implies identical derived artifacts, so a
+# steady-state re-ingest collapses to one parse+project+write pass; any
+# content change misses the key and re-derives. Values are
+# dimension-sized only, never row data proportional to the input.
 # ---------------------------------------------------------------------------
 
-_META_CACHE: dict[tuple[str, str], object] = {}
-_META_CACHE_MAX = 64
+#: largest dimension (category or path rows) collected to the driver;
+#: bigger ones stay lazy frames and are never cached
+_CATEGORY_CACHE_MAX_ROWS = 100_000
 
 
 def content_key(path: str) -> str | None:
-    """Exact-content identity for a local file: abspath:size:mtime.
-    None for non-files (directories, URLs) — callers skip caching."""
+    """Exact-content identity of a local file:
+    ``(dev, ino, size, mtime_ns, ctime_ns)``. ``cp -p``, ``rsync -a`` and
+    ``tar`` restore mtime after an in-place rewrite, but no user can set
+    ctime, so a rewrite always changes the key. None for non-files
+    (directories, URLs) — callers skip caching."""
     if not os.path.isfile(path):
         return None
     st = os.stat(path)
-    return f"{os.path.abspath(path)}:{st.st_size}:{st.st_mtime}"
+    return f"{st.st_dev}:{st.st_ino}:{st.st_size}:{st.st_mtime_ns}:{st.st_ctime_ns}"
 
 
-def meta_get(namespace: str, key: str | None):
-    if key is None:
-        return None
-    return _META_CACHE.get((namespace, key))
+class IngestCache:
+    """Thread-safe bounded LRU: content key -> {name: value}. An entry's
+    ``scratch_dir`` directories sit under one temp root that a single
+    ``atexit`` hook removes; evicting the entry deletes them (a frame
+    still reading an evicted presplit can no longer be re-scanned)."""
+
+    max_entries = 16
+    max_rows = _CATEGORY_CACHE_MAX_ROWS
+
+    def __init__(self):
+        self._entries: OrderedDict[str, dict] = OrderedDict()
+        self._lock = threading.Lock()
+        self._root: str | None = None
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, key: str | None, name):
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is None:
+                return None
+            self._entries.move_to_end(key)
+            return entry.get(name)
+
+    def put(self, key: str | None, name, value) -> None:
+        if key is not None and value is not None:
+            with self._lock:
+                self._entry(key)[name] = value
+
+    def collect_rows(self, df) -> list | None:
+        """``df``'s rows if it has at most ``max_rows`` (no more than
+        ``max_rows + 1`` ever reach the driver), else None."""
+        rows = df.limit(self.max_rows + 1).collect()
+        return rows if len(rows) <= self.max_rows else None
+
+    def scratch_dir(self, key: str) -> str:
+        """A new, empty directory deleted together with ``key``'s entry."""
+        with self._lock:
+            if self._root is None:
+                self._root = tempfile.mkdtemp(prefix="mxs_ingest_")
+                atexit.register(shutil.rmtree, self._root, ignore_errors=True)
+            entry = self._entry(key)
+            if "_dir" not in entry:
+                entry["_dir"] = tempfile.mkdtemp(dir=self._root)
+            return tempfile.mkdtemp(dir=entry["_dir"])
+
+    def clear(self) -> None:
+        with self._lock:
+            while self._entries:
+                self._evict()
+
+    def _entry(self, key: str) -> dict:
+        if key not in self._entries:
+            while len(self._entries) >= self.max_entries:
+                self._evict()
+            self._entries[key] = {}
+        self._entries.move_to_end(key)
+        return self._entries[key]
+
+    def _evict(self) -> None:
+        _, entry = self._entries.popitem(last=False)
+        if "_dir" in entry:
+            shutil.rmtree(entry["_dir"], ignore_errors=True)
 
 
-def meta_put(namespace: str, key: str | None, value) -> None:
-    if key is None or value is None:
-        return
-    if len(_META_CACHE) >= _META_CACHE_MAX:
-        _META_CACHE.pop(next(iter(_META_CACHE)))
-    _META_CACHE[(namespace, key)] = value
+#: the process-wide ingest cache (XML source, conversion plans, CSV sink)
+INGEST_CACHE = IngestCache()
 
 
 # Record-level tag/attribute probe for the drift check. Scans the head

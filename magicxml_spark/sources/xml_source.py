@@ -120,27 +120,6 @@ def detect_dialect(text: str) -> str:
     raise ValueError("Unsupported XML format, auto-detection failed.")
 
 
-def row_tag(dialect: str) -> str:
-    return _ROW_TAGS[dialect]
-
-
-# In-process presplit reuse: (abspath, size, mtime) -> parts dir. A
-# re-ingest of the SAME file bytes (the preview->convert double-read,
-# steady-state pipelines) skips re-splitting; any content change misses.
-_PRESPLIT_CACHE: dict[tuple[str, int, float], str] = {}
-
-# Content signatures that already parsed successfully under their
-# registered schema — lets the registered-schema fast path skip its
-# corruption head-probe for byte-identical re-ingests.
-_VERIFIED_CONTENT: dict[tuple[str, str], tuple[int, float]] = {}
-
-# Tiny category dimensions cached per exact file content (the rows, not
-# the plan — bounded at _CATEGORY_CACHE_MAX_ROWS). Saves a full-file
-# scan per re-ingest just to re-find ~100 <category> elements.
-_CATEGORY_CACHE: dict[tuple[str, int, float], tuple] = {}
-_CATEGORY_CACHE_MAX_ROWS = 100_000
-
-
 def read_xml_records(
     spark: SparkSession,
     path: str,
@@ -169,11 +148,10 @@ def read_xml_records(
     record tag/attribute missing from the registered schema) forces
     re-discovery, and ``refresh_schema=True`` forces it manually.
     """
-    import atexit
-    import shutil
-
     from magicxml_spark.sources.schema_registry import (
         DEFAULT_REGISTRY,
+        INGEST_CACHE,
+        content_key,
         sample_record_names,
         schema_covers,
     )
@@ -185,21 +163,15 @@ def read_xml_records(
         dialect = detect_dialect(sample)
 
     orig_path = path
-    if (
-        os.path.isfile(path)
-        and presplit_threshold
-        and os.path.getsize(path) > presplit_threshold
-    ):
+    ckey = content_key(path)
+    if ckey and presplit_threshold and os.path.getsize(path) > presplit_threshold:
         from magicxml_spark.sources.xml_split import presplit_xml
 
-        st = os.stat(path)
-        cache_key = (os.path.abspath(path), st.st_size, st.st_mtime)
-        parts_dir = _PRESPLIT_CACHE.get(cache_key)
+        parts_dir = INGEST_CACHE.get(ckey, ("parts", dialect))
         if parts_dir is None or not os.path.isdir(parts_dir):
-            parts_dir = tempfile.mkdtemp(prefix="mxs_presplit_")
-            atexit.register(shutil.rmtree, parts_dir, ignore_errors=True)
+            parts_dir = INGEST_CACHE.scratch_dir(ckey)
             presplit_xml(path, parts_dir, _ROW_TAGS[dialect])
-            _PRESPLIT_CACHE[cache_key] = parts_dir
+            INGEST_CACHE.put(ckey, ("parts", dialect), parts_dir)
         path = parts_dir
 
     key = feed_key or os.path.abspath(orig_path)
@@ -220,19 +192,14 @@ def read_xml_records(
             reader = reader.schema(schema)
         return reader.load(p)
 
-    content_sig = None
-    if os.path.isfile(orig_path):
-        st = os.stat(orig_path)
-        content_sig = (st.st_size, st.st_mtime)
-
     df = _read(path)
     if schema is not None:
         # Registered-schema fast path skipped discovery, so a feed that
         # turned corrupt since registration would silently parse to
         # all-null rows under PERMISSIVE instead of tripping the
         # corrupt-record check below. One head-row probe guards it —
-        # skipped when these exact bytes already parsed fine.
-        if _VERIFIED_CONTENT.get((dialect, key)) != content_sig:
+        # skipped when these exact bytes already parsed under this schema.
+        if INGEST_CACHE.get(ckey, ("parsed", dialect)) != schema:
             head = df.head(1)
             if not head or all(v is None for v in head[0]):
                 DEFAULT_REGISTRY.invalidate(dialect, key)
@@ -245,12 +212,10 @@ def read_xml_records(
                     feed_key,
                     refresh_schema=True,
                 )
-            if content_sig is not None:
-                _VERIFIED_CONTENT[(dialect, key)] = content_sig
+            INGEST_CACHE.put(ckey, ("parsed", dialect), schema)
     elif df.columns and df.columns != ["_corrupt_record"]:
         DEFAULT_REGISTRY.put(dialect, key, df.schema)
-        if content_sig is not None:
-            _VERIFIED_CONTENT[(dialect, key)] = content_sig
+        INGEST_CACHE.put(ckey, ("parsed", dialect), df.schema)
     if not df.columns or df.columns == ["_corrupt_record"]:
         # parse produced nothing usable -> repair and retry. Always
         # repair from the ORIGINAL file — `path` may have been swapped
@@ -273,43 +238,23 @@ def read_xml_records(
 def read_categories(spark: SparkSession, path: str) -> DataFrame:
     """Category dimension (id, parent_id, name) from <category>
     elements (reference main.py:1477-1484). Tiny table — feeds the
-    broadcast path builder (operators.category_path).
-
-    Both the discovery scan and the resolved rows are cached per exact
-    file content (path, size, mtime) — the preview->convert double-read
-    and unchanged-feed re-ingests skip the full-file pass entirely; any
-    content change misses and re-reads, so there is no drift risk. The
-    row cache is bounded (dimension tables only); oversized results
-    fall back to plain re-reads."""
+    broadcast path builder (operators.category_path). A dimension
+    within the ingest cache's row cap is collected once and returned as
+    driver-local rows, so its consumers never re-scan the file; an
+    oversized one stays a lazy frame."""
     from pyspark.sql import functions as F
 
-    from magicxml_spark.sources.schema_registry import DEFAULT_REGISTRY
+    from magicxml_spark.sources.schema_registry import INGEST_CACHE
 
     _SCHEMA = "id string, parent_id string, name string"
-    key = os.path.abspath(path)
-    sig_key = None
-    if os.path.isfile(path):
-        st = os.stat(path)
-        sig_key = (key, st.st_size, st.st_mtime)
-        key = f"{key}:{st.st_size}:{st.st_mtime}"
-        cached = _CATEGORY_CACHE.get(sig_key)
-        if cached is not None:
-            return spark.createDataFrame(list(cached), _SCHEMA)
-    schema = DEFAULT_REGISTRY.get("category", key)
-    reader = (
+    df = (
         spark.read.format("xml")
         .option("rowTag", "category")
         .option("inferSchema", "false")
+        .load(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.load(path)
-    if schema is None and df.columns:
-        DEFAULT_REGISTRY.put("category", key, df.schema)
     cols = set(df.columns)
     if "_id" not in cols:  # no <category> elements in this document
-        if sig_key is not None:
-            _cache_categories(sig_key, ())
         return spark.createDataFrame([], _SCHEMA)
     parent = (
         F.col("_parentId").cast("string")
@@ -324,20 +269,5 @@ def read_categories(spark: SparkSession, path: str) -> DataFrame:
         parent.alias("parent_id"),
         F.coalesce(name, F.lit("Undefined")).alias("name"),
     )
-    if sig_key is None:
-        return out
-    # dimension-sized results are collected once and replayed from the
-    # driver on re-ingest; oversized results stay lazy and uncached
-    rows = out.limit(_CATEGORY_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _CATEGORY_CACHE_MAX_ROWS:
-        return out
-    _cache_categories(sig_key, tuple(rows))
-    return spark.createDataFrame(list(rows), _SCHEMA) if rows else (
-        spark.createDataFrame([], _SCHEMA)
-    )
-
-
-def _cache_categories(sig_key: tuple, rows: tuple) -> None:
-    if len(_CATEGORY_CACHE) >= 16:  # bound driver memory; evict oldest
-        _CATEGORY_CACHE.pop(next(iter(_CATEGORY_CACHE)))
-    _CATEGORY_CACHE[sig_key] = rows
+    rows = INGEST_CACHE.collect_rows(out)
+    return out if rows is None else spark.createDataFrame(rows, _SCHEMA)

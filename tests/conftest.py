@@ -8,6 +8,12 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+# Session- or module-scoped fixtures must not hold persisted or
+# localCheckpoint-ed DataFrames: tests/test_oracle_parity.py's autouse
+# sweep (session.release_persisted_rdds) unpersists EVERY persistent RDD
+# in the shared session after each case. A later test reading such a
+# fixture then fails (localCheckpoint blocks cannot be recomputed) or
+# silently recomputes it (persist).
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("magicxml-tests", shuffle_partitions=8)

@@ -167,11 +167,10 @@ def test_oversized_category_dimension_stays_uncached(
     spark, outdir, tmp_path_factory, monkeypatch
 ):
     """VERDICT r3 #3: a category dimension larger than the driver cache
-    cap must NOT be collect()ed into the conversion metadata cache
-    (plans/convert.py mirrors xml_source's limit(cap+1) guard) — and the
+    cap must NOT be collect()ed into the ingest cache (the cache's
+    limit(cap+1) guard, shared with read_categories) — and the
     conversion output must be identical either way."""
-    from magicxml_spark.sources import schema_registry, xml_source
-    from magicxml_spark.sources.schema_registry import content_key, meta_get
+    from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 
     n = 8
     cats = "\n".join(
@@ -191,18 +190,17 @@ def test_oversized_category_dimension_stays_uncached(
     src.write_text(xml, encoding="utf-8")
 
     def run(tag):
-        schema_registry._META_CACHE.clear()
-        xml_source._CATEGORY_CACHE.clear()
+        INGEST_CACHE.clear()
         out = str(outdir / f"bigcat_{tag}.csv")
         xml_to_csv(spark, str(src), out, single_file=True)
         return open(out, "rb").read()
 
     baseline = run("cached")  # cap 100k: dimension cached as before
-    assert meta_get("category_paths", content_key(str(src))) is not None
+    assert INGEST_CACHE.get(content_key(str(src)), "category_paths") is not None
 
-    monkeypatch.setattr(xml_source, "_CATEGORY_CACHE_MAX_ROWS", n - 3)
+    monkeypatch.setattr(INGEST_CACHE, "max_rows", n - 3)
     capped = run("uncached")  # cap 5 < 8: must stay lazy and uncached
-    assert meta_get("category_paths", content_key(str(src))) is None
+    assert INGEST_CACHE.get(content_key(str(src)), "category_paths") is None
     assert capped == baseline
     path_col = [r for r in csv.DictReader(
         io.StringIO(capped.decode("utf-8-sig")), delimiter=";"

@@ -33,6 +33,8 @@ their first element's subtree (the reference scans every occurrence).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,6 +55,9 @@ _EXCLUDED = {
     "product": {"photos", "fabric", "features", "options"},
 }
 _DIGIT_LIKE = "^([0-9]+\\.?[0-9]*|\\.[0-9]+)$"
+# dynamic-pivot cap: unbounded distinct param keys would mean unbounded
+# columns (SURVEY §4)
+MAX_PARAM_KEYS = 1000
 
 VALUE_TAG = "_VALUE"
 
@@ -354,12 +359,61 @@ def pictures_expr(schema: T.StructType) -> Column:
     )
 
 
+def _pivot_arrays(schema: T.StructType, dialect: str) -> dict[str, Column]:
+    """The dynamic-pivot sources this schema carries, as arrays of
+    named structs: ``param`` (offer, P14) and ``fabric``/``features``
+    (product, P16)."""
+    arrays: dict[str, Column] = {}
+    if dialect == "offer":
+        # reference uses findall('.//param') — any depth
+        params, el = _find_param_array(schema)
+        if isinstance(el, T.StructType) and "_name" in el.names:
+            arrays["param"] = params
+    elif dialect == "product":
+        for holder in ("fabric", "features"):
+            if holder not in schema.names:
+                continue
+            hdt = schema[holder].dataType
+            if not isinstance(hdt, T.StructType) or "feature" not in hdt.names:
+                continue
+            fdt = hdt["feature"].dataType
+            el = fdt.elementType if isinstance(fdt, T.ArrayType) else fdt
+            if not (isinstance(el, T.StructType) and "_name" in el.names):
+                continue
+            feats = F.col(holder)["feature"]
+            arrays[holder] = feats if isinstance(fdt, T.ArrayType) else F.array(feats)
+    return arrays
+
+
+def discover_pivot_keys(records: DataFrame, dialect: str = "offer") -> dict[str, list[str]]:
+    """Distinct pivot keys per pivot source of ``records`` — one tiny
+    distinct scan each (the dynamic-pivot two-pass, SURVEY §4). Param
+    keys are trimmed and CAPPED at ``MAX_PARAM_KEYS`` in sorted order,
+    so keys beyond the cap are dropped deterministically; fabric and
+    features keys are uncapped."""
+    if dialect == "product" and "offer" in records.columns:
+        records = records.filter(F.col("offer").isNull())  # Q1
+    keys: dict[str, list[str]] = {}
+    for holder, arr in _pivot_arrays(records.schema, dialect).items():
+        if holder == "param":
+            name = F.transform(arr, lambda p: F.trim(_s(p["_name"])))
+        else:
+            name = F.transform(arr, lambda p: _s(p["_name"]))
+        distinct = (
+            records.select(F.explode(name).alias("k"))
+            .filter(F.col("k").isNotNull() & (F.col("k") != ""))
+            .distinct()
+        )
+        if holder == "param":
+            distinct = distinct.sort("k").limit(MAX_PARAM_KEYS)
+        keys[holder] = [r[0] for r in distinct.collect()]
+    return keys
+
+
 def flatten_offer_records(
     df: DataFrame,
     dialect: str = "offer",
     category_paths: DataFrame | None = None,
-    param_keys: list[str] | None = None,
-    max_param_keys: int = 1000,
     pivot_keys: dict[str, list[str]] | None = None,
 ) -> DataFrame:
     """Flatten offer/product records (reference process_offer,
@@ -367,21 +421,17 @@ def flatten_offer_records(
 
     ``category_paths``: (id, category_path) dimension from
     operators.category_path (broadcast-joined; offer dialect only).
-    ``param_keys``: distinct <param name=...> keys; computed with one
-    tiny distinct pass if not supplied (the dynamic-pivot two-pass,
-    SURVEY §4).
-    ``pivot_keys``: full {"param"/"fabric"/"features": [keys]} map —
-    supplying it skips every dynamic-pivot distinct scan (steady-state
-    re-ingest path). The keys actually used are reported back on the
-    result as ``_mxs_pivot_keys`` so callers can cache them.
+    ``pivot_keys``: {"param"/"fabric"/"features": [keys]} from
+    ``discover_pivot_keys``, which runs here when None; supplying it
+    skips every dynamic-pivot distinct scan (steady-state re-ingest).
     """
     schema: T.StructType = df.schema
     names = set(schema.names)
     excluded = _EXCLUDED.get(dialect, set())
     out = _Out()
-    used_pivot_keys: dict[str, list[str]] = {}
-    if param_keys is None and pivot_keys is not None:
-        param_keys = pivot_keys.get("param")
+    if pivot_keys is None:
+        pivot_keys = discover_pivot_keys(df, dialect)
+    pivots = _pivot_arrays(schema, dialect)
 
     # Q1: parent products containing nested <offer> are dropped
     if dialect == "product" and "offer" in names:
@@ -497,42 +547,17 @@ def flatten_offer_records(
     out.set("pictures", pics)
 
     # P14/P15/P16: param pivots (offer) / fabric+features (product)
-    params, el = (None, None)
-    if dialect == "offer":
-        # reference uses findall('.//param') — any depth
-        params, el = _find_param_array(schema)
-    if params is not None:
-        if isinstance(el, T.StructType) and "_name" in el.names:
-            if param_keys is None:
-                # dynamic-pivot distinct scan, CAPPED to protect the
-                # 100 TB path (SURVEY §4: unbounded distinct keys would
-                # mean unbounded columns) — keys beyond the cap are
-                # dropped deterministically (sorted order)
-                param_keys = [
-                    r[0]
-                    for r in df.select(
-                        F.explode(
-                            F.transform(params, lambda p: F.trim(_s(p["_name"])))
-                        ).alias("k")
-                    )
-                    .filter(F.col("k").isNotNull() & (F.col("k") != ""))
-                    .distinct()
-                    .sort("k")
-                    .limit(max_param_keys)
-                    .collect()
-                ]
-            used_pivot_keys["param"] = list(param_keys)
-            import re as _re
-
-            for key in sorted(param_keys):
-                if _re.fullmatch(r"[0-9]+\.?[0-9]*|\.[0-9]+", key):
-                    continue  # digit-named params dropped (main.py:260-261)
-                matches = F.filter(params, _name_eq(key))
-                vals = F.transform(matches, _strip_size_value(key))
-                # params dict UPDATEs offer_data (main.py:325) -> param wins
-                prior = out.cols.get(key)
-                expr = F.when(F.size(matches) > 0, F.array_join(vals, ", "))
-                out.set(key, F.coalesce(expr, prior) if prior is not None else expr)
+    if "param" in pivots:
+        params = pivots["param"]
+        for key in sorted(pivot_keys.get("param", ())):
+            if re.fullmatch(r"[0-9]+\.?[0-9]*|\.[0-9]+", key):
+                continue  # digit-named params dropped (main.py:260-261)
+            matches = F.filter(params, _name_eq(key))
+            vals = F.transform(matches, _strip_size_value(key))
+            # params dict UPDATEs offer_data (main.py:325) -> param wins
+            prior = out.cols.get(key)
+            expr = F.when(F.size(matches) > 0, F.array_join(vals, ", "))
+            out.set(key, F.coalesce(expr, prior) if prior is not None else expr)
 
     # P15: param_name_* passthrough RE-APPEND quirk (main.py:268-282)
     for f in schema.fields:
@@ -550,43 +575,18 @@ def flatten_offer_records(
                 ).otherwise(prior),
             )
 
-    if dialect == "product":
-        for holder, prefix in (("fabric", "fabric_"), ("features", "feature_")):
-            if holder not in names:
-                continue
-            hdt = schema[holder].dataType
-            if not isinstance(hdt, T.StructType) or "feature" not in hdt.names:
-                continue
-            fdt = hdt["feature"].dataType
-            feats = (
-                F.col(holder)["feature"]
-                if isinstance(fdt, T.ArrayType)
-                else F.array(F.col(holder)["feature"])
+    for holder, prefix in (("fabric", "fabric_"), ("features", "feature_")):
+        if holder not in pivots:
+            continue
+        for key in sorted(pivot_keys.get(holder, ())):
+            matches = F.filter(pivots[holder], _name_eq(key, trim=False))
+            vals = F.transform(
+                matches, lambda p: F.coalesce(_s(p[VALUE_TAG]), F.lit(""))
             )
-            el = fdt.elementType if isinstance(fdt, T.ArrayType) else fdt
-            if not (isinstance(el, T.StructType) and "_name" in el.names):
-                continue
-            keys = None if pivot_keys is None else pivot_keys.get(holder)
-            if keys is None:
-                keys = [
-                    r[0]
-                    for r in df.select(
-                        F.explode(F.transform(feats, lambda p: _s(p["_name"]))).alias("k")
-                    )
-                    .filter(F.col("k").isNotNull() & (F.col("k") != ""))
-                    .distinct()
-                    .collect()
-                ]
-            used_pivot_keys[holder] = list(keys)
-            for key in sorted(keys):
-                matches = F.filter(feats, _name_eq(key, trim=False))
-                vals = F.transform(
-                    matches, lambda p: F.coalesce(_s(p[VALUE_TAG]), F.lit(""))
-                )
-                out.set(
-                    f"{prefix}{key}",
-                    F.when(F.size(matches) > 0, F.array_join(vals, ", ")),
-                )
+            out.set(
+                f"{prefix}{key}",
+                F.when(F.size(matches) > 0, F.array_join(vals, ", ")),
+            )
 
     # P17: description overwrite with cleaned text (main.py:309-320)
     desc_primary = "description" if dialect == "offer" else "name"
@@ -630,7 +630,6 @@ def flatten_offer_records(
             )
         else:
             flat = flat.withColumn("category_path", F.lit("Undefined")).drop("_cid_join")
-    flat._mxs_pivot_keys = used_pivot_keys  # type: ignore[attr-defined]
     return flat
 
 

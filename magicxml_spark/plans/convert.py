@@ -1,24 +1,28 @@
 """Conversion pipelines (reference query lifecycles, SURVEY §3).
 
 ``xml_to_csv`` is the flagship path (§3.1: URL/file -> validate ->
-dialect detect -> flatten -> prune -> CSV). ``convert_file`` is the
-extension-dispatch surface (§3.2). Everything between source and sink
-is one lazy DataFrame plan — Catalyst owns ordering; the only driver
-materializations are the tiny category dimension and the param-key
-distinct scan (both bounded dimensions, SURVEY §4)."""
+dialect detect -> flatten -> prune -> CSV) and holds all of one
+conversion's state. ``convert_file`` is the extension-dispatch surface
+(§3.2). Everything between source and sink is one lazy DataFrame plan —
+Catalyst owns ordering; the only driver materializations are the tiny
+category dimension, the pivot-key distinct scans (param, fabric,
+features) and the Q5 prune aggregate (bounded dimensions and one
+aggregate row, SURVEY §4)."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from magicxml_spark.operators.category_path import build_category_paths
 from magicxml_spark.operators.flatten import (
+    discover_pivot_keys,
     flatten_offer_records,
     flatten_russian_records,
     flatten_service_records,
 )
+from magicxml_spark.operators.pruning import _c, select_output_columns
 from magicxml_spark.sinks.csv_sink import write_csv
 from magicxml_spark.sinks.json_sink import write_json_array
 from magicxml_spark.sinks.xml_sink import write_simple_catalog, write_yml_catalog
@@ -31,72 +35,6 @@ from magicxml_spark.sources.xml_source import (
 )
 
 
-def flatten_xml(
-    spark: SparkSession,
-    path: str,
-    dialect: str | None = None,
-    ckey: str | None = None,
-) -> DataFrame:
-    """XML file -> flat string-typed DataFrame (dialect-dispatched).
-
-    A single XML file scans as ONE partition (the XML source splits by
-    file, not rowTag) — everything downstream would run serially, so an
-    under-parallel scan is re-partitioned once up front. For repeated
-    processing of one giant file, pre-split it on disk instead
-    (sources.xml_split.presplit_xml).
-
-    ``ckey`` (``schema_registry.content_key(path)``) keys the derived
-    artifacts — category paths, pivot keys — in the ingest cache; None
-    derives them afresh and caches nothing."""
-    records, detected = read_xml_records(spark, path, dialect)
-    target = spark.sparkContext.defaultParallelism
-    if records.rdd.getNumPartitions() < max(2, target // 2):
-        records = records.repartition(target)
-    # the pipeline scans records several times (param-key distinct scan,
-    # Q5 prune aggregate, final projection+write) — cache the typed
-    # records so the XML text parses exactly once. On a re-ingest of
-    # byte-identical content every derived artifact (pivot keys,
-    # category paths, prune columns) replays from the ingest cache and
-    # the whole conversion collapses to ONE parse+project+write pass.
-    records = records.persist()
-    cached = records
-    if detected == "russian":
-        flat = flatten_russian_records(records)
-    elif detected == "service":
-        flat = flatten_service_records(records)
-    else:
-        paths = None
-        if detected == "offer":
-            path_rows = INGEST_CACHE.get(ckey, "category_paths")
-            if path_rows is None:
-                cats = read_categories(spark, path)
-                if cats.isEmpty():
-                    INGEST_CACHE.put(ckey, "category_paths", ())
-                else:
-                    paths = build_category_paths(cats, skip_undefined_names=True)
-                    # an oversized dimension stays a lazy frame and is
-                    # never cached — a catalog with millions of
-                    # categories must not OOM the driver just to warm
-                    # a convenience cache
-                    INGEST_CACHE.put(
-                        ckey, "category_paths", INGEST_CACHE.collect_rows(paths)
-                    )
-            elif path_rows:
-                paths = spark.createDataFrame(
-                    list(path_rows), "id string, category_path string"
-                )
-        pivots = INGEST_CACHE.get(ckey, "pivot_keys")
-        flat = flatten_offer_records(
-            records, detected, category_paths=paths, pivot_keys=pivots
-        )
-        if pivots is None:
-            INGEST_CACHE.put(ckey, "pivot_keys", getattr(flat, "_mxs_pivot_keys", None))
-    # hand the cache handle to the caller so one-shot pipelines can
-    # unpersist after their final action (long sessions don't leak)
-    flat._mxs_cached = cached  # type: ignore[attr-defined]
-    return flat
-
-
 def xml_to_csv(
     spark: SparkSession,
     src: str,
@@ -107,18 +45,74 @@ def xml_to_csv(
     """§3.1 flagship: XML catalog -> pruned ';'-CSV (BOM single-file
     mode mirrors the reference byte format; multi-part for scale).
 
-    Shuffle partitions are sized from the source bytes for the duration
-    of the conversion (plans/partitioning.py): a 100 GB export and a
-    100 KB fixture run the same code and each get a sane stage width."""
-    from magicxml_spark.plans.partitioning import scoped_shuffle_partitions
+    A single XML file scans as ONE partition (the XML source splits by
+    file, not rowTag; files past the presplit threshold arrive already
+    split) — everything downstream would run serially, so an
+    under-parallel scan is re-partitioned once up front.
 
+    The derived artifacts — category paths, pivot keys, prune columns —
+    are cached per content key (``schema_registry.content_key``): a
+    re-ingest of byte-identical content replays all three and collapses
+    to ONE parse+project+write pass."""
     ckey = content_key(src)
-    flat = flatten_xml(spark, src, dialect, ckey=ckey)
+    records, detected = read_xml_records(spark, src, dialect)
+    target = spark.sparkContext.defaultParallelism
+    if records.rdd.getNumPartitions() < max(2, target // 2):
+        records = records.repartition(target)
+    persisted = []
     try:
-        with scoped_shuffle_partitions(spark, flat):
-            return write_csv(flat, dst, single_file=single_file, meta_key=ckey)
+        # the pipeline scans records several times (pivot-key distinct
+        # scans, Q5 prune aggregate, final projection+write) — cache the
+        # typed records so the XML text parses exactly once
+        records = records.persist()
+        persisted.append(records)
+        if detected == "russian":
+            flat = flatten_russian_records(records)
+        elif detected == "service":
+            flat = flatten_service_records(records)
+        else:
+            paths = None
+            if detected == "offer":
+                path_rows = INGEST_CACHE.get(ckey, "category_paths")
+                if path_rows is None:
+                    cats = read_categories(spark, src)
+                    if cats.isEmpty():
+                        INGEST_CACHE.put(ckey, "category_paths", ())
+                    else:
+                        paths = build_category_paths(cats, skip_undefined_names=True)
+                        # an oversized dimension stays a lazy frame and is
+                        # never cached — a catalog with millions of
+                        # categories must not OOM the driver just to warm
+                        # a convenience cache
+                        INGEST_CACHE.put(
+                            ckey, "category_paths", INGEST_CACHE.collect_rows(paths)
+                        )
+                elif path_rows:
+                    paths = spark.createDataFrame(
+                        list(path_rows), "id string, category_path string"
+                    )
+            pivots = INGEST_CACHE.get(ckey, "pivot_keys")
+            if pivots is None:
+                pivots = discover_pivot_keys(records, detected)
+                INGEST_CACHE.put(ckey, "pivot_keys", pivots)
+            flat = flatten_offer_records(
+                records, detected, category_paths=paths, pivot_keys=pivots
+            )
+        cols = INGEST_CACHE.get(ckey, "prune_cols")
+        if cols is None:
+            # pruning needs the Q5 all-blank aggregate (one pass) before
+            # the write (second pass); without a persist both passes
+            # recompute the full flatten projection — pivot, pictures,
+            # description clean — doubling the conversion's compute
+            flat = flat.persist()
+            persisted.append(flat)
+            cols = select_output_columns(flat)
+            INGEST_CACHE.put(ckey, "prune_cols", cols)
+        out = flat.select(*[_c(c) for c in cols if c in flat.columns])
+        return write_csv(out, dst, single_file=single_file)
     finally:
-        flat._mxs_cached.unpersist()
+        for df in persisted:
+            df.unpersist()
 
 
 def csv_to_xml(
@@ -131,9 +125,7 @@ def csv_to_xml(
 
 
 def json_to_csv(spark: SparkSession, src: str, dst: str, single_file: bool = True) -> str:
-    return write_csv(
-        read_json(spark, src), dst, single_file=single_file, prune=False
-    )
+    return write_csv(read_json(spark, src), dst, single_file=single_file)
 
 
 def csv_to_json(spark: SparkSession, src: str, dst: str) -> str:
@@ -149,7 +141,7 @@ def convert_file(spark: SparkSession, src: str, dst: str, **options) -> str:
     if ext in (".xlsx", ".xls"):
         from magicxml_spark.sources.excel import read_excel
 
-        return write_csv(read_excel(spark, src), dst, prune=False, single_file=True)
+        return write_csv(read_excel(spark, src), dst, single_file=True)
     if ext == ".json":
         return json_to_csv(spark, src, dst)
     return xml_to_csv(spark, src, dst, dialect=options.get("dialect"))

@@ -7,7 +7,7 @@ escaping, utf-8-sig (BOM), newline->space per value, size-field
 Two modes:
 * distributed (default): ``df.write.csv`` — one part per partition,
   quoting/escaping handled by the writer. The 100 TB path.
-* single_file: coalesce(1) + driver-side rename + BOM prepend —
+* single_file: repartition(1) + driver-side rename + BOM prepend —
   byte-compatible with the reference's output for bounded exports
   (an explicit scalability tradeoff, SURVEY §7 hard-part (e)).
 """
@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magicxml_spark.functions.strings import csv_normalize_value
-from magicxml_spark.operators.pruning import select_output_columns
 
 
 def _c(name: str):
@@ -45,54 +44,29 @@ def write_csv(
     df: DataFrame,
     path: str,
     single_file: bool = False,
-    prune: bool = True,
     delimiter: str = ";",
-    meta_key: str | None = None,
 ) -> str:
-    """Write the conversion-boundary CSV. Returns the output path
-    (a directory of parts, or the single file in single_file mode).
-
-    ``meta_key`` (a schema_registry content key) caches the Q5 pruned
-    column list per exact input content: a re-ingest of identical bytes
-    skips the prune aggregate pass — and with it the persist — leaving
-    a single project+write pass."""
-    from magicxml_spark.sources.schema_registry import INGEST_CACHE
-
-    cached = None
-    cols = INGEST_CACHE.get(meta_key, "prune_cols") if prune else None
-    if prune and cols is None:
-        # pruning needs the Q5 all-blank aggregate (one pass) before the
-        # write (second pass); without a persist both passes recompute
-        # the full upstream flatten projection — pivot, pictures,
-        # description clean — doubling the conversion's compute
-        cached = df.persist()
-        df = cached
-    try:
-        if prune and cols is None:
-            cols = select_output_columns(df)
-            INGEST_CACHE.put(meta_key, "prune_cols", list(cols))
-        out = df.select(*[_c(c) for c in cols if c in df.columns]) if prune else df
-        out = normalize_for_csv(out)
-        # repartition(1), NOT coalesce(1): coalesce would collapse the
-        # whole upstream compute into one task; the shuffle boundary
-        # keeps flatten/normalize parallel, only the final write serial
-        writer = (
-            out.repartition(1) if single_file else out
-        ).write.mode("overwrite").options(
-            header=True, sep=delimiter, quote='"', escape='"', emptyValue=""
-        )
-        if not single_file:
-            writer.csv(path)
-            return path
-        tmp_dir = path + "._parts"
-        writer.csv(tmp_dir)
-        part = glob.glob(os.path.join(tmp_dir, "part-*.csv"))[0]
-        with open(path, "wb") as dst:
-            dst.write(b"\xef\xbb\xbf")  # utf-8-sig BOM (main.py:1566)
-            with open(part, "rb") as src:
-                shutil.copyfileobj(src, dst)
-        shutil.rmtree(tmp_dir)
+    """Normalize and write ``df`` as the conversion-boundary CSV.
+    Returns the output path (a directory of parts, or the single file
+    in single_file mode). Column selection is the caller's."""
+    out = normalize_for_csv(df)
+    # repartition(1), NOT coalesce(1): coalesce would collapse the
+    # whole upstream compute into one task; the shuffle boundary
+    # keeps flatten/normalize parallel, only the final write serial
+    writer = (
+        out.repartition(1) if single_file else out
+    ).write.mode("overwrite").options(
+        header=True, sep=delimiter, quote='"', escape='"', emptyValue=""
+    )
+    if not single_file:
+        writer.csv(path)
         return path
-    finally:
-        if cached is not None:
-            cached.unpersist()
+    tmp_dir = path + "._parts"
+    writer.csv(tmp_dir)
+    part = glob.glob(os.path.join(tmp_dir, "part-*.csv"))[0]
+    with open(path, "wb") as dst:
+        dst.write(b"\xef\xbb\xbf")  # utf-8-sig BOM (main.py:1566)
+        with open(part, "rb") as src:
+            shutil.copyfileobj(src, dst)
+    shutil.rmtree(tmp_dir)
+    return path

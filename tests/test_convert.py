@@ -206,3 +206,68 @@ def test_oversized_category_dimension_stays_uncached(
         io.StringIO(capped.decode("utf-8-sig")), delimiter=";"
     )][0]["category_path"]
     assert path_col == "///".join(f"C{i}" for i in range(1, n + 1))
+
+
+DIALECT_FEEDS = ("cat.xml", "products.xml", "c1.xml", "svc.xml")
+
+
+def _fresh_copy(tmp_path, name):
+    """A copy has its own content key, so no cached artifact replays."""
+    dst = tmp_path / name
+    dst.write_bytes(open(f"{FIX}/{name}", "rb").read())
+    return str(dst)
+
+
+def test_failed_conversion_leaves_nothing_cached(spark, tmp_path, monkeypatch):
+    from magicxml_spark.plans import convert
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("category build failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(convert, "build_category_paths", boom)
+    with pytest.raises(RuntimeError, match="category build failed"):
+        xml_to_csv(spark, _fresh_copy(tmp_path, "cat.xml"), str(tmp_path / "o.csv"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("feed", DIALECT_FEEDS)
+def test_output_independent_of_shuffle_partitions(spark, tmp_path, feed):
+    from magicxml_spark.sources.schema_registry import INGEST_CACHE
+
+    src = _fresh_copy(tmp_path, feed)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    outs = []
+    try:
+        for n in (1, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            INGEST_CACHE.clear()  # every derived artifact recomputed at n
+            out = str(tmp_path / f"out_{n}.csv")
+            xml_to_csv(spark, src, out, single_file=True)
+            outs.append(open(out, "rb").read())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert outs[0] == outs[1]
+
+
+@pytest.mark.parametrize("feed", DIALECT_FEEDS)
+def test_distributed_parts_match_single_file(spark, tmp_path, feed):
+    import glob
+
+    src = _fresh_copy(tmp_path, feed)
+    single = open(
+        xml_to_csv(spark, src, str(tmp_path / "single.csv"), single_file=True), "rb"
+    ).read()
+    assert single.startswith(b"\xef\xbb\xbf")
+    header, *rows = single[3:].splitlines(keepends=True)
+    parts_dir = xml_to_csv(spark, src, str(tmp_path / "parts"), single_file=False)
+    parts = sorted(glob.glob(os.path.join(parts_dir, "part-*.csv")))
+    assert parts
+    part_rows = []
+    for part in parts:
+        raw = open(part, "rb").read()
+        assert not raw.startswith(b"\xef\xbb\xbf")
+        first, *body = raw.splitlines(keepends=True)
+        assert first == header
+        part_rows.extend(body)
+    assert sorted(part_rows) == sorted(rows)

@@ -8,14 +8,17 @@ the semantics, Structured Streaming for the streaming extension.
 
 Layout:
     session     -- SparkSession factory tuned for local[] and cluster use
-    tables      -- testdata table loaders / temp-view registration
+    tables      -- testdata table loader (``table``) and its table names
     functions/  -- pure Column-level scalar functions (string surgery etc.)
     operators/  -- DataFrame->DataFrame operators (flatten, dedup, ...)
-    sources/    -- readers: XML (4 dialects), CSV sniffing, JSON, Excel, PDF
-    sinks/      -- writers: CSV (BOM), YML/simple XML, JSON envelope, ...
-    plans/      -- end-to-end conversion pipelines composed from the above
+    sources/    -- readers: XML (4 dialects), CSV sniffing, JSON, Excel, PDF,
+                   images, HTTP fetch
+    sinks/      -- writers: CSV (BOM), YML/simple XML, JSON array
+    plans/      -- end-to-end conversions: ``convert.convert_file``'s route
+                   table over the above, and the Z-order layout key
+    queries/    -- the named-query registry behind ``__spark_entry__``
     streaming/  -- Structured Streaming views of the events table
-    analytics/  -- LLM-data-pipeline ops: dedup, similarity, text quality
+    analytics/  -- TF-IDF/PCA, dedup clustering, heuristic dependency parse
 """
 
 __version__ = "0.1.0"

@@ -16,8 +16,7 @@ Python in the loop — which buys two things at once: whole-stage
 codegen at 100 TB, and a DuckDB oracle that shares the RULE TEXT
 itself (the SQL fragments below are used verbatim by both engines;
 only tokenization differs by dialect), so the parse is on the
-hard correctness gate. spaCy, when present, replaces this arm via
-``analytics.nlp.dependency_parse`` — same output schema.
+hard correctness gate.
 
 Plan shape: one projection (tokenize + posexplode), one POS
 projection, then a single window family over (doc, index) — every
@@ -49,8 +48,6 @@ VERB_WORDS = [
     "say", "said", "run", "ran", "go", "went", "make", "made",
     "see", "saw", "take", "took", "get", "got", "sat", "sit",
 ]
-
-NOMINAL_TAGS = ("NOUN", "PROPN", "PRON", "NUM")
 
 
 def _in_list(words: list[str]) -> str:
@@ -131,7 +128,7 @@ def heuristic_dependency_parse(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, token_index, token, pos, dep, head_index) — one row per
-    whitespace token, schema-identical to ``nlp.dependency_parse``."""
+    whitespace token."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(

@@ -43,14 +43,6 @@ def pca_project(
     return model.transform(df)
 
 
-def embedding_to_vector(df: DataFrame, arr_col: str, out_col: str) -> DataFrame:
-    """array<float> -> ML Vector (bridges the embeddings table into
-    Spark ML ops like BucketedRandomProjectionLSH)."""
-    from pyspark.ml.functions import array_to_vector
-
-    return df.withColumn(out_col, array_to_vector(F.col(arr_col)))
-
-
 # ---------------------------------------------------------------------------
 # Model-based quality filtering (round 7): the GPT-3-class seed-rule
 # classifier — train a logistic regression against seed labels, apply

@@ -3,27 +3,14 @@
 Reference semantics: parse HTML, unwrap every tag except <p> and <br>
 (keeping inner text), wrap bare top-level text in <p>...</p>.
 
-Three implementations:
-
-* ``clean_description`` — JVM-side regexp chain (the hot path). Strips
-  all tags except p/br, then wraps the result in <p> if it doesn't
-  already start with one. Covers the common product-feed cases without
-  leaving whole-stage codegen.
-* ``clean_description_parsed`` — a REAL parser on the stdlib
-  ``html.parser`` tokenizer (always available): unwraps non-p/br tags
-  including malformed/nested markup the regexp can't see through,
-  wraps each contiguous top-level text run in one <p>, preserves
-  entity references verbatim. This is what the pandas-UDF route runs
-  when bs4 is absent — the parser arm of P17 is executable in every
-  environment, not a gated stub.
-* ``_bs4_clean`` — the BeautifulSoup route (html5lib/lxml parser
-  cascade exactly like the reference), used by the UDF when bs4 is
-  installed.
+``clean_description`` is a JVM-side regexp chain: it strips all tags
+except p/br, then wraps the result in <p> if it doesn't already start
+with one. That covers the product-feed cases without leaving
+whole-stage codegen; markup a regexp cannot see through (malformed or
+nested tags) is the known gap against a real HTML parser.
 """
 
 from __future__ import annotations
-
-from html.parser import HTMLParser
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,123 +27,3 @@ def clean_description(col: Column | str) -> Column:
         stripped,
     ).otherwise(F.concat(F.lit("<p>"), stripped, F.lit("</p>")))
     return F.coalesce(wrapped, F.lit(""))
-
-
-class _P17Parser(HTMLParser):
-    """Tokenizer-backed unwrap: keep <p>/<br> (with attributes), keep
-    text and entities, drop every other tag while keeping its inner
-    text. Tracks whether we are inside a kept <p> so bare TOP-LEVEL
-    text runs can be wrapped afterwards."""
-
-    _KEEP = ("p", "br")
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=False)
-        self.parts: list[tuple[str, str, bool]] = []  # (kind, value, inside_p)
-        self._p_depth = 0
-
-    def _attrs(self, attrs) -> str:
-        return "".join(
-            f' {k}="{v}"' if v is not None else f" {k}" for k, v in attrs
-        )
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "p":
-            self.parts.append(("tag", f"<p{self._attrs(attrs)}>", True))
-            self._p_depth += 1
-        elif tag == "br":
-            self.parts.append(("tag", "<br/>", self._p_depth > 0))
-
-    def handle_startendtag(self, tag, attrs):
-        # self-closing <p/> must NOT leave _p_depth incremented — that
-        # would emit an unclosed <p> and mark every later top-level
-        # text run as inside-p (review finding, probe-verified)
-        if tag == "p":
-            self.parts.append(("tag", f"<p{self._attrs(attrs)}></p>", True))
-        elif tag == "br":
-            self.parts.append(("tag", "<br/>", self._p_depth > 0))
-
-    def handle_endtag(self, tag):
-        if tag == "p" and self._p_depth > 0:
-            self._p_depth -= 1
-            self.parts.append(("tag", "</p>", True))
-
-    def handle_data(self, data):
-        self.parts.append(("text", data, self._p_depth > 0))
-
-    def handle_entityref(self, name):
-        self.parts.append(("text", f"&{name};", self._p_depth > 0))
-
-    def handle_charref(self, name):
-        self.parts.append(("text", f"&#{name};", self._p_depth > 0))
-
-
-def clean_description_parsed(text: str) -> str:
-    """Stdlib-parser P17 clean: unwrap non-p/br, wrap each contiguous
-    bare top-level text run in one <p>...</p>."""
-    if not text:
-        return ""
-    parser = _P17Parser()
-    parser.feed(text)
-    parser.close()
-    out: list[str] = []
-    run: list[str] = []  # pending top-level bare text
-
-    def flush_run() -> None:
-        chunk = "".join(run).strip()
-        run.clear()
-        if chunk:
-            out.append(f"<p>{chunk}</p>")
-
-    for kind, value, inside_p in parser.parts:
-        if kind == "text" and not inside_p:
-            run.append(value)
-        else:
-            flush_run()
-            out.append(value)
-    flush_run()
-    return "".join(out).strip()
-
-
-def _bs4_clean(text: str) -> str:
-    # Mirrors reference main.py:57-76 semantics (parser-fallback chain,
-    # unwrap non-p/br, wrap bare text); reimplemented, not copied.
-    if not text:
-        return ""
-    try:
-        from bs4 import BeautifulSoup
-    except ImportError:
-        # stdlib parser arm: same unwrap/wrap contract, always available
-        return clean_description_parsed(text)
-    for parser in ("html5lib", "lxml", "html.parser"):
-        try:
-            soup = BeautifulSoup(text, parser)
-            break
-        except Exception:
-            continue
-    for tag in soup.find_all(True):
-        if tag.name not in ("p", "br"):
-            tag.unwrap()
-    for node in list(soup.contents):
-        if isinstance(node, str) and node.strip():
-            p = soup.new_tag("p")
-            p.string = node.strip()
-            node.replace_with(p)
-    return str(soup)
-
-
-def clean_description_udf() -> Column:
-    """Factory for the parser-faithful pandas-UDF variant
-    (Arrow-batched; bs4 when installed, stdlib parser otherwise)."""
-    # pandas imported here then injected into the wrapper's globals:
-    # `from __future__ import annotations` stringifies the hints, and
-    # Spark resolves them against the function's module globals
-    import pandas as pd
-
-    globals()["pd"] = pd
-
-    @F.pandas_udf("string")
-    def _clean(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(_bs4_clean)
-
-    return _clean

@@ -17,8 +17,7 @@ the union + ordered-window formulation:
 Cost: ONE shuffle on the key + a per-key sort — the same price as the
 equi-join it replaces, with no pair explosion. At 100 TB the caveat is
 key skew (one hot key's timeline sorts in one task); mitigate upstream
-with key salting + re-merge, or pre-bucket both sides by key
-(operators.bucketing) so the shuffle disappears entirely.
+with key salting + re-merge.
 
 Right-side ties (same key + timestamp) resolve deterministically by
 ``tie_break`` ordering; right rows sort BEFORE left rows at an equal

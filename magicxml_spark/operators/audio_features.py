@@ -11,8 +11,7 @@ operators consume (doc, chunk) rows.
 
 Spark shape: one ``mapInPandas`` pass over the binaryFile source —
 each task decodes and transforms its own files, no shuffle; a 10-hour
-recording becomes ~1.4M frame rows streamed out of one task (or split
-upstream by ``chunk_audio`` when per-file parallelism is needed).
+recording becomes ~1.4M frame rows streamed out of one task.
 Compressed codecs (mp3/flac/ogg) stay import-gated exactly like the
 rest of the audio arm.
 """
@@ -26,11 +25,6 @@ from pyspark.sql import DataFrame
 
 from magicxml_spark.operators.dedup import (  # noqa: E402
     DEFAULT_MAX_BUCKET_SIZE as _DEFAULT_CAP,
-)
-
-LOGMEL_SCHEMA = (
-    "path string, frame_idx int, t_start_s double, sample_rate int, "
-    "logmel array<double>"
 )
 
 
@@ -100,44 +94,6 @@ def _wav_to_mono_float(data: bytes):
     if ch > 1:
         arr = arr[: n_frames * ch].reshape(-1, ch).mean(axis=1)
     return arr, rate
-
-
-def audio_logmel(
-    binary_df: DataFrame,
-    n_fft: int = 512,
-    hop: int = 256,
-    n_mels: int = 40,
-    max_frames: int | None = None,
-) -> DataFrame:
-    """One row per STFT frame across every decodable WAV in the binary
-    source: (path, frame_idx, t_start_s, sample_rate, logmel).
-    Undecodable files yield no rows (triage upstream via wds_image_meta
-    -style passes if per-file visibility is needed). ``max_frames``
-    caps rows per file — the honest guard for accidentally pointing a
-    feature pass at one 10-hour recording."""
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                dec = _wav_to_mono_float(content)
-                if dec is None:
-                    continue
-                arr, rate = dec
-                feats = logmel_frames(arr, rate, n_fft=n_fft, hop=hop, n_mels=n_mels)
-                if max_frames is not None:
-                    feats = feats[:max_frames]
-                for i, frame in enumerate(feats):
-                    rows.append(
-                        (path, i, round(i * hop / rate, 6), rate, list(frame))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "frame_idx", "t_start_s", "sample_rate", "logmel"],
-            )
-
-    return binary_df.select("path", "content").mapInPandas(batches, LOGMEL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

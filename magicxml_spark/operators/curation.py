@@ -7,7 +7,7 @@ re-expressed Spark-first over a (id, text) frame:
   dedup, FIRST occurrence wins (Soldaini et al. 2024 "Dolma" §4.1 run
   dedup at document/paragraph granularity; Lee et al. 2021 establish
   first-occurrence-wins for exact substring dedup).
-* ``gopher_repetition`` / ``gopher_line_cols`` / ``gopher_quality`` —
+* ``gopher_repetition_cols`` / ``gopher_line_cols`` / ``gopher_quality`` —
   the COMPLETE Gopher rule set (Rae et al. 2021, "Scaling Language
   Models", Appendix A1.1): word-count / word-length / symbol / alpha
   / stopword gates, the full n-gram repetition battery (top 2-4-gram
@@ -76,7 +76,7 @@ def paragraph_dedup(
     no totals-vs-rebuilt join and the exploded corpus is materialized
     exactly once). No self-join, nothing quadratic; skew = the most
     repeated paragraph's occurrence count, which the window's
-    partial-sort handles (same shape as substring_dedup's gram
+    partial-sort handles (same shape as repeated_ngram_spans' gram
     window)."""
     import re
 
@@ -92,7 +92,7 @@ def paragraph_dedup(
     )
     # first-occurrence key: global (id, pos) order, hash-keyed window.
     # min(struct) is the proven order-isomorphic spelling from
-    # substring_dedup (any id type, one aggregate-free window pass).
+    # repeated_ngram_spans (any id type, one aggregate-free window pass).
     w = Window.partitionBy(F.md5("_para"))
     marked = paras.withColumn("_okey", F.struct("_id", "_pos")).withColumn(
         "_keep", F.min("_okey").over(w) == F.col("_okey")
@@ -304,9 +304,9 @@ def gopher_repetition_cols(
     words_ref: Column, chars_ref: Column, grams_ref: dict[int, Column]
 ) -> list[Column]:
     """The nine Gopher repetition fractions as pure per-row Column
-    expressions — the shared core of :func:`gopher_repetition` and
-    :func:`gopher_quality`. ``words_ref``/``chars_ref`` must be
-    MATERIALIZED column references (not inline expressions);
+    expressions — the repetition core of :func:`gopher_quality`.
+    ``words_ref``/``chars_ref`` must be MATERIALIZED column references
+    (not inline expressions);
     ``grams_ref`` maps each dup order to its materialized gram-array
     column (the dup algebra references its array twice — total minus
     first-occurrence mass, the :func:`_dup_fracs` spelling — so the
@@ -337,65 +337,6 @@ def gopher_repetition_cols(
     return cols
 
 
-def gopher_repetition(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The Gopher n-gram repetition battery, exactly as published:
-
-    * ``top_ngram_frac_{2,3,4}`` — fraction of the document's
-      CHARACTERS accounted for by its single most frequent n-gram
-      (count x gram length / total chars).
-    * ``dup_ngram_frac_{5..10}`` — fraction of characters contained in
-      duplicated n-grams, where every non-first occurrence of a gram
-      contributes its length (the standard de-overlap-free
-      implementation used by the public curation stacks; documented
-      approximation of the paper's character-coverage phrasing).
-
-    Character totals use the whitespace-normalized token join (tokens
-    joined by single spaces) so the fractions are tokenizer-consistent
-    rather than raw-byte-sensitive.
-
-    Scale shape (r12 rewrite, guide §2.3/§2.4): every metric is
-    per-DOCUMENT, so the whole battery now runs as in-row array
-    arithmetic inside one projection — top fractions fold a sorted
-    gram array (equal grams adjacent -> max run = max count), dup
-    fractions take total-minus-distinct char mass — and the 9x gram
-    amplification NEVER crosses an exchange. The r11 shape exploded
-    (id, n, gram) for all nine orders into a 3-level aggregation:
-    same values, but every gram string was shuffled (and the
-    deliberately collision-free bench corpora gave the map-side
-    combine ~zero compression). Zero shuffles besides the compact
-    (id, tokens) pre-compute repartition (kept: the per-row work
-    otherwise runs at the scan's split count — a couple of local
-    parquet files starve a 32-core box; measured 16x there). Docs
-    shorter than an order report 0 for that metric; sf0.1 standalone
-    A/B: 3.36 -> 2.45 s noop-sink min-of-3, and the plan drops from
-    14 Exchanges + double scan to 1 Exchange + single scan."""
-    words = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    par = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.select(F.col(id_col).alias("_id"), words.alias("_w"))
-        .repartition(par)
-        .select(
-            "_id",
-            F.length(F.array_join("_w", " ")).alias("_chars"),
-            F.col("_w"),
-            *[
-                _order_grams(F.col("_w"), n).alias(f"_g{n}")
-                for n in sorted(GOPHER_DUP_NGRAM_MAX)
-            ],
-        )
-    )
-    grams_ref = {
-        n: F.col(f"_g{n}") for n in sorted(GOPHER_DUP_NGRAM_MAX)
-    }
-    return base.select(
-        F.col("_id").alias(id_col),
-        F.col("_chars").alias("n_chars_norm"),
-        *gopher_repetition_cols(F.col("_w"), F.col("_chars"), grams_ref),
-    )
-
-
 #: Published scalar-gate thresholds (Rae et al. 2021 A1.1).
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
@@ -419,7 +360,7 @@ def gopher_quality(
     line/paragraph rules (:func:`gopher_line_cols` — duplicate
     line/paragraph fractions by count and char mass, bullet-start and
     ellipsis-end line fractions) computed in one codegen projection,
-    joined with :func:`gopher_repetition`'s n-gram battery, and the
+    joined with :func:`gopher_repetition_cols`' n-gram battery, and the
     published thresholds folded into a single ``keep`` flag.
     Word-count bounds are parameters (the paper's 50 / 100k defaults)
     because every downstream corpus retunes them.
@@ -564,14 +505,8 @@ def gopher_quality(
 # C4 line-level cleaning (Raffel et al. 2020 §2.2)
 # ---------------------------------------------------------------------------
 
-#: line-level tell ("javascript") vs document-level kills ("lorem
-#: ipsum", "{") — Raffel et al. 2020 §2.2 drop the whole PAGE for the
-#: latter two.
-C4_LINE_FRAGMENTS = ["javascript"]
-C4_DOC_FRAGMENTS = ["lorem ipsum", "{"]
 C4_MIN_LINE_WORDS = 3
 C4_MIN_DOC_LINES = 5
-C4_TERMINALS = (".", "!", "?", '"')
 
 
 #: segmentation marker bytes for the sentence splitter / span hash —
@@ -599,7 +534,7 @@ def c4_sentences(text: Column) -> Column:
 
 def _c4_sents_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(_id, _s sentence-array) frame with the pre-explode repartition
-    (the gopher_repetition/_lm_positions fix): span hashing otherwise
+    (the gopher_quality/_lm_positions fix): span hashing otherwise
     runs at the scan's split count; the shuffled payload is the
     compact (id, sentence-array) frame."""
     return df.select(
@@ -761,21 +696,12 @@ def append_paragraph_snapshot(
     """Fold a newly ingested batch's paragraph hashes into the
     snapshot (parquet append — O(delta) writes, never a snapshot
     rewrite on the ingest path; duplication across files is tolerated
-    by the reader's distinct and reclaimed by
-    ``compact_paragraph_snapshot``)."""
+    by the reader's distinct)."""
     import os
 
     _paragraph_hashes(batch, text_col, sep).write.mode("append").parquet(
         os.path.join(path, "paragraphs")
     )
-
-
-def compact_paragraph_snapshot(spark: SparkSession, path: str) -> None:
-    """Crash-safe distinct rewrite of an appended-to paragraph
-    snapshot (the shared staged-swap lifecycle)."""
-    from magicxml_spark.operators.dedup import compact_snapshot_tables
-
-    compact_snapshot_tables(spark, path, ("paragraphs",))
 
 
 def paragraph_dedup_against_snapshot(
@@ -880,13 +806,6 @@ def append_span_snapshot(
     spans.select(F.col("h").alias("sh")).distinct().write.mode(
         "append"
     ).parquet(os.path.join(path, "spans"))
-
-
-def compact_span_snapshot(spark: SparkSession, path: str) -> None:
-    """Crash-safe distinct rewrite of an appended-to span snapshot."""
-    from magicxml_spark.operators.dedup import compact_snapshot_tables
-
-    compact_snapshot_tables(spark, path, ("spans",))
 
 
 def span_dedup_against_snapshot(
@@ -1402,7 +1321,7 @@ def _lm_positions(
     the cluster's parallelism BEFORE the order-wide tuple explode —
     the explode otherwise runs at the SCAN's split count (one small
     parquet file = one core doing the whole corpus's tuple build; the
-    gopher_repetition pre-explode fix, measured there at 16x on a
+    gopher_quality pre-explode fix, measured there at 16x on a
     32-core box). The shuffled payload is the token arrays, never the
     exploded stream."""
     prevs = [f"prev{j}" for j in range(1, order)]
@@ -1446,7 +1365,6 @@ def write_lm_snapshot(
     count_floor: int = 1,
     floor_from: int = 3,
     smoothing: str = "jm",
-    durable_derive: bool = False,
 ) -> dict:
     """Train and persist an order-n LM: one parquet count table per
     order (``{path}/t{k}`` with key columns + ``cnt``) plus
@@ -1468,12 +1386,7 @@ def write_lm_snapshot(
     one partial-combine aggregate of it (KN table writes submit
     concurrently — independent jobs); snapshot size is the distinct
     n-gram count (after pruning for JM, which the floor is the knob
-    for). ``durable_derive=True`` (KN only) trades the single-wave
-    write shape for the write-then-read pattern so the adjusted t{k}
-    tables are durable parquet before the derived c{k}/scal jobs read
-    them — the preemptible-cluster arm (ADVICE r12). Only the adjusted
-    tables become durable: the scalar jobs still read the
-    executor-local position stream (see :func:`_write_kn_snapshot`)."""
+    for)."""
     import os
 
     if order < 2:
@@ -1493,19 +1406,7 @@ def write_lm_snapshot(
                 "count_floor does not apply to smoothing='kn' snapshots"
                 " (continuation counts need the unpruned type inventory)"
             )
-        return _write_kn_snapshot(
-            corpus, path, id_col, text_col, order,
-            durable_derive=durable_derive,
-        )
-    if durable_derive:
-        # reject rather than silently ignore: the JM arm has no derived
-        # second wave — its t{k} writes are the only jobs and they read
-        # the position-stream checkpoint, so there is nothing to make
-        # durable ahead of them
-        raise ValueError(
-            "durable_derive applies only to smoothing='kn' (the JM arm"
-            " has no derived write wave)"
-        )
+        return _write_kn_snapshot(corpus, path, id_col, text_col, order)
     pos = _lm_positions(corpus, id_col, text_col, order, materialize=True)
     # The per-order count tables all derive from the SAME materialized
     # position stream and are independent of each other — submit the
@@ -1580,35 +1481,15 @@ def _lm_meta_smoothing(meta) -> str:
     )
 
 
-def _kn_adjusted_tables(pos, order: int) -> dict[int, DataFrame]:
-    """LAZY modified-KN adjusted-count tables a_k from a position
-    stream: RAW counts at the top order, CONTINUATION counts (distinct
-    left-extension types among raw (k+1)-gram types) below — the one
-    subtle convention in the KN math, defined in exactly one place so
-    in-plan scoring (:func:`kn_ngram_surprisal`) and frozen snapshots
-    (:func:`_write_kn_snapshot`) can never drift."""
-    raw: dict[int, DataFrame] = {}
-    for k in range(2, order + 1):
-        raw[k] = (
-            pos.filter(F.col("pos") >= k)
-            .groupBy(*_lm_table_keys(k))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-    adj: dict[int, DataFrame] = {order: raw[order]}
-    for k in range(1, order):
-        adj[k] = (
-            raw[k + 1]
-            .groupBy(*_lm_table_keys(k))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-    return adj
-
-
 def _kn_adjusted_checkpointed(pos, order: int) -> dict[int, DataFrame]:
-    """Materialized :func:`_kn_adjusted_tables`: every a_k as an eager
-    localCheckpoint (each feeds three consumers — numerator join,
-    per-context aggregate, counts-of-counts — whose per-consumer
-    pruning defeats ReuseExchange, the r12 finding).
+    """Modified-KN adjusted-count tables a_k from a position stream:
+    RAW counts at the top order, CONTINUATION counts (distinct
+    left-extension types among raw (k+1)-gram types) below — defined in
+    exactly one place so in-plan scoring (:func:`kn_ngram_surprisal`)
+    and frozen snapshots (:func:`_write_kn_snapshot`) can never drift.
+    Every a_k is an eager localCheckpoint (each feeds three consumers —
+    numerator join, per-context aggregate, counts-of-counts — whose
+    per-consumer pruning defeats ReuseExchange, the r12 finding).
 
     One structural improvement over checkpointing the lazy dict
     directly: a_{order} IS the raw top-order table and a_{order-1}
@@ -1662,25 +1543,15 @@ def _write_kn_snapshot(
     id_col: str,
     text_col: str,
     order: int,
-    durable_derive: bool = False,
 ) -> dict:
     """KN arm of :func:`write_lm_snapshot`: persist adjusted count
     tables ``t{k}``, per-context aggregates ``c{k}``, and the one-row
     vocab/discount scalar table ``scal``.
 
-    ``durable_derive=False`` (default) holds the adjusted tables as
-    executor-local localCheckpoint blocks through the whole derived
-    write wave — the fastest shape (one aggregate wave, one concurrent
-    write wave), but an executor loss mid-write fails the entire
-    snapshot build (ADVICE r12). ``durable_derive=True`` opts into the
-    write-then-read pattern for very long-running builds on
-    preemptible clusters: the t{k} parquet writes land FIRST and the
-    c{k} derivation reads the already-durable files back (the cost is
-    the re-added read-back barrier plus one extra pass over the
-    top-order table). Only the adjusted tables become durable: the
-    ``scal`` aggregate and the final ``n_total`` count still read the
-    executor-local localCheckpointed position stream, so an executor
-    loss after the t-wave can still fail the build there."""
+    The adjusted tables are held as executor-local localCheckpoint
+    blocks through the whole derived write wave — one aggregate wave,
+    one concurrent write wave — so an executor loss mid-write fails
+    the entire snapshot build (ADVICE r12)."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1709,28 +1580,7 @@ def _write_kn_snapshot(
     # distinct-n-gram-sized — the artifact class being persisted
     # anyway.
     adj = _kn_adjusted_checkpointed(pos, order)
-
-    if durable_derive:
-        # preemptible-cluster arm: land the t{k} parquet first (one
-        # concurrent wave from the checkpoints), then re-point the
-        # adjusted-table aggregates at the DURABLE files — an executor
-        # loss can no longer cost the adjusted tables themselves (scal's
-        # position-stream columns and n_total still read checkpoints)
-        def _write_t(item: tuple[int, DataFrame]) -> None:
-            k, df_k = item
-            df_k.write.mode("overwrite").parquet(
-                os.path.join(path, f"t{k}")
-            )
-
-        with ThreadPoolExecutor(max_workers=order) as pool:
-            list(pool.map(_write_t, adj.items()))
-        adj = {
-            k: spark.read.parquet(os.path.join(path, f"t{k}"))
-            for k in range(1, order + 1)
-        }
-        derived: list[tuple[str, DataFrame]] = []
-    else:
-        derived = [(f"t{k}", adj[k]) for k in range(1, order + 1)]
+    derived = [(f"t{k}", adj[k]) for k in range(1, order + 1)]
     for k in range(2, order + 1):
         keys = _lm_table_keys(k)
         ctx = adj[k].groupBy(*keys[:-1]).agg(
@@ -1930,101 +1780,6 @@ def _score_kn_snapshot(
     )
 
 
-def append_lm_snapshot(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Fold a delta corpus into an existing LM snapshot O(delta): the
-    delta's UNFLOORED count tables merge (key-summed) with the stored
-    ones, the write-time floor re-applies to the merged counts (orders
-    >= ``floor_from``, never the unigram table), and the new tables
-    publish in two stages: ALL Spark work first (every merged table —
-    including the new meta — lands in ``t{k}__new`` staging dirs while
-    the live snapshot stays untouched and readable), then one tight
-    rename loop swaps everything in. The swap loop is milliseconds of
-    pure renames with no job inside it, but it is NOT atomic across
-    tables — a crash inside that loop leaves a torn snapshot with the
-    remaining ``__new`` dirs alongside for recovery (true atomicity
-    needs a versioned directory + single pointer publish; the staging
-    dirs make manual repair a rename, never a recompute). With
-    ``count_floor=1`` the result is EXACTLY the snapshot a full
-    rebuild on the union would produce (pinned in tests); with a
-    floor > 1, counts pruned by an EARLIER write cannot resurface —
-    the standard pruned-LM approximation, documented rather than
-    hidden (exact appendability requires storing unpruned tables)."""
-    import os
-    import shutil
-
-    spark = delta.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    if _lm_meta_smoothing(meta) == "kn":
-        raise ValueError(
-            "append is not supported for smoothing='kn' snapshots:"
-            " continuation counts and counts-of-counts discounts do not"
-            " merge incrementally from adjusted tables (KenLM rebuilds"
-            " too) — retrain with write_lm_snapshot on the union, or use"
-            " a JM snapshot where appends are O(delta)"
-        )
-    order = int(meta["order"])
-    count_floor = int(meta["count_floor"])
-    floor_from = int(meta["floor_from"])
-    pos = _lm_positions(delta, id_col, text_col, order, materialize=True)
-
-    # ---- stage: ALL expensive work writes to __new dirs; the live
-    # snapshot is still complete and consistent if anything here fails.
-    # The per-order merges are independent (each reads its own live
-    # table + the checkpointed delta positions), so the staging writes
-    # submit from a thread pool and overlap (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    staged: list[tuple[str, str]] = []
-    staged_writes: list[tuple[str, DataFrame]] = []
-    for k in range(1, order + 1):
-        keys = _lm_table_keys(k)
-        d = (
-            pos.filter(F.col("pos") >= k) if k > 1 else pos
-        ).groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-        merged = (
-            spark.read.parquet(os.path.join(path, f"t{k}"))
-            .unionByName(d)
-            .groupBy(*keys)
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        # floor never applies to t1 (k starts at floor_from >= 2 by
-        # write-time validation; max() keeps a legacy floor_from=1
-        # meta from pruning the unigram/OOV denominator — ADVICE r8)
-        if k >= max(floor_from, 2) and count_floor > 1:
-            merged = merged.filter(F.col("cnt") >= count_floor)
-        new_dir = os.path.join(path, f"t{k}__new")
-        staged_writes.append((new_dir, merged))
-        staged.append((new_dir, os.path.join(path, f"t{k}")))
-
-    def _write_staged(item: tuple[str, DataFrame]) -> None:
-        new_dir_k, df_k = item
-        df_k.write.mode("overwrite").parquet(new_dir_k)
-
-    with ThreadPoolExecutor(max_workers=len(staged_writes)) as pool:
-        list(pool.map(_write_staged, staged_writes))
-    row = (
-        spark.read.parquet(staged[0][0]).agg(F.sum("cnt")).first()[0]
-    )
-    n_total = int(row) if row is not None else 0
-    meta_new = os.path.join(path, "meta__new")
-    spark.createDataFrame(
-        [(order, count_floor, floor_from, n_total)],
-        "order int, count_floor int, floor_from int, n_total long",
-    ).repartition(1).write.mode("overwrite").parquet(meta_new)
-    staged.append((meta_new, os.path.join(path, "meta")))
-
-    # ---- publish: tight rename loop, no Spark work inside
-    for new_dir, live_dir in staged:
-        shutil.rmtree(live_dir)
-        os.replace(new_dir, live_dir)
-    return {"order": order, "n_total": n_total}
-
-
 def trigram_surprisal(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -2221,7 +1976,7 @@ def kn_ngram_surprisal(
         raise ValueError(f"order must be >= 2: {order}")
     pos = _lm_positions(df, id_col, text_col, order, materialize=True)
 
-    # adjusted counts from the SHARED builder (_kn_adjusted_tables —
+    # adjusted counts from the SHARED builder (_kn_adjusted_checkpointed —
     # raw at the top order, continuation below; r_1 is never needed:
     # the unigram level uses continuation counts and V comes from pos).
     # Each a_k feeds THREE consumers (numerator join, per-context

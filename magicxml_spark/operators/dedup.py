@@ -10,9 +10,8 @@ All variants are expressed as declarative DataFrame plans:
                    buckets (boilerplate docs) are handled by AQE skew
                    splitting.
 * simhash        — 16-bit sign-sum sketch over token hashes; near-dups
-                   bucket by exact sketch equality (Hamming-0,
-                   ``simhash_dedup``) or by bit-sliced pigeonhole
-                   banding for Hamming<=k (``simhash_near_dup_pairs``).
+                   bucket by bit-sliced pigeonhole banding for
+                   Hamming<=k (``simhash_near_dup_pairs``).
 * n-gram Jaccard — exact verify step for LSH candidates.
 
 Hash family: md5 hex (JVM built-in, deterministic across engines) —
@@ -519,15 +518,6 @@ def simhash16_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return votes.select("id", sketch.cast("int").alias("simhash"))
 
 
-def simhash_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Group by exact 16-bit sketch; returns (simhash, keeper_id, n_docs)."""
-    return (
-        df.select(simhash16(F.col(text_col)).alias("simhash"), F.col(id_col).alias("id"))
-        .groupBy("simhash")
-        .agg(F.min("id").alias("keeper_id"), F.count("*").alias("n_docs"))
-    )
-
-
 def simhash_wide(text: Column | str) -> Column:
     """64-bit SimHash as FOUR 16-bit words (array<int>, little-endian by
     word) — the scale sketch. simhash16's 65,536-value space saturates
@@ -723,10 +713,9 @@ def _classify_against_prior(
 ) -> DataFrame:
     """Shared classify core: new batch vs (fingerprint set, signature
     set) — however those two tables were obtained (inline or parquet
-    snapshot). Both prior tables are defensively made distinct: an
-    appended-to snapshot (``append_dedup_snapshot``) legitimately holds
-    duplicate keys across ingest files, and a duplicate key on the left
-    join's build side would FAN OUT the new-batch rows."""
+    snapshot). Both prior tables are defensively made distinct: a
+    duplicate key on the left join's build side would FAN OUT the
+    new-batch rows."""
     from pyspark.sql import Window
 
     prior_fp = prior_fp.distinct()
@@ -979,72 +968,6 @@ def dedup_lines(
     )
 
 
-def append_dedup_snapshot(
-    kept_delta: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    shingle_k: int = 3,
-) -> None:
-    """Fold a kept (post-classification) delta's dedup keys into an
-    existing snapshot — parquet append of the delta's distinct
-    fingerprints and band signatures. Keys already present end up
-    duplicated ACROSS files (append cannot dedup against what it
-    appends to without a read-modify-write); the classify core
-    tolerates that by re-distincting, and ``compact_dedup_snapshot``
-    rewrites the snapshot minimal when the duplication ratio warrants
-    a pass. This keeps each ingest O(delta) writes — never a corpus
-    or snapshot rewrite on the ingest path."""
-    import os
-
-    normed = F.trim(F.regexp_replace(F.lower(F.col(text_col)), _WS, " "))
-    kept_delta.select(F.md5(normed).alias("fp")).distinct().write.mode(
-        "append"
-    ).parquet(os.path.join(path, "fingerprints"))
-    (
-        minhash_signatures(kept_delta, id_col, text_col, n_bands, shingle_k)
-        .select("band", "signature")
-        .distinct()
-        .write.mode("append")
-        .parquet(os.path.join(path, "signatures"))
-    )
-
-
-def compact_snapshot_tables(spark, path: str, subs: tuple[str, ...]) -> None:
-    """Rewrite appended-to snapshot tables to their distinct minimum.
-    Writes each table to a sibling temp dir then swaps directories —
-    parquet cannot overwrite a path it is lazily reading. Local-FS
-    rename here; on HDFS/S3 the same shape is FileSystem.rename / a
-    manifest swap. Run out-of-band (compaction job), not on the ingest
-    path.
-
-    Swap order keeps the live table recoverable at every step: the old
-    directory is moved aside BEFORE the compacted one takes its place
-    (rmtree-then-rename would lose the snapshot entirely if the process
-    died in the window) and deleted only after the swap lands. Shared
-    by the minhash/fingerprint lifecycle here and the paragraph/span
-    snapshot lifecycle in operators/curation.py."""
-    import os
-    import shutil
-
-    for sub in subs:
-        src = os.path.join(path, sub)
-        tmp = src + ".compact"
-        old = src + ".old"
-        spark.read.parquet(src).distinct().write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old)
-
-
-def compact_dedup_snapshot(spark, path: str) -> None:
-    """``compact_snapshot_tables`` over the ``write_dedup_snapshot``
-    layout (fingerprints + band signatures)."""
-    compact_snapshot_tables(spark, path, ("fingerprints", "signatures"))
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1054,9 +977,7 @@ def simhash_near_dup_pairs(
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Hamming-distance SimHash near-dup: distinct (id_a < id_b) pairs
-    whose 16-bit sketches differ in at most ``max_hamming`` bits — the
-    bit-sliced companion to ``simhash_dedup``'s exact-equality
-    bucketing.
+    whose 16-bit sketches differ in at most ``max_hamming`` bits.
 
     Pigeonhole banding makes this bucketed, never all-pairs: the 16-bit
     sketch splits into ``n_slices`` 4-bit slices, and two sketches
@@ -1537,42 +1458,4 @@ def substring_dedup_stats(
         (F.col("n_tokens") - F.coalesce("tokens_removed", F.lit(0))).cast("bigint").alias(
             "tokens_remaining"
         ),
-    )
-
-
-def substring_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 8
-) -> DataFrame:
-    """(id, clean_text, tokens_removed): the scrubbed corpus — tokens
-    inside any repeated span dropped, survivors rejoined with single
-    spaces. The span set rides back to the doc as a collected array
-    (bounded by tokens/n per doc), and the token filter is a JVM-side
-    exists() over it — no Python."""
-    spans = repeated_ngram_spans(df, id_col, text_col, n)
-    per_doc = spans.groupBy("id").agg(
-        F.collect_list(F.struct("start", "end")).alias("spans")
-    )
-    toks = df.select(
-        F.col(id_col).alias("id"), _words(F.col(text_col)).alias("w")
-    ).join(per_doc, "id", "left")
-    covered = lambda i: F.exists(  # noqa: E731
-        F.col("spans"), lambda s: (i >= s["start"]) & (i < s["end"])
-    )
-    kept = F.filter(
-        F.zip_with(
-            F.col("w"),
-            F.sequence(F.lit(0), F.greatest(F.size("w") - 1, F.lit(0))),
-            lambda t, i: F.when(covered(i), F.lit(None).cast("string")).otherwise(t),
-        ),
-        lambda t: t.isNotNull(),
-    )
-    return toks.select(
-        "id",
-        F.when(F.col("spans").isNull(), F.concat_ws(" ", F.col("w")))
-        .otherwise(F.concat_ws(" ", kept))
-        .alias("clean_text"),
-        F.when(F.col("spans").isNull(), F.lit(0))
-        .otherwise(F.size("w") - F.size(kept))
-        .cast("bigint")
-        .alias("tokens_removed"),
     )

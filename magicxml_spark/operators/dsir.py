@@ -63,7 +63,7 @@ def hashed_ngram_stream(
 
     Repartitions the compact (id, text) projection to
     defaultParallelism before the explode so gram fan-out is not
-    pinned to the scan's input-split count (the gopher_repetition /
+    pinned to the scan's input-split count (the gopher_quality /
     _lm_positions pre-explode fix).
     """
     sc = df.sparkSession.sparkContext
@@ -477,119 +477,4 @@ def score_with_dsir_model(
         F.col("_id").alias(id_col),
         "n_grams",
         F.round(F.col("lw_micro") / 1e6, 6).alias("log_w"),
-    )
-
-
-def append_dsir_model(
-    delta: DataFrame,
-    path: str,
-    target_flag: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Fold a delta corpus into a frozen DSIR model O(delta): bucket
-    counts are additive sufficient statistics, so the merged model is
-    EXACTLY the one a full refit on the union produces (pinned). Same
-    staged publish as append_lm_snapshot: all Spark work lands in
-    ``__new`` dirs while the live model stays readable, then a tight
-    rename loop swaps counts and meta in."""
-    import os
-    import shutil
-
-    spark = delta.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    hash_chars = int(meta["hash_chars"])
-    alpha = float(meta["alpha"])
-    grams = hashed_ngram_stream(
-        delta.withColumn("_is_t", target_flag.cast("int")),
-        id_col,
-        text_col,
-        hash_chars,
-        extra_cols=["_is_t"],
-    )
-    d = grams.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("cr"), F.sum("_is_t").alias("ct")
-    )
-    merged = (
-        spark.read.parquet(os.path.join(path, "counts"))
-        .unionByName(d)
-        .groupBy("bucket")
-        .agg(F.sum("cr").alias("cr"), F.sum("ct").alias("ct"))
-    )
-    counts_new = os.path.join(path, "counts__new")
-    merged.write.mode("overwrite").parquet(counts_new)
-    row = spark.read.parquet(counts_new).agg(F.sum("cr"), F.sum("ct")).first()
-    n_raw = int(row[0]) if row[0] is not None else 0
-    n_tgt = int(row[1]) if row[1] is not None else 0
-    meta_new = os.path.join(path, "meta__new")
-    spark.createDataFrame(
-        [(hash_chars, alpha, n_raw, n_tgt)],
-        "hash_chars int, alpha double, n_raw long, n_tgt long",
-    ).repartition(1).write.mode("overwrite").parquet(meta_new)
-    for new_dir, live_dir in (
-        (counts_new, os.path.join(path, "counts")),
-        (meta_new, os.path.join(path, "meta")),
-    ):
-        shutil.rmtree(live_dir)
-        os.replace(new_dir, live_dir)
-    return {"n_raw": n_raw, "n_tgt": n_tgt}
-
-
-def dsir_select_against_target(
-    raw: DataFrame,
-    target: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    hash_chars: int = 3,
-    alpha: float = 0.5,
-    gumbel: bool = True,
-) -> DataFrame:
-    """DSIR with the paper's literal setup — the target is a SEPARATE
-    corpus (Wikipedia, curated books) rather than a flagged subset of
-    the raw table. Target rows contribute to the target multinomial
-    and to the raw (mixture) multinomial exactly as a flagged union,
-    and only RAW documents are candidates for selection (the target is
-    a distribution to match, not data to select).
-
-    The two tables may use OVERLAPPING id spaces: per-document scoring
-    keys on a composite (side-prefixed) id, so a target row whose id
-    collides with a raw id neither merges into that raw document's
-    weight nor leaks into the candidate pool (ADVICE r9: the earlier
-    spelling grouped by bare id and an inner join re-admitted the
-    colliding row with a combined weight)."""
-    side_id = lambda side: F.concat(  # noqa: E731
-        F.lit(side), F.col(id_col).cast("string")
-    ).alias("_cid")
-    flagged = raw.select(side_id("r|"), F.col(text_col).alias(text_col)).unionByName(
-        target.select(side_id("t|"), F.col(text_col).alias(text_col))
-    )
-    lw = dsir_log_weights(
-        flagged,
-        "_cid",
-        text_col,
-        F.col("_cid").startswith("t|"),
-        hash_chars,
-        alpha,
-    )
-    # raw-side candidates: the side prefix IS the flag, so the cut is a
-    # pure filter — no join back into an id space the target shares
-    cand = lw.filter(F.col("_cid").startswith("r|")).withColumn(
-        "_oid", F.substring("_cid", 3, 2**30).cast(raw.schema[id_col].dataType)
-    )
-    key = (
-        gumbel_key(F.col("_oid"), F.col("lw_micro"))
-        if gumbel
-        else F.col("lw_micro")
-    )
-    return (
-        cand.withColumn("_key", key)
-        .orderBy(F.desc("_key"), "_oid")
-        .limit(k)
-        .select(
-            F.col("_oid").alias(id_col),
-            "n_grams",
-            F.round(F.col("lw_micro") / 1e6, 6).alias("log_w"),
-            F.round(F.col("_key") / 1e6, 6).alias("sel_key"),
-        )
     )

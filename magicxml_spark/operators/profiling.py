@@ -5,10 +5,11 @@ broadcast-vs-shuffle calls).
 At 100 TB you do not discover a hot key by OOMing an executor — you run
 ``key_skew_profile`` on the join/agg key first (one aggregation, the
 profile output is top-N rows) and read off whether the heaviest key's
-share justifies salting (operators/bucketing.salted_agg) or the skew is
-within AQE's split threshold. The profile is itself scale-safe: one
-hash aggregation with map-side partial counts, one scalar aggregate for
-the totals, a broadcast of that single totals row back onto the top-N.
+share justifies salting (the q_salted_agg two-phase template) or the
+skew is within AQE's split threshold. The profile is itself
+scale-safe: one hash aggregation with map-side partial counts, one
+scalar aggregate for the totals, a broadcast of that single totals row
+back onto the top-N.
 """
 
 from __future__ import annotations
@@ -62,80 +63,4 @@ def key_skew_profile(df: DataFrame, key_col: str, top_n: int = 10) -> DataFrame:
                 F.col("n_rows").cast("double") * F.col("_n_keys") / F.col("_total"), 4
             ).alias("skew_ratio"),
         )
-    )
-
-
-def recommend_salt_factor(
-    top_key_rows: int,
-    total_rows: int,
-    n_partitions: int,
-    skew_tolerance: float = 2.0,
-    max_salt: int = 256,
-) -> int:
-    """Salt factor for a groupBy/join key given its measured profile
-    (``key_skew_profile`` output) and the stage's partition count.
-
-    Returns 1 (no salting) while the heaviest key stays within
-    ``skew_tolerance`` x the average partition's row share — salting
-    un-needed keys only adds a second shuffle. Past that, the factor
-    is the number of average-sized partition slices the hot key spans,
-    clamped to ``max_salt`` (beyond a few hundred the second-phase
-    merge stops being 'tiny').
-
-    Pure arithmetic — callable on driver-side profile rows or encoded
-    in a config review; deliberately NOT auto-applied inside operators
-    (salting changes the plan shape; the decision should be visible).
-    """
-    if total_rows <= 0 or n_partitions <= 0:
-        return 1
-    avg_partition_rows = total_rows / n_partitions
-    if top_key_rows <= skew_tolerance * avg_partition_rows:
-        return 1
-    return min(max_salt, -(-top_key_rows // int(max(1.0, avg_partition_rows))))
-
-
-def salted_agg(
-    df: DataFrame,
-    key_col: str,
-    aggs: dict[str, tuple[str, str]],
-    salt_factor: int,
-) -> DataFrame:
-    """Two-phase salted aggregation, EXACTLY equal to
-    ``df.groupBy(key).agg(...)`` for decomposable aggregates.
-
-    ``aggs`` maps output column -> (input column, fn) with fn in
-    {'count', 'sum', 'min', 'max'} — the aggregates whose two-phase
-    split (partial per (key, salt), merge per key) is algebraically
-    exact: count merges by sum, sum/min/max by themselves. Phase one
-    spreads the hot key over ``salt_factor`` reducers; phase two's
-    input is |distinct keys| x salt_factor rows — tiny.
-
-    Use ``recommend_salt_factor`` on a ``key_skew_profile`` row to pick
-    ``salt_factor``; factor 1 degenerates to the plain plan.
-
-    The salt MUST be row-derived, never key-derived: hashing the group
-    key would give every row of the hot key the same salt — zero
-    spread. ``monotonically_increasing_id`` spreads rows round-robin
-    within each input partition; the final result is salt-invariant
-    (the merge removes it), so salt nondeterminism across runs is fine.
-    """
-    _MERGE = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
-    _PARTIAL = {"count": F.count, "sum": F.sum, "min": F.min, "max": F.max}
-    for name, (_, fn) in aggs.items():
-        if fn not in _MERGE:
-            raise ValueError(f"{name}: non-decomposable agg {fn!r}")
-    salted = df.withColumn(
-        "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_factor))
-    )
-    partial = salted.groupBy(key_col, "_salt").agg(
-        *[
-            _PARTIAL[fn](F.col(col)).alias(f"_p_{name}")
-            for name, (col, fn) in aggs.items()
-        ]
-    )
-    return partial.groupBy(key_col).agg(
-        *[
-            _MERGE[fn](F.col(f"_p_{name}")).alias(name)
-            for name, (col, fn) in aggs.items()
-        ]
     )

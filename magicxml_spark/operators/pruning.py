@@ -86,10 +86,3 @@ def select_output_columns(df: DataFrame) -> list[str]:
         )
         or c in IMPORTANT_COLUMNS
     ]
-
-
-def prune_columns(df: DataFrame) -> DataFrame:
-    """Apply Q4-Q8: static excludes, data-dependent all-blank drop,
-    important overrides, digit-name drop, sorted projection."""
-    cols = select_output_columns(df)
-    return df.select(*[_c(c) for c in cols if c in df.columns])

@@ -327,63 +327,3 @@ def query_bm25_index(
             F.round(F.col("s_micro") / 1e6, 6).alias("score"),
         )
     )
-
-
-def append_bm25_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Fold new documents into a frozen index O(delta): postings are
-    per-(term, doc) rows (new docs append new rows; key-summed merge
-    covers re-sharded deltas), stats add. Same staged ``__new``
-    publish as the DSIR/LM snapshot appends; append == rebuild
-    EXACTLY (pinned) because every statistic is additive."""
-    import os
-    import shutil
-
-    spark = delta.sparkSession
-    sc = spark.sparkContext
-    words = _tokens(F.col("_t"))
-    base = delta.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
-    ).repartition(sc.defaultParallelism)
-    # one tokenize pass over the delta (same shape as the write path)
-    pre = base.select(
-        "_id", F.size(words).alias("dl"), words.alias("_w")
-    ).localCheckpoint(eager=True)
-    d_post = (
-        pre.select("_id", "dl", F.explode("_w").alias("term"))
-        .groupBy("term", "_id")
-        .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
-    )
-    merged = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .unionByName(d_post)
-        .groupBy("term", "_id")
-        .agg(F.sum("tf").alias("tf"), F.min("dl").alias("dl"))
-    )
-    post_new = os.path.join(path, "postings__new")
-    merged.write.mode("overwrite").parquet(post_new)
-    d_stats = pre.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
-    )
-    s_merged = (
-        spark.read.parquet(os.path.join(path, "stats"))
-        .unionByName(d_stats)
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_len").alias("total_len"),
-        )
-    )
-    stats_new = os.path.join(path, "stats__new")
-    s_merged.write.mode("overwrite").parquet(stats_new)
-    row = spark.read.parquet(stats_new).first()
-    for new_dir, live_dir in (
-        (post_new, os.path.join(path, "postings")),
-        (stats_new, os.path.join(path, "stats")),
-    ):
-        shutil.rmtree(live_dir)
-        os.replace(new_dir, live_dir)
-    return {"n_docs": int(row["n_docs"])}

@@ -73,10 +73,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_topk_bruteforce(
     df: DataFrame,
     id_col: str,
@@ -1038,38 +1034,6 @@ def search_ivf_snapshot(
     )
 
 
-def append_ivf_snapshot(
-    new_emb: DataFrame,
-    snapshot_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold new vectors into a persisted IVF index: assign each to its
-    nearest STORED centroid (no re-fit — centroids are read back and
-    compiled into one projection) and parquet-append to the cells
-    table. O(delta) per ingest, mirroring ``append_dedup_snapshot``.
-
-    Centroids drift as the corpus grows; monitor
-    ``ivf_snapshot_balance`` and re-run ``write_ivf_snapshot``
-    (a re-fit) out-of-band when the balance ratio degrades — the
-    append path itself never pays a fit."""
-    import os
-
-    spark = new_emb.sparkSession
-    cents = {
-        r["cell"]: list(r["centroid"])
-        for r in spark.read.parquet(os.path.join(snapshot_path, "centroids")).collect()
-    }
-    centroids = [cents[i] for i in range(len(cents))]
-    base = _with_norm(new_emb, id_col, vec_col)
-    (
-        with_probe_cells(base, centroids, 1, id_col="id")
-        .select("id", "v", "n", "cell")
-        .write.mode("append")
-        .parquet(os.path.join(snapshot_path, "cells"))
-    )
-
-
 def ivf_snapshot_balance(spark, snapshot_path: str) -> DataFrame:
     """One-row health summary of a (possibly appended-to) IVF index:
     (n_cells_total, n_cells_used, n_vectors, max_cell_rows,
@@ -1109,11 +1073,10 @@ def refit_ivf_snapshot(
     fit_sample_rows: int = 200_000,
 ) -> int:
     """Re-fit a drifted IVF index in place from its stored vectors — the
-    out-of-band maintenance job ``append_ivf_snapshot`` defers to. Reads
-    the cells table (vectors are stored normalized, so no re-norm),
-    fits fresh centroids on a hash-deterministic sample, re-assigns
-    every vector, and swaps both tables via the same old-aside ordering
-    as ``compact_dedup_snapshot``: both tmp dirs are fully written
+    out-of-band maintenance job. Reads the cells table (vectors are
+    stored normalized, so no re-norm), fits fresh centroids on a
+    hash-deterministic sample, re-assigns every vector, and swaps both
+    tables via an old-aside ordering: both tmp dirs are fully written
     before the first rename, and a recovery preamble completes or rolls
     back any half-finished swap from a crashed prior run (a crash
     between ``rename(src, old)`` and ``rename(tmp, src)`` leaves no

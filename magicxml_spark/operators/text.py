@@ -220,25 +220,6 @@ def card_counts_from(cands: Column | str) -> dict[str, Column]:
     }
 
 
-def card_counts(text: Column | str) -> dict[str, Column]:
-    """One-projection convenience over ``card_candidates`` +
-    ``card_counts_from``. NOTE: projecting both returned counts side
-    by side evaluates the candidate regex twice (no cross-expression
-    CSE); hot paths should materialize ``card_candidates`` in a first
-    projection and count with ``card_counts_from``."""
-    return card_counts_from(card_candidates(text))
-
-
-def pii_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append per-category counts + a redacted copy of ``text_col``."""
-    counts = pii_counts(text_col)
-    return df.select(
-        *df.columns,
-        *[c.alias(f"n_{name}") for name, c in counts.items()],
-        redact_pii(text_col).alias("redacted"),
-    )
-
-
 def unigram_surprisal(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -915,15 +896,6 @@ def bytes_to_unicode() -> dict[int, str]:
     return dict(zip(bs, [chr(c) for c in cs]))
 
 
-#: GPT-2's pre-tokenizer pattern (documentation; the scanner below
-#: implements these semantics — python stdlib `re` lacks \p classes):
-#:   's|'t|'re|'ve|'m|'ll|'d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+
-#:   |\s+(?!\S)|\s+
-GPT2_PRETOKEN_PATTERN = (
-    r"'s|'t|'re|'ve|'m|'ll|'d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
-    r"|\s+(?!\S)|\s+"
-)
-
 _GPT2_CONTRACTIONS = ("'s", "'t", "'re", "'ve", "'m", "'ll", "'d")
 
 
@@ -1070,22 +1042,12 @@ def bpe_train_bytes(
     )
 
 
-#: Fixture corpus for the FROZEN byte-level table below — the
-#: deterministic training input whose merge table stands in for a
-#: published tokenizer in the driver-gated byte-level query
-#: (q_bpe_bytes). Kept tiny so the provenance test can retrain it
-#: in-process and assert equality.
-BPE_BYTES_FIXTURE_CORPUS: list[str] = [
-    "the quick brown fox jumps over the lazy dog",
-    "the lazy dog sleeps while the quick fox jumps",
-    "привет the quick dog and the lazy fox",
-    "over and over the dog jumps привет",
-]
-
-#: FROZEN 40-merge byte-level table: bpe_train_bytes(
-#: BPE_BYTES_FIXTURE_CORPUS, max_merges=40, min_count=2) — pinned by
-#: tests/test_bpe_bytes.py against BOTH the Spark trainer and the
-#: independent plain-Python twin, so this constant cannot rot. The
+#: FROZEN 40-merge byte-level table, standing in for a published
+#: tokenizer in the driver-gated byte-level query (q_bpe_bytes):
+#: bpe_train_bytes(FIXTURE_CORPUS, max_merges=40, min_count=2) over the
+#: four-line corpus in tests/test_bpe_bytes.py — pinned there against
+#: BOTH the Spark trainer and the independent plain-Python twin, so
+#: this constant cannot rot. The
 #: tail merges are the byte-level design's point: 'привет' starts
 #: split across 14 mapped byte symbols (Ð¿ÑĢÐ¸Ð²ÐµÑĤ) and the merge
 #: chain re-joins it — multi-byte UTF-8 re-assembly from raw bytes.

@@ -2,18 +2,27 @@
 
 ``xml_to_csv`` is the flagship path (§3.1: URL/file -> validate ->
 dialect detect -> flatten -> prune -> CSV) and holds all of one
-conversion's state. ``convert_file`` is the extension-dispatch surface
-(§3.2). Everything between source and sink is one lazy DataFrame plan —
-Catalyst owns ordering; the only driver materializations are the tiny
-category dimension, the pivot-key distinct scans (param, fabric,
-features) and the Q5 prune aggregate (bounded dimensions and one
-aggregate row, SURVEY §4)."""
+conversion's state. Everything between source and sink is one lazy
+DataFrame plan — Catalyst owns ordering; the only driver
+materializations are the tiny category dimension, the pivot-key
+distinct scans (param, fabric, features) and the Q5 prune aggregate
+(bounded dimensions and one aggregate row, SURVEY §4).
+
+``convert_file`` is the extension-dispatch surface (§3.2-3.3): one
+route table keyed by (source extension, target extension). A pair
+outside the table takes its source extension's default route —
+``.csv`` -> XML catalog, ``.xlsx``/``.xls`` -> CSV, ``.json`` -> CSV,
+anything else -> the XML pipeline. An ``http(s)://`` source is fetched
+to a temp ``.xml`` file first (S1) and then routed like that file.
+"""
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from magicxml_spark.operators.category_path import build_category_paths
 from magicxml_spark.operators.flatten import (
@@ -24,7 +33,11 @@ from magicxml_spark.operators.flatten import (
 )
 from magicxml_spark.operators.pruning import _c, select_output_columns
 from magicxml_spark.sinks.csv_sink import write_csv
-from magicxml_spark.sinks.json_sink import write_json_array
+from magicxml_spark.sinks.json_sink import (
+    write_json_array,
+    write_json_documents,
+    xml_records_to_json,
+)
 from magicxml_spark.sinks.xml_sink import write_simple_catalog, write_yml_catalog
 from magicxml_spark.sources.csv_source import read_csv
 from magicxml_spark.sources.json_source import read_json
@@ -132,16 +145,128 @@ def csv_to_json(spark: SparkSession, src: str, dst: str) -> str:
     return write_json_array(read_csv(spark, src), dst)
 
 
-def convert_file(spark: SparkSession, src: str, dst: str, **options) -> str:
-    """§3.2 extension dispatch: route by source extension; XML is the
-    default like the reference (main.py:1802-1812)."""
-    ext = os.path.splitext(src)[1].lower()
-    if ext == ".csv":
-        return csv_to_xml(spark, src, dst, options.get("xml_format", "yandex_market"))
-    if ext in (".xlsx", ".xls"):
-        from magicxml_spark.sources.excel import read_excel
+# The routes below import their converters when they run: the binary
+# converters pull in pandas, which the XML/CSV/JSON routes never need.
 
-        return write_csv(read_excel(spark, src), dst, single_file=True)
-    if ext == ".json":
-        return json_to_csv(spark, src, dst)
-    return xml_to_csv(spark, src, dst, dialect=options.get("dialect"))
+
+def _csv_to_xlsx(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.excel import write_excel
+
+    return write_excel(read_csv(spark, src), dst)
+
+
+def _csv_to_pdf(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.binary_docs import render_pdf_report
+
+    return render_pdf_report(read_csv(spark, src), dst)
+
+
+def _excel_to_csv(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.excel import read_excel
+
+    return write_csv(read_excel(spark, src), dst, single_file=True)
+
+
+def _excel_to_pdf(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.excel import excel_to_pdf
+
+    return excel_to_pdf(spark, src, dst)
+
+
+def _write_bytes(df: DataFrame, column: str, dst: str) -> str:
+    """The one binary payload a single-file converter produced."""
+    (row,) = df.select(column).collect()
+    with open(dst, "wb") as f:
+        f.write(row[0])
+    return dst
+
+
+def _image_to_pdf(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.binary_docs import image_to_pdf, read_binary
+
+    return _write_bytes(image_to_pdf(read_binary(spark, src)), "pdf_content", dst)
+
+
+def _png_to_jpg(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.binary_docs import png_to_jpg, read_binary
+
+    return _write_bytes(png_to_jpg(read_binary(spark, src)), "jpg_content", dst)
+
+
+def _pdf_to_image(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    """K10: a one-page PDF gives ``dst``; a multipage one gives the zip
+    of its page images beside it, ``{dst stem}.zip`` (main.py:1259-1320)."""
+    from magicxml_spark.sources.binary_docs import (
+        pdf_to_images,
+        read_binary,
+        write_image_outputs,
+    )
+
+    fmt = os.path.splitext(dst)[1][1:].lower()
+    images = pdf_to_images(read_binary(spark, src), output_format=fmt)
+    with tempfile.TemporaryDirectory() as tmp:
+        (written,) = write_image_outputs(images, tmp)
+        if written.endswith(".zip"):
+            dst = os.path.splitext(dst)[0] + ".zip"
+        shutil.move(written, dst)
+    return dst
+
+
+def _pdf_to_csv(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.binary_docs import extract_pdf_tables, read_binary
+
+    return write_csv(extract_pdf_tables(read_binary(spark, src)), dst, single_file=True)
+
+
+def _pdf_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    from magicxml_spark.sources.binary_docs import extract_pdf_documents, read_binary
+
+    return write_json_array(extract_pdf_documents(read_binary(spark, src)), dst)
+
+
+def _xml_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
+    records, _ = read_xml_records(spark, src, options.get("dialect"))
+    return write_json_documents(xml_records_to_json(records), dst)
+
+
+# (source extension, target extension) -> route(spark, src, dst, options).
+# A target of None is the source extension's default route; (None, None)
+# is the default for every other source extension.
+ROUTES = {
+    (".csv", None): lambda spark, src, dst, options: csv_to_xml(
+        spark, src, dst, options.get("xml_format", "yandex_market")
+    ),
+    (".csv", ".xlsx"): _csv_to_xlsx,
+    (".csv", ".pdf"): _csv_to_pdf,
+    (".xlsx", None): _excel_to_csv,
+    (".xls", None): _excel_to_csv,
+    (".xlsx", ".pdf"): _excel_to_pdf,
+    (".xls", ".pdf"): _excel_to_pdf,
+    (".json", None): lambda spark, src, dst, options: json_to_csv(spark, src, dst),
+    (".png", ".pdf"): _image_to_pdf,
+    (".jpg", ".pdf"): _image_to_pdf,
+    (".jpeg", ".pdf"): _image_to_pdf,
+    (".png", ".jpg"): _png_to_jpg,
+    (".pdf", ".png"): _pdf_to_image,
+    (".pdf", ".jpg"): _pdf_to_image,
+    (".pdf", ".csv"): _pdf_to_csv,
+    (".pdf", ".json"): _pdf_to_json,
+    (".xml", ".json"): _xml_to_json,
+    (None, None): lambda spark, src, dst, options: xml_to_csv(
+        spark, src, dst, dialect=options.get("dialect")
+    ),
+}
+
+
+def convert_file(spark: SparkSession, src: str, dst: str, **options) -> str:
+    """§3.2 extension dispatch through ``ROUTES``; reads the ``dialect``
+    and ``xml_format`` options only."""
+    if src.lower().startswith(("http://", "https://")):
+        from magicxml_spark.sources.http_fetch import fetch_to_file
+
+        with tempfile.TemporaryDirectory() as tmp:
+            local = fetch_to_file(src, os.path.join(tmp, "feed.xml"))
+            return convert_file(spark, local, dst, **options)
+    s, d = os.path.splitext(src)[1].lower(), os.path.splitext(dst)[1].lower()
+    route = ROUTES.get((s, d)) or ROUTES.get((s, None)) or ROUTES[(None, None)]
+    return route(spark, src, dst, options)

@@ -15,12 +15,12 @@ bucketing to ``bits`` bits, then bit interleaving as a sum of shifts —
 deterministic, codegen-resident, and reproducible in a DuckDB oracle
 from the identical expression text.
 
-``cluster_write`` is the write-side composition:
-repartitionByRange(z) + sortWithinPartitions(z) + parquet write, which
-is exactly what a table-maintenance OPTIMIZE job runs at scale. The
-test suite quantifies the payoff by reading per-file min-max back and
-counting files a box predicate cannot skip (z-ordered layout: few;
-single-column layout: all files on the other dimension).
+The write side is repartitionByRange(zkey) + sortWithinPartitions(zkey)
+and a parquet write — exactly what a table-maintenance OPTIMIZE job
+runs at scale. The test suite quantifies the payoff by reading
+per-file min-max back and counting files a box predicate cannot skip
+(z-ordered layout: few; single-column layout: all files on the other
+dimension).
 """
 
 from __future__ import annotations
@@ -85,28 +85,6 @@ def zorder_key(
     return bucketed.select(
         *df.columns,
         interleave_bits(F.col("_ba"), F.col("_bb"), bits).alias("zkey"),
-    )
-
-
-def cluster_write(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    path: str,
-    n_files: int,
-    bits: int = ZORDER_BITS,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered on the
-    z-curve: range-partition by zkey (files own contiguous curve
-    segments), sort within each (tight row-group stats), drop the key
-    (layout is physical, not schema)."""
-    keyed = zorder_key(df, col_a, col_b, bits)
-    (
-        keyed.repartitionByRange(n_files, "zkey")
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(path)
     )
 
 

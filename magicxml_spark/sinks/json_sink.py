@@ -1,11 +1,11 @@
 """K6/K7: JSON sinks (reference main.py:809-883).
 
 K6 'array' format: a JSON array of row objects.
-K6 'object' format: {"data": [...], "total": N, "exported_at": ts}.
 K7 XML->JSON document conversion: @attr / #text conventions with
 repeated tags promoted to lists — the Spark spelling is a rename pass
 over the XML reader's struct (attrs are '_'-prefixed, text is _VALUE)
-followed by to_json.
+followed by to_json; ``write_json_documents`` writes the documents as
+one JSON array.
 """
 
 from __future__ import annotations
@@ -17,40 +17,28 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def write_json_rows(df: DataFrame, path: str) -> str:
-    """Distributed JSON-lines write (the scale path)."""
-    df.write.mode("overwrite").json(path)
-    return path
-
-
-def write_json_array(df: DataFrame, path: str) -> str:
-    """K6 'array': one JSON array document (bounded; streams rows)."""
+def _write_array(docs, path: str) -> str:
     with open(path, "w", encoding="utf-8") as f:
         f.write("[")
         first = True
-        for row in df.toJSON().toLocalIterator():
+        for doc in docs:
             if not first:
                 f.write(",")
-            f.write(row)
+            f.write(doc)
             first = False
         f.write("]")
     return path
 
 
-def write_json_envelope(df: DataFrame, path: str, exported_at: str = "") -> str:
-    """K6 'object': {data, total, exported_at} (main.py:814-828).
-    total = count() — one extra action, the data streams."""
-    total = df.count()
-    with open(path, "w", encoding="utf-8") as f:
-        f.write('{"data":[')
-        first = True
-        for row in df.toJSON().toLocalIterator():
-            if not first:
-                f.write(",")
-            f.write(row)
-            first = False
-        f.write(f'],"total":{total},"exported_at":{json.dumps(exported_at)}}}')
-    return path
+def write_json_array(df: DataFrame, path: str) -> str:
+    """K6 'array': one JSON array document (bounded; streams rows)."""
+    return _write_array(df.toJSON().toLocalIterator(), path)
+
+
+def write_json_documents(df: DataFrame, path: str) -> str:
+    """K7: one JSON array of the documents in ``df``'s single JSON-string
+    column (``xml_records_to_json`` output; bounded; streams rows)."""
+    return _write_array((row[0] for row in df.toLocalIterator()), path)
 
 
 def xml_struct_to_json_conventions(dt: T.DataType, c: Column) -> Column:

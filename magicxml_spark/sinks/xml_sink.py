@@ -12,8 +12,7 @@ Spark-first split:
   with the data and never touches Python.
 * Document assembly (header, categories block, footer) is a bounded
   driver-side wrap; fragments stream via toLocalIterator so the full
-  dataset is never resident. For unbounded exports use
-  ``write_fragments`` which writes fragment parts distributed.
+  dataset is never resident.
 """
 
 from __future__ import annotations
@@ -306,11 +305,3 @@ def write_simple_catalog(df: DataFrame, path: str) -> str:
         f.write("</products></catalog>")
 
     return _write_atomic(path, body)
-
-
-def write_fragments(df: DataFrame, path: str, fragment_fn=product_fragments) -> str:
-    """Unbounded-scale variant: write fragment parts distributed; a
-    downstream concatenation (or a reader that accepts multi-part
-    bodies) supplies the envelope."""
-    fragment_fn(df).write.mode("overwrite").text(path)
-    return path

@@ -1,5 +1,6 @@
-"""S9-S11: PDF / image sources over Spark's binaryFile format, with
-K8-K10 sink counterparts (reference main.py:886-1381).
+"""S9-S10: PDF sources over Spark's binaryFile format, with K8-K10
+sink counterparts (reference main.py:886-1381). ``plans.convert``
+routes single files through them.
 
 The Spark-side plumbing (binaryFile scan, schema, Arrow-batched
 ``mapInPandas`` decode, lineage columns) is real and tested; the
@@ -21,13 +22,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 PDF_TABLE_SCHEMA = (
     "path string, pdf_page int, table_number int, cell_row int, cell_json string"
 )
 PDF_DOC_SCHEMA = "path string, pages_count int, text string, meta_json string"
-IMAGE_META_SCHEMA = "path string, format string, width int, height int, mode string"
 
 
 def read_binary(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
@@ -108,54 +107,6 @@ def extract_pdf_tables(
 
     return binary_df.select("path", "content").mapInPandas(
         batches, schema=PDF_TABLE_SCHEMA
-    )
-
-
-def extract_image_meta(
-    binary_df: DataFrame, deterministic_stub: bool = False
-) -> DataFrame:
-    """S11 (main.py:886-905): PIL open + mode normalization metadata."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        use_real = _have("PIL")
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                if use_real:
-                    import io
-
-                    from PIL import Image
-
-                    with Image.open(io.BytesIO(content)) as im:
-                        mode = "RGB" if im.mode in ("RGBA", "LA") else im.mode
-                        rows.append((path, im.format, im.width, im.height, mode))
-                    continue
-                # no PIL: the lite codecs decode PNG/BMP/GIF/JPEG
-                # (sources/image_lite.py) — other formats fall through
-                from magicxml_spark.sources import image_lite
-
-                dec = image_lite.decode_image(bytes(content))
-                if dec is not None:
-                    fmt_, w, h, mode, _ = dec
-                    rows.append(
-                        (path, fmt_, w, h, "RGB" if mode in ("RGBA", "LA") else mode)
-                    )
-                elif deterministic_stub:
-                    digest = hashlib.md5(bytes(content)).digest()
-                    rows.append(
-                        (path, "STUB", digest[0] + 1, digest[1] + 1, "RGB")
-                    )
-                else:
-                    raise NotImplementedError(
-                        "PIL not installed and not a lite-decodable "
-                        "PNG/BMP/GIF/JPEG; pass deterministic_stub=True"
-                    )
-            yield pd.DataFrame(
-                rows, columns=["path", "format", "width", "height", "mode"]
-            )
-
-    return binary_df.select("path", "content").mapInPandas(
-        batches, schema=IMAGE_META_SCHEMA
     )
 
 
@@ -299,60 +250,6 @@ def extract_pdf_documents(
     return binary_df.select("path", "content").mapInPandas(batches, schema=PDF_DOC_SCHEMA)
 
 
-def resize_images(
-    binary_df: DataFrame,
-    width: int,
-    height: int,
-    deterministic_stub: bool = False,
-) -> DataFrame:
-    """Multimodal resize: (path, content) -> (path, width, height,
-    resized binary). PIL-gated; the stub emits md5-derived bytes of a
-    size proportional to the target so batch-shape behavior is real."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        use_real = _have("PIL")
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                if use_real:
-                    import io
-
-                    from PIL import Image
-
-                    with Image.open(io.BytesIO(content)) as im:
-                        buf = io.BytesIO()
-                        im.resize((width, height)).save(buf, im.format or "PNG")
-                        rows.append((path, width, height, buf.getvalue()))
-                    continue
-                # no PIL: nearest-neighbor resample on the lite-codec
-                # path (PNG/BMP/GIF/JPEG in, PNG out)
-                from magicxml_spark.sources import image_lite, png_lite
-
-                dec = image_lite.decode_image(bytes(content))
-                if dec is not None:
-                    _, w0, h0, mode, px = dec
-                    resized = png_lite.resize_nearest(w0, h0, mode, px, width, height)
-                    rows.append(
-                        (path, width, height, png_lite.encode_png(width, height, mode, resized))
-                    )
-                elif deterministic_stub:
-                    seed = hashlib.md5(bytes(content)).digest()
-                    fake = (seed * ((width * height) // len(seed) + 1))[: width * height]
-                    rows.append((path, width, height, fake))
-                else:
-                    raise NotImplementedError(
-                        "PIL not installed and not a lite-decodable "
-                        "PNG/BMP/GIF/JPEG; pass deterministic_stub=True"
-                    )
-            yield pd.DataFrame(
-                rows, columns=["path", "width", "height", "resized"]
-            )
-
-    return binary_df.select("path", "content").mapInPandas(
-        batches, schema="path string, width int, height int, resized binary"
-    )
-
-
 # --- K10: image -> PDF (reference main.py:1173-1241) ---------------------
 
 #: A4 page box in points and the reference's px->pt ratio (72/96).
@@ -407,8 +304,7 @@ def image_to_pdf(binary_df: DataFrame, deterministic_stub: bool = False) -> Data
     The geometry columns are computed with the real reference math in
     every mode; only the pixel decode (PIL) and PDF render (reportlab)
     are import-gated. Stub mode derives image dimensions from
-    md5(content) — matching ``extract_image_meta``'s stub — and emits
-    md5-derived bytes as the pdf payload."""
+    md5(content) and emits md5-derived bytes as the pdf payload."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
@@ -481,8 +377,8 @@ def image_to_pdf(binary_df: DataFrame, deterministic_stub: bool = False) -> Data
                     )
                 elif deterministic_stub:
                     digest = hashlib.md5(bytes(content)).digest()
-                    # stub dims match extract_image_meta's stub, scaled up
-                    # so both fit branches occur across inputs
+                    # stub dims scaled up so both fit branches occur
+                    # across inputs
                     geo = fit_image_to_pdf_page(
                         (digest[0] + 1) * 8, (digest[1] + 1) * 8
                     )
@@ -731,150 +627,3 @@ def write_image_outputs(images_df: DataFrame, out_dir: str) -> list[str]:
     if current_path is not None:
         flush(current_path, current_pages)
     return written
-
-
-def sample_video_frames(
-    binary_df: DataFrame,
-    every_n: int = 30,
-    max_frames: int = 8,
-    deterministic_stub: bool = False,
-) -> DataFrame:
-    """Multimodal frame sampling: one row per sampled frame with a
-    frame_index lineage column. REAL for Motion-JPEG AVI containers
-    (riff_media walks the movi list; each emitted frame is the JPEG
-    bytes, decodable downstream by image_lite/jpeg_lite); inter-frame
-    codecs (h264 etc.) stay on the cv2/av gate, with the
-    deterministic stub preserving the explode shape for them."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from magicxml_spark.sources.riff_media import iter_mjpeg_frames
-
-        use_real = _have("cv2") or _have("av")
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                if use_real:  # pragma: no cover - codec not in image
-                    raise NotImplementedError("wire cv2/av decode here")
-                mjpeg = list(iter_mjpeg_frames(bytes(content)))
-                if mjpeg:
-                    sampled = [
-                        (fidx, jpeg)
-                        for fidx, jpeg in mjpeg
-                        if fidx % every_n == 0
-                    ][:max_frames]
-                    rows += [(path, fidx, jpeg) for fidx, jpeg in sampled]
-                    continue
-                if deterministic_stub:
-                    for k in range(max_frames):
-                        frame_index = k * every_n
-                        rows.append(
-                            (
-                                path,
-                                frame_index,
-                                hashlib.md5(
-                                    bytes(content) + str(frame_index).encode()
-                                ).digest(),
-                            )
-                        )
-                else:
-                    raise NotImplementedError(
-                        "no video codec installed; pass deterministic_stub=True"
-                    )
-            yield pd.DataFrame(rows, columns=["path", "frame_index", "frame"])
-
-    return binary_df.select("path", "content").mapInPandas(
-        batches, schema="path string, frame_index int, frame binary"
-    )
-
-
-def chunk_audio(
-    binary_df: DataFrame,
-    chunk_seconds: float = 10.0,
-    sample_rate: int = 16_000,
-    max_chunks: int = 16,
-    deterministic_stub: bool = False,
-) -> DataFrame:
-    """Multimodal audio chunking: one row per fixed-duration chunk with
-    (chunk_index, start_s, end_s, pcm) lineage — the shard shape an
-    ASR/audio-training pipeline feeds downstream. Audio codecs are
-    absent from this image (librosa/soundfile/pydub), so the stub
-    derives per-chunk bytes from md5(content, index) and a duration
-    from the byte length; the explode shape, ordering, and typed
-    metadata columns are real and tested.
-
-    Scale shape: mapInPandas over the binaryFile source — Arrow batches
-    of (path, content), each task emits its own chunk rows; no shuffle
-    until a downstream groupBy. Partition sizing is the binaryFile
-    source's maxPartitionBytes, so giant audio files spread across
-    tasks by file boundary (split-by-time inside one file happens here,
-    per row).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from magicxml_spark.sources.riff_media import decode_wav
-
-        use_real = _have("soundfile") or _have("librosa") or _have("pydub")
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                if use_real:  # pragma: no cover - codec not in image
-                    raise NotImplementedError("wire soundfile/librosa decode here")
-                wav = decode_wav(bytes(content))
-                if wav is not None:
-                    # REAL path: integer-PCM WAV — true duration from
-                    # the sample count, chunk = the actual PCM slice
-                    rate, ch, bits, n_frames, pcm = wav
-                    frame_bytes = ch * bits // 8
-                    # clamp: sub-frame chunk_seconds must still advance
-                    # one frame per chunk, never slice empty [0,0) spans
-                    per_chunk = max(1, int(chunk_seconds * rate))
-                    n = min(
-                        max_chunks,
-                        max(1, -(-n_frames // per_chunk)),
-                    )
-                    for k in range(n):
-                        f0 = k * per_chunk
-                        f1 = min(n_frames, f0 + per_chunk)
-                        rows.append(
-                            (
-                                path,
-                                k,
-                                round(f0 / rate, 3),
-                                round(f1 / rate, 3),
-                                rate,
-                                pcm[f0 * frame_bytes : f1 * frame_bytes],
-                            )
-                        )
-                    continue
-                if not deterministic_stub:
-                    raise NotImplementedError(
-                        "no audio codec installed; pass deterministic_stub=True"
-                    )
-                # stub duration: pretend 1 byte = 1 sample at sample_rate
-                total_s = len(content) / float(sample_rate)
-                n = min(max_chunks, max(1, int(total_s // chunk_seconds) + 1))
-                for k in range(n):
-                    start = k * chunk_seconds
-                    end = min(total_s, start + chunk_seconds)
-                    rows.append(
-                        (
-                            path,
-                            k,
-                            round(start, 3),
-                            round(end, 3),
-                            sample_rate,
-                            hashlib.md5(bytes(content) + str(k).encode()).digest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "chunk_index", "start_s", "end_s", "sample_rate", "pcm"],
-            )
-
-    return binary_df.select("path", "content").mapInPandas(
-        batches,
-        schema=(
-            "path string, chunk_index int, start_s double, end_s double, "
-            "sample_rate int, pcm binary"
-        ),
-    )

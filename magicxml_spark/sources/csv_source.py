@@ -16,15 +16,6 @@ def sniff_delimiter(first_line: str) -> str:
     return "," if first_line.count(",") > first_line.count(";") else ";"
 
 
-def sniff_delimiter_trial(first_line: str) -> str:
-    """main.py:631-659: try ';', ',', tab; first that yields >1 column
-    wins; else ';'."""
-    for delim in (";", ",", "\t"):
-        if len(first_line.split(delim)) > 1:
-            return delim
-    return ";"
-
-
 def read_csv(
     spark: SparkSession, path: str, delimiter: str | None = None
 ) -> DataFrame:

@@ -73,13 +73,6 @@ def write_excel(df: DataFrame, path: str, max_rows: int = 1_000_000) -> str:
     return xlsx_lite.write_rows(path, list(df.columns), rows)
 
 
-def excel_to_pdf_rows(spark: SparkSession, path: str, style: str = "table") -> DataFrame:
-    """K9 row surface (main.py:1155-1170): Excel -> capped report rows."""
-    from magicxml_spark.sources.binary_docs import pdf_report_rows
-
-    return pdf_report_rows(read_excel(spark, path), style=style)
-
-
 def excel_to_pdf(
     spark: SparkSession, src: str, dst: str, style: str = "table"
 ) -> str:

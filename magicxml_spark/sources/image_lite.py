@@ -18,7 +18,7 @@ to-pdf / to-jpg; reference main.py:886-911, 1173-1241) accept real
 
 Decoded shape matches png_lite: ``(width, height, mode, pixels)`` with
 mode 'RGB'/'RGBA' and a flat row-major buffer, so every downstream
-kernel (resize_nearest, flatten_to_rgb, encode_jpeg, the PDF XObject
+kernel (flatten_to_rgb, encode_jpeg, the PDF XObject
 embed) works unchanged. ``decode_image`` sniffs magic bytes and
 dispatches PNG/BMP/GIF/JPEG (JPEG via jpeg_lite's baseline-subset
 decoder), returning ``(format, width, height, mode, pixels)`` or None

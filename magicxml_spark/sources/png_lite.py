@@ -187,25 +187,6 @@ def encode_png(w: int, h: int, mode: str, pixels: bytes) -> bytes:
     )
 
 
-def resize_nearest(
-    w: int, h: int, mode: str, pixels: bytes, new_w: int, new_h: int
-) -> bytes:
-    """Nearest-neighbor resample (the deterministic kernel — bilinear
-    is Pillow's job when installed)."""
-    ch = len(mode)
-    out = bytearray(new_w * new_h * ch)
-    for y in range(new_h):
-        sy = min(y * h // new_h, h - 1)
-        src_row = sy * w * ch
-        dst_row = y * new_w * ch
-        for x in range(new_w):
-            sx = min(x * w // new_w, w - 1)
-            out[dst_row + x * ch : dst_row + (x + 1) * ch] = pixels[
-                src_row + sx * ch : src_row + (sx + 1) * ch
-            ]
-    return bytes(out)
-
-
 def flatten_to_rgb(w: int, h: int, mode: str, pixels: bytes) -> bytes:
     """Composite alpha on white / expand gray — the same normalization
     the reference applies before JPEG/PDF output (main.py:893-897)."""

@@ -103,24 +103,6 @@ def iter_mjpeg_frames(data: bytes):
                         idx += 1
 
 
-def avi_info(data: bytes) -> dict | None:
-    """Main AVI header fields (frame count, dimensions, frame period)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        return None
-    for cid, start, clen, ltype in _walk_riff(data, 12, len(data)):
-        if cid == b"LIST" and ltype == b"hdrl":
-            for fcc, fstart, flen, _ in _walk_riff(data, start, start + clen):
-                if fcc == b"avih" and flen >= 40:
-                    vals = struct.unpack("<10I", data[fstart : fstart + 40])
-                    return {
-                        "micros_per_frame": vals[0],
-                        "total_frames": vals[4],
-                        "width": vals[8],
-                        "height": vals[9],
-                    }
-    return None
-
-
 def encode_mjpeg_avi(
     frames: list[bytes], width: int, height: int, fps: int = 30
 ) -> bytes:

@@ -138,58 +138,6 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-user running event count + value total, updated per micro-batch.
-
-    The reference has no stateful surface at all (SURVEY §2.8); this is
-    the engine's template for arbitrary keyed state at scale — state
-    lives in the state store partitioned by user_id, each micro-batch
-    touches only the keys it contains.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        total, n = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            total += float(pdf["value"].fillna(0.0).sum())
-            n += len(pdf)
-        state.update((total, n))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        stateStructType="total double, n bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_stateful_to_memory(
-    spark: SparkSession, sf_dir: str, state_partitions: int = 8
-) -> DataFrame:
-    """Drive the stateful totals to completion; the final update per
-    user equals the batch aggregate (tests assert this)."""
-    name = f"user_totals_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        agg = running_user_totals(read_events_stream(spark, sf_dir))
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
-
-
 def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session_window sessionization — same aggregation works on
     batch and streaming inputs (identical Catalyst plan shape). A
@@ -229,47 +177,6 @@ def run_sessionize_to_memory(
         q.awaitTermination()
         shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
     return spark.table(name)
-
-
-def stream_to_csv_exactly_once(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-    state_partitions: int = 8,
-) -> list[str]:
-    """foreachBatch CSV sink with idempotent per-batch output: each
-    micro-batch overwrites ``out_dir/batch=<id>``, so a replayed batch
-    (failure between sink write and checkpoint commit) lands in the
-    same directory instead of duplicating rows — overwrite-by-batch-id
-    is the standard exactly-once recipe for non-transactional sinks.
-    Returns the written batch directories.
-
-    A durable ``checkpoint_dir`` makes restarts resume from the last
-    committed offset; tests pass a temp dir and restart the query to
-    prove no batch is emitted twice.
-    """
-    written: list[str] = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        target = os.path.join(out_dir, f"batch={batch_id}")
-        batch_df.write.mode("overwrite").options(header=True).csv(target)
-        written.append(target)
-
-    ckpt = checkpoint_dir or _checkpoint_dir(f"csv_{uuid.uuid4().hex[:8]}")
-    with _stream_tuning(spark, state_partitions):
-        agg = windowed_event_counts(read_events_stream(spark, sf_dir))
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if checkpoint_dir is None:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return written
 
 
 def interval_join_events(

@@ -45,8 +45,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Parquet scan: column pruning and filter
@@ -61,6 +59,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Works on ANY session (confs are adopted at read time), so the
     verification driver's own SparkSession needs no special setup."""
+    if name not in TABLE_NAMES:
+        raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
@@ -72,16 +72,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Register each table as a temp view so operators can be written in
-    either DataFrame or SQL form (same Catalyst plan either way)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -1,5 +1,5 @@
 """K10 converter tests: pdf->images per page @ dpi (+ zip assembly),
-image->PDF pt-scaling/centering, and the A5 dependency-parse skeleton.
+image->PDF pt-scaling/centering, and the A5 heuristic dependency parse.
 
 Codecs are absent from this image, so these drive the deterministic
 stub paths — the distributed plumbing (page fan-out, dpi math, zip
@@ -14,7 +14,7 @@ import zipfile
 
 import pytest
 
-from magicxml_spark.analytics.nlp import dependency_parse
+from magicxml_spark.analytics.heuristic_parse import heuristic_dependency_parse
 from magicxml_spark.sources.binary_docs import (
     PDF_DEFAULT_DPI,
     fit_image_to_pdf_page,
@@ -128,36 +128,14 @@ def test_jpg_format_naming(spark, tmp_path):
     assert rows[0]["page_filename"] == "two.jpg"
 
 
-def test_dependency_parse_stub(spark):
-    docs = spark.createDataFrame(
-        [(1, "the cat sat"), (2, ""), (3, "hello")], ["doc_id", "text"]
-    )
-    rows = dependency_parse(docs, deterministic_stub=True).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert 2 not in by_doc  # empty text -> no tokens
-    d1 = sorted(by_doc[1], key=lambda r: r["token_index"])
-    assert [r["token"] for r in d1] == ["the", "cat", "sat"]
-    assert d1[0]["dep"] == "ROOT" and d1[0]["head_index"] == 0
-    assert [r["head_index"] for r in d1] == [0, 0, 1]  # chain to previous
-    assert all(r["pos"] for r in d1)
-    # determinism: same token -> same labels across runs
-    again = dependency_parse(docs, deterministic_stub=True).collect()
-    assert {(r["doc_id"], r["token_index"], r["pos"], r["dep"]) for r in again} == {
-        (r["doc_id"], r["token_index"], r["pos"], r["dep"]) for r in rows
-    }
-
-
 def test_dependency_parse_falls_back_to_heuristic(spark):
-    """No spaCy + no stub flag -> the declarative rule-based parse
-    (not an exception): real POS tags and a coherent tree — the root
-    is the first verb/aux, self-headed; the subject precedes it; the
-    determiner attaches forward to its noun."""
+    """The declarative rule-based parse: real POS tags and a coherent
+    tree — the root is the first verb/aux, self-headed; the subject
+    precedes it; the determiner attaches forward to its noun."""
     docs = spark.createDataFrame(
         [(1, "The big cat sat on the mat")], ["doc_id", "text"]
     )
-    rows = {r["token_index"]: r for r in dependency_parse(docs).collect()}
+    rows = {r["token_index"]: r for r in heuristic_dependency_parse(docs).collect()}
     assert len(rows) == 7
     # "big" has no lexicon/suffix evidence -> NOUN default, so "The"
     # attaches forward to it (nearest nominal)
@@ -256,43 +234,6 @@ def _mk_png(w=8, h=6, mode="RGB"):
     return png_lite.encode_png(w, h, mode, px), px
 
 
-def test_image_meta_real_png_path(spark, tmp_path):
-    """S11 is real for 8-bit PNGs with no Pillow: png_lite decodes the
-    header+pixels and the mode normalization matches the reference
-    (RGBA/LA -> RGB, main.py:893-897)."""
-    from magicxml_spark.sources.binary_docs import extract_image_meta, read_binary
-
-    rgb, _ = _mk_png(8, 6, "RGB")
-    rgba, _ = _mk_png(4, 4, "RGBA")
-    (tmp_path / "a.png").write_bytes(rgb)
-    (tmp_path / "b.png").write_bytes(rgba)
-    meta = {
-        r["path"].rsplit("/", 1)[-1]: r
-        for r in extract_image_meta(read_binary(spark, str(tmp_path))).collect()
-    }
-    assert (meta["a.png"]["width"], meta["a.png"]["height"]) == (8, 6)
-    assert meta["a.png"]["format"] == "PNG" and meta["a.png"]["mode"] == "RGB"
-    assert meta["b.png"]["mode"] == "RGB"  # RGBA normalized
-
-
-def test_resize_real_png_roundtrip(spark, tmp_path):
-    """K10 resize is real: decode -> nearest-neighbor -> re-encode, and
-    the output PNG decodes to the requested dims with sensible pixels."""
-    from magicxml_spark.sources import png_lite
-    from magicxml_spark.sources.binary_docs import read_binary, resize_images
-
-    data, px = _mk_png(8, 6, "RGB")
-    (tmp_path / "img.png").write_bytes(data)
-    out = resize_images(read_binary(spark, str(tmp_path)), 4, 3).collect()[0]
-    assert (out["width"], out["height"]) == (4, 3)
-    dec = png_lite.decode_png(bytes(out["resized"]))
-    assert dec is not None
-    w, h, mode, rp = dec
-    assert (w, h, mode) == (4, 3, "RGB")
-    # nearest-neighbor: output pixel (0,0) is input pixel (0,0)
-    assert bytes(rp[:3]) == px[:3]
-
-
 def test_image_to_pdf_real_png_path(spark, tmp_path):
     """K10 image->PDF is real: the emitted bytes are a valid PDF with a
     DeviceRGB image XObject at the reference geometry."""
@@ -376,7 +317,7 @@ def test_jpeg_lite_quality_ladder_and_gray():
     assert (w2, h2, mode) == (16, 16, "L")
 
 
-def test_png_lite_corrupt_inputs_return_none_not_raise(spark, tmp_path):
+def test_png_lite_corrupt_inputs_return_none_not_raise():
     """Review regression: structurally corrupt PNGs (truncated IHDR,
     bad palette index) must return None — so one bad file in a
     binaryFile ingest falls to the stub instead of failing the task."""
@@ -384,7 +325,6 @@ def test_png_lite_corrupt_inputs_return_none_not_raise(spark, tmp_path):
     import zlib
 
     from magicxml_spark.sources import png_lite
-    from magicxml_spark.sources.binary_docs import extract_image_meta, read_binary
 
     sig = b"\x89PNG\r\n\x1a\n"
     def chunk(t, b):
@@ -402,12 +342,6 @@ def test_png_lite_corrupt_inputs_return_none_not_raise(spark, tmp_path):
         + chunk(b"IEND", b"")
     )
     assert png_lite.decode_png(bad_palette) is None
-    # and through the Spark operator, stub mode absorbs it
-    (tmp_path / "bad.png").write_bytes(truncated_ihdr)
-    rows = extract_image_meta(
-        read_binary(spark, str(tmp_path)), deterministic_stub=True
-    ).collect()
-    assert rows[0]["format"] == "STUB"
 
 
 def test_pdf_table_cells_containing_separator_roundtrip():
@@ -760,17 +694,12 @@ def test_decode_image_dispatch():
 
 
 def test_image_ops_accept_bmp_and_gif(spark, tmp_path):
-    """S11/K10 end-to-end on non-PNG inputs with NO stub flag: metadata,
-    resize, and to-jpg all run through the lite decoders."""
+    """K10 to-jpg on non-PNG inputs with NO stub flag runs through the
+    lite decoders."""
     import hashlib
 
-    from magicxml_spark.sources.binary_docs import (
-        extract_image_meta,
-        png_to_jpg,
-        resize_images,
-    )
+    from magicxml_spark.sources.binary_docs import png_to_jpg
     from magicxml_spark.sources.jpeg_lite import decode_jpeg
-    from magicxml_spark.sources.png_lite import decode_png
 
     w, h = 10, 6
     rgb = bytes(hashlib.md5(bytes([i % 256])).digest()[0] for i in range(w * h * 3))
@@ -778,19 +707,6 @@ def test_image_ops_accept_bmp_and_gif(spark, tmp_path):
     idx = bytes((i % 8) for i in range(w * h))
     (tmp_path / "a.bmp").write_bytes(_make_bmp(w, h, rgb))
     (tmp_path / "b.gif").write_bytes(_make_gif(w, h, palette, idx))
-    meta = {
-        r["path"].rsplit("/", 1)[-1]: r
-        for r in extract_image_meta(read_binary(spark, str(tmp_path))).collect()
-    }
-    assert meta["a.bmp"]["format"] == "BMP" and meta["a.bmp"]["width"] == w
-    assert meta["b.gif"]["format"] == "GIF" and meta["b.gif"]["height"] == h
-
-    resized = resize_images(
-        read_binary(spark, str(tmp_path), glob="a.bmp"), width=5, height=3
-    ).collect()
-    rw, rh, rmode, rpix = decode_png(bytes(resized[0]["resized"]))
-    assert (rw, rh, rmode) == (5, 3, "RGB")
-
     jpg = png_to_jpg(read_binary(spark, str(tmp_path), glob="b.gif")).collect()
     jw, jh, jmode, _ = decode_jpeg(bytes(jpg[0]["jpg_content"]))
     assert (jw, jh) == (w, h)

@@ -28,6 +28,14 @@ CORPUS = [
     "emoji 😀 tail 😀😀 and Наименование again",
 ]
 
+# The deterministic training input of text.BPE_BYTES_FROZEN_MERGES.
+FIXTURE_CORPUS = [
+    "the quick brown fox jumps over the lazy dog",
+    "the lazy dog sleeps while the quick fox jumps",
+    "привет the quick dog and the lazy fox",
+    "over and over the dog jumps привет",
+]
+
 
 def _py_byte_bpe_train(texts, max_merges, min_count=2, with_counts=False):
     """Independent twin: pre-tokenize, byte-map, then the classic
@@ -180,17 +188,14 @@ def test_frozen_fixture_merges_provenance(spark):
     tokenizer) is EXACTLY what training on its recorded fixture
     corpus produces — pinned against both the independent Python twin
     and the Spark trainer, so the constant cannot rot."""
-    from magicxml_spark.operators.text import (
-        BPE_BYTES_FIXTURE_CORPUS,
-        BPE_BYTES_FROZEN_MERGES,
-    )
+    from magicxml_spark.operators.text import BPE_BYTES_FROZEN_MERGES
 
     assert (
-        _py_byte_bpe_train(BPE_BYTES_FIXTURE_CORPUS, max_merges=40)
+        _py_byte_bpe_train(FIXTURE_CORPUS, max_merges=40)
         == BPE_BYTES_FROZEN_MERGES
     )
     df = spark.createDataFrame(
-        [(t,) for t in BPE_BYTES_FIXTURE_CORPUS], "text string"
+        [(t,) for t in FIXTURE_CORPUS], "text string"
     )
     assert bpe_train_bytes(df, max_merges=40) == BPE_BYTES_FROZEN_MERGES
     # the tail is the multi-byte re-join chain: the final merge emits

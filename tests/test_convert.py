@@ -271,3 +271,184 @@ def test_distributed_parts_match_single_file(spark, tmp_path, feed):
         assert first == header
         part_rows.extend(body)
     assert sorted(part_rows) == sorted(rows)
+
+
+# --- convert_file's route table ----------------------------------------------
+
+
+BOOK_ROWS = [["1", "Стул"], ["2", "Стол"]]
+
+
+def _make_sources(d):
+    """One small input per source extension the route table keys on."""
+    from magicxml_spark.sources import jpeg_lite, pdf_lite, png_lite, xlsx_lite
+
+    (d / "rows.csv").write_text("id;name;price\n1;Стул;10\n2;Стол;20\n", encoding="utf-8")
+    for ext in ("xlsx", "xls"):
+        xlsx_lite.write_rows(str(d / f"book.{ext}"), ["id", "name"], BOOK_ROWS)
+    w, h = 12, 8
+    rgb = bytes(
+        (x * 20 + y * 7 + c * 50) % 256 for y in range(h) for x in range(w) for c in range(3)
+    )
+    (d / "img.png").write_bytes(png_lite.encode_png(w, h, "RGB", rgb))
+    jpg = jpeg_lite.encode_jpeg(w, h, "RGB", rgb, quality=90)
+    (d / "img.jpg").write_bytes(jpg)
+    (d / "img.jpeg").write_bytes(jpg)
+    (d / "one.pdf").write_bytes(pdf_lite.write_table_pdf(["id", "name"], [["1", "a"], ["2", "b"]]))
+    many = [[str(i), f"row {i}"] for i in range(120)]  # past one page
+    (d / "many.pdf").write_bytes(pdf_lite.write_table_pdf(["id", "name"], many))
+    (d / "cat.xml").write_bytes(open(f"{FIX}/cat.xml", "rb").read())
+
+
+def _content(path):
+    """What a conversion wrote: rows for tabular targets (an xlsx or zip
+    package embeds its write time), bytes otherwise."""
+    import zipfile
+
+    from magicxml_spark.sources import xlsx_lite
+
+    ext = os.path.splitext(path)[1]
+    if ext == ".csv":
+        header, *rows = csv.reader(
+            io.StringIO(open(path, "rb").read().decode("utf-8-sig")), delimiter=";"
+        )
+        return header, sorted(rows)
+    if ext == ".json":
+        with open(path, encoding="utf-8") as f:
+            return sorted(json.dumps(d, sort_keys=True) for d in json.load(f))
+    if ext == ".xlsx":
+        return xlsx_lite.read_rows(path)
+    if ext == ".zip":
+        with zipfile.ZipFile(path) as zf:
+            return {n: zf.read(n) for n in zf.namelist()}
+    return open(path, "rb").read()
+
+
+def _direct(spark, src, dst):
+    """Each new route's converter called directly, writing ``dst``."""
+    from magicxml_spark.sinks.csv_sink import write_csv
+    from magicxml_spark.sinks.json_sink import (
+        write_json_array,
+        write_json_documents,
+        xml_records_to_json,
+    )
+    from magicxml_spark.sources import binary_docs as bd
+    from magicxml_spark.sources.excel import excel_to_pdf, write_excel
+    from magicxml_spark.sources.xml_source import read_xml_records
+
+    s, d = os.path.splitext(src)[1], os.path.splitext(dst)[1]
+
+    def payload(df, col):
+        with open(dst, "wb") as f:
+            f.write(df.collect()[0][col])
+        return dst
+
+    if s == ".csv" and d == ".xlsx":
+        return write_excel(read_csv(spark, src), dst)
+    if s == ".csv" and d == ".pdf":
+        return bd.render_pdf_report(read_csv(spark, src), dst)
+    if s in (".xlsx", ".xls"):
+        return excel_to_pdf(spark, src, dst)
+    if s == ".xml":
+        return write_json_documents(xml_records_to_json(read_xml_records(spark, src)[0]), dst)
+    binary = bd.read_binary(spark, src)
+    if d == ".pdf":
+        return payload(bd.image_to_pdf(binary), "pdf_content")
+    if s == ".png" and d == ".jpg":
+        return payload(bd.png_to_jpg(binary), "jpg_content")
+    if d == ".csv":
+        return write_csv(bd.extract_pdf_tables(binary), dst, single_file=True)
+    if d == ".json":
+        return write_json_array(bd.extract_pdf_documents(binary), dst)
+    out_dir = os.path.dirname(dst)
+    (written,) = bd.write_image_outputs(bd.pdf_to_images(binary, output_format=d[1:]), out_dir)
+    return written
+
+
+ROUTE_CASES = [
+    ("rows.csv", ".xlsx"),
+    ("rows.csv", ".pdf"),
+    ("book.xlsx", ".pdf"),
+    ("book.xls", ".pdf"),
+    ("img.png", ".pdf"),
+    ("img.jpg", ".pdf"),
+    ("img.jpeg", ".pdf"),
+    ("img.png", ".jpg"),
+    ("one.pdf", ".png"),
+    ("one.pdf", ".jpg"),
+    ("many.pdf", ".png"),
+    ("one.pdf", ".csv"),
+    ("one.pdf", ".json"),
+    ("cat.xml", ".json"),
+]
+
+
+@pytest.mark.parametrize(
+    "name,target", ROUTE_CASES, ids=[f"{n}->{t}" for n, t in ROUTE_CASES]
+)
+def test_convert_file_route_matches_converter(spark, tmp_path, name, target):
+    _make_sources(tmp_path)
+    src = str(tmp_path / name)
+    (tmp_path / "via").mkdir()
+    (tmp_path / "direct").mkdir()
+    stem = os.path.splitext(name)[0]
+    got = convert_file(spark, src, str(tmp_path / "via" / f"{stem}{target}"))
+    want = _direct(spark, src, str(tmp_path / "direct" / f"{stem}{target}"))
+    assert os.path.splitext(got)[1] == os.path.splitext(want)[1]
+    assert _content(got) == _content(want)
+    if name == "many.pdf":
+        assert got.endswith("many.zip") and len(_content(got)) == 3  # one image per page
+
+
+def test_convert_file_default_routes(spark, tmp_path):
+    """A pair outside the table takes its source extension's default:
+    the same output the default plan writes when called directly."""
+    _make_sources(tmp_path)
+    (tmp_path / "rows.json").write_text('{"items": [{"id": 1, "name": "A"}]}', encoding="utf-8")
+    cases = [
+        ("rows.csv", "catalog.txt", lambda src, dst: csv_to_xml(spark, src, dst)),
+        ("rows.json", "rows.csv", lambda src, dst: json_to_csv(spark, src, dst)),
+        ("rows.json", "rows.xml", lambda src, dst: json_to_csv(spark, src, dst)),
+        ("cat.xml", "cat.csv", lambda src, dst: xml_to_csv(spark, src, dst)),
+        ("cat.xml", "cat.yml", lambda src, dst: xml_to_csv(spark, src, dst)),
+    ]
+    for name, out, plan in cases:
+        src = str(tmp_path / name)
+        got = convert_file(spark, src, str(tmp_path / f"via_{out}"))
+        want = plan(src, str(tmp_path / f"direct_{out}"))
+        assert open(got, "rb").read() == open(want, "rb").read(), (name, out)
+    for ext in ("xlsx", "xls"):
+        got = convert_file(spark, str(tmp_path / f"book.{ext}"), str(tmp_path / f"book_{ext}.csv"))
+        assert _content(got) == (["id", "name"], BOOK_ROWS)
+
+
+def test_convert_file_url_source(spark, tmp_path):
+    """S1: an http(s) source is fetched, then routed like the file."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+
+    feed = open(f"{FIX}/cat.xml", "rb").read()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            self.send_response(200)
+            self.send_header("Content-Type", "application/xml")
+            self.end_headers()
+            self.wfile.write(feed)
+
+        def log_message(self, *args):
+            pass
+
+    httpd = HTTPServer(("127.0.0.1", 0), Handler)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    try:
+        got = convert_file(
+            spark, f"http://127.0.0.1:{httpd.server_port}/feed.xml", str(tmp_path / "url.csv")
+        )
+    finally:
+        httpd.shutdown()
+        t.join(timeout=10)
+    assert not t.is_alive()
+    want = xml_to_csv(spark, f"{FIX}/cat.xml", str(tmp_path / "file.csv"))
+    assert open(got, "rb").read() == open(want, "rb").read()

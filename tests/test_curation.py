@@ -14,7 +14,6 @@ from magicxml_spark.operators.curation import (
     c4_line_filters,
     exact_ntile,
     gopher_quality,
-    gopher_repetition,
     paragraph_dedup,
     perplexity_buckets,
 )
@@ -58,7 +57,7 @@ def test_gopher_repetition_known_fractions(spark):
     # "a b a b a b": normalized chars = 11; 2-grams: "a b" x3, "b a" x2
     # -> top-2 mass = 3 * len("a b") = 9 -> 9/11
     df = _docs(spark, [(1, "a b a b a b")])
-    row = gopher_repetition(df).collect()[0]
+    row = gopher_quality(df).collect()[0]
     assert row["top_ngram_frac_2"] == round(9 / 11, 6)
     # 5-grams: "a b a b a", "b a b a b" each once -> no duplication
     assert row["dup_ngram_frac_5"] == 0.0
@@ -71,13 +70,13 @@ def test_gopher_repetition_dup_mass_can_exceed_one(spark):
     # exceed 1 on pathological repetition, which only strengthens the
     # over-threshold signal the rule exists for.
     df = _docs(spark, [(1, "x y x y x y x y")])
-    row = gopher_repetition(df).collect()[0]
+    row = gopher_quality(df).collect()[0]
     assert row["dup_ngram_frac_5"] == round(18 / 15, 6)
 
 
 def test_gopher_repetition_short_doc_all_zero(spark):
     df = _docs(spark, [(1, "word")])
-    row = gopher_repetition(df).collect()[0]
+    row = gopher_quality(df).collect()[0]
     for n in (2, 3, 4):
         assert row[f"top_ngram_frac_{n}"] == 0.0
     for n in range(5, 11):
@@ -92,7 +91,7 @@ def test_gopher_top_ngram_is_most_frequent_not_largest_mass(spark):
     # over 35 normalized chars (NOT 17/35 — a rarer, longer gram must
     # not win).
     df = _docs(spark, [(1, "longword longword xx yy xx yy xx yy")])
-    row = gopher_repetition(df).collect()[0]
+    row = gopher_quality(df).collect()[0]
     assert row["top_ngram_frac_2"] == round(15 / 35, 6)
 
 
@@ -100,7 +99,7 @@ def test_gopher_top_ngram_count_ties_break_by_char_mass(spark):
     # all 2-grams occur once: "aa bb" (5), "bb cc" (5), "cc ddd" (6)
     # -> tie on count, the larger char mass wins -> 6/12
     df = _docs(spark, [(1, "aa bb cc ddd")])
-    row = gopher_repetition(df).collect()[0]
+    row = gopher_quality(df).collect()[0]
     assert row["top_ngram_frac_2"] == round(6 / 12, 6)
 
 
@@ -125,13 +124,12 @@ def test_gopher_repetition_matches_explode_reference(spark):
             words[2:5] = words[0:3]
         rows.append((doc_id, " ".join(words)))
     df = _docs(spark, rows)
-    got = {r["doc_id"]: r for r in gopher_repetition(df).collect()}
+    got = {r["doc_id"]: r for r in gopher_quality(df).collect()}
 
     for doc_id, text in rows:
         words = [w for w in text.lower().split() if w]
         chars = len(" ".join(words))
         row = got[doc_id]
-        assert row["n_chars_norm"] == chars
         for n, kind in [(2, "top"), (3, "top"), (4, "top")] + [
             (k, "dup") for k in range(5, 11)
         ]:
@@ -700,34 +698,6 @@ def test_lm_snapshot_empty_train_corpus_degenerates_safely(spark, tmp_path):
     assert out[1]["surprisal"] == round((0 + m2 + m3 + m3) / 4 / 1e6, 6)
 
 
-def test_lm_snapshot_append_equals_rebuild(spark, tmp_path):
-    # with count_floor=1 (nothing pruned) folding a delta must yield
-    # EXACTLY the snapshot a full rebuild on the union produces —
-    # pinned via identical scores on a probe batch
-    from magicxml_spark.operators.curation import (
-        append_lm_snapshot,
-        score_with_lm_snapshot,
-        write_lm_snapshot,
-    )
-
-    a = _docs(spark, [(1, "a b c a b"), (2, "c c a b a")])
-    b = _docs(spark, [(3, "b a d d c"), (4, "d a b")])
-    probe = _docs(spark, [(9, "a b c d e"), (8, "d d d")])
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    write_lm_snapshot(a, inc, order=3, count_floor=1)
-    stats = append_lm_snapshot(b, inc)
-    write_lm_snapshot(a.unionByName(b), full, order=3, count_floor=1)
-    assert stats["n_total"] == 18
-    s_inc = {r["doc_id"]: r.asDict() for r in score_with_lm_snapshot(probe, inc).collect()}
-    s_full = {r["doc_id"]: r.asDict() for r in score_with_lm_snapshot(probe, full).collect()}
-    assert s_inc == s_full
-    # staged publish leaves no __new dirs behind on success
-    import os
-
-    assert not [d for d in os.listdir(inc) if d.endswith("__new")]
-
-
 def test_lm_floor_from_must_spare_unigrams(spark, tmp_path):
     # ADVICE r8: floor_from <= 1 would prune the unigram table and
     # shift n_total / the OOV 1/N floor away from a rebuild — both the
@@ -1152,7 +1122,6 @@ def test_kn_snapshot_frozen_score_matches_reference(spark, tmp_path):
 
 def test_kn_snapshot_append_raises_and_self_score_is_ladder(spark, tmp_path):
     from magicxml_spark.operators.curation import (
-        append_lm_snapshot,
         ngram_surprisal,
         score_with_lm_snapshot,
         write_lm_snapshot,
@@ -1168,11 +1137,8 @@ def test_kn_snapshot_append_raises_and_self_score_is_ladder(spark, tmp_path):
         for r in ngram_surprisal(docs, order=3, smoothing="kn").collect()
     }
     assert a == b
-    # KN snapshots do not append — actionable error, not silent drift
     import pytest
 
-    with pytest.raises(ValueError, match="smoothing='kn'"):
-        append_lm_snapshot(_docs(spark, [(9, "a b")]), snap)
     with pytest.raises(ValueError, match="count_floor"):
         write_lm_snapshot(docs, str(tmp_path / "x"), smoothing="kn", count_floor=2)
 
@@ -1498,50 +1464,3 @@ def test_fineweb_quality_hand_pins(spark):
     assert not got[5]["keep"] and got[5]["end_punct_frac"] == 1.0
     assert not got[6]["keep"] and got[6]["n_lines"] == 0
     assert got[6]["end_punct_frac"] == 0.0 == got[6]["new_line_ratio"]
-
-
-def test_kn_snapshot_durable_derive_identical_artifact(spark, tmp_path):
-    """durable_derive=True (write-then-read, the preemptible-cluster
-    arm — ADVICE r12) must persist byte-equal snapshot CONTENTS to the
-    default single-wave path: same t{k}/c{k}/scal/meta rows, and a
-    batch scores identically against either."""
-    from magicxml_spark.operators.curation import (
-        score_with_lm_snapshot,
-        write_lm_snapshot,
-    )
-
-    docs = _docs(
-        spark,
-        [(1, "a b c a b"), (2, "c c a b a"), (3, "b a d a b c")],
-    )
-    fast = str(tmp_path / "kn_fast")
-    durable = str(tmp_path / "kn_durable")
-    s1 = write_lm_snapshot(docs, fast, order=3, smoothing="kn")
-    s2 = write_lm_snapshot(
-        docs, durable, order=3, smoothing="kn", durable_derive=True
-    )
-    assert s1 == s2
-    for sub in ("t1", "t2", "t3", "c2", "c3", "scal", "meta"):
-        a = {tuple(r) for r in spark.read.parquet(f"{fast}/{sub}").collect()}
-        b = {
-            tuple(r) for r in spark.read.parquet(f"{durable}/{sub}").collect()
-        }
-        assert a == b, sub
-    batch = _docs(spark, [(9, "a b x c"), (10, "d d a")])
-    ga = {r["doc_id"]: r.asDict() for r in
-          score_with_lm_snapshot(batch, fast).collect()}
-    gb = {r["doc_id"]: r.asDict() for r in
-          score_with_lm_snapshot(batch, durable).collect()}
-    assert ga == gb
-
-
-def test_durable_derive_rejected_for_jm(spark, tmp_path):
-    import pytest as _pytest
-
-    from magicxml_spark.operators.curation import write_lm_snapshot
-
-    docs = _docs(spark, [(1, "a b c")])
-    with _pytest.raises(ValueError, match="durable_derive"):
-        write_lm_snapshot(
-            docs, str(tmp_path / "jm"), order=2, durable_derive=True
-        )

@@ -198,125 +198,3 @@ def test_dsir_model_oov_bucket_takes_smoothed_zero_ratio(spark, tmp_path):
         * 1e6
     )
     assert (row["n_grams"], round(row["log_w"] * 1e6)) == (1, exp)
-
-
-def test_dsir_model_append_equals_rebuild(spark, tmp_path):
-    # bucket counts are additive sufficient statistics: folding a
-    # delta must yield EXACTLY the refit-on-union model
-    from magicxml_spark.operators.dsir import (
-        append_dsir_model,
-        score_with_dsir_model,
-        write_dsir_model,
-    )
-
-    a = _docs3(spark, [(1, "a b c", True), (2, "c d", False)])
-    b = _docs3(spark, [(3, "b c e", False), (4, "e e a", True)])
-    probe = spark.createDataFrame(
-        [(9, "a b c d e zz"), (8, "e e")], "doc_id long, text string"
-    )
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    write_dsir_model(a, inc, F.col("is_t"))
-    stats = append_dsir_model(b, inc, F.col("is_t"))
-    write_dsir_model(a.unionByName(b), full, F.col("is_t"))
-    s_inc = {
-        r["doc_id"]: r.asDict()
-        for r in score_with_dsir_model(probe, inc).collect()
-    }
-    s_full = {
-        r["doc_id"]: r.asDict()
-        for r in score_with_dsir_model(probe, full).collect()
-    }
-    assert s_inc == s_full
-    # 4 docs: (3+2) + (2+1) + (3+2) + (3+2) uni+bi grams
-    assert stats["n_raw"] == 18
-    import os
-
-    assert not [d for d in os.listdir(inc) if d.endswith("__new")]
-
-
-def test_stream_dsir_score_equals_batch(spark, tmp_path):
-    # the streaming twin is a stateless per-batch map: multi-batch
-    # streamed scores must equal the one-shot batch scorer exactly
-    from magicxml_spark.operators.dsir import (
-        score_with_dsir_model,
-        write_dsir_model,
-    )
-    from magicxml_spark.streaming.lm import run_stream_dsir_score
-    from magicxml_spark.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    docs = table(spark, sf, "documents").select("doc_id", "text", "lang")
-    train = docs.filter(F.col("doc_id") % 2 == 0)
-    model = str(tmp_path / "m")
-    write_dsir_model(train, model, F.col("lang") == "en")
-    batch = score_with_dsir_model(
-        docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text"), model
-    )
-    streamed = run_stream_dsir_score(
-        spark,
-        sf,
-        model,
-        out_dir=str(tmp_path / "out"),
-        doc_filter=F.col("doc_id") % 2 == 1,
-    )
-    b = {r["doc_id"]: (r["n_grams"], r["log_w"]) for r in batch.collect()}
-    s = {r["doc_id"]: (r["n_grams"], r["log_w"]) for r in streamed.collect()}
-    assert s == b and len(s) > 0
-
-
-def test_dsir_separate_target_table_matches_flag_form(spark):
-    # the two-corpus API must equal the flagged-union form with the
-    # target rows excluded from the candidate pool
-    from magicxml_spark.operators.dsir import dsir_select_against_target
-
-    raw_rows = [(i, f"w{i % 7} w{(i + 1) % 7} common") for i in range(40)]
-    tgt_rows = [(1000 + j, "common target words here") for j in range(10)]
-    raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
-    tgt = spark.createDataFrame(tgt_rows, "doc_id long, text string")
-    out = dsir_select_against_target(
-        raw, tgt, "doc_id", "text", k=40
-    ).collect()
-    ids = {r["doc_id"] for r in out}
-    assert len(out) == 40 and all(i < 1000 for i in ids)
-    # equality vs the flag form on the union
-    flag_rows = [(i, t, False) for i, t in raw_rows] + [
-        (i, t, True) for i, t in tgt_rows
-    ]
-    ref = _py_dsir(flag_rows)
-    for r in out:
-        assert round(r["log_w"] * 1e6) == ref[r["doc_id"]][1]
-        assert round(r["sel_key"] * 1e6) == ref[r["doc_id"]][1] + _py_gumbel(
-            r["doc_id"]
-        )
-
-def test_dsir_separate_target_id_collision_does_not_merge(spark):
-    # ADVICE r9: a target doc sharing an id with a raw doc must not
-    # merge into its weight nor re-enter the candidate pool — scoring
-    # keys on the side-prefixed composite id. Colliding and disjoint
-    # target id spaces must give IDENTICAL selections (the models only
-    # see text, never ids).
-    from magicxml_spark.operators.dsir import dsir_select_against_target
-
-    raw_rows = [(i, f"w{i % 7} w{(i + 1) % 7} common") for i in range(40)]
-    tgt_texts = ["common target words here"] * 10
-    raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
-    tgt_disjoint = spark.createDataFrame(
-        [(1000 + j, t) for j, t in enumerate(tgt_texts)],
-        "doc_id long, text string",
-    )
-    # colliding ids: every target id equals a raw id
-    tgt_collide = spark.createDataFrame(
-        [(j, t) for j, t in enumerate(tgt_texts)], "doc_id long, text string"
-    )
-    a = dsir_select_against_target(
-        raw, tgt_disjoint, "doc_id", "text", k=40
-    ).collect()
-    b = dsir_select_against_target(
-        raw, tgt_collide, "doc_id", "text", k=40
-    ).collect()
-    as_tuples = lambda rs: [  # noqa: E731
-        (r["doc_id"], r["n_grams"], r["log_w"], r["sel_key"]) for r in rs
-    ]
-    assert as_tuples(a) == as_tuples(b)
-    assert len(a) == 40 and all(r["doc_id"] < 1000 for r in a)

@@ -203,26 +203,3 @@ def test_justext_stopwords_lang_col_validation(spark):
         justext_boilerplate(df, stopwords={"en": ["the"]})  # dict, no lang_col
     with pytest.raises(ValueError):
         justext_boilerplate(df, stopwords=["the"], lang_col="lang")
-
-
-def test_stream_chunk_equals_batch(spark, tmp_path):
-    # the streaming twin must reproduce the batch chunker exactly,
-    # across a forced multi-batch run (per-batch statelessness)
-    from magicxml_spark.operators.extraction import chunk_documents
-    from magicxml_spark.streaming.lm import run_stream_chunk
-    from magicxml_spark.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    docs = table(spark, sf, "documents").select("doc_id", "text")
-    batch = {
-        (r["doc_id"], r["chunk_id"]): (r["start_tok"], r["n_tokens"], r["chunk_text"])
-        for r in chunk_documents(docs).collect()
-    }
-    streamed = run_stream_chunk(
-        spark, sf, out_dir=str(tmp_path / "out"), max_files_per_trigger=1
-    )
-    got = {
-        (r["doc_id"], r["chunk_id"]): (r["start_tok"], r["n_tokens"], r["chunk_text"])
-        for r in streamed.collect()
-    }
-    assert got == batch and len(got) > 0

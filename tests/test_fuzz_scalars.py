@@ -239,13 +239,10 @@ def test_fuzz_progressive_jpeg_equals_baseline_twin():
 
 
 def test_fuzz_wav_and_warc_roundtrip():
-    """Random PCM params round-trip riff_media's WAV codec; random WARC
-    record sets survive all three gzip packagings through the parser."""
+    """Random PCM params round-trip riff_media's WAV codec."""
     import random
 
     from magicxml_spark.sources.riff_media import decode_wav, encode_wav
-    from magicxml_spark.sources.warc import iter_warc_records
-    from tests.test_sinks_sources import _make_warc
 
     rng = random.Random(77)
     for _ in range(20):
@@ -256,18 +253,3 @@ def test_fuzz_wav_and_warc_roundtrip():
         pcm = bytes(rng.randrange(256) for _ in range(frames * ch * bits // 8))
         dec = decode_wav(encode_wav(rate, ch, bits, pcm))
         assert dec == (rate, ch, bits, frames, pcm)
-
-    for seed in range(5):
-        r2 = random.Random(seed)
-        recs = []
-        for i in range(r2.randrange(1, 6)):
-            body = bytes(r2.randrange(256) for _ in range(r2.randrange(0, 300)))
-            recs.append(
-                ("response", f"https://x/{i}", "2026-01-01T00:00:00Z",
-                 r2.choice([200, 301, 404]), "application/octet-stream", body)
-            )
-        for kw in ({}, {"per_record_gzip": True}, {"whole_gzip": True}):
-            got = list(iter_warc_records(_make_warc(recs, **kw)))
-            assert len(got) == len(recs), (seed, kw)
-            for rec, (_, _, _, status, _, body) in zip(got, recs):
-                assert rec["block"].endswith(body)

@@ -94,21 +94,6 @@ def test_lang_id_tie_breaks_are_deterministic(spark):
     assert (got[3]["script"], got[3]["lang"]) == ("han", "ja")
 
 
-def test_stream_lang_id_equals_batch(spark, tmp_path):
-    from magicxml_spark.operators.langid import lang_id
-    from magicxml_spark.streaming.lm import run_stream_lang_id
-    from magicxml_spark.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    docs = table(spark, sf, "documents").select("doc_id", "text")
-    batch = {r["doc_id"]: tuple(r)[1:] for r in lang_id(docs).collect()}
-    streamed = run_stream_lang_id(
-        spark, sf, out_dir=str(tmp_path / "out"), max_files_per_trigger=1
-    )
-    got = {r["doc_id"]: tuple(r)[1:] for r in streamed.collect()}
-    assert got == batch and len(got) > 0
-
-
 def test_with_lang_rejects_colliding_columns(spark):
     import pytest
     from magicxml_spark.operators.langid import with_lang

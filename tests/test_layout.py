@@ -11,7 +11,7 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from magicxml_spark.plans.layout import cluster_write, zorder_key
+    from magicxml_spark.plans.layout import zorder_key
 
     n, n_files = 100_000, 16
     df = spark.range(n).select(
@@ -24,7 +24,9 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     df.repartitionByRange(n_files, "x").sortWithinPartitions("x").write.parquet(
         paths["rx"]
     )
-    cluster_write(df, "x", "y", paths["zo"], n_files)
+    zorder_key(df, "x", "y").repartitionByRange(n_files, "zkey").sortWithinPartitions(
+        "zkey"
+    ).drop("zkey").write.parquet(paths["zo"])
 
     def overlapping(path: str, xr, yr) -> int:
         hit = 0

@@ -223,32 +223,3 @@ def test_normalize_dedup_registered_composition(spark):
     assert sum(r["n_dupes"] for r in raw_side) == sum(
         r["n_dupes"] for r in out
     )
-
-
-def test_stream_normalize_equals_batch(spark, tmp_path):
-    # stateless per-batch map: the streamed normalization fingerprints
-    # must equal the batch operator's on the same corpus
-    from magicxml_spark.operators.normalize import norm_text_col
-    from magicxml_spark.streaming.lm import run_stream_normalize
-    from magicxml_spark.tables import table
-
-    sf = "/root/testdata/sf0.001"
-    docs = table(spark, sf, "documents").select("doc_id", "text")
-    batch = {
-        r["doc_id"]: (r["norm_fp"], r["n_strip_len"])
-        for r in docs.select(
-            "doc_id",
-            F.md5(norm_text_col(F.col("text"))).alias("norm_fp"),
-            F.length(norm_text_col(F.col("text"), form=None))
-            .cast("long")
-            .alias("n_strip_len"),
-        ).collect()
-    }
-    streamed = run_stream_normalize(
-        spark, sf, out_dir=str(tmp_path / "out"), max_files_per_trigger=1
-    )
-    got = {
-        r["doc_id"]: (r["norm_fp"], r["n_strip_len"])
-        for r in streamed.collect()
-    }
-    assert got == batch and len(got) > 0

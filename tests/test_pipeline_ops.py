@@ -323,107 +323,6 @@ def test_chunk_text_boundaries_and_no_shuffle(spark):
         chunk_text(df, chunk_tokens=8, overlap=8)
 
 
-def test_snapshot_append_compact_lifecycle(spark, tmp_path):
-    """Two consecutive ingests: classify batch1 vs snapshot(prior),
-    fold batch1's keepers in via append, classify batch2 — must equal
-    the inline classification against (prior UNION kept1). Compaction
-    shrinks the appended snapshot without changing answers."""
-    from pyspark.sql import functions as F
-
-    from magicxml_spark.operators.dedup import (
-        append_dedup_snapshot,
-        compact_dedup_snapshot,
-        incremental_dedup,
-        incremental_dedup_against_snapshot,
-        write_dedup_snapshot,
-    )
-    from magicxml_spark.tables import table
-
-    docs = table(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text")
-    prior = docs.filter(F.col("doc_id") % 10 < 6)
-    batch1 = docs.filter(F.col("doc_id") % 10 == 6)
-    batch2 = docs.filter(F.col("doc_id") % 10 >= 8)
-
-    snap = str(tmp_path / "snap")
-    write_dedup_snapshot(prior, snap)
-
-    cls1 = incremental_dedup_against_snapshot(batch1, snap)
-    kept1 = batch1.join(
-        cls1.filter(F.col("keep") == 1).select("doc_id"), "doc_id"
-    )
-    append_dedup_snapshot(kept1, snap)
-
-    expected = {
-        tuple(r)
-        for r in incremental_dedup(batch2, prior.unionByName(kept1)).collect()
-    }
-    got = {
-        tuple(r) for r in incremental_dedup_against_snapshot(batch2, snap).collect()
-    }
-    assert got == expected and len(got) > 0
-
-    fp_before = spark.read.parquet(f"{snap}/fingerprints").count()
-    compact_dedup_snapshot(spark, snap)
-    fp_after = spark.read.parquet(f"{snap}/fingerprints").count()
-    assert fp_after <= fp_before
-    assert fp_after == spark.read.parquet(f"{snap}/fingerprints").distinct().count()
-    got2 = {
-        tuple(r) for r in incremental_dedup_against_snapshot(batch2, snap).collect()
-    }
-    assert got2 == expected
-
-
-def test_salt_advisor_and_salted_agg_equivalence(spark):
-    from magicxml_spark.operators.profiling import (
-        recommend_salt_factor,
-        salted_agg,
-    )
-
-    # advisor boundaries: uniform -> 1; hot key spanning 8 avg
-    # partitions -> 8; clamp respected
-    assert recommend_salt_factor(100, 3200, 32) == 1       # avg share
-    assert recommend_salt_factor(800, 3200, 32) == 8       # 8x avg
-    assert recommend_salt_factor(10**9, 10**9, 1000, max_salt=256) == 256
-    assert recommend_salt_factor(0, 0, 0) == 1
-
-    # salted two-phase == plain groupBy, including on a skewed input
-    import pytest as _pytest
-
-    from magicxml_spark.tables import table
-
-    li = table(spark, "/root/testdata/sf0.001", "lineitem")
-    aggs = {
-        "n_items": ("l_quantity", "count"),
-        "sum_qty": ("l_quantity", "sum"),
-        "max_qty": ("l_quantity", "max"),
-        "min_qty": ("l_quantity", "min"),
-    }
-    plain = {
-        r["l_returnflag"]: (r["n_items"], round(r["sum_qty"], 2), r["max_qty"], r["min_qty"])
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.count("l_quantity").alias("n_items"),
-            F.sum("l_quantity").alias("sum_qty"),
-            F.max("l_quantity").alias("max_qty"),
-            F.min("l_quantity").alias("min_qty"),
-        )
-        .collect()
-    }
-    got = {
-        r["l_returnflag"]: (r["n_items"], round(r["sum_qty"], 2), r["max_qty"], r["min_qty"])
-        for r in salted_agg(li, "l_returnflag", aggs, salt_factor=16).collect()
-    }
-    assert got == plain
-
-    # the salt really spreads a hot key: partial phase sees >1 salt
-    salted = li.withColumn("_salt", F.pmod(F.monotonically_increasing_id(), F.lit(16)))
-    n_salts = salted.filter(F.col("l_returnflag") == "N").select("_salt").distinct().count()
-    assert n_salts > 1
-
-    with _pytest.raises(ValueError):
-        salted_agg(li, "l_returnflag", {"bad": ("l_quantity", "avg")}, 4)
-
-
 def test_chunk_text_reconstruction_property(spark):
     """For any doc: chunk 0's tokens + each later chunk's tokens minus
     its overlap prefix == the doc's token stream, and every chunk except

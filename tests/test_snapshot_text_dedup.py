@@ -1,7 +1,7 @@
 """Frozen paragraph/span dedup snapshots (VERDICT r10 Next #2):
 lifecycle pins — incremental-vs-rebuild equivalence (the append ==
 rebuild contract), the prior-seen-once span kill, and snapshot-set
-additivity under append + compact."""
+additivity under append."""
 
 from __future__ import annotations
 
@@ -11,8 +11,6 @@ from magicxml_spark.operators.curation import (
     append_paragraph_snapshot,
     append_span_snapshot,
     c4_span_dedup,
-    compact_paragraph_snapshot,
-    compact_span_snapshot,
     paragraph_dedup,
     paragraph_dedup_against_snapshot,
     span_dedup_against_snapshot,
@@ -86,9 +84,6 @@ def test_paragraph_snapshot_append_extends_the_lifecycle(spark, tmp_path):
     )
     assert inc2 == {20: rebuild[20]}
     assert inc2[20] == (3, 1, "p four")
-    # compaction changes bytes on disk, never the set
-    compact_paragraph_snapshot(spark, snap)
-    assert _rows(paragraph_dedup_against_snapshot(d2, snap)) == inc2
     # append == write-from-scratch as a SET
     scratch = str(tmp_path / "pscratch")
     write_paragraph_snapshot(prior.unionAll(d1), scratch)
@@ -149,8 +144,6 @@ def test_span_snapshot_append_and_compact(spark, tmp_path):
     append_span_snapshot(d1, snap)
     inc = _srows(span_dedup_against_snapshot(d2, snap))
     assert inc[20][1] == 0 and inc[21][1] == 0  # both runs already seen
-    compact_span_snapshot(spark, snap)
-    assert _srows(span_dedup_against_snapshot(d2, snap)) == inc
     # set additivity vs scratch
     scratch = str(tmp_path / "sscratch")
     write_span_snapshot(prior.unionAll(d1), scratch)

@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-import glob
 import os
 
 from magicxml_spark.queries import QUERIES
-from magicxml_spark.streaming.events import stream_to_csv_exactly_once
 from tests.conftest import SF_SMOKE
 
 
@@ -20,31 +18,6 @@ def test_stream_sessionize_equals_batch(spark):
         for r in QUERIES["q_session_window"](spark, SF_SMOKE).collect()
     }
     assert stream == batch and len(stream) > 0
-
-
-def test_foreach_batch_csv_exactly_once(spark, tmp_path):
-    out = str(tmp_path / "csv_out")
-    ckpt = str(tmp_path / "ckpt")
-    written = stream_to_csv_exactly_once(spark, SF_SMOKE, out, checkpoint_dir=ckpt)
-    assert written, "first run must write at least one batch"
-
-    def rows():
-        parts = glob.glob(os.path.join(out, "batch=*", "part-*.csv"))
-        out_rows = []
-        for p in parts:
-            with open(p, encoding="utf-8") as f:
-                lines = f.read().splitlines()
-            out_rows.extend(lines[1:])  # drop headers
-        return sorted(out_rows)
-
-    first = rows()
-    assert first, "csv output must be non-empty"
-    # restart against the SAME checkpoint: all input offsets are already
-    # committed, so no batch re-fires and the output is unchanged —
-    # and even if one did re-fire, overwrite-by-batch-id would keep the
-    # directory contents identical rather than appending duplicates
-    stream_to_csv_exactly_once(spark, SF_SMOKE, out, checkpoint_dir=ckpt)
-    assert rows() == first
 
 
 def test_stream_dedup_equals_batch_distinct(spark):

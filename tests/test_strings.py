@@ -170,49 +170,3 @@ def test_strip_ws_python_parity(spark):
     got = [r["t"] for r in df.select(strip_ws("s").alias("t")).collect()]
     expected = [s.strip() for s in samples]
     assert got == expected
-
-
-def test_clean_description_parsed_stdlib():
-    """P17 parser arm on stdlib html.parser: unwrap non-p/br (incl.
-    malformed nesting the regexp path can't see through), wrap each
-    contiguous bare top-level text run in one <p>, preserve kept-tag
-    attributes and entity references."""
-    from magicxml_spark.functions.html import clean_description_parsed as cdp
-
-    cases = [
-        ("<div><b>hello</b> world</div>", "<p>hello world</p>"),
-        ("plain text", "<p>plain text</p>"),
-        ("<p>already</p>", "<p>already</p>"),
-        ('<p class="x">kept attrs</p>', '<p class="x">kept attrs</p>'),
-        ("a<br>b", "<p>a</p><br/><p>b</p>"),
-        ("<p>in <b>bold</b> para<br></p>", "<p>in bold para<br/></p>"),
-        ("", ""),
-        ("<span>x</span><p>y</p>trail", "<p>x</p><p>y</p><p>trail</p>"),
-        ("A &amp; B &#169;", "<p>A &amp; B &#169;</p>"),
-        ("<div>unclosed <i>markup", "<p>unclosed markup</p>"),
-    ]
-    for inp, want in cases:
-        assert cdp(inp) == want, inp
-
-
-def test_clean_description_udf_runs_without_bs4(spark):
-    """The pandas-UDF parser route is executable in every environment:
-    bs4 when installed, the stdlib parser otherwise — never a gate."""
-    from pyspark.sql import functions as F
-
-    from magicxml_spark.functions.html import clean_description_udf
-
-    df = spark.createDataFrame(
-        [("<div><b>x</b> y</div>",), (None,)], ["v"]
-    )
-    got = [r["c"] for r in df.select(clean_description_udf()(F.col("v")).alias("c")).collect()]
-    assert got == ["<p>x y</p>", ""]
-
-
-def test_clean_description_parsed_self_closing_p():
-    """Review regression: a self-closing <p/> must emit a closed pair
-    and must NOT poison the inside-p state for later top-level text."""
-    from magicxml_spark.functions.html import clean_description_parsed as cdp
-
-    assert cdp("before<p/>after") == "<p>before</p><p></p><p>after</p>"
-    assert cdp("<p/>x") == "<p></p><p>x</p>"

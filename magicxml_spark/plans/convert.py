@@ -63,11 +63,21 @@ def xml_to_csv(
     split) — everything downstream would run serially, so an
     under-parallel scan is re-partitioned once up front.
 
-    The derived artifacts — category paths, pivot keys, prune columns —
-    are cached per content key (``schema_registry.content_key``): a
-    re-ingest of byte-identical content replays all three and collapses
-    to ONE parse+project+write pass."""
+    A single-file conversion records the CSV it wrote, with that CSV's
+    own content key (``schema_registry.content_key``), under the
+    source's content key and the requested ``dialect``. A later
+    single-file conversion of the same bytes copies that CSV to ``dst``
+    while it is unchanged, and launches no Spark job.
+
+    Otherwise the derived artifacts — category paths, pivot keys, prune
+    columns — are cached per content key: a re-ingest of byte-identical
+    content whose earlier CSV changed, or one written as parts,
+    replays all three and collapses to ONE parse+project+write pass."""
     ckey = content_key(src)
+    if single_file:
+        earlier = INGEST_CACHE.get(ckey, ("csv", dialect))
+        if earlier is not None and content_key(earlier[0]) == earlier[1]:
+            return _copy_file(earlier[0], dst)
     records, detected = read_xml_records(spark, src, dialect)
     target = spark.sparkContext.defaultParallelism
     if records.rdd.getNumPartitions() < max(2, target // 2):
@@ -122,10 +132,23 @@ def xml_to_csv(
             cols = select_output_columns(flat)
             INGEST_CACHE.put(ckey, "prune_cols", cols)
         out = flat.select(*[_c(c) for c in cols if c in flat.columns])
-        return write_csv(out, dst, single_file=single_file)
+        written = write_csv(out, dst, single_file=single_file)
     finally:
         for df in persisted:
             df.unpersist()
+    if single_file:
+        INGEST_CACHE.put(
+            ckey, ("csv", dialect), (os.path.abspath(written), content_key(written))
+        )
+    return written
+
+
+def _copy_file(src: str, dst: str) -> str:
+    """``src``'s bytes at ``dst``; a ``dst`` that is ``src`` is left as is."""
+    if not (os.path.exists(dst) and os.path.samefile(src, dst)):
+        os.makedirs(os.path.dirname(os.path.abspath(dst)), exist_ok=True)
+        shutil.copyfile(src, dst)
+    return dst
 
 
 def csv_to_xml(

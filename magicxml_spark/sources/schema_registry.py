@@ -108,13 +108,16 @@ DEFAULT_REGISTRY = SchemaRegistry()
 
 
 # ---------------------------------------------------------------------------
-# Ingest cache: everything a re-ingest of the SAME bytes can replay
-# instead of re-deriving — presplit parts, the "these bytes already parsed
-# under this schema" mark, category paths, pivot keys, pruned columns.
-# Byte-identical input implies identical derived artifacts, so a
-# steady-state re-ingest collapses to one parse+project+write pass; any
-# content change misses the key and re-derives. Values are
-# dimension-sized only, never row data proportional to the input.
+# Ingest cache: everything a re-ingest of the SAME bytes can reuse
+# instead of re-deriving — the single-file CSV a conversion wrote (its
+# path and its own content key), presplit parts, the "these bytes already
+# parsed under this schema" mark, category paths, pivot keys, pruned
+# columns. Byte-identical input implies an identical CSV, so a re-ingest
+# copies the earlier one while it is unchanged; when it changed, or the
+# output is multi-part, the derived artifacts replay and the re-ingest
+# collapses to one parse+project+write pass. Any content change misses
+# the key and re-derives. Values are dimension-sized or paths, never row
+# data proportional to the input (the CSV stays on disk).
 # ---------------------------------------------------------------------------
 
 #: largest dimension (category or path rows) collected to the driver;

@@ -5,6 +5,7 @@ plus pruning and sink format details."""
 from __future__ import annotations
 
 import csv
+import glob
 import io
 import json
 import os
@@ -20,6 +21,7 @@ from magicxml_spark.plans.convert import (
     xml_to_csv,
 )
 from magicxml_spark.sources.csv_source import read_csv, sniff_delimiter
+from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -170,7 +172,6 @@ def test_oversized_category_dimension_stays_uncached(
     cap must NOT be collect()ed into the ingest cache (the cache's
     limit(cap+1) guard, shared with read_categories) — and the
     conversion output must be identical either way."""
-    from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 
     n = 8
     cats = "\n".join(
@@ -233,8 +234,6 @@ def test_failed_conversion_leaves_nothing_cached(spark, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize("feed", DIALECT_FEEDS)
 def test_output_independent_of_shuffle_partitions(spark, tmp_path, feed):
-    from magicxml_spark.sources.schema_registry import INGEST_CACHE
-
     src = _fresh_copy(tmp_path, feed)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     outs = []
@@ -252,8 +251,6 @@ def test_output_independent_of_shuffle_partitions(spark, tmp_path, feed):
 
 @pytest.mark.parametrize("feed", DIALECT_FEEDS)
 def test_distributed_parts_match_single_file(spark, tmp_path, feed):
-    import glob
-
     src = _fresh_copy(tmp_path, feed)
     single = open(
         xml_to_csv(spark, src, str(tmp_path / "single.csv"), single_file=True), "rb"
@@ -271,6 +268,136 @@ def test_distributed_parts_match_single_file(spark, tmp_path, feed):
         assert first == header
         part_rows.extend(body)
     assert sorted(part_rows) == sorted(rows)
+
+
+# --- the re-ingest memo: an unchanged single-file CSV is copied -------------
+
+
+def _jobs_during(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("feed", DIALECT_FEEDS)
+def test_reingest_copies_earlier_csv_without_spark_job(spark, tmp_path, feed):
+    src = _fresh_copy(tmp_path, feed)
+    first = xml_to_csv(spark, src, str(tmp_path / "first.csv"))
+    for dst in (tmp_path / "again.csv", tmp_path / "new" / "dir" / "again.csv"):
+        got, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(dst)))
+        assert got == str(dst)
+        assert jobs == []
+        assert open(got, "rb").read() == open(first, "rb").read()
+
+
+def test_reingest_onto_earlier_csv_leaves_it_untouched(spark, tmp_path):
+    src = _fresh_copy(tmp_path, "cat.xml")
+    first = xml_to_csv(spark, src, str(tmp_path / "first.csv"))
+    before = os.stat(first)
+    got, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, first))
+    after = os.stat(first)
+    assert got == first and jobs == []
+    assert (after.st_ino, after.st_mtime_ns, after.st_ctime_ns) == (
+        before.st_ino,
+        before.st_mtime_ns,
+        before.st_ctime_ns,
+    )
+
+
+def _edit_in_place(path):
+    with open(path, "r+b") as f:
+        f.seek(-2, os.SEEK_END)
+        f.write(b"XX")
+
+
+def _replace(path):
+    data = open(path, "rb").read()
+    os.unlink(path)
+    with open(path, "wb") as f:
+        f.write(data)
+
+
+@pytest.mark.parametrize(
+    "change", [_edit_in_place, _replace, os.unlink], ids=["edited", "replaced", "deleted"]
+)
+def test_reingest_after_earlier_csv_changed_reconverts(spark, tmp_path, change):
+    src = _fresh_copy(tmp_path, "cat.xml")
+    first = xml_to_csv(spark, src, str(tmp_path / "first.csv"))
+    want = open(first, "rb").read()
+    change(first)
+    got, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(tmp_path / "again.csv")))
+    assert jobs
+    assert open(got, "rb").read() == want
+
+
+def test_reingest_of_source_rewritten_with_restored_mtime_reconverts(spark, tmp_path):
+    src = _fresh_copy(tmp_path, "cat.xml")
+    first = xml_to_csv(spark, src, str(tmp_path / "first.csv"))
+    assert b";500;" in open(first, "rb").read()
+    st = os.stat(src)
+    data = open(src, "rb").read()
+    with open(src, "wb") as f:  # same size, same mtime, new price
+        f.write(data.replace(b"<price>500<", b"<price>700<"))
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert (os.stat(src).st_size, os.stat(src).st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    got, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(tmp_path / "again.csv")))
+    assert jobs
+    out = open(got, "rb").read()
+    assert b";700;" in out and b";500;" not in out
+
+
+def test_reingest_under_another_dialect_request_reconverts(spark, tmp_path):
+    src = _fresh_copy(tmp_path, "cat.xml")
+    first = xml_to_csv(spark, src, str(tmp_path / "first.csv"))
+    got, jobs = _jobs_during(
+        spark, lambda: xml_to_csv(spark, src, str(tmp_path / "offer.csv"), dialect="offer")
+    )
+    assert jobs
+    assert open(got, "rb").read() == open(first, "rb").read()
+    _, jobs = _jobs_during(
+        spark, lambda: xml_to_csv(spark, src, str(tmp_path / "again.csv"), dialect="offer")
+    )
+    assert jobs == []
+
+
+def test_parts_output_is_never_served_from_or_recorded_in_memo(spark, tmp_path):
+    src = _fresh_copy(tmp_path, "cat.xml")
+    parts, jobs = _jobs_during(
+        spark, lambda: xml_to_csv(spark, src, str(tmp_path / "p1"), single_file=False)
+    )
+    assert jobs and glob.glob(os.path.join(parts, "part-*.csv"))
+    _, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(tmp_path / "s.csv")))
+    assert jobs
+    parts, jobs = _jobs_during(
+        spark, lambda: xml_to_csv(spark, src, str(tmp_path / "p2"), single_file=False)
+    )
+    assert jobs and glob.glob(os.path.join(parts, "part-*.csv"))
+
+
+def test_conversion_that_raises_records_no_csv(spark, tmp_path, monkeypatch):
+    from magicxml_spark.plans import convert
+
+    def write_then_fail(*args, **kwargs):
+        convert_write(*args, **kwargs)
+        raise RuntimeError("write failed")
+
+    convert_write = convert.write_csv
+    src = _fresh_copy(tmp_path, "cat.xml")
+    monkeypatch.setattr(convert, "write_csv", write_then_fail)
+    with pytest.raises(RuntimeError, match="write failed"):
+        xml_to_csv(spark, src, str(tmp_path / "first.csv"))
+    monkeypatch.setattr(convert, "write_csv", convert_write)
+    _, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(tmp_path / "again.csv")))
+    assert jobs
 
 
 # --- convert_file's route table ----------------------------------------------
@@ -414,7 +541,9 @@ def test_convert_file_default_routes(spark, tmp_path):
     ]
     for name, out, plan in cases:
         src = str(tmp_path / name)
+        INGEST_CACHE.clear()  # each call converts; none copies an earlier CSV
         got = convert_file(spark, src, str(tmp_path / f"via_{out}"))
+        INGEST_CACHE.clear()
         want = plan(src, str(tmp_path / f"direct_{out}"))
         assert open(got, "rb").read() == open(want, "rb").read(), (name, out)
     for ext in ("xlsx", "xls"):

@@ -155,10 +155,12 @@ def test_reingest_conversion_identical_and_content_change_reflected(spark, tmp_p
     out1 = str(tmp_path / "o1.csv")
     out2 = str(tmp_path / "o2.csv")
     xml_to_csv(spark, path, out1, single_file=True)
-    # steady-state re-ingest (schema + pivot keys + prune cols + category
-    # paths all replay from cache) must be byte-identical
-    xml_to_csv(spark, path, out2, single_file=True)
     b1 = open(out1, "rb").read()
+    # with the earlier CSV gone, a steady-state re-ingest (schema + pivot
+    # keys + prune cols + category paths all replay from cache) runs the
+    # Spark path and must be byte-identical
+    os.unlink(out1)
+    xml_to_csv(spark, path, out2, single_file=True)
     assert b1 == open(out2, "rb").read()
     assert b"category_path" in b1
     # grow the feed: new param key must appear (stale pivot/prune caches

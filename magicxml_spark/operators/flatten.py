@@ -60,6 +60,17 @@ _DIGIT_LIKE = "^([0-9]+\\.?[0-9]*|\\.[0-9]+)$"
 MAX_PARAM_KEYS = 1000
 
 VALUE_TAG = "_VALUE"
+#: the conversion's document-order key: every flatten carries it through
+#: untouched and keeps it out of its schema walk. No XML name contains
+#: '#', so no parsed tag or attribute can collide with it.
+ROW_ORDER = "#row_order"
+
+
+def _walked(df: DataFrame) -> tuple[T.StructType, list[Column]]:
+    """``df``'s schema without ``ROW_ORDER``, and the key to carry."""
+    fields = [f for f in df.schema.fields if f.name != ROW_ORDER]
+    carried = [F.col(ROW_ORDER)] if len(fields) < len(df.schema.fields) else []
+    return T.StructType(fields), carried
 
 
 def _is_attr(name: str) -> bool:
@@ -425,7 +436,7 @@ def flatten_offer_records(
     ``discover_pivot_keys``, which runs here when None; supplying it
     skips every dynamic-pivot distinct scan (steady-state re-ingest).
     """
-    schema: T.StructType = df.schema
+    schema, carried = _walked(df)
     names = set(schema.names)
     excluded = _EXCLUDED.get(dialect, set())
     out = _Out()
@@ -610,7 +621,7 @@ def flatten_offer_records(
     elif "available" not in out.cols:
         out.set("available", F.lit("1"))
 
-    flat = df.select(*[expr.alias(name) for name, expr in out.cols.items()])
+    flat = df.select(*[expr.alias(name) for name, expr in out.cols.items()], *carried)
 
     if dialect == "offer":
         if category_paths is not None:
@@ -669,7 +680,7 @@ def _tc_get(row: Column, field: str, fields: list[str], default: str = "") -> Co
 
 def flatten_russian_records(df: DataFrame) -> DataFrame:
     """Flatten 1C <ЭлементСправочника> records (main.py:328-455)."""
-    schema: T.StructType = df.schema
+    schema, carried = _walked(df)
     names = set(schema.names)
     out = _Out()
 
@@ -852,7 +863,7 @@ def flatten_russian_records(df: DataFrame) -> DataFrame:
         name: F.when(expr.contains("///"), dedup_delimited(expr)).otherwise(expr)
         for name, expr in out.cols.items()
     }
-    return df.select(*[expr.alias(name) for name, expr in final.items()])
+    return df.select(*[expr.alias(name) for name, expr in final.items()], *carried)
 
 
 # ---------------------------------------------------------------------------
@@ -863,7 +874,7 @@ def flatten_russian_records(df: DataFrame) -> DataFrame:
 def flatten_service_records(df: DataFrame) -> DataFrame:
     """Flatten <service> records: raw-named attrs (no prefix!), child
     text + {tag}_{attr} columns, then the default chain."""
-    schema: T.StructType = df.schema
+    schema, carried = _walked(df)
     out = _Out()
 
     for f in schema.fields:  # attributes keep their raw names (main.py:463-464)
@@ -925,4 +936,4 @@ def flatten_service_records(df: DataFrame) -> DataFrame:
     if raw_name is not None:
         out.set("name", F.when(raw_name.isNotNull(), sanitize_name(raw_name)))
     out.set("service_type", F.lit("verification_service"))
-    return df.select(*[expr.alias(name) for name, expr in out.cols.items()])
+    return df.select(*[expr.alias(name) for name, expr in out.cols.items()], *carried)

@@ -23,9 +23,11 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from magicxml_spark.operators.category_path import build_category_paths
 from magicxml_spark.operators.flatten import (
+    ROW_ORDER,
     discover_pivot_keys,
     flatten_offer_records,
     flatten_russian_records,
@@ -79,6 +81,13 @@ def xml_to_csv(
         if earlier is not None and content_key(earlier[0]) == earlier[1]:
             return _copy_file(earlier[0], dst)
     records, detected = read_xml_records(spark, src, dialect)
+    # document order, taken before anything reshuffles the scan: the
+    # presplit part a row came from (Spark packs parts largest-first),
+    # then the row's place in its scan partition
+    part = F.regexp_extract(F.input_file_name(), r"part-(\d+)\.xml$", 1)
+    records = records.withColumn(
+        ROW_ORDER, F.struct(part.try_cast("int"), F.monotonically_increasing_id())
+    )
     target = spark.sparkContext.defaultParallelism
     if records.rdd.getNumPartitions() < max(2, target // 2):
         records = records.repartition(target)
@@ -129,10 +138,10 @@ def xml_to_csv(
             # description clean — doubling the conversion's compute
             flat = flat.persist()
             persisted.append(flat)
-            cols = select_output_columns(flat)
+            cols = select_output_columns(flat.drop(ROW_ORDER))
             INGEST_CACHE.put(ckey, "prune_cols", cols)
-        out = flat.select(*[_c(c) for c in cols if c in flat.columns])
-        written = write_csv(out, dst, single_file=single_file)
+        out = flat.select(*[_c(c) for c in cols if c in flat.columns], ROW_ORDER)
+        written = write_csv(out, dst, single_file=single_file, order_by=ROW_ORDER)
     finally:
         for df in persisted:
             df.unpersist()

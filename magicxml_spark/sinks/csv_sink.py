@@ -45,17 +45,24 @@ def write_csv(
     path: str,
     single_file: bool = False,
     delimiter: str = ";",
+    order_by: str | None = None,
 ) -> str:
     """Normalize and write ``df`` as the conversion-boundary CSV.
     Returns the output path (a directory of parts, or the single file
-    in single_file mode). Column selection is the caller's."""
+    in single_file mode). Column selection is the caller's; a single
+    file's rows are sorted by ``order_by``, a column that is not
+    written."""
     out = normalize_for_csv(df)
-    # repartition(1), NOT coalesce(1): coalesce would collapse the
-    # whole upstream compute into one task; the shuffle boundary
-    # keeps flatten/normalize parallel, only the final write serial
-    writer = (
-        out.repartition(1) if single_file else out
-    ).write.mode("overwrite").options(
+    if single_file:
+        # repartition(1), NOT coalesce(1): coalesce would collapse the
+        # whole upstream compute into one task; the shuffle boundary
+        # keeps flatten/normalize parallel, only the final write serial
+        out = out.repartition(1)
+        if order_by:
+            out = out.sortWithinPartitions(order_by)
+    if order_by:
+        out = out.drop(order_by)
+    writer = out.write.mode("overwrite").options(
         header=True, sep=delimiter, quote='"', escape='"', emptyValue=""
     )
     if not single_file:

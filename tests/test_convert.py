@@ -270,6 +270,56 @@ def test_distributed_parts_match_single_file(spark, tmp_path, feed):
     assert sorted(part_rows) == sorted(rows)
 
 
+def _ordered_offer_feed(path, n):
+    """``n`` offers with ids 0..n-1 in document order; each record is
+    longer than the one before it, so presplit parts grow in size."""
+    offers = "".join(
+        f'<offer id="{i}"><name>N{i}</name><price>{i}</price>'
+        f"<description>{'d' * i}</description></offer>\n"
+        for i in range(n)
+    )
+    path.write_text(
+        '<?xml version="1.0" encoding="UTF-8"?>\n<yml_catalog><shop>'
+        f"<offers>\n{offers}</offers></shop></yml_catalog>",
+        encoding="utf-8",
+    )
+    return str(path)
+
+
+@pytest.mark.parametrize("presplit", [False, True], ids=["one-partition", "presplit"])
+def test_rows_in_document_order(spark, tmp_path, monkeypatch, presplit):
+    """SURVEY §3.1 steps 5-7: rows come out in the feed's order, both
+    for a feed scanned as one partition and for a presplit feed whose
+    parts differ in byte size (Spark packs file splits largest-first)."""
+    import functools
+
+    from magicxml_spark.plans import convert
+    from magicxml_spark.sources import xml_split
+    from magicxml_spark.sources.xml_source import read_xml_records as read
+
+    n = 600
+    if presplit:
+        monkeypatch.setattr(
+            convert, "read_xml_records", functools.partial(read, presplit_threshold=1024)
+        )
+        monkeypatch.setattr(
+            xml_split,
+            "presplit_xml",
+            functools.partial(xml_split.presplit_xml, records_per_part=n // 6),
+        )
+    src = _ordered_offer_feed(tmp_path / "ordered.xml", n)
+    out = convert.xml_to_csv(spark, src, str(tmp_path / "ordered.csv"))
+    if presplit:
+        parts = glob.glob(
+            os.path.join(INGEST_CACHE.get(content_key(src), ("parts", "offer")), "part-*.xml")
+        )
+        assert len(parts) == 6
+        assert len({os.path.getsize(p) for p in parts}) == 6
+    with open(out, encoding="utf-8-sig", newline="") as f:
+        ids = [r["attr_id"] for r in csv.DictReader(f, delimiter=";")]
+    assert ids == [str(i) for i in range(n)]
+
+
 # --- the re-ingest memo: an unchanged single-file CSV is copied -------------
 
 

@@ -138,10 +138,11 @@ def content_key(path: str) -> str | None:
 
 
 class IngestCache:
-    """Thread-safe bounded LRU: content key -> {name: value}. An entry's
-    ``scratch_dir`` directories sit under one temp root that a single
-    ``atexit`` hook removes; evicting the entry deletes them (a frame
-    still reading an evicted presplit can no longer be re-scanned)."""
+    """Thread-safe bounded LRU: content key -> {name: value}. Each entry
+    owns one directory, under one temp root that a single ``atexit``
+    hook removes; its ``scratch_dir`` directories sit inside it, and
+    evicting the entry deletes them (a frame still reading an evicted
+    presplit can no longer be re-scanned)."""
 
     max_entries = 16
     max_rows = _CATEGORY_CACHE_MAX_ROWS
@@ -176,13 +177,7 @@ class IngestCache:
     def scratch_dir(self, key: str) -> str:
         """A new, empty directory deleted together with ``key``'s entry."""
         with self._lock:
-            if self._root is None:
-                self._root = tempfile.mkdtemp(prefix="mxs_ingest_")
-                atexit.register(shutil.rmtree, self._root, ignore_errors=True)
-            entry = self._entry(key)
-            if "_dir" not in entry:
-                entry["_dir"] = tempfile.mkdtemp(dir=self._root)
-            return tempfile.mkdtemp(dir=entry["_dir"])
+            return tempfile.mkdtemp(dir=self._entry(key)["_dir"])
 
     def clear(self) -> None:
         with self._lock:
@@ -193,14 +188,19 @@ class IngestCache:
         if key not in self._entries:
             while len(self._entries) >= self.max_entries:
                 self._evict()
-            self._entries[key] = {}
+            if self._root is None:
+                self._root = tempfile.mkdtemp(prefix="mxs_ingest_")
+                atexit.register(shutil.rmtree, self._root, ignore_errors=True)
+            # made with the entry, not on first scratch_dir: an entry
+            # evicted between a caller's scratch_dir and put comes back
+            # with a directory of its own
+            self._entries[key] = {"_dir": tempfile.mkdtemp(dir=self._root)}
         self._entries.move_to_end(key)
         return self._entries[key]
 
     def _evict(self) -> None:
         _, entry = self._entries.popitem(last=False)
-        if "_dir" in entry:
-            shutil.rmtree(entry["_dir"], ignore_errors=True)
+        shutil.rmtree(entry["_dir"], ignore_errors=True)
 
 
 #: the process-wide ingest cache (XML source, conversion plans, CSV sink)

@@ -425,23 +425,19 @@ def flatten_offer_records(
     df: DataFrame,
     dialect: str = "offer",
     category_paths: DataFrame | None = None,
-    pivot_keys: dict[str, list[str]] | None = None,
 ) -> DataFrame:
     """Flatten offer/product records (reference process_offer,
     main.py:115-325) into the reference's flat string schema.
 
     ``category_paths``: (id, category_path) dimension from
     operators.category_path (broadcast-joined; offer dialect only).
-    ``pivot_keys``: {"param"/"fabric"/"features": [keys]} from
-    ``discover_pivot_keys``, which runs here when None; supplying it
-    skips every dynamic-pivot distinct scan (steady-state re-ingest).
+    The dynamic-pivot keys come from ``discover_pivot_keys``.
     """
     schema, carried = _walked(df)
     names = set(schema.names)
     excluded = _EXCLUDED.get(dialect, set())
     out = _Out()
-    if pivot_keys is None:
-        pivot_keys = discover_pivot_keys(df, dialect)
+    pivot_keys = discover_pivot_keys(df, dialect)
     pivots = _pivot_arrays(schema, dialect)
 
     # Q1: parent products containing nested <offer> are dropped

@@ -6,7 +6,9 @@ conversion's state. Everything between source and sink is one lazy
 DataFrame plan — Catalyst owns ordering; the only driver
 materializations are the tiny category dimension, the pivot-key
 distinct scans (param, fabric, features) and the Q5 prune aggregate
-(bounded dimensions and one aggregate row, SURVEY §4).
+(bounded dimensions and one aggregate row, SURVEY §4). A re-ingest of
+unchanged bytes copies the CSV the earlier conversion wrote; every
+other conversion runs from scratch.
 
 ``convert_file`` is the extension-dispatch surface (§3.2-3.3): one
 route table keyed by (source extension, target extension). A pair
@@ -28,7 +30,6 @@ from pyspark.sql import functions as F
 from magicxml_spark.operators.category_path import build_category_paths
 from magicxml_spark.operators.flatten import (
     ROW_ORDER,
-    discover_pivot_keys,
     flatten_offer_records,
     flatten_russian_records,
     flatten_service_records,
@@ -55,31 +56,24 @@ def xml_to_csv(
     src: str,
     dst: str,
     dialect: str | None = None,
-    single_file: bool = True,
 ) -> str:
-    """§3.1 flagship: XML catalog -> pruned ';'-CSV (BOM single-file
-    mode mirrors the reference byte format; multi-part for scale).
+    """§3.1 flagship: XML catalog -> pruned ';'-CSV, one BOM file in
+    the reference's byte format.
 
     A single XML file scans as ONE partition (the XML source splits by
     file, not rowTag; files past the presplit threshold arrive already
     split) — everything downstream would run serially, so an
     under-parallel scan is re-partitioned once up front.
 
-    A single-file conversion records the CSV it wrote, with that CSV's
-    own content key (``schema_registry.content_key``), under the
-    source's content key and the requested ``dialect``. A later
-    single-file conversion of the same bytes copies that CSV to ``dst``
-    while it is unchanged, and launches no Spark job.
-
-    Otherwise the derived artifacts — category paths, pivot keys, prune
-    columns — are cached per content key: a re-ingest of byte-identical
-    content whose earlier CSV changed, or one written as parts,
-    replays all three and collapses to ONE parse+project+write pass."""
+    A conversion has two outcomes. It records the CSV it wrote, with
+    that CSV's own content key (``schema_registry.content_key``), under
+    the source's content key and the requested ``dialect``; a later
+    conversion of the same bytes copies that CSV to ``dst`` while it is
+    unchanged, and launches no Spark job. Anything else converts fresh."""
     ckey = content_key(src)
-    if single_file:
-        earlier = INGEST_CACHE.get(ckey, ("csv", dialect))
-        if earlier is not None and content_key(earlier[0]) == earlier[1]:
-            return _copy_file(earlier[0], dst)
+    earlier = INGEST_CACHE.get(ckey, ("csv", dialect))
+    if earlier is not None and content_key(earlier[0]) == earlier[1]:
+        return _copy_file(earlier[0], dst)
     records, detected = read_xml_records(spark, src, dialect)
     # document order, taken before anything reshuffles the scan: the
     # presplit part a row came from (Spark packs parts largest-first),
@@ -105,50 +99,25 @@ def xml_to_csv(
         else:
             paths = None
             if detected == "offer":
-                path_rows = INGEST_CACHE.get(ckey, "category_paths")
-                if path_rows is None:
-                    cats = read_categories(spark, src)
-                    if cats.isEmpty():
-                        INGEST_CACHE.put(ckey, "category_paths", ())
-                    else:
-                        paths = build_category_paths(cats, skip_undefined_names=True)
-                        # an oversized dimension stays a lazy frame and is
-                        # never cached — a catalog with millions of
-                        # categories must not OOM the driver just to warm
-                        # a convenience cache
-                        INGEST_CACHE.put(
-                            ckey, "category_paths", INGEST_CACHE.collect_rows(paths)
-                        )
-                elif path_rows:
-                    paths = spark.createDataFrame(
-                        list(path_rows), "id string, category_path string"
-                    )
-            pivots = INGEST_CACHE.get(ckey, "pivot_keys")
-            if pivots is None:
-                pivots = discover_pivot_keys(records, detected)
-                INGEST_CACHE.put(ckey, "pivot_keys", pivots)
-            flat = flatten_offer_records(
-                records, detected, category_paths=paths, pivot_keys=pivots
-            )
-        cols = INGEST_CACHE.get(ckey, "prune_cols")
-        if cols is None:
-            # pruning needs the Q5 all-blank aggregate (one pass) before
-            # the write (second pass); without a persist both passes
-            # recompute the full flatten projection — pivot, pictures,
-            # description clean — doubling the conversion's compute
-            flat = flat.persist()
-            persisted.append(flat)
-            cols = select_output_columns(flat.drop(ROW_ORDER))
-            INGEST_CACHE.put(ckey, "prune_cols", cols)
+                cats = read_categories(spark, src)
+                if not cats.isEmpty():
+                    paths = build_category_paths(cats, skip_undefined_names=True)
+            flat = flatten_offer_records(records, detected, category_paths=paths)
+        # pruning needs the Q5 all-blank aggregate (one pass) before the
+        # write (second pass); without a persist both passes recompute
+        # the full flatten projection — pivot, pictures, description
+        # clean — doubling the conversion's compute
+        flat = flat.persist()
+        persisted.append(flat)
+        cols = select_output_columns(flat.drop(ROW_ORDER))
         out = flat.select(*[_c(c) for c in cols if c in flat.columns], ROW_ORDER)
-        written = write_csv(out, dst, single_file=single_file, order_by=ROW_ORDER)
+        written = write_csv(out, dst, order_by=ROW_ORDER)
     finally:
         for df in persisted:
             df.unpersist()
-    if single_file:
-        INGEST_CACHE.put(
-            ckey, ("csv", dialect), (os.path.abspath(written), content_key(written))
-        )
+    INGEST_CACHE.put(
+        ckey, ("csv", dialect), (os.path.abspath(written), content_key(written))
+    )
     return written
 
 
@@ -169,8 +138,8 @@ def csv_to_xml(
     return write_simple_catalog(df, dst)
 
 
-def json_to_csv(spark: SparkSession, src: str, dst: str, single_file: bool = True) -> str:
-    return write_csv(read_json(spark, src), dst, single_file=single_file)
+def json_to_csv(spark: SparkSession, src: str, dst: str) -> str:
+    return write_csv(read_json(spark, src), dst)
 
 
 def csv_to_json(spark: SparkSession, src: str, dst: str) -> str:
@@ -196,7 +165,7 @@ def _csv_to_pdf(spark: SparkSession, src: str, dst: str, options: dict) -> str:
 def _excel_to_csv(spark: SparkSession, src: str, dst: str, options: dict) -> str:
     from magicxml_spark.sources.excel import read_excel
 
-    return write_csv(read_excel(spark, src), dst, single_file=True)
+    return write_csv(read_excel(spark, src), dst)
 
 
 def _excel_to_pdf(spark: SparkSession, src: str, dst: str, options: dict) -> str:
@@ -247,7 +216,7 @@ def _pdf_to_image(spark: SparkSession, src: str, dst: str, options: dict) -> str
 def _pdf_to_csv(spark: SparkSession, src: str, dst: str, options: dict) -> str:
     from magicxml_spark.sources.binary_docs import extract_pdf_tables, read_binary
 
-    return write_csv(extract_pdf_tables(read_binary(spark, src)), dst, single_file=True)
+    return write_csv(extract_pdf_tables(read_binary(spark, src)), dst)
 
 
 def _pdf_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:

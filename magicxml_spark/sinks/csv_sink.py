@@ -4,12 +4,9 @@ Reference format: ';' delimiter, header, QUOTE_MINIMAL with '"'->'""'
 escaping, utf-8-sig (BOM), newline->space per value, size-field
 '?'-strip, ROOM_TYPE/PURPOSE ', '->'///' rewrite.
 
-Two modes:
-* distributed (default): ``df.write.csv`` — one part per partition,
-  quoting/escaping handled by the writer. The 100 TB path.
-* single_file: repartition(1) + driver-side rename + BOM prepend —
-  byte-compatible with the reference's output for bounded exports
-  (an explicit scalability tradeoff, SURVEY §7 hard-part (e)).
+One output shape: repartition(1) + driver-side rename + BOM prepend —
+byte-compatible with the reference's output for bounded exports (an
+explicit scalability tradeoff, SURVEY §7 hard-part (e)).
 """
 
 from __future__ import annotations
@@ -40,36 +37,20 @@ def normalize_for_csv(df: DataFrame) -> DataFrame:
     return df.select(*exprs)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    single_file: bool = False,
-    delimiter: str = ";",
-    order_by: str | None = None,
-) -> str:
-    """Normalize and write ``df`` as the conversion-boundary CSV.
-    Returns the output path (a directory of parts, or the single file
-    in single_file mode). Column selection is the caller's; a single
-    file's rows are sorted by ``order_by``, a column that is not
-    written."""
-    out = normalize_for_csv(df)
-    if single_file:
-        # repartition(1), NOT coalesce(1): coalesce would collapse the
-        # whole upstream compute into one task; the shuffle boundary
-        # keeps flatten/normalize parallel, only the final write serial
-        out = out.repartition(1)
-        if order_by:
-            out = out.sortWithinPartitions(order_by)
+def write_csv(df: DataFrame, path: str, order_by: str | None = None) -> str:
+    """Normalize ``df`` and write it to ``path`` as one BOM-prefixed
+    CSV file; returns ``path``. Column selection is the caller's; rows
+    are sorted by ``order_by``, a column that is not written."""
+    # repartition(1), NOT coalesce(1): coalesce would collapse the whole
+    # upstream compute into one task; the shuffle boundary keeps
+    # flatten/normalize parallel, only the final write serial
+    out = normalize_for_csv(df).repartition(1)
     if order_by:
-        out = out.drop(order_by)
-    writer = out.write.mode("overwrite").options(
-        header=True, sep=delimiter, quote='"', escape='"', emptyValue=""
-    )
-    if not single_file:
-        writer.csv(path)
-        return path
+        out = out.sortWithinPartitions(order_by).drop(order_by)
     tmp_dir = path + "._parts"
-    writer.csv(tmp_dir)
+    out.write.mode("overwrite").options(
+        header=True, sep=";", quote='"', escape='"', emptyValue=""
+    ).csv(tmp_dir)
     part = glob.glob(os.path.join(tmp_dir, "part-*.csv"))[0]
     with open(path, "wb") as dst:
         dst.write(b"\xef\xbb\xbf")  # utf-8-sig BOM (main.py:1566)

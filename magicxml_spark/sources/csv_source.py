@@ -16,17 +16,18 @@ def sniff_delimiter(first_line: str) -> str:
     return "," if first_line.count(",") > first_line.count(";") else ";"
 
 
-def read_csv(
-    spark: SparkSession, path: str, delimiter: str | None = None
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
     with open(path, "rb") as f:
         from magicxml_spark.sources.xml_source import decode_bytes
 
         first_line = decode_bytes(f.readline())
     if not first_line.strip():  # reference main.py:510-511, 521-522
         raise ValueError("CSV data is empty")
-    if delimiter is None:
-        delimiter = sniff_delimiter(first_line)
     return spark.read.csv(
-        path, header=True, sep=delimiter, quote='"', escape='"', inferSchema=False
+        path,
+        header=True,
+        sep=sniff_delimiter(first_line),
+        quote='"',
+        escape='"',
+        inferSchema=False,
     )

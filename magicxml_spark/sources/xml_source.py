@@ -11,7 +11,9 @@ Division of labor, Spark-first:
   ``rowTag`` per dialect) — distributed, streaming per file split.
   ``inferSchema=false`` keeps every leaf a string, matching the
   reference's all-strings data model (SURVEY §1.1) and preserving
-  values like "1234.50" byte-for-byte.
+  values like "1234.50" byte-for-byte. Every read discovers its
+  schema from the bytes it reads; nothing is carried over from an
+  earlier read of the same path.
 * Repair (bare ``&``, control chars) is a text rewrite. For the
   100 TB path this is a ``spark.read.text`` -> ``regexp_replace`` ->
   write pre-pass; the in-memory helper here covers the reference's
@@ -38,6 +40,9 @@ _ROW_TAGS = {
     "russian": "ЭлементСправочника",
     "service": "service",
 }
+
+#: largest category dimension ``read_categories`` collects to the driver
+CATEGORY_MAX_ROWS = 100_000
 
 _CONTROL_CHARS = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
 _BARE_AMP = re.compile(r"&(?![a-zA-Z0-9#]+;)")
@@ -126,35 +131,22 @@ def read_xml_records(
     dialect: str | None = None,
     sample_bytes: int = 1 << 20,
     presplit_threshold: int = 16 << 20,
-    feed_key: str | None = None,
-    refresh_schema: bool = False,
 ) -> tuple[DataFrame, str]:
     """Read one XML catalog file into a (records_df, dialect) pair.
 
     Driver reads a head sample for validate/detect; Spark's XML source
-    does the record parsing. If the initial parse yields only corrupt
-    records, the repaired text is re-read (PERMISSIVE + repair pre-pass).
+    discovers the schema and parses the records. If the initial parse
+    yields only corrupt records, the repaired text is re-read
+    (PERMISSIVE + repair pre-pass).
 
     Files above ``presplit_threshold`` bytes are auto-split at row-tag
     boundaries into a temp directory first — the XML source assigns one
     task per file, so without this a big single-file export would do
-    BOTH its passes (structure inference + parse) serially.
-
-    Re-ingest fast path: the first successful read registers its
-    discovered StructType in ``schema_registry.DEFAULT_REGISTRY`` under
-    ``(dialect, feed_key or abspath)``; later reads pass it as an
-    explicit ``.schema()`` and skip the structure-discovery scan — one
-    pass over the data instead of two. A head-sample drift check (any
-    record tag/attribute missing from the registered schema) forces
-    re-discovery, and ``refresh_schema=True`` forces it manually.
+    BOTH its passes (structure inference + parse) serially. The parts
+    directory is kept in ``schema_registry.INGEST_CACHE`` under the
+    file's content key, so a re-read of the same bytes splits once.
     """
-    from magicxml_spark.sources.schema_registry import (
-        DEFAULT_REGISTRY,
-        INGEST_CACHE,
-        content_key,
-        sample_record_names,
-        schema_covers,
-    )
+    from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 
     with open(path, "rb") as f:
         sample = decode_bytes(f.read(sample_bytes))
@@ -174,48 +166,16 @@ def read_xml_records(
             INGEST_CACHE.put(ckey, ("parts", dialect), parts_dir)
         path = parts_dir
 
-    key = feed_key or os.path.abspath(orig_path)
-    schema = None if refresh_schema else DEFAULT_REGISTRY.get(dialect, key)
-    if schema is not None:
-        names = sample_record_names(sample, _ROW_TAGS[dialect])
-        if names is not None and not schema_covers(schema, names):
-            schema = None  # feed grew a field -> re-discover
-
     def _read(p: str) -> DataFrame:
-        reader = (
+        return (
             spark.read.format("xml")
             .option("rowTag", _ROW_TAGS[dialect])
             .option("inferSchema", "false")
             .option("mode", "PERMISSIVE")
+            .load(p)
         )
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.load(p)
 
     df = _read(path)
-    if schema is not None:
-        # Registered-schema fast path skipped discovery, so a feed that
-        # turned corrupt since registration would silently parse to
-        # all-null rows under PERMISSIVE instead of tripping the
-        # corrupt-record check below. One head-row probe guards it —
-        # skipped when these exact bytes already parsed under this schema.
-        if INGEST_CACHE.get(ckey, ("parsed", dialect)) != schema:
-            head = df.head(1)
-            if not head or all(v is None for v in head[0]):
-                DEFAULT_REGISTRY.invalidate(dialect, key)
-                return read_xml_records(
-                    spark,
-                    orig_path,
-                    dialect,
-                    sample_bytes,
-                    presplit_threshold,
-                    feed_key,
-                    refresh_schema=True,
-                )
-            INGEST_CACHE.put(ckey, ("parsed", dialect), schema)
-    elif df.columns and df.columns != ["_corrupt_record"]:
-        DEFAULT_REGISTRY.put(dialect, key, df.schema)
-        INGEST_CACHE.put(ckey, ("parsed", dialect), df.schema)
     if not df.columns or df.columns == ["_corrupt_record"]:
         # parse produced nothing usable -> repair and retry. Always
         # repair from the ORIGINAL file — `path` may have been swapped
@@ -238,13 +198,12 @@ def read_xml_records(
 def read_categories(spark: SparkSession, path: str) -> DataFrame:
     """Category dimension (id, parent_id, name) from <category>
     elements (reference main.py:1477-1484). Tiny table — feeds the
-    broadcast path builder (operators.category_path). A dimension
-    within the ingest cache's row cap is collected once and returned as
+    broadcast path builder (operators.category_path). A dimension of
+    at most ``CATEGORY_MAX_ROWS`` rows is collected once and returned as
     driver-local rows, so its consumers never re-scan the file; an
-    oversized one stays a lazy frame."""
+    oversized one stays a lazy frame (no more than ``CATEGORY_MAX_ROWS
+    + 1`` rows ever reach the driver)."""
     from pyspark.sql import functions as F
-
-    from magicxml_spark.sources.schema_registry import INGEST_CACHE
 
     _SCHEMA = "id string, parent_id string, name string"
     df = (
@@ -269,5 +228,7 @@ def read_categories(spark: SparkSession, path: str) -> DataFrame:
         parent.alias("parent_id"),
         F.coalesce(name, F.lit("Undefined")).alias("name"),
     )
-    rows = INGEST_CACHE.collect_rows(out)
-    return out if rows is None else spark.createDataFrame(rows, _SCHEMA)
+    rows = out.limit(CATEGORY_MAX_ROWS + 1).collect()
+    if len(rows) > CATEGORY_MAX_ROWS:
+        return out
+    return spark.createDataFrame(rows, _SCHEMA)

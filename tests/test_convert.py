@@ -33,7 +33,7 @@ def outdir(tmp_path_factory):
 
 def test_xml_to_csv_flagship(spark, outdir):
     out = str(outdir / "cat.csv")
-    xml_to_csv(spark, f"{FIX}/cat.xml", out, single_file=True)
+    xml_to_csv(spark, f"{FIX}/cat.xml", out)
     raw = open(out, "rb").read()
     assert raw.startswith(b"\xef\xbb\xbf")  # utf-8-sig BOM (K1)
     text = raw.decode("utf-8-sig")
@@ -168,10 +168,11 @@ def test_null_id_and_category_id_column(spark, outdir, tmp_path_factory):
 def test_oversized_category_dimension_stays_uncached(
     spark, outdir, tmp_path_factory, monkeypatch
 ):
-    """VERDICT r3 #3: a category dimension larger than the driver cache
-    cap must NOT be collect()ed into the ingest cache (the cache's
-    limit(cap+1) guard, shared with read_categories) — and the
+    """VERDICT r3 #3: a category dimension larger than
+    ``xml_source.CATEGORY_MAX_ROWS`` must NOT be collect()ed to the
+    driver (``read_categories``' limit(cap+1) guard) — and the
     conversion output must be identical either way."""
+    from magicxml_spark.sources import xml_source
 
     n = 8
     cats = "\n".join(
@@ -191,17 +192,17 @@ def test_oversized_category_dimension_stays_uncached(
     src.write_text(xml, encoding="utf-8")
 
     def run(tag):
-        INGEST_CACHE.clear()
+        INGEST_CACHE.clear()  # convert again; do not copy the earlier CSV
         out = str(outdir / f"bigcat_{tag}.csv")
-        xml_to_csv(spark, str(src), out, single_file=True)
+        xml_to_csv(spark, str(src), out)
         return open(out, "rb").read()
 
-    baseline = run("cached")  # cap 100k: dimension cached as before
-    assert INGEST_CACHE.get(content_key(str(src)), "category_paths") is not None
+    baseline = run("cached")  # cap 100k: dimension collected as before
+    assert xml_source.read_categories(spark, str(src)).inputFiles() == []
 
-    monkeypatch.setattr(INGEST_CACHE, "max_rows", n - 3)
-    capped = run("uncached")  # cap 5 < 8: must stay lazy and uncached
-    assert INGEST_CACHE.get(content_key(str(src)), "category_paths") is None
+    monkeypatch.setattr(xml_source, "CATEGORY_MAX_ROWS", n - 3)
+    capped = run("uncached")  # cap 5 < 8: must stay a lazy frame
+    assert xml_source.read_categories(spark, str(src)).inputFiles()  # re-scans the file
     assert capped == baseline
     path_col = [r for r in csv.DictReader(
         io.StringIO(capped.decode("utf-8-sig")), delimiter=";"
@@ -213,7 +214,7 @@ DIALECT_FEEDS = ("cat.xml", "products.xml", "c1.xml", "svc.xml")
 
 
 def _fresh_copy(tmp_path, name):
-    """A copy has its own content key, so no cached artifact replays."""
+    """A copy has its own content key, so no earlier CSV is copied."""
     dst = tmp_path / name
     dst.write_bytes(open(f"{FIX}/{name}", "rb").read())
     return str(dst)
@@ -240,34 +241,13 @@ def test_output_independent_of_shuffle_partitions(spark, tmp_path, feed):
     try:
         for n in (1, 64):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            INGEST_CACHE.clear()  # every derived artifact recomputed at n
+            INGEST_CACHE.clear()  # converted at n, not copied
             out = str(tmp_path / f"out_{n}.csv")
-            xml_to_csv(spark, src, out, single_file=True)
+            xml_to_csv(spark, src, out)
             outs.append(open(out, "rb").read())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert outs[0] == outs[1]
-
-
-@pytest.mark.parametrize("feed", DIALECT_FEEDS)
-def test_distributed_parts_match_single_file(spark, tmp_path, feed):
-    src = _fresh_copy(tmp_path, feed)
-    single = open(
-        xml_to_csv(spark, src, str(tmp_path / "single.csv"), single_file=True), "rb"
-    ).read()
-    assert single.startswith(b"\xef\xbb\xbf")
-    header, *rows = single[3:].splitlines(keepends=True)
-    parts_dir = xml_to_csv(spark, src, str(tmp_path / "parts"), single_file=False)
-    parts = sorted(glob.glob(os.path.join(parts_dir, "part-*.csv")))
-    assert parts
-    part_rows = []
-    for part in parts:
-        raw = open(part, "rb").read()
-        assert not raw.startswith(b"\xef\xbb\xbf")
-        first, *body = raw.splitlines(keepends=True)
-        assert first == header
-        part_rows.extend(body)
-    assert sorted(part_rows) == sorted(rows)
 
 
 def _ordered_offer_feed(path, n):
@@ -320,7 +300,7 @@ def test_rows_in_document_order(spark, tmp_path, monkeypatch, presplit):
     assert ids == [str(i) for i in range(n)]
 
 
-# --- the re-ingest memo: an unchanged single-file CSV is copied -------------
+# --- the re-ingest memo: an unchanged CSV is copied -------------------------
 
 
 def _jobs_during(spark, fn):
@@ -417,20 +397,6 @@ def test_reingest_under_another_dialect_request_reconverts(spark, tmp_path):
         spark, lambda: xml_to_csv(spark, src, str(tmp_path / "again.csv"), dialect="offer")
     )
     assert jobs == []
-
-
-def test_parts_output_is_never_served_from_or_recorded_in_memo(spark, tmp_path):
-    src = _fresh_copy(tmp_path, "cat.xml")
-    parts, jobs = _jobs_during(
-        spark, lambda: xml_to_csv(spark, src, str(tmp_path / "p1"), single_file=False)
-    )
-    assert jobs and glob.glob(os.path.join(parts, "part-*.csv"))
-    _, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(tmp_path / "s.csv")))
-    assert jobs
-    parts, jobs = _jobs_during(
-        spark, lambda: xml_to_csv(spark, src, str(tmp_path / "p2"), single_file=False)
-    )
-    assert jobs and glob.glob(os.path.join(parts, "part-*.csv"))
 
 
 def test_conversion_that_raises_records_no_csv(spark, tmp_path, monkeypatch):
@@ -534,7 +500,7 @@ def _direct(spark, src, dst):
     if s == ".png" and d == ".jpg":
         return payload(bd.png_to_jpg(binary), "jpg_content")
     if d == ".csv":
-        return write_csv(bd.extract_pdf_tables(binary), dst, single_file=True)
+        return write_csv(bd.extract_pdf_tables(binary), dst)
     if d == ".json":
         return write_json_array(bd.extract_pdf_documents(binary), dst)
     out_dir = os.path.dirname(dst)

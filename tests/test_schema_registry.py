@@ -1,11 +1,11 @@
-"""Schema registry + ingest cache (re-ingest fast path).
+"""Ingest cache (re-ingest fast path) and re-reads of changed feeds.
 
-The registry exists so repeat ingests of a stable feed skip Spark XML's
-structure-discovery pass (reference re-reads every feed at least twice:
-preview then convert, main.py:1690-1770). These tests pin the
-load-bearing behaviors: reuse, drift fallback, content-change
-invalidation of the ingest cache (including same-size rewrites with a
-restored mtime), and the cache's bound."""
+The reference re-reads every feed at least twice (preview then
+convert, main.py:1690-1770). These tests pin the load-bearing
+behaviors: a feed rewritten in place converts exactly as its new bytes
+do anywhere else, content-change invalidation of the ingest cache
+(including same-size rewrites with a restored mtime), presplit reuse,
+and the cache's bound."""
 
 from __future__ import annotations
 
@@ -15,16 +15,8 @@ import os
 import time
 
 import pytest
-from pyspark.sql.types import StructType
 
-from magicxml_spark.sources.schema_registry import (
-    DEFAULT_REGISTRY,
-    INGEST_CACHE,
-    SchemaRegistry,
-    content_key,
-    sample_record_names,
-    schema_covers,
-)
+from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 from magicxml_spark.sources.xml_source import read_categories, read_xml_records
 
 OFFER_DOC = """<?xml version='1.0' encoding='utf-8'?>
@@ -40,11 +32,9 @@ OFFER_DOC = """<?xml version='1.0' encoding='utf-8'?>
 
 
 @pytest.fixture(autouse=True)
-def _clean_registry():
-    DEFAULT_REGISTRY.clear()
+def _clean_cache():
     INGEST_CACHE.clear()
     yield
-    DEFAULT_REGISTRY.clear()
     INGEST_CACHE.clear()
 
 
@@ -54,65 +44,35 @@ def _write(tmp_path, body, name="feed.xml"):
     return str(p)
 
 
-def test_registry_roundtrip_and_persistence(tmp_path):
-    reg = SchemaRegistry(persist_dir=str(tmp_path / "schemas"))
-    schema = StructType.fromJson(
-        {"type": "struct", "fields": [
-            {"name": "x", "type": "string", "nullable": True, "metadata": {}}]}
+def test_schema_drift_falls_back_to_discovery(spark, tmp_path, monkeypatch):
+    """A feed rewritten in place with a new tag converts exactly as the
+    same bytes do at a new path — whether the tag shows in the head
+    sample or only past it."""
+    from magicxml_spark.plans import convert
+
+    vendor = "<vendor>ACME</vendor>"
+    grown = {
+        "head": OFFER_DOC.replace("<name>A</name>", "<name>A</name>" + vendor),
+        "late": OFFER_DOC.replace("<name>B</name>", "<name>B</name>" + vendor),
+    }
+    # the head sample holds the first offer whole and stops short of
+    # the second offer's <vendor>
+    head = grown["head"]
+    sample = len(head[: head.index('<offer id="11"')].encode())
+    monkeypatch.setattr(
+        convert, "read_xml_records", functools.partial(read_xml_records, sample_bytes=sample)
     )
-    reg.put("offer", "feedA", schema)
-    assert reg.get("offer", "feedA") == schema
-    # a fresh registry over the same dir starts warm (JSON spill)
-    reg2 = SchemaRegistry(persist_dir=str(tmp_path / "schemas"))
-    assert reg2.get("offer", "feedA") == schema
-    reg2.invalidate("offer", "feedA")
-    assert reg2.get("offer", "feedA") is None
-    assert SchemaRegistry(persist_dir=str(tmp_path / "schemas")).get(
-        "offer", "feedA"
-    ) is None
-
-
-def test_sample_record_names_and_coverage(spark, tmp_path):
-    names = sample_record_names(OFFER_DOC, "offer")
-    assert names == {"_id", "_available", "name", "price", "categoryId", "param"}
-    path = _write(tmp_path, OFFER_DOC)
-    df, _ = read_xml_records(spark, path)
-    assert schema_covers(df.schema, names)
-    # a tag the feed never had is not covered
-    assert not schema_covers(df.schema, names | {"vendor"})
-
-
-def test_second_read_uses_registered_schema(spark, tmp_path):
-    path = _write(tmp_path, OFFER_DOC)
-    df1, d1 = read_xml_records(spark, path)
-    assert DEFAULT_REGISTRY.get("offer", os.path.abspath(path)) is not None
-    df2, d2 = read_xml_records(spark, path)
-    assert d1 == d2 == "offer"
-    assert df2.schema == df1.schema
-    assert sorted(r["_id"] for r in df2.collect()) == ["10", "11"]
-
-
-def test_schema_drift_falls_back_to_discovery(spark, tmp_path):
-    path = _write(tmp_path, OFFER_DOC)
-    read_xml_records(spark, path)
-    grown = OFFER_DOC.replace(
-        "<name>A</name>", "<name>A</name><vendor>ACME</vendor>"
-    )
-    time.sleep(0.01)
-    _write(tmp_path, grown)
-    df, _ = read_xml_records(spark, path)
-    assert "vendor" in df.columns  # stale schema would have dropped it
-    # and the registry now holds the refreshed schema
-    assert "vendor" in DEFAULT_REGISTRY.get(
-        "offer", os.path.abspath(path)
-    ).fieldNames()
-
-
-def test_refresh_schema_forces_discovery(spark, tmp_path):
-    path = _write(tmp_path, OFFER_DOC)
-    read_xml_records(spark, path)
-    df, _ = read_xml_records(spark, path, refresh_schema=True)
-    assert sorted(r["_id"] for r in df.collect()) == ["10", "11"]
+    for case, doc in grown.items():
+        path = _write(tmp_path, OFFER_DOC, f"{case}.xml")
+        convert.xml_to_csv(spark, path, str(tmp_path / f"{case}_before.csv"))
+        time.sleep(0.01)
+        _write(tmp_path, doc, f"{case}.xml")
+        again = convert.xml_to_csv(spark, path, str(tmp_path / f"{case}_again.csv"))
+        moved = _write(tmp_path, doc, f"{case}_moved.xml")
+        fresh = convert.xml_to_csv(spark, moved, str(tmp_path / f"{case}_moved.csv"))
+        header = open(again, encoding="utf-8-sig").readline().rstrip("\r\n").split(";")
+        assert "vendor" in header, case  # a stale schema would drop it
+        assert open(again, "rb").read() == open(fresh, "rb").read(), case
 
 
 def test_category_row_cache_replays_and_invalidates(spark, tmp_path):
@@ -138,13 +98,13 @@ def test_meta_cache_content_keyed(tmp_path):
     p = _write(tmp_path, OFFER_DOC)
     key = content_key(p)
     assert key is not None
-    INGEST_CACHE.put(key, "prune_cols", ["a", "b"])
-    assert INGEST_CACHE.get(key, "prune_cols") == ["a", "b"]
-    assert INGEST_CACHE.get(None, "prune_cols") is None
+    INGEST_CACHE.put(key, ("csv", "offer"), ("out.csv", "k"))
+    assert INGEST_CACHE.get(key, ("csv", "offer")) == ("out.csv", "k")
+    assert INGEST_CACHE.get(None, ("csv", "offer")) is None
     time.sleep(0.01)
     _write(tmp_path, OFFER_DOC + " ")
     assert content_key(p) != key  # content changed -> new identity
-    assert INGEST_CACHE.get(content_key(p), "prune_cols") is None
+    assert INGEST_CACHE.get(content_key(p), ("csv", "offer")) is None
     assert content_key(str(tmp_path)) is None  # directories have no key
 
 
@@ -153,18 +113,10 @@ def test_reingest_conversion_identical_and_content_change_reflected(spark, tmp_p
 
     path = _write(tmp_path, OFFER_DOC)
     out1 = str(tmp_path / "o1.csv")
-    out2 = str(tmp_path / "o2.csv")
-    xml_to_csv(spark, path, out1, single_file=True)
-    b1 = open(out1, "rb").read()
-    # with the earlier CSV gone, a steady-state re-ingest (schema + pivot
-    # keys + prune cols + category paths all replay from cache) runs the
-    # Spark path and must be byte-identical
-    os.unlink(out1)
-    xml_to_csv(spark, path, out2, single_file=True)
-    assert b1 == open(out2, "rb").read()
-    assert b"category_path" in b1
-    # grow the feed: new param key must appear (stale pivot/prune caches
-    # would silently drop it)
+    xml_to_csv(spark, path, out1)
+    assert b"category_path" in open(out1, "rb").read()
+    # grow the feed: new param key must appear (a copy of o1.csv would
+    # silently drop it)
     time.sleep(0.01)
     _write(
         tmp_path,
@@ -174,7 +126,7 @@ def test_reingest_conversion_identical_and_content_change_reflected(spark, tmp_p
         ),
     )
     out3 = str(tmp_path / "o3.csv")
-    xml_to_csv(spark, path, out3, single_file=True)
+    xml_to_csv(spark, path, out3)
     header = open(out3, encoding="utf-8-sig").readline()
     assert "Материал" in header
 
@@ -195,8 +147,8 @@ def test_same_size_rewrite_with_restored_mtime_is_reconverted(
     spark, tmp_path, monkeypatch, presplit
 ):
     # cp -p / rsync -a / tar rewrite a feed in place and restore its
-    # mtime: a key on (path, size, mtime) would replay the old bytes'
-    # presplit parts, category paths and pivot keys
+    # mtime: a key on (path, size, mtime) would serve the old bytes'
+    # presplit parts and CSV
     from magicxml_spark.plans import convert
     from magicxml_spark.sources.xml_source import read_xml_records as read
 
@@ -210,7 +162,7 @@ def test_same_size_rewrite_with_restored_mtime_is_reconverted(
 
     def convert_rows(name):
         out = str(tmp_path / name)
-        convert.xml_to_csv(spark, path, out, single_file=True)
+        convert.xml_to_csv(spark, path, out)
         with open(out, encoding="utf-8-sig", newline="") as f:
             return {r["attr_id"]: r for r in csv.DictReader(f, delimiter=";")}
 

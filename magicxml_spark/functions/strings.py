@@ -9,6 +9,8 @@ Fidelity quirks are replicated deliberately and called out per function.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -25,6 +27,12 @@ from pyspark.sql import functions as F
 _PY_WS_CLASS = "[\\s\\u001C-\\u001F\\u0085\\p{Z}]"
 
 
+def quoted_col(name: str) -> Column:
+    """A column by its exact name: backtick-quoted, since flattened
+    column names may contain '.', '-' etc."""
+    return F.col("`" + name.replace("`", "") + "`")
+
+
 def strip_ws(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(c, f"^{_PY_WS_CLASS}+|{_PY_WS_CLASS}+$", "")
@@ -37,14 +45,20 @@ def strip_ws(col: Column | str) -> Column:
 # reference's manual "append if unseen" loop.
 
 
+def distinct_join(items: Column, delimiter: str = "///") -> Column:
+    """P4 over an array: strip each item, drop the empty ones, keep each
+    first occurrence, join on ``delimiter``; null when nothing is left."""
+    # NB: lambda must be single-arg — passing F.trim directly binds its
+    # optional second parameter to the array index.
+    cleaned = F.filter(F.transform(items, lambda x: strip_ws(x)), lambda x: x != F.lit(""))
+    return F.nullif(F.array_join(F.array_distinct(cleaned), delimiter), F.lit(""))
+
+
 def dedup_delimited(col: Column | str, delimiter: str = "///") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     # split() takes a Java regex; quote the delimiter so any literal works.
     items = F.split(c, _regex_quote(delimiter))
-    # NB: lambda must be single-arg — passing F.trim directly binds its
-    # optional second parameter to the array index.
-    cleaned = F.filter(F.transform(items, lambda x: strip_ws(x)), lambda x: x != F.lit(""))
-    return F.coalesce(F.array_join(F.array_distinct(cleaned), delimiter), F.lit(""))
+    return F.coalesce(distinct_join(items, delimiter), F.lit(""))
 
 
 def _regex_quote(s: str) -> str:
@@ -82,9 +96,15 @@ def sanitize_name(col: Column | str) -> Column:
 # is applied to the TAG NAME, not the value (`child.tag.replace('.', '',
 # 1).isdigit()`). "Digit-like" = after removing the first '.', the string
 # is non-empty all-digits: regex ^(\d+\.?\d*|\.\d+)$ (no lookahead, so the
-# same pattern runs on RE2/DuckDB for the oracle).
+# same pattern runs on RE2/DuckDB for the oracle). The flatten's P9
+# transform, its P14 param-key drop and the pruner's Q7 column drop test
+# a Python-side name with the same pattern (``is_digit_like``).
 
 _DIGIT_LIKE = "^([0-9]+\\.?[0-9]*|\\.[0-9]+)$"
+
+
+def is_digit_like(name: str) -> bool:
+    return re.fullmatch(_DIGIT_LIKE, name) is not None
 
 
 def decimal_comma_quirk(tag: Column | str, value: Column | str) -> Column:

@@ -4,11 +4,18 @@ The reference flattens each XML element into a dynamic string-keyed
 dict with an intricate set of per-tag rules (reference main.py:115-325
 ``process_offer``, 328-455 ``process_russian_xml``, 458-491
 ``process_service_xml``). The Spark spelling: the native XML reader
-gives a typed nested record; we walk that *schema* (driver-side
-metadata, zero data passes) and emit ONE flat projection containing
-every rule as a Column expression — so the whole flatten is a single
-narrow ``select`` that Tungsten codegens, regardless of how many
-hundred columns fall out.
+gives a typed nested record; we walk that *schema* once (driver-side
+metadata, zero data passes) into a list of nodes, each with its Column,
+and every rule as a Column expression over the nodes it needs. A
+flatten is narrow projections only, which Tungsten codegens into one
+stage regardless of how many hundred columns fall out:
+
+* offer/product and service: ONE projection;
+* 1C: three — each tabular part's rows with their text stripped once,
+  the R2-R6 rules over those rows, and the R7 '///' re-dedup over the
+  rules' columns. Catalyst keeps them apart (it does not inline a
+  costly expression that the next projection reads more than once), so
+  each shared intermediate is planned and evaluated once.
 
 Replicated quirks (each cited):
 
@@ -33,7 +40,7 @@ their first element's subtree (the reference scans every occurrence).
 
 from __future__ import annotations
 
-import re
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +49,9 @@ from pyspark.sql import types as T
 from magicxml_spark.functions.html import clean_description
 from magicxml_spark.functions.strings import (
     dedup_delimited,
+    distinct_join,
+    is_digit_like,
+    quoted_col,
     sanitize_name,
     strip_size_question,
     strip_ws,
@@ -54,7 +64,6 @@ _EXCLUDED = {
     "offer": {"param"},
     "product": {"photos", "fabric", "features", "options"},
 }
-_DIGIT_LIKE = "^([0-9]+\\.?[0-9]*|\\.[0-9]+)$"
 # dynamic-pivot cap: unbounded distinct param keys would mean unbounded
 # columns (SURVEY §4)
 MAX_PARAM_KEYS = 1000
@@ -75,6 +84,11 @@ def _walked(df: DataFrame) -> tuple[T.StructType, list[Column]]:
 
 def _is_attr(name: str) -> bool:
     return name.startswith("_") and name != VALUE_TAG
+
+
+def _is_rows(dt: T.DataType) -> bool:
+    """A repeated element with children or attributes."""
+    return isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType)
 
 
 def _s(c: Column) -> Column:
@@ -109,18 +123,12 @@ def _strip_size_value(key: str):
     )
 
 
-def _append_dedup(values: Column) -> Column:
-    """'///'-join with the reference's order-preserving dedup (P4)."""
-    cleaned = F.filter(F.transform(values, lambda x: strip_ws(_s(x))), lambda x: x != "")
-    return F.nullif(F.array_join(F.array_distinct(cleaned), "///"), F.lit(""))
-
-
 def _second_pass_transform(tag: str, raw: Column) -> Column:
     """The quirky transform pass (main.py:185-199): applied to the
     UNtrimmed raw text, only reachable when the raw pass left the
     column empty."""
     val = F.coalesce(_s(raw), F.lit(""))
-    if __import__("re").fullmatch(r"[0-9]+\.?[0-9]*|\.[0-9]+", tag):
+    if is_digit_like(tag):
         val = F.regexp_replace(val, "\\.", ",")
     if tag == "name":
         val = sanitize_name(val)
@@ -157,49 +165,62 @@ class _Out:
             self.cols[name] = expr
 
 
-def _walk_deep(field: T.StructField, path: Column, out: _Out, depth: int = 0) -> None:
-    """P6: any unprocessed descendant's text/attrs fill missing columns
-    (first-wins). Walks struct/array-of-struct levels below the direct
-    children."""
-    dt = field.dataType
-    tag = field.name
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-        # first element stands in for document-order first occurrence
-        _walk_struct_deep(dt.elementType, tag, F.try_element_at(path, F.lit(1)), out, depth)
-    elif isinstance(dt, T.StructType):
-        _walk_struct_deep(dt, tag, path, out, depth)
+# ---------------------------------------------------------------------------
+# the schema walk — every offer/product rule below reads its list
+# ---------------------------------------------------------------------------
 
 
-def _walk_struct_deep(
-    st: T.StructType, tag: str, node: Column, out: _Out, depth: int
-) -> None:
-    if tag in IMAGE_TAGS:
-        return
-    if depth > 0:  # direct children were handled by the main pass
-        for sub in st.fields:
-            if _is_attr(sub.name):
-                out.fill_missing(f"{tag}_{sub.name[1:]}", _s(node[sub.name]))
-        if VALUE_TAG in st.names:
-            out.fill_missing(tag, _nonempty(node[VALUE_TAG]))
-    # everything below this node is an unprocessed descendant of the
-    # row element -> always eligible for first-wins fill
-    for sub in st.fields:
-        if _is_attr(sub.name) or sub.name == VALUE_TAG:
-            continue
-        sdt = sub.dataType
-        child = node[sub.name]
-        if isinstance(sdt, T.StructType):
-            _walk_struct_deep(sdt, sub.name, child, out, depth + 1)
-        elif isinstance(sdt, T.ArrayType) and isinstance(sdt.elementType, T.StructType):
-            _walk_struct_deep(
-                sdt.elementType, sub.name, F.try_element_at(child, F.lit(1)), out, depth + 1
+class _Node(NamedTuple):
+    """One field of the record schema, at any depth."""
+
+    name: str
+    dtype: T.DataType
+    col: Column
+    depth: int  # 0 for the record's own attributes, text and children
+    parent: str | None  # the enclosing element's tag; None at depth 0
+    path: tuple[int, ...]  # the field's index at each level, outermost first
+    repeated: bool  # inside a repeated element, read through its first one
+    in_image: bool  # inside an IMAGE_TAGS element
+
+
+def _nodes(schema: T.StructType) -> list[_Node]:
+    """Every field of ``schema`` at any depth with its Column, in the
+    order the deep rules take them: an element's attributes and text,
+    then each child element followed by its own subtree. A repeated
+    element is read through its first occurrence, which stands in for
+    the document-order first one."""
+    nodes: list[_Node] = []
+
+    def rank(f: T.StructField) -> int:
+        return 0 if _is_attr(f.name) else 1 if f.name == VALUE_TAG else 2
+
+    def walk(st: T.StructType, base: Column | None, up: _Node | None) -> None:
+        for i in sorted(range(len(st.fields)), key=lambda i: rank(st.fields[i])):
+            f = st.fields[i]
+            node = _Node(
+                f.name,
+                f.dataType,
+                F.col(f.name) if base is None else base[f.name],
+                0 if up is None else up.depth + 1,
+                None if up is None else up.name,
+                (i,) if up is None else up.path + (i,),
+                up is not None and (up.repeated or _is_rows(up.dtype)),
+                up is not None and (up.in_image or up.name in IMAGE_TAGS),
             )
-        elif isinstance(sdt, T.ArrayType):
-            if sub.name not in IMAGE_TAGS:
-                out.fill_missing(sub.name, _nonempty(_first_nonempty_el(child)))
-        else:
-            if sub.name not in IMAGE_TAGS:
-                out.fill_missing(sub.name, _nonempty(child))
+            nodes.append(node)
+            if isinstance(f.dataType, T.StructType):
+                walk(f.dataType, node.col, node)
+            elif _is_rows(f.dataType):
+                walk(f.dataType.elementType, F.try_element_at(node.col, F.lit(1)), node)
+
+    walk(schema, None, None)
+    return nodes
+
+
+def _direct_first(node: _Node) -> tuple:
+    """Sort key of a search that, at each level, takes a direct child
+    before looking below any of its siblings."""
+    return (*[(1, i) for i in node.path[:-1]], (0, node.path[-1]))
 
 
 def _first_nonempty_el(arr: Column) -> Column:
@@ -211,130 +232,25 @@ def _first_nonempty_el(arr: Column) -> Column:
     )
 
 
-def _deep_text_sources(schema: T.StructType, wanted: str) -> list[Column]:
-    """Text expressions for every field named ``wanted`` at any depth,
-    top level first then nested (approximates the reference's
-    document-order find('.//tag'))."""
-    found: list[Column] = []
-
-    def walk(st: T.StructType, get, depth: int) -> None:
-        for f in st.fields:
-            if _is_attr(f.name) or f.name == VALUE_TAG:
-                continue
-            c = get(f.name)
-            dt = f.dataType
-            if f.name == wanted:
-                if isinstance(dt, T.StructType):
-                    if VALUE_TAG in dt.names:
-                        found.append(_nonempty(c[VALUE_TAG]))
-                elif isinstance(dt, T.ArrayType):
-                    el = dt.elementType
-                    if isinstance(el, T.StructType):
-                        if VALUE_TAG in el.names:
-                            found.append(
-                                _nonempty(
-                                    _first_nonempty_el(
-                                        F.transform(c, lambda e: _s(e[VALUE_TAG]))
-                                    )
-                                )
-                            )
-                    else:
-                        found.append(_nonempty(_first_nonempty_el(c)))
-                else:
-                    found.append(_nonempty(c))
-            if isinstance(dt, T.StructType):
-                walk(dt, lambda n, cc=c: cc[n], depth + 1)
-            elif isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-                first = F.try_element_at(c, F.lit(1))
-                walk(dt.elementType, lambda n, cc=first: cc[n], depth + 1)
-
-    walk(schema, lambda n: F.col(n), 0)
-    return found
+def _deep_text(node: _Node) -> Column | None:
+    """P17: the text of an element found by find('.//tag'); None when
+    the element carries no text."""
+    dt = node.dtype
+    if isinstance(dt, T.StructType):
+        return _nonempty(node.col[VALUE_TAG]) if VALUE_TAG in dt.names else None
+    if _is_rows(dt):
+        if VALUE_TAG not in dt.elementType.names:
+            return None
+        texts = F.transform(node.col, lambda e: _s(e[VALUE_TAG]))
+        return _nonempty(_first_nonempty_el(texts))
+    if isinstance(dt, T.ArrayType):
+        return _nonempty(_first_nonempty_el(node.col))
+    return _nonempty(node.col)
 
 
-def _find_param_array(schema: T.StructType, holder: str = "param"):
-    """Locate the <param> array at any depth (reference findall('.//param')).
-    Returns (array_expr, element_struct_type) or (None, None)."""
-
-    def walk(st: T.StructType, get):
-        direct = None
-        for f in st.fields:
-            if f.name != holder:
-                continue
-            dt = f.dataType
-            if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-                return get(f.name), dt.elementType
-            if isinstance(dt, T.StructType):
-                return F.array(get(f.name)), dt
-        for f in st.fields:
-            dt = f.dataType
-            if isinstance(dt, T.StructType):
-                got = walk(dt, lambda n, cc=get(f.name): cc[n])
-                if got is not None:
-                    return got
-        return direct
-
-    got = walk(schema, lambda n: F.col(n))
-    return got if got is not None else (None, None)
-
-
-def _collect_image_exprs(
-    schema: T.StructType, base: Column | None = None
-) -> tuple[list[Column], list[Column]]:
-    """P13: (element-text candidates, attribute-value candidates) from
-    every depth of the schema."""
-    texts: list[Column] = []
-    attrs: list[Column] = []
-
-    def node_col(name: str) -> Column:
-        return F.col(name) if base is None else base[name]
-
-    def walk(st: T.StructType, get, tag_path: list[str]) -> None:
-        for f in st.fields:
-            c = get(f.name)
-            dt = f.dataType
-            if _is_attr(f.name):
-                aname = f.name[1:].lower()
-                if "image" in aname or "photo" in aname:
-                    attrs.append(_s(c))
-                continue
-            if f.name == VALUE_TAG:
-                if tag_path and tag_path[-1] in IMAGE_TAGS:
-                    texts.append(_s(c))
-                continue
-            if isinstance(dt, T.StructType):
-                walk(dt, lambda n, cc=c: cc[n], tag_path + [f.name])
-            elif isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-                # arrays of structs: check _VALUE + image attrs per element
-                el = dt.elementType
-                if f.name in IMAGE_TAGS and VALUE_TAG in el.names:
-                    texts.append(
-                        F.array_join(
-                            F.transform(c, lambda e: F.coalesce(_s(e[VALUE_TAG]), F.lit(""))),
-                            "\x00",
-                        )
-                    )
-                for sub in el.fields:
-                    if _is_attr(sub.name):
-                        aname = sub.name[1:].lower()
-                        if "image" in aname or "photo" in aname:
-                            attrs.append(
-                                F.array_join(
-                                    F.transform(
-                                        c, _field_str_or_empty(sub.name)
-                                    ),
-                                    "\x00",
-                                )
-                            )
-            elif isinstance(dt, T.ArrayType):
-                if f.name in IMAGE_TAGS:
-                    texts.append(F.array_join(F.transform(c, _s), "\x00"))
-            else:
-                if f.name in IMAGE_TAGS:
-                    texts.append(_s(c))
-
-    walk(schema, node_col, [])
-    return texts, attrs
+def _is_image_attr(name: str) -> bool:
+    low = name[1:].lower()
+    return "image" in low or "photo" in low
 
 
 def _image_predicate(url: Column, include_img_infix: bool) -> Column:
@@ -348,9 +264,34 @@ def _image_predicate(url: Column, include_img_infix: bool) -> Column:
     return pred
 
 
-def pictures_expr(schema: T.StructType) -> Column:
-    """P13 (main.py:200-244): gather, filter, set-dedup, SORT, join."""
-    texts, attrs = _collect_image_exprs(schema)
+def _pictures(nodes: list[_Node]) -> Column:
+    """P13 (main.py:200-244): gather, filter, set-dedup, SORT, join.
+    Element text of image tags and image/photo attribute values, at
+    every depth but not inside repeated elements (a repeated element's
+    own text and attributes are gathered across all its occurrences)."""
+    texts: list[Column] = []
+    attrs: list[Column] = []
+    for n in nodes:
+        if n.repeated:
+            continue
+        if _is_attr(n.name):
+            if _is_image_attr(n.name):
+                attrs.append(_s(n.col))
+        elif n.name == VALUE_TAG:
+            if n.parent in IMAGE_TAGS:
+                texts.append(_s(n.col))
+        elif _is_rows(n.dtype):
+            el = n.dtype.elementType
+            if n.name in IMAGE_TAGS and VALUE_TAG in el.names:
+                texts.append(F.array_join(F.transform(n.col, _field_str_or_empty(VALUE_TAG)), "\x00"))
+            for sub in el.fields:
+                if _is_attr(sub.name) and _is_image_attr(sub.name):
+                    attrs.append(F.array_join(F.transform(n.col, _field_str_or_empty(sub.name)), "\x00"))
+        elif isinstance(n.dtype, T.ArrayType):
+            if n.name in IMAGE_TAGS:
+                texts.append(F.array_join(F.transform(n.col, _s), "\x00"))
+        elif not isinstance(n.dtype, T.StructType) and n.name in IMAGE_TAGS:
+            texts.append(_s(n.col))
 
     def gather(exprs: list[Column], infix: bool) -> Column:
         if not exprs:
@@ -370,42 +311,46 @@ def pictures_expr(schema: T.StructType) -> Column:
     )
 
 
-def _pivot_arrays(schema: T.StructType, dialect: str) -> dict[str, Column]:
+def _pivot_arrays(nodes: list[_Node], dialect: str) -> dict[str, Column]:
     """The dynamic-pivot sources this schema carries, as arrays of
     named structs: ``param`` (offer, P14) and ``fabric``/``features``
     (product, P16)."""
-    arrays: dict[str, Column] = {}
     if dialect == "offer":
-        # reference uses findall('.//param') — any depth
-        params, el = _find_param_array(schema)
-        if isinstance(el, T.StructType) and "_name" in el.names:
-            arrays["param"] = params
+        # reference uses findall('.//param') — any depth, but not inside
+        # a repeated element; a level's own <param> before any deeper one
+        params = [
+            n
+            for n in nodes
+            if n.name == "param" and not n.repeated
+            and (isinstance(n.dtype, T.StructType) or _is_rows(n.dtype))
+        ]
+        holders = {"param": min(params, key=_direct_first)} if params else {}
     elif dialect == "product":
-        for holder in ("fabric", "features"):
-            if holder not in schema.names:
-                continue
-            hdt = schema[holder].dataType
-            if not isinstance(hdt, T.StructType) or "feature" not in hdt.names:
-                continue
-            fdt = hdt["feature"].dataType
-            el = fdt.elementType if isinstance(fdt, T.ArrayType) else fdt
-            if not (isinstance(el, T.StructType) and "_name" in el.names):
-                continue
-            feats = F.col(holder)["feature"]
-            arrays[holder] = feats if isinstance(fdt, T.ArrayType) else F.array(feats)
+        holders = {
+            n.parent: n
+            for n in nodes
+            if n.depth == 1 and n.name == "feature" and not n.repeated
+            and n.parent in ("fabric", "features")
+        }
+    else:
+        holders = {}
+    arrays: dict[str, Column] = {}
+    for holder, n in holders.items():
+        is_array = isinstance(n.dtype, T.ArrayType)
+        el = n.dtype.elementType if is_array else n.dtype
+        if isinstance(el, T.StructType) and "_name" in el.names:
+            arrays[holder] = n.col if is_array else F.array(n.col)
     return arrays
 
 
-def discover_pivot_keys(records: DataFrame, dialect: str = "offer") -> dict[str, list[str]]:
+def _pivot_keys(records: DataFrame, pivots: dict[str, Column]) -> dict[str, list[str]]:
     """Distinct pivot keys per pivot source of ``records`` — one tiny
     distinct scan each (the dynamic-pivot two-pass, SURVEY §4). Param
     keys are trimmed and CAPPED at ``MAX_PARAM_KEYS`` in sorted order,
     so keys beyond the cap are dropped deterministically; fabric and
     features keys are uncapped."""
-    if dialect == "product" and "offer" in records.columns:
-        records = records.filter(F.col("offer").isNull())  # Q1
     keys: dict[str, list[str]] = {}
-    for holder, arr in _pivot_arrays(records.schema, dialect).items():
+    for holder, arr in pivots.items():
         if holder == "param":
             name = F.transform(arr, lambda p: F.trim(_s(p["_name"])))
         else:
@@ -431,23 +376,25 @@ def flatten_offer_records(
 
     ``category_paths``: (id, category_path) dimension from
     operators.category_path (broadcast-joined; offer dialect only).
-    The dynamic-pivot keys come from ``discover_pivot_keys``.
+    The dynamic-pivot keys come from one distinct scan per pivot source.
     """
     schema, carried = _walked(df)
     names = set(schema.names)
     excluded = _EXCLUDED.get(dialect, set())
+    nodes = _nodes(schema)
+    top = {n.name: n.col for n in nodes if n.depth == 0}
     out = _Out()
-    pivot_keys = discover_pivot_keys(df, dialect)
-    pivots = _pivot_arrays(schema, dialect)
 
     # Q1: parent products containing nested <offer> are dropped
     if dialect == "product" and "offer" in names:
-        df = df.filter(F.col("offer").isNull())
+        df = df.filter(top["offer"].isNull())
+    pivots = _pivot_arrays(nodes, dialect)
+    pivot_keys = _pivot_keys(df, pivots)
 
     # P1: element attributes -> attr_{name}
     for f in schema.fields:
         if _is_attr(f.name):
-            out.set(f"attr_{f.name[1:]}", _s(F.col(f.name)))
+            out.set(f"attr_{f.name[1:]}", _s(top[f.name]))
 
     # direct children: text columns, {tag}_{attr}, stock hoist
     for f in schema.fields:
@@ -457,18 +404,19 @@ def flatten_offer_records(
         if dialect == "product" and tag == "offer":
             continue  # nested variants: images only (P13)
         dt = f.dataType
-        c = F.col(tag)
-        if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
+        c = top[tag]
+        if _is_rows(dt):
             el = dt.elementType
             if VALUE_TAG in el.names:
-                raw_first = F.try_element_at(
-                    F.transform(c, lambda e: e[VALUE_TAG]), 1
-                )
+                texts = F.transform(c, lambda e: e[VALUE_TAG])
                 out.fill_empty(
                     tag,
                     F.coalesce(
-                        _append_dedup(F.transform(c, lambda e: e[VALUE_TAG])),
-                        F.when(c.isNotNull(), _second_pass_transform(tag, raw_first)),
+                        distinct_join(texts),
+                        F.when(
+                            c.isNotNull(),
+                            _second_pass_transform(tag, F.try_element_at(texts, F.lit(1))),
+                        ),
                     ),
                 )
             else:
@@ -509,12 +457,13 @@ def flatten_offer_records(
                     else:
                         out.fill_empty(sub.name, _nonempty(g))
         elif isinstance(dt, T.ArrayType):
-            raw_first = F.try_element_at(c, F.lit(1))
             out.fill_empty(
                 tag,
                 F.coalesce(
-                    _append_dedup(c),
-                    F.when(c.isNotNull(), _second_pass_transform(tag, raw_first)),
+                    distinct_join(c),
+                    F.when(
+                        c.isNotNull(), _second_pass_transform(tag, F.try_element_at(c, F.lit(1)))
+                    ),
                 ),
             )
         else:
@@ -526,12 +475,24 @@ def flatten_offer_records(
                 ),
             )
 
-    # P6: deep descendants, first-wins (skips what the passes above set)
-    for f in schema.fields:
-        if _is_attr(f.name) or f.name in IMAGE_TAGS:
+    # P6: deep descendants, first-wins (skips what the passes above
+    # set): text and attributes below the direct children, outside
+    # image elements
+    for n in nodes:
+        if n.depth == 0 or n.in_image:
             continue
-        if isinstance(f.dataType, (T.StructType, T.ArrayType)):
-            _walk_deep(f, F.col(f.name), out)
+        if _is_attr(n.name):
+            if n.depth > 1:  # a direct child's own attributes were set above
+                out.fill_missing(f"{n.parent}_{n.name[1:]}", _s(n.col))
+        elif n.name == VALUE_TAG:
+            if n.depth > 1:
+                out.fill_missing(n.parent, _nonempty(n.col))
+        elif n.name in IMAGE_TAGS or isinstance(n.dtype, T.StructType) or _is_rows(n.dtype):
+            continue
+        elif isinstance(n.dtype, T.ArrayType):
+            out.fill_missing(n.name, _nonempty(_first_nonempty_el(n.col)))
+        else:
+            out.fill_missing(n.name, _nonempty(n.col))
 
     # P7 + P8: categoryId resolution and category path (offer only).
     # Direct child + deep search both already landed in the
@@ -549,15 +510,13 @@ def flatten_offer_records(
         out.set("categoryId", F.lit("Undefined"))
         out.set("category_path", F.lit("Undefined"))
 
-    # P13 pictures
-    pics = pictures_expr(schema)
-    out.set("pictures", pics)
+    out.set("pictures", _pictures(nodes))
 
     # P14/P15/P16: param pivots (offer) / fabric+features (product)
     if "param" in pivots:
         params = pivots["param"]
         for key in sorted(pivot_keys.get("param", ())):
-            if re.fullmatch(r"[0-9]+\.?[0-9]*|\.[0-9]+", key):
+            if is_digit_like(key):
                 continue  # digit-named params dropped (main.py:260-261)
             matches = F.filter(params, _name_eq(key))
             vals = F.transform(matches, _strip_size_value(key))
@@ -571,13 +530,13 @@ def flatten_offer_records(
         if f.name.startswith("param_name_") and not isinstance(
             f.dataType, (T.StructType, T.ArrayType)
         ):
-            raw = F.coalesce(_s(F.col(f.name)), F.lit(""))
+            raw = F.coalesce(_s(top[f.name]), F.lit(""))
             stripped = strip_size_question(F.lit(f.name), raw)
             prior = out.cols.get(f.name, F.lit(None))
             out.set(
                 f.name,
                 F.when(
-                    F.col(f.name).isNotNull(),
+                    top[f.name].isNotNull(),
                     F.concat(F.coalesce(prior, F.lit("")), F.lit(", "), stripped),
                 ).otherwise(prior),
             )
@@ -595,12 +554,17 @@ def flatten_offer_records(
                 F.when(F.size(matches) > 0, F.array_join(vals, ", ")),
             )
 
-    # P17: description overwrite with cleaned text (main.py:309-320)
+    # P17: description overwrite with cleaned text (main.py:309-320);
+    # the reference searches './/tag' — elements at any depth, in
+    # document order, each tag's matches before the next tag's
     desc_primary = "description" if dialect == "offer" else "name"
     desc_sources = []
     for tag in (desc_primary, "desc", "descr", "description_full", "full_description"):
-        # reference searches './/tag' — descendants at any depth
-        desc_sources.extend(_deep_text_sources(schema, tag))
+        for n in nodes:
+            if n.name == tag:
+                text = _deep_text(n)
+                if text is not None:
+                    desc_sources.append(text)
     found = F.coalesce(*desc_sources) if desc_sources else F.lit(None)
     out.set("description", F.coalesce(clean_description(found), F.lit("")))
 
@@ -610,7 +574,7 @@ def flatten_offer_records(
     ):
         out.set(
             "available",
-            F.when(F.col("available").isNotNull(), F.trim(_s(F.col("available")))).otherwise(
+            F.when(top["available"].isNotNull(), F.trim(_s(top["available"]))).otherwise(
                 "1"
             ),
         )
@@ -655,29 +619,60 @@ _R6_RENAMES = {
     "Вес": ["вес"],
     "Цвет": ["param_Цвет"],
 }
+# the tabular parts R2-R5 read
+_TC_PARTS = ("Остатки", "Цены", "Материалы", "Стили", "ГруппыСайта")
 
 
-def _tc_rows(tc_col: Column, name: str, row_type: T.DataType) -> Column:
-    """Rows of one tabular part: ТЧ[ИмяТабличнойЧасти=name]/ЭлементТЧ
-    (absent part -> empty array of the inferred row struct type)."""
-    match = F.filter(tc_col, lambda t: _s(t["_ИмяТабличнойЧасти"]) == F.lit(name))
-    return F.coalesce(
-        F.try_element_at(match, F.lit(1))["ЭлементТЧ"], F.array().cast(T.ArrayType(row_type))
-    )
+def _tc_named(name: str):
+    return lambda t: _s(t["_ИмяТабличнойЧасти"]) == F.lit(name)
 
 
-def _tc_get(row: Column, field: str, fields: list[str], default: str = "") -> Column:
-    """tc_row.get(tag, default) — absent/empty text -> default
-    (reference main.py:339-345 builds tc_row only from non-empty text)."""
+def _tc_rows(schema: T.StructType) -> tuple[dict[str, Column], list[str]]:
+    """R1 (main.py:339-345): the rows of each tabular part
+    (ТЧ[ИмяТабличнойЧасти=part]/ЭлементТЧ; an absent part has none) as
+    structs of the rows' text fields, each stripped once and null when
+    empty — the reference's tc_row holds only non-empty text. Остатки
+    keeps only rows with some text, as its tc_data does. Also returns
+    the text field names; ({}, []) when the records carry no ТЧ rows."""
+    if "ТЧ" not in schema.names:
+        return {}, []
+    tc = F.col("ТЧ")
+    tdt = schema["ТЧ"].dataType
+    if not isinstance(tdt, T.ArrayType):
+        tc = F.array(tc)
+        tdt = T.ArrayType(tdt)
+    el = tdt.elementType
+    if not (isinstance(el, T.StructType) and "ЭлементТЧ" in el.names):
+        return {}, []
+    rdt = el["ЭлементТЧ"].dataType
+    if not _is_rows(rdt):
+        return {}, []
+    fields = [fn for fn in rdt.elementType.names if not _is_attr(fn)]
+    parts = {}
+    for part in _TC_PARTS:
+        rows = F.coalesce(
+            F.try_element_at(F.filter(tc, _tc_named(part)), F.lit(1))["ЭлементТЧ"],
+            F.array().cast(rdt),
+        )
+        rows = F.transform(rows, lambda r: F.struct(*[_nonempty(r[fn]).alias(fn) for fn in fields]))
+        if part == "Остатки":
+            rows = F.filter(
+                rows, lambda r: F.coalesce(*[r[fn] for fn in fields], F.lit(None)).isNotNull()
+            )
+        parts[part] = rows
+    return parts, fields
+
+
+def _tc_get(field: str, fields: list[str], default: str = ""):
+    """tc_row.get(field, default) over a stripped row (one-param lambda)."""
     if field not in fields:
-        return F.lit(default)
-    return F.coalesce(F.nullif(strip_ws(_s(row[field])), F.lit("")), F.lit(default))
+        return lambda r: F.lit(default)
+    return lambda r: F.coalesce(r[field], F.lit(default))
 
 
 def flatten_russian_records(df: DataFrame) -> DataFrame:
     """Flatten 1C <ЭлементСправочника> records (main.py:328-455)."""
     schema, carried = _walked(df)
-    names = set(schema.names)
     out = _Out()
 
     # scalar children with the R6 rename map
@@ -698,150 +693,88 @@ def flatten_russian_records(df: DataFrame) -> DataFrame:
         else:
             out.fill_missing(tag, val)
 
-    # tabular parts
-    if "ТЧ" in names:
-        tc = F.col("ТЧ")
-        tdt = schema["ТЧ"].dataType
-        if not isinstance(tdt, T.ArrayType):
-            tc = F.array(tc)
-            tdt = T.ArrayType(tdt)
-        el = tdt.elementType
-        row_fields: list[str] = []
-        if isinstance(el, T.StructType) and "ЭлементТЧ" in el.names:
-            rdt = el["ЭлементТЧ"].dataType
-            if isinstance(rdt, T.ArrayType) and isinstance(rdt.elementType, T.StructType):
-                row_fields = list(rdt.elementType.names)
+    # tabular parts: their stripped rows are a projection of their own,
+    # which every rule below reads by reference
+    parts, fields = _tc_rows(schema)
+    if parts:
+        df = df.select("*", *[rows.alias(f"#{part}") for part, rows in parts.items()])
+        stock, prices, materials, styles, groups = (F.col(f"#{part}") for part in _TC_PARTS)
+        name = _tc_get("Наименование", fields)
 
-        if row_fields:
-            # R2 stock aggregate (main.py:348-365). The reference's
-            # tc_data keeps only rows with >=1 non-empty text child
-            # (main.py:339-345), so an Остатки part whose rows are all
-            # empty emits NO stock columns (available falls through to
-            # the '1' default) — gate on that, not on raw row count.
-            row_struct = rdt.elementType
-            data_fields = [fn for fn in row_fields if not _is_attr(fn)]
+        # R2 stock aggregate (main.py:348-365). Only rows with some
+        # text count, so an Остатки part whose rows are all empty emits
+        # NO stock columns (available falls through to the '1' default).
+        qty = _tc_get("КоличествоОстаток", fields, "0")
+        wh = _tc_get("СкладНаименование", fields)
+        total = F.aggregate(
+            stock,
+            F.lit(0.0),
+            lambda acc, r: acc + F.coalesce(qty(r).try_cast("double"), F.lit(0.0)),
+        )
+        listed = F.filter(
+            stock,
+            lambda r: F.coalesce(
+                qty(r).try_cast("double") > 0,  # parseable & positive
+                qty(r) != "0",  # unparseable & not the '0' default
+            ),
+        )
+        details = F.array_join(
+            F.transform(listed, lambda r: F.concat(wh(r), F.lit(": "), qty(r))), "///"
+        )
+        has_stock = F.size(stock) > 0
+        # total_stock starts as Python int 0 and only becomes float
+        # when some quantity parses — str() renders '0' in the
+        # all-unparseable case, '0.0'/'5.0' otherwise
+        any_parsed = F.exists(stock, lambda r: qty(r).try_cast("double").isNotNull())
+        out.set("available", F.when(has_stock, F.when(total > 0, "1").otherwise("0")))
+        out.set(
+            "stock_total",
+            F.when(has_stock, F.when(any_parsed, _s(total)).otherwise(F.lit("0"))),
+        )
+        out.set("stock_details", F.when(has_stock, details))
 
-            def _row_has_data(r: Column) -> Column:
-                cond = F.lit(False)
-                for fn in data_fields:
-                    cond = cond | _nonempty(r[fn]).isNotNull()
-                return cond
-
-            rows = F.filter(_tc_rows(tc, "Остатки", row_struct), _row_has_data)
-            qty = lambda r: _tc_get(r, "КоличествоОстаток", row_fields, "0")  # noqa: E731
-            wh = lambda r: _tc_get(r, "СкладНаименование", row_fields, "")  # noqa: E731
-            total = F.aggregate(
-                rows,
-                F.lit(0.0),
-                lambda acc, r: acc + F.coalesce(qty(r).try_cast("double"), F.lit(0.0)),
+        # R3 price fold — faithful document-order state machine
+        # (main.py:367-376): Цена sets price; ЦенаСкидка!='0' moves
+        # price to oldprice and takes over.
+        value = _tc_get("Значение", fields)
+        state = F.aggregate(
+            F.filter(prices, lambda r: (name(r) != "") & (value(r) != "")),
+            F.struct(
+                F.lit(None).cast("string").alias("price"),
+                F.lit(None).cast("string").alias("oldprice"),
+            ),
+            lambda acc, r: F.when(
+                name(r) == "Цена",
+                F.struct(value(r).alias("price"), acc["oldprice"].alias("oldprice")),
             )
-            listed = F.filter(
-                rows,
-                lambda r: F.coalesce(
-                    qty(r).try_cast("double") > 0,  # parseable & positive
-                    qty(r) != "0",  # unparseable & not the '0' default
-                ),
-            )
-            details = F.array_join(
-                F.transform(listed, lambda r: F.concat(wh(r), F.lit(": "), qty(r))), "///"
-            )
-            has_stock = F.size(rows) > 0
-            # total_stock starts as Python int 0 and only becomes float
-            # when some quantity parses — str() renders '0' in the
-            # all-unparseable case, '0.0'/'5.0' otherwise
-            any_parsed = F.exists(
-                rows, lambda r: qty(r).try_cast("double").isNotNull()
-            )
-            out.set("available", F.when(has_stock, F.when(total > 0, "1").otherwise("0")))
-            out.set(
-                "stock_total",
-                F.when(has_stock, F.when(any_parsed, _s(total)).otherwise(F.lit("0"))),
-            )
-            out.set("stock_details", F.when(has_stock, details))
-
-            # R3 price fold — faithful document-order state machine
-            # (main.py:367-376): Цена sets price; ЦенаСкидка!='0' moves
-            # price to oldprice and takes over.
-            price_rows = F.filter(
-                _tc_rows(tc, "Цены", row_struct),
-                lambda r: (_tc_get(r, "Наименование", row_fields) != "")
-                & (_tc_get(r, "Значение", row_fields) != ""),
-            )
-            state = F.aggregate(
-                price_rows,
+            .when(
+                (name(r) == "ЦенаСкидка") & (value(r) != "0"),
                 F.struct(
-                    F.lit(None).cast("string").alias("price"),
-                    F.lit(None).cast("string").alias("oldprice"),
-                ),
-                lambda acc, r: F.when(
-                    _tc_get(r, "Наименование", row_fields) == "Цена",
-                    F.struct(
-                        _tc_get(r, "Значение", row_fields).alias("price"),
-                        acc["oldprice"].alias("oldprice"),
-                    ),
-                )
-                .when(
-                    (_tc_get(r, "Наименование", row_fields) == "ЦенаСкидка")
-                    & (_tc_get(r, "Значение", row_fields) != "0"),
-                    F.struct(
-                        _tc_get(r, "Значение", row_fields).alias("price"),
-                        F.coalesce(acc["price"], F.lit("")).alias("oldprice"),
-                    ),
-                )
-                .otherwise(acc),
-            )
-            out.set("price", state["price"])
-            out.set("oldprice", state["oldprice"])
-
-            # R4 materials (main.py:378-399)
-            mat_rows = _tc_rows(tc, "Материалы", row_struct)
-            mat_names = F.filter(
-                F.transform(mat_rows, lambda r: _tc_get(r, "Наименование", row_fields)),
-                lambda x: x != "",
-            )
-            out.set(
-                "материалы",
-                F.when(F.size(mat_names) > 0, F.array_join(F.array_distinct(mat_names), "///")),
-            )
-            mat_ids = F.filter(
-                F.transform(mat_rows, lambda r: _tc_get(r, "ID_Материала", row_fields)),
-                lambda x: x != "",
-            )
-            scalar_ids = F.split(
-                F.coalesce(out.cols.get("ID_Материала", F.lit(None)), F.lit("")), "///"
-            )
-            merged_ids = F.filter(
-                F.concat(F.transform(scalar_ids, lambda x: strip_ws(x)), F.array_distinct(mat_ids)),
-                lambda x: x != "",
-            )
-            out.set(
-                "ID_Материала",
-                F.when(F.size(merged_ids) > 0, F.array_join(F.array_distinct(merged_ids), "///")).otherwise(
-                    out.cols.get("ID_Материала")
+                    value(r).alias("price"),
+                    F.coalesce(acc["price"], F.lit("")).alias("oldprice"),
                 ),
             )
+            .otherwise(acc),
+        )
+        out.set("price", state["price"])
+        out.set("oldprice", state["oldprice"])
 
-            # R5 styles / site groups (main.py:400-412)
-            for tc_name, dest in (("Стили", "стили"), ("ГруппыСайта", None)):
-                vals = F.filter(
-                    F.transform(
-                        _tc_rows(tc, tc_name, row_struct), lambda r: _tc_get(r, "Наименование", row_fields)
-                    ),
-                    lambda x: x != "",
-                )
-                uniq = F.array_distinct(vals)
-                if dest:
-                    out.set(dest, F.when(F.size(uniq) > 0, F.array_join(uniq, "///")))
-                else:
-                    out.set(
-                        "category_path", F.when(F.size(uniq) > 0, F.array_join(uniq, "///"))
-                    )
-                    out.set("categoryId", F.when(F.size(uniq) > 0, F.try_element_at(uniq, F.lit(1))))
+        # R4 materials (main.py:378-399): the scalar ID_Материала's
+        # items merged with the part's ids
+        out.set("материалы", distinct_join(F.transform(materials, name)))
+        scalar_ids = out.cols.get("ID_Материала", F.lit(None))
+        mat_ids = F.transform(materials, _tc_get("ID_Материала", fields))
+        merged = F.concat(F.split(F.coalesce(scalar_ids, F.lit("")), "///"), mat_ids)
+        out.set("ID_Материала", F.coalesce(distinct_join(merged), scalar_ids))
+
+        # R5 styles / site groups (main.py:400-412)
+        out.set("стили", distinct_join(F.transform(styles, name)))
+        group_names = F.transform(groups, name)
+        out.set("category_path", distinct_join(group_names))
+        out.set("categoryId", F.try_element_at(F.filter(group_names, lambda x: x != ""), F.lit(1)))
 
     # defaults (main.py:440-449)
-    out.fill_missing("available", F.lit("1"))
-    avail = out.cols["available"]
-    out.set("available", F.coalesce(avail, F.lit("1")))
+    out.set("available", F.coalesce(out.cols.get("available", F.lit(None)), F.lit("1")))
     cp = out.cols.get("category_path")
     if cp is not None:
         out.set("category_path", F.coalesce(cp, F.lit("Undefined")))
@@ -854,12 +787,17 @@ def flatten_russian_records(df: DataFrame) -> DataFrame:
     if "ID" in out.cols:
         out.set("id", out.cols["ID"])
 
-    # R7: global '///' re-dedup pass (main.py:449-451)
-    final = {
-        name: F.when(expr.contains("///"), dedup_delimited(expr)).otherwise(expr)
-        for name, expr in out.cols.items()
-    }
-    return df.select(*[expr.alias(name) for name, expr in final.items()], *carried)
+    flat = df.select(*[expr.alias(name) for name, expr in out.cols.items()], *carried)
+    # R7: global '///' re-dedup pass (main.py:449-451) — one lambda over
+    # the array of every column (all strings), by reference
+    names = list(out.cols)
+    redup = F.transform(
+        F.array(*[quoted_col(name) for name in names]),
+        lambda c: F.when(c.contains("///"), dedup_delimited(c)).otherwise(c),
+    )
+    flat = flat.select(redup.alias("#redup"), *carried)
+    redup = F.col("#redup")
+    return flat.select(*[redup[i].alias(name) for i, name in enumerate(names)], *carried)
 
 
 # ---------------------------------------------------------------------------
@@ -890,19 +828,16 @@ def flatten_service_records(df: DataFrame) -> DataFrame:
                 if _is_attr(sub.name):
                     out.set(f"{tag}_{sub.name[1:]}", _s(c[sub.name]))
         elif isinstance(dt, T.ArrayType):
+            last = F.try_element_at(c, F.lit(-1))  # later children overwrite (plain dict set)
             el = dt.elementType
             if isinstance(el, T.StructType):
                 if VALUE_TAG in el.names:
-                    out.fill_missing(
-                        tag, _nonempty(F.try_element_at(c, F.lit(-1))[VALUE_TAG])
-                    )  # later children overwrite (plain dict set)
+                    out.fill_missing(tag, _nonempty(last[VALUE_TAG]))
                 for sub in el.fields:
                     if _is_attr(sub.name):
-                        out.set(
-                            f"{tag}_{sub.name[1:]}", _s(F.try_element_at(c, F.lit(-1))[sub.name])
-                        )
+                        out.set(f"{tag}_{sub.name[1:]}", _s(last[sub.name]))
             else:
-                out.fill_missing(tag, _nonempty(F.try_element_at(c, F.lit(-1))))
+                out.fill_missing(tag, _nonempty(last))
         else:
             out.fill_missing(tag, _nonempty(c))
 

@@ -14,12 +14,10 @@ Rules, in reference order:
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from magicxml_spark.functions.strings import strip_ws
+from magicxml_spark.functions.strings import is_digit_like, quoted_col, strip_ws
 
 # main.py:1544-1548
 EXCLUDED_COLUMNS = [
@@ -44,14 +42,6 @@ IMPORTANT_COLUMNS = [
     "delivery_options@order-before",
 ]
 
-_DIGIT_NAME = re.compile(r"[0-9]+\.?[0-9]*|\.[0-9]+")
-
-
-def _c(name: str):
-    # backtick-quote: flattened columns may contain '.', '-' etc.
-    return F.col("`" + name.replace("`", "") + "`")
-
-
 def select_output_columns(df: DataFrame) -> list[str]:
     """Compute the pruned, sorted output column list (Q4-Q8)."""
     candidates = [c for c in df.columns if c not in EXCLUDED_COLUMNS]
@@ -63,9 +53,9 @@ def select_output_columns(df: DataFrame) -> list[str]:
                     F.when(
                         # Python-strip parity: the reference tests
                         # val.strip(), which drops tabs/newlines too
-                        strip_ws(_c(c).cast("string")).isNotNull()
-                        & (strip_ws(_c(c).cast("string")) != "")
-                        & (_c(c).cast("string") != "Undefined"),
+                        strip_ws(quoted_col(c).cast("string")).isNotNull()
+                        & (strip_ws(quoted_col(c).cast("string")) != "")
+                        & (quoted_col(c).cast("string") != "Undefined"),
                         F.lit(1),
                     )
                 ).alias(c)
@@ -82,7 +72,7 @@ def select_output_columns(df: DataFrame) -> list[str]:
         if (
             c not in EXCLUDED_COLUMNS
             and c not in undefined_only
-            and not _DIGIT_NAME.fullmatch(c)
+            and not is_digit_like(c)
         )
         or c in IMPORTANT_COLUMNS
     ]

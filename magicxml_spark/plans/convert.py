@@ -27,6 +27,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magicxml_spark.functions.strings import quoted_col
 from magicxml_spark.operators.category_path import build_category_paths
 from magicxml_spark.operators.flatten import (
     ROW_ORDER,
@@ -34,7 +35,7 @@ from magicxml_spark.operators.flatten import (
     flatten_russian_records,
     flatten_service_records,
 )
-from magicxml_spark.operators.pruning import _c, select_output_columns
+from magicxml_spark.operators.pruning import select_output_columns
 from magicxml_spark.sinks.csv_sink import write_csv
 from magicxml_spark.sinks.json_sink import (
     write_json_array,
@@ -110,7 +111,7 @@ def xml_to_csv(
         flat = flat.persist()
         persisted.append(flat)
         cols = select_output_columns(flat.drop(ROW_ORDER))
-        out = flat.select(*[_c(c) for c in cols if c in flat.columns], ROW_ORDER)
+        out = flat.select(*[quoted_col(c) for c in cols if c in flat.columns], ROW_ORDER)
         written = write_csv(out, dst, order_by=ROW_ORDER)
     finally:
         for df in persisted:

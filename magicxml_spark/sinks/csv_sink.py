@@ -16,14 +16,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from magicxml_spark.functions.strings import csv_normalize_value
-
-
-def _c(name: str):
-    # backtick-quote: flattened columns may contain '.', '-' etc.
-    return F.col("`" + name.replace("`", "") + "`")
+from magicxml_spark.functions.strings import csv_normalize_value, quoted_col
 
 
 def normalize_for_csv(df: DataFrame) -> DataFrame:
@@ -31,9 +25,9 @@ def normalize_for_csv(df: DataFrame) -> DataFrame:
     exprs = []
     for name, dtype in df.dtypes:
         if dtype == "string":
-            exprs.append(csv_normalize_value(name, _c(name)).alias(name))
+            exprs.append(csv_normalize_value(name, quoted_col(name)).alias(name))
         else:
-            exprs.append(_c(name))
+            exprs.append(quoted_col(name))
     return df.select(*exprs)
 
 

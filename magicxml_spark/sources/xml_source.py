@@ -23,6 +23,7 @@ Division of labor, Spark-first:
 
 from __future__ import annotations
 
+import codecs
 import os
 import re
 import tempfile
@@ -67,12 +68,20 @@ _STRUCTURE_MARKERS = (
 def decode_bytes(raw: bytes) -> str:
     """S2: utf-8 -> windows-1251 -> latin1 -> iso-8859-1 -> cp1252 ->
     utf-8(errors=replace), first decoder that succeeds wins."""
+    return _decode(raw, final=True)[0]
+
+
+def _decode(raw: bytes, final: bool) -> tuple[str, str]:
+    """The S2 cascade; returns the text and the encoding that decoded
+    it. ``final=False`` decodes a head sample: a multi-byte character
+    cut off at its end is left out instead of failing the decoder
+    (which would let windows-1251 "succeed" on UTF-8 bytes)."""
     for enc in ENCODING_CASCADE:
         try:
-            return raw.decode(enc)
+            return codecs.getincrementaldecoder(enc)().decode(raw, final), enc
         except (UnicodeDecodeError, LookupError):
             continue
-    return raw.decode("utf-8", errors="replace")
+    return raw.decode("utf-8", errors="replace"), "utf-8"
 
 
 def validate_xml_structure(text: str) -> None:
@@ -140,7 +149,8 @@ def read_xml_records(
     (PERMISSIVE + repair pre-pass).
 
     Files above ``presplit_threshold`` bytes are auto-split at row-tag
-    boundaries into a temp directory first — the XML source assigns one
+    boundaries, read in the encoding the head sample decoded with, into
+    UTF-8 parts in a temp directory first — the XML source assigns one
     task per file, so without this a big single-file export would do
     BOTH its passes (structure inference + parse) serially. The parts
     directory is kept in ``schema_registry.INGEST_CACHE`` under the
@@ -149,7 +159,7 @@ def read_xml_records(
     from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 
     with open(path, "rb") as f:
-        sample = decode_bytes(f.read(sample_bytes))
+        sample, encoding = _decode(f.read(sample_bytes), final=False)
     validate_xml_structure(sample)
     if dialect is None:
         dialect = detect_dialect(sample)
@@ -162,7 +172,7 @@ def read_xml_records(
         parts_dir = INGEST_CACHE.get(ckey, ("parts", dialect))
         if parts_dir is None or not os.path.isdir(parts_dir):
             parts_dir = INGEST_CACHE.scratch_dir(ckey)
-            presplit_xml(path, parts_dir, _ROW_TAGS[dialect])
+            presplit_xml(path, parts_dir, _ROW_TAGS[dialect], encoding=encoding)
             INGEST_CACHE.put(ckey, ("parts", dialect), parts_dir)
         path = parts_dir
 

@@ -300,6 +300,59 @@ def test_rows_in_document_order(spark, tmp_path, monkeypatch, presplit):
     assert ids == [str(i) for i in range(n)]
 
 
+def _russian_feed(n, prolog_encoding="UTF-8", pad=0):
+    """A 1C feed of ``n`` records named 'Диван {i}', in document order."""
+    records = "".join(
+        f"<ЭлементСправочника><ID>E-{i}</ID><Наименование>Диван {i}</Наименование>"
+        "</ЭлементСправочника>\n"
+        for i in range(n)
+    )
+    return (
+        f'<?xml version="1.0" encoding="{prolog_encoding}"?>\n<Корневой>{" " * pad}\n'
+        f"{records}</Корневой>"
+    )
+
+
+def _names(path):
+    with open(path, encoding="utf-8-sig", newline="") as f:
+        return [r["name"] for r in csv.DictReader(f, delimiter=";")]
+
+
+def test_utf8_feed_cut_inside_a_character_by_the_head_sample(spark, tmp_path):
+    """S2: the 1 MiB head sample of a valid UTF-8 feed can end inside a
+    multi-byte character; the sample still decodes as UTF-8, so the 1C
+    markers are found and the feed converts."""
+    n = 12_000
+    for pad in range(64):
+        data = _russian_feed(n, pad=pad).encode("utf-8")
+        if data[1 << 20] & 0xC0 == 0x80:  # a continuation byte: the cut splits a character
+            break
+    assert len(data) > 1 << 20 and data[1 << 20] & 0xC0 == 0x80
+    src = tmp_path / "c1_utf8.xml"
+    src.write_bytes(data)
+    out = xml_to_csv(spark, str(src), str(tmp_path / "c1.csv"))
+    assert _names(out) == [f"Диван {i}" for i in range(n)]
+
+
+def test_windows_1251_feed_presplit_in_its_encoding(spark, tmp_path, monkeypatch):
+    """A windows-1251 feed past the presplit threshold is split in the
+    encoding its head sample decoded with, not read as UTF-8."""
+    import functools
+
+    from magicxml_spark.plans import convert
+    from magicxml_spark.sources.xml_source import read_xml_records as read
+
+    monkeypatch.setattr(
+        convert, "read_xml_records", functools.partial(read, presplit_threshold=1024)
+    )
+    n = 200
+    src = tmp_path / "c1_1251.xml"
+    src.write_bytes(_russian_feed(n, prolog_encoding="windows-1251").encode("cp1251"))
+    out = convert.xml_to_csv(spark, str(src), str(tmp_path / "c1.csv"))
+    assert INGEST_CACHE.get(content_key(str(src)), ("parts", "russian")) is not None
+    assert _names(out) == [f"Диван {i}" for i in range(n)]
+
+
 # --- the re-ingest memo: an unchanged CSV is copied -------------------------
 
 

@@ -151,6 +151,17 @@ def test_russian_renames_and_sanitize(russian_rows):
     assert e["id"] == "E-1"
 
 
+def test_russian_plan_stays_small(spark):
+    # Each ТЧ part's rows are stripped once in a projection of their own,
+    # and R7 re-dedups column references. Re-inlining those expressions
+    # into every rule that reads them (the earlier spelling: 94k-99k
+    # characters here) multiplies the plan the driver builds, analyses
+    # and optimizes on every 1C conversion; this bound catches it.
+    df, _ = read_xml_records(spark, f"{FIX}/c1.xml")
+    plan = flatten_russian_records(df)._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan) < 40_000
+
+
 def test_russian_category_from_site_groups(russian_rows):
     assert russian_rows["E-1"]["category_path"] == "Мебель///Диваны"
     assert russian_rows["E-1"]["categoryId"] == "Мебель"
@@ -213,8 +224,6 @@ def test_pictures_whitespace_padded_urls(spark):
     # the index digits were corrupted. strip_ws lambda fixes both.
     from pyspark.sql import types as T
 
-    from magicxml_spark.operators.flatten import pictures_expr
-
     schema = T.StructType([T.StructField("picture", T.ArrayType(T.StringType()))])
     df = spark.createDataFrame(
         [
@@ -229,7 +238,7 @@ def test_pictures_whitespace_padded_urls(spark):
         ],
         schema,
     )
-    got = df.select(pictures_expr(schema).alias("pictures")).collect()[0][0]
+    got = flatten_offer_records(df).select("pictures").collect()[0][0]
     assert got == (
         "http://a.ru/pad0.jpg///http://a.ru/plain.gif///http://a.ru/x1.png"
     )
@@ -314,3 +323,21 @@ def test_pinned_divergence_param_name_reappend_top_level_only(spark, tmp_path):
     q1 = rows["Q1"]
     assert q1["param_name_size"] == "42?, 42"  # top-level: quirk applies
     assert q1["param_name_color"] == "red"  # nested: plain fill, no quirk
+
+
+def test_repeated_child_with_text_and_attributes(spark, tmp_path):
+    """A repeated direct child with text and attributes: its texts are
+    '///'-joined with the reference's order-preserving dedup (P4), its
+    attribute values '///'-joined as they come."""
+    doc = (
+        "<offers><offer id='R1'><name>n</name>"
+        "<barcode type='a'> 1 </barcode><barcode type='b'>2</barcode>"
+        "<barcode type='c'>1</barcode>"
+        "</offer></offers>"
+    )
+    p = tmp_path / "repeated.xml"
+    p.write_text(doc, encoding="utf-8")
+    df, dialect = read_xml_records(spark, str(p))
+    r1 = _rows(flatten_offer_records(df, dialect), "attr_id")["R1"]
+    assert r1["barcode"] == "1///2"
+    assert r1["barcode_type"] == "a///b///c"

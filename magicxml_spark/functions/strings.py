@@ -14,6 +14,13 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+
+def quoted_col(name: str) -> Column:
+    """A column by its exact name: backtick-quoted, since flattened
+    column names may contain '.', '-' etc."""
+    return F.col("`" + name.replace("`", "") + "`")
+
+
 # --- Python-strip parity --------------------------------------------------
 # The reference strips with str.strip() — every char for which Python's
 # str.isspace() is true: ASCII \t\n\v\f\r and space (Java \s), the
@@ -25,12 +32,6 @@ from pyspark.sql import functions as F
 # tests/test_strings.py::test_strip_ws_python_parity).
 
 _PY_WS_CLASS = "[\\s\\u001C-\\u001F\\u0085\\p{Z}]"
-
-
-def quoted_col(name: str) -> Column:
-    """A column by its exact name: backtick-quoted, since flattened
-    column names may contain '.', '-' etc."""
-    return F.col("`" + name.replace("`", "") + "`")
 
 
 def strip_ws(col: Column | str) -> Column:

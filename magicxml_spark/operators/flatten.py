@@ -6,14 +6,15 @@ dict with an intricate set of per-tag rules (reference main.py:115-325
 ``process_service_xml``). The Spark spelling: the native XML reader
 gives a typed nested record; we walk that *schema* once (driver-side
 metadata, zero data passes) into a list of nodes, each with its Column,
-and every rule as a Column expression over the nodes it needs. A
+and spell every rule as a Column expression over the nodes it needs. A
 flatten is narrow projections only, which Tungsten codegens into one
 stage regardless of how many hundred columns fall out:
 
 * offer/product and service: ONE projection;
-* 1C: three — each tabular part's rows with their text stripped once,
-  the R2-R6 rules over those rows, and the R7 '///' re-dedup over the
-  rules' columns. Catalyst keeps them apart (it does not inline a
+* 1C: four — each tabular part's rows with their text stripped once,
+  the R2-R6 rules over those rows, the R7 '///' re-dedup as one lambda
+  over the array of the rules' columns, and that array's elements as
+  the output columns. Catalyst keeps them apart (it does not inline a
   costly expression that the next projection reads more than once), so
   each shared intermediate is planned and evaluated once.
 
@@ -283,10 +284,14 @@ def _pictures(nodes: list[_Node]) -> Column:
         elif _is_rows(n.dtype):
             el = n.dtype.elementType
             if n.name in IMAGE_TAGS and VALUE_TAG in el.names:
-                texts.append(F.array_join(F.transform(n.col, _field_str_or_empty(VALUE_TAG)), "\x00"))
+                texts.append(
+                    F.array_join(F.transform(n.col, _field_str_or_empty(VALUE_TAG)), "\x00")
+                )
             for sub in el.fields:
                 if _is_attr(sub.name) and _is_image_attr(sub.name):
-                    attrs.append(F.array_join(F.transform(n.col, _field_str_or_empty(sub.name)), "\x00"))
+                    attrs.append(
+                        F.array_join(F.transform(n.col, _field_str_or_empty(sub.name)), "\x00")
+                    )
         elif isinstance(n.dtype, T.ArrayType):
             if n.name in IMAGE_TAGS:
                 texts.append(F.array_join(F.transform(n.col, _s), "\x00"))
@@ -694,7 +699,8 @@ def flatten_russian_records(df: DataFrame) -> DataFrame:
             out.fill_missing(tag, val)
 
     # tabular parts: their stripped rows are a projection of their own,
-    # which every rule below reads by reference
+    # which every rule below reads by reference ('#' keeps the names
+    # clear of every tag, as for ROW_ORDER)
     parts, fields = _tc_rows(schema)
     if parts:
         df = df.select("*", *[rows.alias(f"#{part}") for part, rows in parts.items()])

@@ -152,11 +152,11 @@ def test_russian_renames_and_sanitize(russian_rows):
 
 
 def test_russian_plan_stays_small(spark):
-    # Each ТЧ part's rows are stripped once in a projection of their own,
-    # and R7 re-dedups column references. Re-inlining those expressions
-    # into every rule that reads them (the earlier spelling: 94k-99k
-    # characters here) multiplies the plan the driver builds, analyses
-    # and optimizes on every 1C conversion; this bound catches it.
+    # Why a bound: each ТЧ part's rows are stripped once in a projection
+    # of their own and R7 re-dedups column references. An expression
+    # re-inlined into every rule that reads it grows this plan about
+    # fivefold (94,350 characters), and the driver builds, analyses and
+    # optimizes that plan on every 1C conversion.
     df, _ = read_xml_records(spark, f"{FIX}/c1.xml")
     plan = flatten_russian_records(df)._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan) < 40_000

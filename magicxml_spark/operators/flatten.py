@@ -318,8 +318,8 @@ def _pictures(nodes: list[_Node]) -> Column:
 
 def _pivot_arrays(nodes: list[_Node], dialect: str) -> dict[str, Column]:
     """The dynamic-pivot sources this schema carries, as arrays of
-    named structs: ``param`` (offer, P14) and ``fabric``/``features``
-    (product, P16)."""
+    named structs with a ``_VALUE`` (empty where no instance has text):
+    ``param`` (offer, P14) and ``fabric``/``features`` (product, P16)."""
     if dialect == "offer":
         # reference uses findall('.//param') — any depth, but not inside
         # a repeated element; a level's own <param> before any deeper one
@@ -344,7 +344,10 @@ def _pivot_arrays(nodes: list[_Node], dialect: str) -> dict[str, Column]:
         is_array = isinstance(n.dtype, T.ArrayType)
         el = n.dtype.elementType if is_array else n.dtype
         if isinstance(el, T.StructType) and "_name" in el.names:
-            arrays[holder] = n.col if is_array else F.array(n.col)
+            arr = n.col if is_array else F.array(n.col)
+            if VALUE_TAG not in el.names:  # no instance has text
+                arr = F.transform(arr, lambda p: p.withField(VALUE_TAG, F.lit("")))
+            arrays[holder] = arr
     return arrays
 
 

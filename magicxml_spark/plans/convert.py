@@ -62,9 +62,8 @@ def xml_to_csv(
     the reference's byte format.
 
     A single XML file scans as ONE partition (the XML source splits by
-    file, not rowTag; files past the presplit threshold arrive already
-    split) — everything downstream would run serially, so an
-    under-parallel scan is re-partitioned once up front.
+    file, not rowTag) — everything downstream would run serially, so
+    the under-parallel scan is re-partitioned once up front.
 
     A conversion has two outcomes. It records the CSV it wrote, with
     that CSV's own content key (``schema_registry.content_key``), under
@@ -77,12 +76,8 @@ def xml_to_csv(
         return _copy_file(earlier[0], dst)
     records, detected = read_xml_records(spark, src, dialect)
     # document order, taken before anything reshuffles the scan: the
-    # presplit part a row came from (Spark packs parts largest-first),
-    # then the row's place in its scan partition
-    part = F.regexp_extract(F.input_file_name(), r"part-(\d+)\.xml$", 1)
-    records = records.withColumn(
-        ROW_ORDER, F.struct(part.try_cast("int"), F.monotonically_increasing_id())
-    )
+    # file is one scan partition, so its ids rise with the document
+    records = records.withColumn(ROW_ORDER, F.monotonically_increasing_id())
     target = spark.sparkContext.defaultParallelism
     if records.rdd.getNumPartitions() < max(2, target // 2):
         records = records.repartition(target)

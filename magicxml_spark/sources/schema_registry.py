@@ -5,17 +5,14 @@ The reference's preview->convert flow reads every feed at least twice
 re-ingest of unchanged bytes is therefore worth serving without a
 second conversion: ``INGEST_CACHE`` records, under the source's
 ``content_key``, the CSV a conversion wrote (with that CSV's own
-content key) and the presplit parts of a big feed. Any other read —
-new bytes, a changed CSV — converts from scratch and discovers its
-schema, so no cached result ever outlives the bytes it came from.
+content key). Any other read — new bytes, a changed CSV — converts
+from scratch and discovers its schema, so no cached result ever
+outlives the bytes it came from.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import threading
 from collections import OrderedDict
 
@@ -34,11 +31,10 @@ DEFAULT_REGISTRY = SchemaRegistry()
 
 # ---------------------------------------------------------------------------
 # Ingest cache: what a re-ingest of the SAME bytes reuses — the CSV a
-# conversion wrote (its path and its own content key) and the presplit
-# parts directory. Byte-identical input implies an identical CSV, so a
-# re-ingest copies the earlier one while it is unchanged. Any content
-# change misses the key. Values are paths, never row data (the CSV
-# stays on disk).
+# conversion wrote (its path and its own content key). Byte-identical
+# input implies an identical CSV, so a re-ingest copies the earlier one
+# while it is unchanged. Any content change misses the key. Values are
+# paths, never row data (the CSV stays on disk).
 # ---------------------------------------------------------------------------
 
 
@@ -55,18 +51,13 @@ def content_key(path: str) -> str | None:
 
 
 class IngestCache:
-    """Thread-safe bounded LRU: content key -> {name: value}. Each entry
-    owns one directory, under one temp root that a single ``atexit``
-    hook removes; its ``scratch_dir`` directories sit inside it, and
-    evicting the entry deletes them (a frame still reading an evicted
-    presplit can no longer be re-scanned)."""
+    """Thread-safe bounded LRU: content key -> {name: value}."""
 
     max_entries = 16
 
     def __init__(self):
         self._entries: OrderedDict[str, dict] = OrderedDict()
         self._lock = threading.Lock()
-        self._root: str | None = None
 
     def __len__(self) -> int:
         return len(self._entries)
@@ -80,39 +71,21 @@ class IngestCache:
             return entry.get(name)
 
     def put(self, key: str | None, name, value) -> None:
-        if key is not None and value is not None:
-            with self._lock:
-                self._entry(key)[name] = value
-
-    def scratch_dir(self, key: str) -> str:
-        """A new, empty directory deleted together with ``key``'s entry."""
+        if key is None or value is None:
+            return
         with self._lock:
-            return tempfile.mkdtemp(dir=self._entry(key)["_dir"])
+            if key not in self._entries:
+                while len(self._entries) >= self.max_entries:
+                    self._entries.popitem(last=False)
+                self._entries[key] = {}
+            self._entries.move_to_end(key)
+            self._entries[key][name] = value
 
     def clear(self) -> None:
         with self._lock:
-            while self._entries:
-                self._evict()
-
-    def _entry(self, key: str) -> dict:
-        if key not in self._entries:
-            while len(self._entries) >= self.max_entries:
-                self._evict()
-            if self._root is None:
-                self._root = tempfile.mkdtemp(prefix="mxs_ingest_")
-                atexit.register(shutil.rmtree, self._root, ignore_errors=True)
-            # made with the entry, not on first scratch_dir: an entry
-            # evicted between a caller's scratch_dir and put comes back
-            # with a directory of its own
-            self._entries[key] = {"_dir": tempfile.mkdtemp(dir=self._root)}
-        self._entries.move_to_end(key)
-        return self._entries[key]
-
-    def _evict(self) -> None:
-        _, entry = self._entries.popitem(last=False)
-        shutil.rmtree(entry["_dir"], ignore_errors=True)
+            self._entries.clear()
 
 
-#: the process-wide ingest cache (XML source presplit, ``xml_to_csv``)
+#: the process-wide ingest cache (``xml_to_csv``)
 INGEST_CACHE = IngestCache()
 

@@ -8,25 +8,28 @@ Division of labor, Spark-first:
   dialect detection, repair) are cheap text passes over a HEAD SAMPLE
   on the driver — the same trick Spark's own schema inference uses.
 * Record parsing is Spark's native XML source (``format("xml")`` with
-  ``rowTag`` per dialect) — distributed, streaming per file split.
+  ``rowTag`` per dialect): one plain read per file, whatever its size.
   ``inferSchema=false`` keeps every leaf a string, matching the
   reference's all-strings data model (SURVEY §1.1) and preserving
   values like "1234.50" byte-for-byte. Every read discovers its
   schema from the bytes it reads; nothing is carried over from an
   earlier read of the same path.
-* Repair (bare ``&``, control chars) is a text rewrite. For the
-  100 TB path this is a ``spark.read.text`` -> ``regexp_replace`` ->
-  write pre-pass; the in-memory helper here covers the reference's
-  single-document envelope (its inputs are capped at 100 MB,
-  main.py:1779).
+* Encoding follows the S2 cascade, not the XML declaration: a feed
+  that is not UTF-8, or whose declaration names another encoding, is
+  read from a UTF-8 copy (``_load_decoded``).
+* Repair (bare ``&``, control chars) is an in-memory text rewrite of
+  the whole document, as the reference does within its 100 MB upload
+  cap (main.py:1779).
 """
 
 from __future__ import annotations
 
 import codecs
+import itertools
 import os
 import re
 import tempfile
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,6 +44,14 @@ _ROW_TAGS = {
     "russian": "ЭлементСправочника",
     "service": "service",
 }
+
+#: read granularity of the encoding check and of the UTF-8 copy
+_CHUNK = 1 << 20
+#: an XML declaration that names an encoding (groups: up to the value,
+#: its quote, the name)
+_DECLARED_ENCODING = re.compile(
+    r"""^(\ufeff?\s*<\?xml[^>]*?\sencoding\s*=\s*)(["'])([^"']*)\2"""
+)
 
 #: largest category dimension ``read_categories`` collects to the driver
 CATEGORY_MAX_ROWS = 100_000
@@ -68,20 +79,20 @@ _STRUCTURE_MARKERS = (
 def decode_bytes(raw: bytes) -> str:
     """S2: utf-8 -> windows-1251 -> latin1 -> iso-8859-1 -> cp1252 ->
     utf-8(errors=replace), first decoder that succeeds wins."""
-    return _decode(raw, final=True)[0]
+    return _decode(raw, final=True)
 
 
-def _decode(raw: bytes, final: bool) -> tuple[str, str]:
-    """The S2 cascade; returns the text and the encoding that decoded
-    it. ``final=False`` decodes a head sample: a multi-byte character
-    cut off at its end is left out instead of failing the decoder
-    (which would let windows-1251 "succeed" on UTF-8 bytes)."""
+def _decode(raw: bytes, final: bool) -> str:
+    """The S2 cascade. ``final=False`` decodes a head sample: a
+    multi-byte character cut off at its end is left out instead of
+    failing the decoder (which would let windows-1251 "succeed" on
+    UTF-8 bytes)."""
     for enc in ENCODING_CASCADE:
         try:
-            return codecs.getincrementaldecoder(enc)().decode(raw, final), enc
+            return codecs.getincrementaldecoder(enc)().decode(raw, final)
         except (UnicodeDecodeError, LookupError):
             continue
-    return raw.decode("utf-8", errors="replace"), "utf-8"
+    return raw.decode("utf-8", errors="replace")
 
 
 def validate_xml_structure(text: str) -> None:
@@ -134,74 +145,98 @@ def detect_dialect(text: str) -> str:
     raise ValueError("Unsupported XML format, auto-detection failed.")
 
 
+def _load(spark: SparkSession, row_tag: str, path: str) -> DataFrame:
+    return (
+        spark.read.format("xml")
+        .option("rowTag", row_tag)
+        .option("inferSchema", "false")
+        .option("mode", "PERMISSIVE")
+        .load(path)
+    )
+
+
+def _parsed(df: DataFrame) -> bool:
+    return bool(df.columns) and df.columns != ["_corrupt_record"]
+
+
+def _decodes(path: str, encoding: str) -> bool:
+    """Whether all of ``path`` decodes in ``encoding``, read a chunk at a time."""
+    decoder = codecs.getincrementaldecoder(encoding)()
+    try:
+        with open(path, "rb") as f:
+            while chunk := f.read(_CHUNK):
+                decoder.decode(chunk)
+        decoder.decode(b"", final=True)
+    except UnicodeDecodeError:
+        return False
+    return True
+
+
+def _load_utf8_copy(spark: SparkSession, row_tag: str, pieces: Iterable[str]) -> DataFrame:
+    """Spark's read of the text ``pieces`` from a UTF-8 copy whose
+    declaration names UTF-8. A parsed frame is materialised before the
+    copy is deleted, because the scan is lazy."""
+    pieces = iter(pieces)
+    with tempfile.NamedTemporaryFile(
+        "w", suffix=".xml", delete=False, encoding="utf-8", newline=""
+    ) as tmp:
+        tmp.write(_DECLARED_ENCODING.sub(r"\g<1>\g<2>UTF-8\g<2>", next(pieces, ""), count=1))
+        tmp.writelines(pieces)
+    try:
+        df = _load(spark, row_tag, tmp.name)
+        return df.localCheckpoint(eager=True) if _parsed(df) else df
+    finally:
+        os.unlink(tmp.name)
+
+
+def _load_decoded(spark: SparkSession, row_tag: str, path: str) -> DataFrame:
+    """S2: Spark's read of ``path`` as the decode cascade reads it.
+    Spark reads the file itself only when its bytes are UTF-8 and its
+    declaration names no other encoding: its parser believes the
+    declaration or else assumes UTF-8, whatever the ``charset`` option
+    says. Any other feed is transcoded, a chunk at a time, to a UTF-8
+    copy in the first encoding of the cascade that decodes all of it."""
+    encoding = next((e for e in ENCODING_CASCADE if _decodes(path, e)), "utf-8")
+    with open(path, encoding=encoding, errors="replace", newline="") as f:
+        head = f.read(_CHUNK)
+        declared = _DECLARED_ENCODING.match(head)
+        declares_utf8 = declared is None or declared[3].upper() in ("UTF-8", "UTF8")
+        if encoding == "utf-8" and declares_utf8:
+            return _load(spark, row_tag, path)
+        return _load_utf8_copy(
+            spark, row_tag, itertools.chain([head], iter(lambda: f.read(_CHUNK), ""))
+        )
+
+
 def read_xml_records(
     spark: SparkSession,
     path: str,
     dialect: str | None = None,
     sample_bytes: int = 1 << 20,
-    presplit_threshold: int = 16 << 20,
 ) -> tuple[DataFrame, str]:
     """Read one XML catalog file into a (records_df, dialect) pair.
 
     Driver reads a head sample for validate/detect; Spark's XML source
-    discovers the schema and parses the records. If the initial parse
-    yields only corrupt records, the repaired text is re-read
+    discovers the schema and parses the records, one plain read of the
+    file (or of its UTF-8 copy, ``_load_decoded``) whatever its size. If
+    that parse yields only corrupt records, the repaired text is re-read
     (PERMISSIVE + repair pre-pass).
-
-    Files above ``presplit_threshold`` bytes are auto-split at row-tag
-    boundaries, read in the encoding the head sample decoded with, into
-    UTF-8 parts in a temp directory first — the XML source assigns one
-    task per file, so without this a big single-file export would do
-    BOTH its passes (structure inference + parse) serially. The parts
-    directory is kept in ``schema_registry.INGEST_CACHE`` under the
-    file's content key, so a re-read of the same bytes splits once.
     """
-    from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
-
     with open(path, "rb") as f:
-        sample, encoding = _decode(f.read(sample_bytes), final=False)
+        sample = _decode(f.read(sample_bytes), final=False)
     validate_xml_structure(sample)
     if dialect is None:
         dialect = detect_dialect(sample)
+    row_tag = _ROW_TAGS[dialect]
 
-    orig_path = path
-    ckey = content_key(path)
-    if ckey and presplit_threshold and os.path.getsize(path) > presplit_threshold:
-        from magicxml_spark.sources.xml_split import presplit_xml
-
-        parts_dir = INGEST_CACHE.get(ckey, ("parts", dialect))
-        if parts_dir is None or not os.path.isdir(parts_dir):
-            parts_dir = INGEST_CACHE.scratch_dir(ckey)
-            presplit_xml(path, parts_dir, _ROW_TAGS[dialect], encoding=encoding)
-            INGEST_CACHE.put(ckey, ("parts", dialect), parts_dir)
-        path = parts_dir
-
-    def _read(p: str) -> DataFrame:
-        return (
-            spark.read.format("xml")
-            .option("rowTag", _ROW_TAGS[dialect])
-            .option("inferSchema", "false")
-            .option("mode", "PERMISSIVE")
-            .load(p)
-        )
-
-    df = _read(path)
-    if not df.columns or df.columns == ["_corrupt_record"]:
-        # parse produced nothing usable -> repair and retry. Always
-        # repair from the ORIGINAL file — `path` may have been swapped
-        # for the presplit parts directory (a repaired document parses
-        # serially; corrupt giants are the rare path).
-        with open(orig_path, "rb") as f:
+    df = _load_decoded(spark, row_tag, path)
+    if not _parsed(df):
+        # parse produced nothing usable -> repair and retry
+        with open(path, "rb") as f:
             text = decode_bytes(f.read())
-        repaired = repair_xml_text(clean_xml_text(text))
-        tmp = tempfile.NamedTemporaryFile(
-            "w", suffix=".xml", delete=False, encoding="utf-8"
-        )
-        tmp.write(repaired)
-        tmp.close()
-        # materialize before deleting the temp file — the scan is lazy
-        df = _read(tmp.name).localCheckpoint(eager=True)
-        os.unlink(tmp.name)
+        df = _load_utf8_copy(spark, row_tag, [repair_xml_text(clean_xml_text(text))])
+        if not _parsed(df):
+            raise ValueError("XML could not be parsed, even after repair.")
     return df, dialect
 
 
@@ -216,12 +251,7 @@ def read_categories(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     _SCHEMA = "id string, parent_id string, name string"
-    df = (
-        spark.read.format("xml")
-        .option("rowTag", "category")
-        .option("inferSchema", "false")
-        .load(path)
-    )
+    df = _load_decoded(spark, "category", path)
     cols = set(df.columns)
     if "_id" not in cols:  # no <category> elements in this document
         return spark.createDataFrame([], _SCHEMA)

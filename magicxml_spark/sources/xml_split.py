@@ -1,179 +1,4 @@
-"""Pre-splitter for giant single-file XML catalogs.
-
-Spark's XML source assigns one task per file — a 100 GB single-file
-export parses serially (SURVEY §4 'generator-based chunk yield' note).
-This utility restores scan parallelism by splitting the file ON DISK at
-row-tag boundaries with a streaming text scan (bounded memory, no DOM),
-wrapping each chunk in a minimal envelope so every part is well-formed
-XML with the same rowTag. Run once per delivered file; downstream reads
-the directory and gets full split parallelism.
-
-Memory: the scanner holds one read chunk plus at most one in-flight
-record (or comment/CDATA section) in the buffer — never the whole file
-— so a 100 GB export streams through a driver-side split with a few MB
-resident. The reference never needed this (its HTTP envelope caps
-uploads at 100 MB, main.py upload path), but the 100 TB design target
-does.
-"""
-
-from __future__ import annotations
-
-import os
-import re
-from collections.abc import Iterator
-from typing import IO
-
-#: Read granularity. Also the compaction threshold: consumed prefix is
-#: dropped whenever it exceeds this, keeping the buffer ~2 chunks unless
-#: a single record/comment is larger (then: that construct's size).
-_CHUNK = 4 << 20
-
-
-def _iter_records(f: IO[str], row_tag: str, chunk: int = _CHUNK) -> Iterator[str]:
-    """Yield each ``<row_tag>...</row_tag>`` (or self-closing) record's
-    verbatim text via an incremental scan.
-
-    State machine over a sliding buffer: comments and CDATA sections are
-    skipped atomically (so row-tag lookalikes inside them can't open or
-    close records), nested same-name tags are depth-tracked, and a
-    construct that straddles a chunk boundary triggers a refill before
-    classification. Attribute values containing '>' are not special-cased
-    (same contract as the previous regex implementation; none of the four
-    dialects emit them)."""
-    open_pat = re.compile(rf"<{re.escape(row_tag)}(?=[\s>/])")
-    close_tag = f"</{row_tag}>"
-    # longest prefix we must see to classify a token at '<' unambiguously
-    lookahead = max(len(close_tag), len(row_tag) + 2, len("<![CDATA["))
-
-    buf = ""
-    i = 0  # scan position
-    rs = -1  # record start (-1 = outside any record)
-    depth = 0
-    eof = False
-
-    def refill() -> bool:
-        nonlocal buf, eof
-        if eof:
-            return False
-        piece = f.read(chunk)
-        if not piece:
-            eof = True
-            return False
-        buf += piece
-        return True
-
-    def compact() -> None:
-        nonlocal buf, i, rs
-        keep_from = i if rs < 0 else min(i, rs)
-        if keep_from > chunk:
-            buf = buf[keep_from:]
-            i -= keep_from
-            if rs >= 0:
-                rs -= keep_from
-
-    def seek_past(term: str, start: int) -> int:
-        """Index just past ``term`` at/after ``start``, refilling as
-        needed; -1 at EOF with no terminator (unterminated construct —
-        consume the rest)."""
-        nonlocal buf
-        while True:
-            j = buf.find(term, start)
-            if j != -1:
-                return j + len(term)
-            # keep a terminator that straddles the boundary findable
-            start = max(start, len(buf) - len(term) + 1)
-            if not refill():
-                return -1
-
-    refill()
-    while True:
-        lt = buf.find("<", i)
-        while lt == -1 or len(buf) - lt < lookahead:
-            if not refill():
-                break
-            lt = buf.find("<", i)
-        if lt == -1:
-            break
-        i = lt
-        if buf.startswith("<!--", i):
-            nxt = seek_past("-->", i + 4)
-        elif buf.startswith("<![CDATA[", i):
-            nxt = seek_past("]]>", i + 9)
-        elif buf.startswith(close_tag, i):
-            i += len(close_tag)
-            if rs >= 0:
-                depth -= 1
-                if depth == 0:
-                    yield buf[rs:i]
-                    rs = -1
-            compact()
-            continue
-        elif open_pat.match(buf, i):
-            gt = seek_past(">", i + 1)
-            if gt == -1:
-                break
-            self_closing = buf[gt - 2] == "/"
-            if rs < 0:
-                if self_closing:
-                    yield buf[i:gt]
-                else:
-                    rs, depth = i, 1
-            elif not self_closing:
-                depth += 1
-            i = gt
-            compact()
-            continue
-        else:
-            i += 1
-            continue
-        if nxt == -1:
-            break
-        i = nxt
-        compact()
-
-
-def presplit_xml(
-    path: str,
-    out_dir: str,
-    row_tag: str,
-    records_per_part: int = 20_000,
-    bytes_per_part: int = 4 << 20,
-    encoding: str = "utf-8",
-) -> list[str]:
-    """Split ``path`` into N well-formed parts, streaming
-    record-by-record. A part closes at ``records_per_part`` records OR
-    ``bytes_per_part`` of record text, whichever comes first — the byte
-    cap keeps parse parallelism proportional to file size (a 52 MB /
-    100k-record export yields ~13 parts, not 5), matching how Spark's
-    own file sources split by maxPartitionBytes. Returns the part
-    paths."""
-    os.makedirs(out_dir, exist_ok=True)
-    parts: list[str] = []
-    out: IO[str] | None = None
-    n_in_part = 0
-    bytes_in_part = 0
-
-    def open_part() -> IO[str]:
-        part_path = os.path.join(out_dir, f"part-{len(parts):05d}.xml")
-        parts.append(part_path)
-        fh = open(part_path, "w", encoding="utf-8")
-        fh.write("<?xml version='1.0' encoding='utf-8'?><records>")
-        return fh
-
-    with open(path, encoding=encoding, errors="replace") as f:
-        for record in _iter_records(f, row_tag):
-            if out is None:
-                out = open_part()
-            out.write(record)
-            n_in_part += 1
-            bytes_in_part += len(record)
-            if n_in_part >= records_per_part or bytes_in_part >= bytes_per_part:
-                out.write("</records>")
-                out.close()
-                out, n_in_part, bytes_in_part = None, 0, 0
-    if out is not None:
-        out.write("</records>")
-        out.close()
-    if not parts:
-        raise ValueError(f"no <{row_tag}> records found")
-    return parts
+"""Empty. Every feed is read by one plain Spark XML read
+(``sources.xml_source``), whatever its size. The module stays
+importable because ``perfbench/run.py`` names it in ``TRACED_LAYERS``,
+and its tracer imports every layer it names."""

@@ -5,7 +5,6 @@ plus pruning and sink format details."""
 from __future__ import annotations
 
 import csv
-import glob
 import io
 import json
 import os
@@ -21,7 +20,7 @@ from magicxml_spark.plans.convert import (
     xml_to_csv,
 )
 from magicxml_spark.sources.csv_source import read_csv, sniff_delimiter
-from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
+from magicxml_spark.sources.schema_registry import INGEST_CACHE
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -250,51 +249,29 @@ def test_output_independent_of_shuffle_partitions(spark, tmp_path, feed):
     assert outs[0] == outs[1]
 
 
-def _ordered_offer_feed(path, n):
-    """``n`` offers with ids 0..n-1 in document order; each record is
-    longer than the one before it, so presplit parts grow in size."""
+def _ordered_offer_feed(path, n, encoding="UTF-8"):
+    """``n`` offers with ids 0..n-1 in document order."""
     offers = "".join(
         f'<offer id="{i}"><name>N{i}</name><price>{i}</price>'
         f"<description>{'d' * i}</description></offer>\n"
         for i in range(n)
     )
     path.write_text(
-        '<?xml version="1.0" encoding="UTF-8"?>\n<yml_catalog><shop>'
+        f'<?xml version="1.0" encoding="{encoding}"?>\n<yml_catalog><shop>'
         f"<offers>\n{offers}</offers></shop></yml_catalog>",
         encoding="utf-8",
     )
     return str(path)
 
 
-@pytest.mark.parametrize("presplit", [False, True], ids=["one-partition", "presplit"])
-def test_rows_in_document_order(spark, tmp_path, monkeypatch, presplit):
+@pytest.mark.parametrize("encoding", ["UTF-8", "windows-1251"], ids=["one-partition", "utf8-copy"])
+def test_rows_in_document_order(spark, tmp_path, encoding):
     """SURVEY §3.1 steps 5-7: rows come out in the feed's order, both
-    for a feed scanned as one partition and for a presplit feed whose
-    parts differ in byte size (Spark packs file splits largest-first)."""
-    import functools
-
-    from magicxml_spark.plans import convert
-    from magicxml_spark.sources import xml_split
-    from magicxml_spark.sources.xml_source import read_xml_records as read
-
+    when Spark reads the feed itself and when it reads the UTF-8 copy
+    of a feed whose declaration names another encoding."""
     n = 600
-    if presplit:
-        monkeypatch.setattr(
-            convert, "read_xml_records", functools.partial(read, presplit_threshold=1024)
-        )
-        monkeypatch.setattr(
-            xml_split,
-            "presplit_xml",
-            functools.partial(xml_split.presplit_xml, records_per_part=n // 6),
-        )
-    src = _ordered_offer_feed(tmp_path / "ordered.xml", n)
-    out = convert.xml_to_csv(spark, src, str(tmp_path / "ordered.csv"))
-    if presplit:
-        parts = glob.glob(
-            os.path.join(INGEST_CACHE.get(content_key(src), ("parts", "offer")), "part-*.xml")
-        )
-        assert len(parts) == 6
-        assert len({os.path.getsize(p) for p in parts}) == 6
+    src = _ordered_offer_feed(tmp_path / "ordered.xml", n, encoding)
+    out = xml_to_csv(spark, src, str(tmp_path / "ordered.csv"))
     with open(out, encoding="utf-8-sig", newline="") as f:
         ids = [r["attr_id"] for r in csv.DictReader(f, delimiter=";")]
     assert ids == [str(i) for i in range(n)]
@@ -307,8 +284,9 @@ def _russian_feed(n, prolog_encoding="UTF-8", pad=0):
         "</ЭлементСправочника>\n"
         for i in range(n)
     )
+    encoding = f' encoding="{prolog_encoding}"' if prolog_encoding else ""
     return (
-        f'<?xml version="1.0" encoding="{prolog_encoding}"?>\n<Корневой>{" " * pad}\n'
+        f'<?xml version="1.0"{encoding}?>\n<Корневой>{" " * pad}\n'
         f"{records}</Корневой>"
     )
 
@@ -334,23 +312,33 @@ def test_utf8_feed_cut_inside_a_character_by_the_head_sample(spark, tmp_path):
     assert _names(out) == [f"Диван {i}" for i in range(n)]
 
 
-def test_windows_1251_feed_presplit_in_its_encoding(spark, tmp_path, monkeypatch):
-    """A windows-1251 feed past the presplit threshold is split in the
-    encoding its head sample decoded with, not read as UTF-8."""
-    import functools
+ENCODED_FEEDS = {
+    # the reader's schema inference assumes UTF-8 and fails on 0xee
+    "undeclared-1251": lambda n: _russian_feed(n, prolog_encoding=None).encode("cp1251"),
+    # a bare '&' sends it to the repair re-read, whose UTF-8 copy must
+    # not keep the windows-1251 declaration
+    "declared-1251-bare-amp": lambda n: _russian_feed(n, prolog_encoding="windows-1251")
+    .replace("Диван 0<", "Диван & 0<")
+    .encode("cp1251"),
+    # the cascade decodes the bytes as UTF-8, whatever the declaration says
+    "utf8-declared-1251": lambda n: _russian_feed(n, prolog_encoding="windows-1251").encode(
+        "utf-8"
+    ),
+}
 
-    from magicxml_spark.plans import convert
-    from magicxml_spark.sources.xml_source import read_xml_records as read
 
-    monkeypatch.setattr(
-        convert, "read_xml_records", functools.partial(read, presplit_threshold=1024)
-    )
+@pytest.mark.parametrize("case", ENCODED_FEEDS)
+def test_feed_decoded_by_the_cascade(spark, tmp_path, case):
+    """S2: a feed whose bytes are not UTF-8, or whose declaration names
+    another encoding, converts as the reference's decode cascade reads it."""
     n = 200
-    src = tmp_path / "c1_1251.xml"
-    src.write_bytes(_russian_feed(n, prolog_encoding="windows-1251").encode("cp1251"))
-    out = convert.xml_to_csv(spark, str(src), str(tmp_path / "c1.csv"))
-    assert INGEST_CACHE.get(content_key(str(src)), ("parts", "russian")) is not None
-    assert _names(out) == [f"Диван {i}" for i in range(n)]
+    src = tmp_path / "c1.xml"
+    src.write_bytes(ENCODED_FEEDS[case](n))
+    out = xml_to_csv(spark, str(src), str(tmp_path / "c1.csv"))
+    want = [f"Диван {i}" for i in range(n)]
+    if case == "declared-1251-bare-amp":
+        want[0] = "Диван & 0"
+    assert _names(out) == want
 
 
 # --- the re-ingest memo: an unchanged CSV is copied -------------------------

@@ -6,7 +6,10 @@ The surface (the roots) is:
   - every ``@query`` function (the ``QUERIES`` registry);
   - ``session.get_spark``;
   - every name that ``perfbench/*.py``, ``bench.py`` or
-    ``__spark_entry__.py`` references.
+    ``__spark_entry__.py`` references;
+  - every module ``perfbench/run.py`` names in ``TRACED_LAYERS``: its
+    tracer imports each one. These are module roots only; their
+    definitions are still reached by name.
 
 The walk is name-level: an identifier (a ``Name``, an ``Attribute``'s
 attribute or an imported name) reached anywhere reaches every top-level
@@ -140,13 +143,25 @@ def _root_refs(modules) -> tuple[set[str], set[str]]:
     return names, mods
 
 
+def _traced_layers() -> set[str]:
+    """The modules named in ``perfbench/run.py``'s ``TRACED_LAYERS``."""
+    with open(os.path.join(REPO, "perfbench", "run.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    for s in tree.body:
+        if isinstance(s, ast.Assign) and [getattr(t, "id", None) for t in s.targets] == [
+            "TRACED_LAYERS"
+        ]:
+            return {f"{PKG}.{layer}" for layer in ast.literal_eval(s.value)}
+    return set()
+
+
 def walk(exempt=EXEMPT) -> tuple[list[str], list[str]]:
     """(unreached ``module.name`` definitions, unreached modules), with
     the ``exempt`` definitions kept as extra roots."""
     modules = _modules()
     table = {m: _definitions(t) for m, t in modules.items()}
     names, todo = _root_refs(modules)
-    todo |= set(ROOT_MODULES) | {m for m, _ in ROOT_DEFS}
+    todo |= set(ROOT_MODULES) | {m for m, _ in ROOT_DEFS} | _traced_layers()
     # an exempt reference implementation is kept, so what it uses is too
     todo |= {m for m, _ in exempt}
     names |= {n for _, n in ROOT_DEFS} | {n for _, n in exempt}

@@ -4,8 +4,8 @@ The reference re-reads every feed at least twice (preview then
 convert, main.py:1690-1770). These tests pin the load-bearing
 behaviors: a feed rewritten in place converts exactly as its new bytes
 do anywhere else, content-change invalidation of the ingest cache
-(including same-size rewrites with a restored mtime), presplit reuse,
-and the cache's bound."""
+(including same-size rewrites with a restored mtime) and the cache's
+bound."""
 
 from __future__ import annotations
 
@@ -131,53 +131,38 @@ def test_reingest_conversion_identical_and_content_change_reflected(spark, tmp_p
     assert "Материал" in header
 
 
-def _big_offer_doc(n: int = 2000) -> str:
-    return OFFER_DOC.replace(
-        "</offers>",
-        "".join(
-            f'<offer id="x{i}"><name>N{i}</name><price>1</price></offer>'
-            for i in range(n)
-        )
-        + "</offers>",
-    )
-
-
-@pytest.mark.parametrize("presplit", [False, True], ids=["small", "presplit"])
-def test_same_size_rewrite_with_restored_mtime_is_reconverted(
-    spark, tmp_path, monkeypatch, presplit
-):
+@pytest.mark.parametrize("encoding", ["utf-8", "windows-1251"], ids=["small", "windows-1251"])
+def test_same_size_rewrite_with_restored_mtime_is_reconverted(spark, tmp_path, encoding):
     # cp -p / rsync -a / tar rewrite a feed in place and restore its
-    # mtime: a key on (path, size, mtime) would serve the old bytes'
-    # presplit parts and CSV
-    from magicxml_spark.plans import convert
-    from magicxml_spark.sources.xml_source import read_xml_records as read
+    # mtime: a key on (path, size, mtime) would serve the old bytes' CSV.
+    # A windows-1251 feed is read from a UTF-8 copy of the new bytes.
+    from magicxml_spark.plans.convert import xml_to_csv
 
-    if presplit:  # force the small fixture through the presplit path
-        monkeypatch.setattr(
-            convert, "read_xml_records", functools.partial(read, presplit_threshold=1024)
-        )
-    doc = _big_offer_doc() if presplit else OFFER_DOC
-    doc = doc.replace("<price>10.00</price>", "<price>1999</price>")
-    path = _write(tmp_path, doc)
+    doc = OFFER_DOC.replace("<price>10.00</price>", "<price>1999</price>").replace(
+        "encoding='utf-8'", f"encoding='{encoding}'"
+    )
+    path = str(tmp_path / "feed.xml")
+
+    def write(text):
+        with open(path, "wb") as f:
+            f.write(text.encode(encoding))
 
     def convert_rows(name):
         out = str(tmp_path / name)
-        convert.xml_to_csv(spark, path, out)
+        xml_to_csv(spark, path, out)
         with open(out, encoding="utf-8-sig", newline="") as f:
             return {r["attr_id"]: r for r in csv.DictReader(f, delimiter=";")}
 
+    write(doc)
     assert convert_rows("o1.csv")["10"]["price"] == "1999"
-    if presplit:
-        assert INGEST_CACHE.get(content_key(path), ("parts", "offer")) is not None
 
     st = os.stat(path)
     # same byte length: price 1999->2099, category Root->Base, param
-    # name Цвет->Вкус (both 8 bytes in UTF-8)
-    _write(
-        tmp_path,
+    # name Цвет->Вкус (the same length in either encoding)
+    write(
         doc.replace("<price>1999<", "<price>2099<")
         .replace(">Root<", ">Base<")
-        .replace("Цвет", "Вкус"),
+        .replace("Цвет", "Вкус")
     )
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
     st2 = os.stat(path)
@@ -190,35 +175,19 @@ def test_same_size_rewrite_with_restored_mtime_is_reconverted(
     assert "Цвет" not in row
 
 
-def test_presplit_cache_reuses_parts_dir(spark, tmp_path):
-    # content-keyed presplit reuse: same bytes -> same parts dir
-    path = _write(tmp_path, _big_offer_doc(), "big.xml")
-    key = content_key(path)
-    from magicxml_spark.sources.xml_split import presplit_xml
-
-    d1 = str(tmp_path / "parts")
-    presplit_xml(path, d1, "offer")
-    INGEST_CACHE.put(key, ("parts", "offer"), d1)
-    # read path must reuse the cached dir instead of re-splitting
-    # (threshold forced low so the small fixture takes the presplit path)
-    df, _ = read_xml_records(spark, path, presplit_threshold=1024)
-    assert INGEST_CACHE.get(key, ("parts", "offer")) == d1
-    assert df.count() == 2002
-
-
 def test_ingest_cache_bound_evicts_parts_dirs(spark, tmp_path, monkeypatch):
+    from magicxml_spark.plans.convert import xml_to_csv
+
     bound = 2
     monkeypatch.setattr(INGEST_CACHE, "max_entries", bound)
-    parts = []
+    paths = []
     for i in range(bound + 1):
-        path = _write(tmp_path, _big_offer_doc(50 + i), f"feed{i}.xml")
-        read_xml_records(spark, path, presplit_threshold=1024)
-        parts.append(INGEST_CACHE.get(content_key(path), ("parts", "offer")))
-        assert os.path.isdir(parts[-1])
+        paths.append(_write(tmp_path, OFFER_DOC.replace("<name>A<", f"<name>A{i}<"), f"feed{i}.xml"))
+        xml_to_csv(spark, paths[-1], str(tmp_path / f"feed{i}.csv"))
         assert len(INGEST_CACHE) <= bound
-    # the least recently used feed was evicted together with its parts
-    assert not os.path.exists(parts[0])
-    assert all(os.path.isdir(d) for d in parts[1:])
+    # the least recently used feed was evicted
+    assert INGEST_CACHE.get(content_key(paths[0]), ("csv", None)) is None
+    assert all(INGEST_CACHE.get(content_key(p), ("csv", None)) for p in paths[1:])
 
 
 def test_ingest_cache_concurrent_use_keeps_bound_and_dirs():
@@ -229,13 +198,12 @@ def test_ingest_cache_concurrent_use_keeps_bound_and_dirs():
 
     cache = IngestCache()
     cache.max_entries = 4
-    roots, errors = set(), []
+    errors = []
 
     def worker(seed):
         try:
             for i in range(150):
                 key = f"k{(seed * 7 + i) % 23}"
-                roots.add(os.path.dirname(os.path.dirname(cache.scratch_dir(key))))
                 cache.put(key, "n", i)
                 cache.get(key, "n")
         except Exception as exc:  # surfaced by the assert below
@@ -254,8 +222,3 @@ def test_ingest_cache_concurrent_use_keeps_bound_and_dirs():
     assert not any(t.is_alive() for t in threads)
     assert not errors
     assert len(cache) <= cache.max_entries
-    (root,) = roots  # one temp root for every scratch directory
-    # a lost eviction would leave an entry directory behind on disk
-    assert len(os.listdir(root)) == len(cache)
-    cache.clear()
-    assert os.listdir(root) == []

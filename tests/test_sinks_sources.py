@@ -165,51 +165,53 @@ def test_convert_file_xlsx_to_csv(spark, tmp_path):
 
 
 def test_encoding_cascade_1251(spark, tmp_path):
-    """S2: windows-1251 XML decodes through the cascade end-to-end."""
+    """S2: declaration-less windows-1251 XML decodes through the cascade
+    end-to-end, its category tree included."""
+    import csv
+
     from magicxml_spark.plans.convert import xml_to_csv
 
-    xml = "<offers><offer id='1'><name>Привет Мир</name><price>5</price></offer></offers>"
+    xml = (
+        "<yml_catalog><shop><categories><category id='1'>Мебель</category>"
+        "<category id='2' parentId='1'>Диваны</category></categories><offers>"
+        "<offer id='1'><name>Привет Мир</name><price>5</price><categoryId>2</categoryId></offer>"
+        "</offers></shop></yml_catalog>"
+    )
     src = tmp_path / "cp1251.xml"
     src.write_bytes(xml.encode("windows-1251"))
-    # driver-side sample decode accepts it; the Spark XML read needs the
-    # file in utf-8, so re-encode through the fetch/decode shim first
-    from magicxml_spark.sources.xml_source import decode_bytes
-
-    text = decode_bytes(src.read_bytes())
-    utf = tmp_path / "utf.xml"
-    utf.write_text(text, encoding="utf-8")
-    out = xml_to_csv(spark, str(utf), str(tmp_path / "out.csv"))
-    body = open(out, encoding="utf-8-sig").read()
-    assert "Привет Мир" in body
+    out = xml_to_csv(spark, str(src), str(tmp_path / "out.csv"))
+    with open(out, encoding="utf-8-sig", newline="") as f:
+        (row,) = csv.DictReader(f, delimiter=";")
+    assert (row["name"], row["category_path"]) == ("Привет Мир", "Мебель///Диваны")
 
 
-def test_presplit_ignores_comments_and_selfclose(tmp_path):
-    from magicxml_spark.sources.xml_split import presplit_xml
+def _converted_rows(spark, tmp_path, doc):
+    import csv
 
+    from magicxml_spark.plans.convert import xml_to_csv
+
+    src = tmp_path / "feed.xml"
+    src.write_text(doc, encoding="utf-8")
+    out = xml_to_csv(spark, str(src), str(tmp_path / "feed.csv"))
+    with open(out, encoding="utf-8-sig", newline="") as f:
+        return list(csv.DictReader(f, delimiter=";"))
+
+
+def test_xml_read_ignores_comments_and_selfclose(spark, tmp_path):
+    """A row-tag lookalike in a comment neither opens nor cuts a
+    record, and a self-closing record is a row of its own."""
     doc = (
         "<offers><offer id='1'><a>x</a><!-- <offer promo> --><b>y</b></offer>"
         "<offer id='2'/></offers>"
     )
-    src = tmp_path / "c.xml"
-    src.write_text(doc)
-    parts = presplit_xml(str(src), str(tmp_path / "parts"), "offer", records_per_part=10)
-    import xml.etree.ElementTree as ET
-
-    root = ET.parse(parts[0]).getroot()
-    recs = root.findall("offer")
-    assert len(recs) == 2
-    assert recs[0].findtext("b") == "y"  # comment did not truncate record 1
-    assert recs[1].get("id") == "2"  # self-closing record kept clean
+    rows = _converted_rows(spark, tmp_path, doc)
+    assert [r["attr_id"] for r in rows] == ["1", "2"]
+    assert rows[0]["b"] == "y"  # the comment did not truncate record 1
 
 
-def test_presplit_streams_bounded_memory(tmp_path):
-    """The scanner must never hold the whole file: records are yielded
-    incrementally from pathologically small read chunks (1-3 chars), with
-    comments/CDATA/nesting straddling every chunk boundary."""
-    import io
-
-    from magicxml_spark.sources.xml_split import _iter_records, presplit_xml
-
+def test_xml_read_ignores_close_tags_in_comments_and_cdata(spark, tmp_path):
+    """A row tag's close tag inside a comment or a CDATA section does
+    not end the record."""
     doc = (
         "<offers>"
         + "".join(
@@ -218,19 +220,9 @@ def test_presplit_streams_bounded_memory(tmp_path):
         )
         + "</offers>"
     )
-    for chunk in (1, 3, 64):
-        recs = list(_iter_records(io.StringIO(doc), "offer", chunk=chunk))
-        assert len(recs) == 50
-        assert all(r.startswith("<offer id=") and r.endswith("</offer>") for r in recs)
-
-    src = tmp_path / "big.xml"
-    src.write_text(doc)
-    parts = presplit_xml(str(src), str(tmp_path / "parts"), "offer", records_per_part=20)
-    assert len(parts) == 3  # 20 + 20 + 10
-    import xml.etree.ElementTree as ET
-
-    totals = [len(ET.parse(p).getroot().findall("offer")) for p in parts]
-    assert totals == [20, 20, 10]
+    rows = _converted_rows(spark, tmp_path, doc)
+    assert [r["attr_id"] for r in rows] == [str(i) for i in range(50)]
+    assert {r["p"] for r in rows} == {"</offer>"}
 
 
 # ---------------------------------------------------------------------------

@@ -341,3 +341,35 @@ def test_repeated_child_with_text_and_attributes(spark, tmp_path):
     r1 = _rows(flatten_offer_records(df, dialect), "attr_id")["R1"]
     assert r1["barcode"] == "1///2"
     assert r1["barcode_type"] == "a///b///c"
+
+
+def test_self_closing_params_pivot_to_empty(spark, tmp_path):
+    """Spark infers no ``_VALUE`` for a ``<param>`` that is empty in
+    every record; its pivot column reads as an empty value."""
+    doc = (
+        "<offers><offer id='E1'><name>a</name><param name='Цвет'/></offer>"
+        "<offer id='E2'><name>b</name><param name='Цвет'/><param name='Вес'/></offer>"
+        "</offers>"
+    )
+    p = tmp_path / "empty_params.xml"
+    p.write_text(doc, encoding="utf-8")
+    df, dialect = read_xml_records(spark, str(p))
+    rows = _rows(flatten_offer_records(df, dialect), "attr_id")
+    assert rows["E1"]["Цвет"] == "" and "Вес" not in rows["E1"]
+    assert rows["E2"]["Цвет"] == "" and rows["E2"]["Вес"] == ""
+
+
+def test_empty_feature_pivots_to_empty(spark, tmp_path):
+    """A product whose only ``<feature>`` is empty: no ``_VALUE`` field
+    is inferred, and its pivot column reads as an empty value."""
+    doc = (
+        "<catalog><products><product id='F1'><name>a</name>"
+        "<features><feature name='Стиль'/></features></product>"
+        "</products></catalog>"
+    )
+    p = tmp_path / "empty_feature.xml"
+    p.write_text(doc, encoding="utf-8")
+    df, dialect = read_xml_records(spark, str(p))
+    assert dialect == "product"
+    rows = _rows(flatten_offer_records(df, dialect), "attr_id")
+    assert rows["F1"]["feature_Стиль"] == ""

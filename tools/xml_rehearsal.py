@@ -7,9 +7,9 @@ Generates a synthetic Yandex-Market YML catalog of a target size
 prune -> normalize -> CSV), and reports wall-clock, MB/s, offers/s and
 peak RSS (python driver + JVM) for the cold and warm passes. The
 cold pass converts; the warm pass re-ingests the same bytes, which
-copies the CSV the cold pass wrote. Validates the presplit streaming
-scanner (sources/xml_split.py) at real size — the prior largest
-on-record measurement was 52.7 MB.
+copies the CSV the cold pass wrote. The feed is read by one plain
+Spark XML read, as every feed is, so this measures that read at real
+size — the prior largest on-record measurement was 52.7 MB.
 
 Usage: python tools/xml_rehearsal.py [target_gb] [workdir]
 """

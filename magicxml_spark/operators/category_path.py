@@ -7,13 +7,14 @@ visited-set cycle guard and 'Undefined' for unknown names
 
 Spark spelling — two interchangeable strategies:
 
-* ``build_category_paths`` (default): a bounded driver loop of
-  **broadcast self-joins to fixpoint**. The category dimension is tiny
-  relative to the fact table (thousands of nodes vs billions of rows),
-  so each iteration is a broadcast hash join with no shuffle; the loop
-  runs depth times (trees are shallow). This is the 100 TB-safe path:
-  the expensive fact table is only touched once, by a final broadcast
-  join against the materialized (id, category_path) dimension.
+* ``build_category_paths`` (default): the reference's walk over
+  driver rows, or, for a dimension given as a DataFrame, a bounded
+  driver loop of **broadcast self-joins to fixpoint**. The category
+  dimension is tiny relative to the fact table (thousands of nodes vs
+  billions of rows), so each iteration is a broadcast hash join with
+  no shuffle; the loop runs depth times (trees are shallow). Either
+  way the fact table is only touched once, by a final broadcast join
+  against the (id, category_path) dimension.
 * ``build_category_paths_sql``: Spark 4.x native ``WITH RECURSIVE`` —
   same result, one SQL statement; kept as the declarative alternative
   (and it is exactly the DuckDB oracle spelling).
@@ -25,7 +26,7 @@ parent names contribute 'Undefined' (main.py:1483, 1497-1499).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 PATH_SEP = "///"
@@ -38,13 +39,14 @@ DEFAULT_MAX_COMPILED_PATHS = 10_000
 def _driver_walk(
     rows, max_depth: int, sep: str, skip_undefined_names: bool
 ) -> list[tuple[str, str]]:
-    """The reference's adjacency walk (main.py:1487-1506) over collected
-    (_id, _parent, _name) rows: root->leaf names joined by ``sep``,
-    visited-set cycle guard, max_depth truncation — the single
-    implementation behind both the driver fast path and the compiled
-    lookup column."""
-    names = {r["_id"]: r["_name"] for r in rows}
-    parents = {r["_id"]: r["_parent"] for r in rows if r["_parent"]}
+    """The reference's adjacency walk (main.py:1487-1506) over
+    (id, parent_id, name) rows on the driver: root->leaf names joined
+    by ``sep``, visited-set cycle guard, max_depth truncation; an empty
+    parent is none, a missing name 'Undefined'. The single
+    implementation behind both the driver rows of
+    ``build_category_paths`` and the compiled lookup column."""
+    names = {cid: "Undefined" if name is None else name for cid, _, name in rows}
+    parents = {cid: parent for cid, parent, _ in rows if parent}
     out = []
     for cid in names:
         path, current, visited = [], cid, set()
@@ -99,9 +101,7 @@ def category_path_lookup(
     literal map must stay small.
     """
     dim = categories.select(
-        F.col(id_col).cast("string").alias("_id"),
-        F.nullif(F.col(parent_col).cast("string"), F.lit("")).alias("_parent"),
-        F.coalesce(F.col(name_col).cast("string"), F.lit("Undefined")).alias("_name"),
+        *[F.col(c).cast("string") for c in (id_col, parent_col, name_col)]
     )
     rows = dim.take(max_compiled_rows + 1)
     if len(rows) > max_compiled_rows:
@@ -116,48 +116,44 @@ def category_path_lookup(
 
 
 def build_category_paths(
-    categories: DataFrame,
+    categories: DataFrame | list[Row],
     id_col: str = "id",
     parent_col: str = "parent_id",
     name_col: str = "name",
     max_depth: int = 64,
     sep: str = PATH_SEP,
     skip_undefined_names: bool = False,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Return (id, category_path) with path = root->leaf names joined by
     ``sep``. Cycles and orphan parents terminate the walk (reference
     main.py:1495-1499). Chains deeper than ``max_depth`` keep a partial
     path of exactly ``max_depth`` leaf-anchored names — the same
     truncation in all three strategies (driver walk, distributed loop,
-    recursive CTE), so results don't shift when the dimension size
-    crosses ``driver_threshold``.
+    recursive CTE), so results don't shift with the dimension's size.
 
     ``skip_undefined_names=True`` reproduces the reference closure
     exactly (main.py:1487-1506): 'Undefined' names are dropped from the
     path, and if that leaves nothing the node's own name is returned.
 
-    Execution strategy by dimension size: at or below
-    ``driver_threshold`` rows the walk runs on the driver (one collect
-    of an already-tiny table — a per-iteration Spark job would cost
-    more in scheduling than the whole computation); above it, the
+    Execution strategy by the dimension's form: driver rows (a bounded
+    dimension, already collected) are walked on the driver and the
+    result becomes a DataFrame once, for the broadcast join — a
+    per-iteration Spark job would cost more in scheduling than the
+    whole computation; a DataFrame (an oversized dimension) takes the
     distributed iterative broadcast-join loop. Both produce identical
     results (tests cross-check them).
     """
+    if isinstance(categories, list):
+        rows = [(r[id_col], r[parent_col], r[name_col]) for r in categories]
+        return SparkSession.active().createDataFrame(
+            _driver_walk(rows, max_depth, sep, skip_undefined_names),
+            "id string, category_path string",
+        )
     dim = categories.select(
         F.col(id_col).cast("string").alias("_id"),
         F.nullif(F.col(parent_col).cast("string"), F.lit("")).alias("_parent"),
         F.coalesce(F.col(name_col).cast("string"), F.lit("Undefined")).alias("_name"),
     )
-
-    # driver fast path needs the rows anyway — collect once, no
-    # checkpoint job
-    rows = dim.take(driver_threshold + 1)
-    if len(rows) <= driver_threshold:
-        out = _driver_walk(rows, max_depth, sep, skip_undefined_names)
-        return categories.sparkSession.createDataFrame(
-            out, "id string, category_path string"
-        )
 
     # distributed loop: pin the dim so per-iteration joins don't rescan
     dim = dim.localCheckpoint(eager=True)

@@ -4,9 +4,12 @@
 dialect detect -> flatten -> prune -> CSV) and holds all of one
 conversion's state. Everything between source and sink is one lazy
 DataFrame plan — Catalyst owns ordering; the only driver
-materializations are the tiny category dimension, the pivot-key
+materializations are the category dimension (one collect, walked into
+paths on the driver; an oversized one stays a frame), the pivot-key
 distinct scans (param, fabric, features) and the Q5 prune aggregate
-(bounded dimensions and one aggregate row, SURVEY §4). A re-ingest of
+(bounded dimensions and one aggregate row, SURVEY §4). The feed's
+encoding is decided once, and both XML reads share the file it gives;
+the CSV is rendered and written by Spark once. A re-ingest of
 unchanged bytes copies the CSV the earlier conversion wrote; every
 other conversion runs from scratch.
 
@@ -20,6 +23,7 @@ to a temp ``.xml`` file first (S1) and then routed like that file.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -47,6 +51,7 @@ from magicxml_spark.sources.csv_source import read_csv
 from magicxml_spark.sources.json_source import read_json
 from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
 from magicxml_spark.sources.xml_source import (
+    _utf8_feed,
     read_categories,
     read_xml_records,
 )
@@ -74,20 +79,21 @@ def xml_to_csv(
     earlier = INGEST_CACHE.get(ckey, ("csv", dialect))
     if earlier is not None and content_key(earlier[0]) == earlier[1]:
         return _copy_file(earlier[0], dst)
-    records, detected = read_xml_records(spark, src, dialect)
-    # document order, taken before anything reshuffles the scan: the
-    # file is one scan partition, so its ids rise with the document
-    records = records.withColumn(ROW_ORDER, F.monotonically_increasing_id())
-    target = spark.sparkContext.defaultParallelism
-    if records.rdd.getNumPartitions() < max(2, target // 2):
-        records = records.repartition(target)
-    persisted = []
-    try:
+    # the feed's UTF-8 copy, if it needs one, outlives the persisted
+    # frames read from it: the stack unpersists them first
+    with _utf8_feed(src) as feed, contextlib.ExitStack() as persisted:
+        records, detected = read_xml_records(spark, feed, dialect)
+        # document order, taken before anything reshuffles the scan: the
+        # file is one scan partition, so its ids rise with the document
+        records = records.withColumn(ROW_ORDER, F.monotonically_increasing_id())
+        target = spark.sparkContext.defaultParallelism
+        if records.rdd.getNumPartitions() < max(2, target // 2):
+            records = records.repartition(target)
         # the pipeline scans records several times (pivot-key distinct
         # scans, Q5 prune aggregate, final projection+write) — cache the
         # typed records so the XML text parses exactly once
         records = records.persist()
-        persisted.append(records)
+        persisted.callback(records.unpersist)
         if detected == "russian":
             flat = flatten_russian_records(records)
         elif detected == "service":
@@ -95,8 +101,9 @@ def xml_to_csv(
         else:
             paths = None
             if detected == "offer":
-                cats = read_categories(spark, src)
-                if not cats.isEmpty():
+                # driver rows, or an oversized (so non-empty) frame
+                cats = read_categories(spark, feed)
+                if isinstance(cats, DataFrame) or cats:
                     paths = build_category_paths(cats, skip_undefined_names=True)
             flat = flatten_offer_records(records, detected, category_paths=paths)
         # pruning needs the Q5 all-blank aggregate (one pass) before the
@@ -104,13 +111,10 @@ def xml_to_csv(
         # the full flatten projection — pivot, pictures, description
         # clean — doubling the conversion's compute
         flat = flat.persist()
-        persisted.append(flat)
+        persisted.callback(flat.unpersist)
         cols = select_output_columns(flat.drop(ROW_ORDER))
         out = flat.select(*[quoted_col(c) for c in cols if c in flat.columns], ROW_ORDER)
         written = write_csv(out, dst, order_by=ROW_ORDER)
-    finally:
-        for df in persisted:
-            df.unpersist()
     INGEST_CACHE.put(
         ckey, ("csv", dialect), (os.path.abspath(written), content_key(written))
     )
@@ -222,8 +226,9 @@ def _pdf_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
 
 
 def _xml_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
-    records, _ = read_xml_records(spark, src, options.get("dialect"))
-    return write_json_documents(xml_records_to_json(records), dst)
+    with _utf8_feed(src) as feed:
+        records, _ = read_xml_records(spark, feed, options.get("dialect"))
+        return write_json_documents(xml_records_to_json(records), dst)
 
 
 # (source extension, target extension) -> route(spark, src, dst, options).

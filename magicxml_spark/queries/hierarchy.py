@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from magicxml_spark.operators.category_path import (
-    build_category_paths,
     build_category_paths_sql,
     category_path_lookup,
 )

@@ -16,7 +16,9 @@ Division of labor, Spark-first:
   earlier read of the same path.
 * Encoding follows the S2 cascade, not the XML declaration: a feed
   that is not UTF-8, or whose declaration names another encoding, is
-  read from a UTF-8 copy (``_load_decoded``).
+  read from a UTF-8 copy (``_utf8_feed``). The encoding is decided once
+  per conversion; the record read and the category read share the
+  file it gives.
 * Repair (bare ``&``, control chars) is an in-memory text rewrite of
   the whole document, as the reference does within its 100 MB upload
   cap (main.py:1779).
@@ -25,13 +27,15 @@ Division of labor, Spark-first:
 from __future__ import annotations
 
 import codecs
+import contextlib
 import itertools
 import os
 import re
 import tempfile
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 
 # S2: the reference's decode cascade (main.py:1786-1797).
 ENCODING_CASCADE = ("utf-8", "windows-1251", "latin1", "iso-8859-1", "cp1252")
@@ -172,10 +176,10 @@ def _decodes(path: str, encoding: str) -> bool:
     return True
 
 
-def _load_utf8_copy(spark: SparkSession, row_tag: str, pieces: Iterable[str]) -> DataFrame:
-    """Spark's read of the text ``pieces`` from a UTF-8 copy whose
-    declaration names UTF-8. A parsed frame is materialised before the
-    copy is deleted, because the scan is lazy."""
+@contextlib.contextmanager
+def _utf8_copy(pieces: Iterable[str]) -> Iterator[str]:
+    """A temporary UTF-8 file of the text ``pieces`` whose declaration
+    names UTF-8, deleted on exit."""
     pieces = iter(pieces)
     with tempfile.NamedTemporaryFile(
         "w", suffix=".xml", delete=False, encoding="utf-8", newline=""
@@ -183,29 +187,32 @@ def _load_utf8_copy(spark: SparkSession, row_tag: str, pieces: Iterable[str]) ->
         tmp.write(_DECLARED_ENCODING.sub(r"\g<1>\g<2>UTF-8\g<2>", next(pieces, ""), count=1))
         tmp.writelines(pieces)
     try:
-        df = _load(spark, row_tag, tmp.name)
-        return df.localCheckpoint(eager=True) if _parsed(df) else df
+        yield tmp.name
     finally:
         os.unlink(tmp.name)
 
 
-def _load_decoded(spark: SparkSession, row_tag: str, path: str) -> DataFrame:
-    """S2: Spark's read of ``path`` as the decode cascade reads it.
-    Spark reads the file itself only when its bytes are UTF-8 and its
-    declaration names no other encoding: its parser believes the
+@contextlib.contextmanager
+def _utf8_feed(path: str) -> Iterator[str]:
+    """S2: a file Spark reads as the decode cascade reads ``path``,
+    for the readers below; the encoding is decided once per feed.
+    That is ``path`` itself when its bytes are UTF-8 and its
+    declaration names no other encoding: Spark's parser believes the
     declaration or else assumes UTF-8, whatever the ``charset`` option
     says. Any other feed is transcoded, a chunk at a time, to a UTF-8
-    copy in the first encoding of the cascade that decodes all of it."""
+    copy in the first encoding of the cascade that decodes all of it;
+    the copy lives until the ``with`` block ends, so frames read from
+    it stay lazy inside the block."""
     encoding = next((e for e in ENCODING_CASCADE if _decodes(path, e)), "utf-8")
-    with open(path, encoding=encoding, errors="replace", newline="") as f:
-        head = f.read(_CHUNK)
-        declared = _DECLARED_ENCODING.match(head)
-        declares_utf8 = declared is None or declared[3].upper() in ("UTF-8", "UTF8")
-        if encoding == "utf-8" and declares_utf8:
-            return _load(spark, row_tag, path)
-        return _load_utf8_copy(
-            spark, row_tag, itertools.chain([head], iter(lambda: f.read(_CHUNK), ""))
-        )
+    with contextlib.ExitStack() as stack:
+        with open(path, encoding=encoding, errors="replace", newline="") as f:
+            head = f.read(_CHUNK)
+            declared = _DECLARED_ENCODING.match(head)
+            declares_utf8 = declared is None or declared[3].upper() in ("UTF-8", "UTF8")
+            if encoding != "utf-8" or not declares_utf8:
+                pieces = itertools.chain([head], iter(lambda: f.read(_CHUNK), ""))
+                path = stack.enter_context(_utf8_copy(pieces))
+        yield path
 
 
 def read_xml_records(
@@ -216,11 +223,12 @@ def read_xml_records(
 ) -> tuple[DataFrame, str]:
     """Read one XML catalog file into a (records_df, dialect) pair.
 
-    Driver reads a head sample for validate/detect; Spark's XML source
-    discovers the schema and parses the records, one plain read of the
-    file (or of its UTF-8 copy, ``_load_decoded``) whatever its size. If
-    that parse yields only corrupt records, the repaired text is re-read
-    (PERMISSIVE + repair pre-pass).
+    ``path`` is a file Spark reads as the S2 cascade decodes it: UTF-8,
+    declaring no other encoding (``_utf8_feed`` gives one for any
+    feed). Driver reads a head sample for validate/detect; Spark's XML
+    source discovers the schema and parses the records, one plain read
+    of the file whatever its size. If that parse yields only corrupt
+    records, the repaired text is re-read (PERMISSIVE + repair pre-pass).
     """
     with open(path, "rb") as f:
         sample = _decode(f.read(sample_bytes), final=False)
@@ -229,46 +237,40 @@ def read_xml_records(
         dialect = detect_dialect(sample)
     row_tag = _ROW_TAGS[dialect]
 
-    df = _load_decoded(spark, row_tag, path)
+    df = _load(spark, row_tag, path)
     if not _parsed(df):
         # parse produced nothing usable -> repair and retry
         with open(path, "rb") as f:
             text = decode_bytes(f.read())
-        df = _load_utf8_copy(spark, row_tag, [repair_xml_text(clean_xml_text(text))])
-        if not _parsed(df):
-            raise ValueError("XML could not be parsed, even after repair.")
+        with _utf8_copy([repair_xml_text(clean_xml_text(text))]) as copy:
+            df = _load(spark, row_tag, copy)
+            if not _parsed(df):
+                raise ValueError("XML could not be parsed, even after repair.")
+            # the scan is lazy: materialise it before the copy is deleted
+            df = df.localCheckpoint(eager=True)
     return df, dialect
 
 
-def read_categories(spark: SparkSession, path: str) -> DataFrame:
-    """Category dimension (id, parent_id, name) from <category>
-    elements (reference main.py:1477-1484). Tiny table — feeds the
-    broadcast path builder (operators.category_path). A dimension of
-    at most ``CATEGORY_MAX_ROWS`` rows is collected once and returned as
-    driver-local rows, so its consumers never re-scan the file; an
-    oversized one stays a lazy frame (no more than ``CATEGORY_MAX_ROWS
-    + 1`` rows ever reach the driver)."""
-    from pyspark.sql import functions as F
-
-    _SCHEMA = "id string, parent_id string, name string"
-    df = _load_decoded(spark, "category", path)
-    cols = set(df.columns)
-    if "_id" not in cols:  # no <category> elements in this document
-        return spark.createDataFrame([], _SCHEMA)
-    parent = (
-        F.col("_parentId").cast("string")
-        if "_parentId" in cols
-        else F.lit(None).cast("string")
+def read_categories(spark: SparkSession, path: str) -> list[Row] | DataFrame:
+    """Category dimension (id, parent_id, name) from the <category>
+    elements of ``path``, a file as ``read_xml_records`` takes it
+    (reference main.py:1477-1484). One read with an explicit schema, so
+    no inference pass; a category without an id is left out, since no
+    offer can name it. A dimension of at most ``CATEGORY_MAX_ROWS`` rows
+    is returned as the driver rows of that one collect; an oversized
+    one stays a lazy frame (no more than ``CATEGORY_MAX_ROWS + 1`` rows
+    ever reach the driver)."""
+    dim = (
+        spark.read.format("xml")
+        .option("rowTag", "category")
+        .schema("_id string, _parentId string, _VALUE string")
+        .load(path)
+        .where(F.col("_id").isNotNull())
+        .select(
+            F.col("_id").alias("id"),
+            F.col("_parentId").alias("parent_id"),
+            F.coalesce(F.col("_VALUE"), F.lit("Undefined")).alias("name"),
+        )
     )
-    name = (
-        F.col("_VALUE").cast("string") if "_VALUE" in cols else F.lit(None).cast("string")
-    )
-    out = df.select(
-        F.col("_id").cast("string").alias("id"),
-        parent.alias("parent_id"),
-        F.coalesce(name, F.lit("Undefined")).alias("name"),
-    )
-    rows = out.limit(CATEGORY_MAX_ROWS + 1).collect()
-    if len(rows) > CATEGORY_MAX_ROWS:
-        return out
-    return spark.createDataFrame(rows, _SCHEMA)
+    rows = dim.limit(CATEGORY_MAX_ROWS + 1).collect()
+    return dim if len(rows) > CATEGORY_MAX_ROWS else rows

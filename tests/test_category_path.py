@@ -47,14 +47,19 @@ def cats_df(spark):
     return spark.createDataFrame(CATS, ["id", "parent_id", "name"])
 
 
-# threshold 0 forces the distributed iterative loop; the default takes
-# the driver fast path — both must match the reference closure
-@pytest.mark.parametrize("threshold", [100_000, 0], ids=["driver", "distributed"])
-def test_matches_reference_closure(spark, cats_df, threshold):
+def _dim(df, driver_rows):
+    """The dimension as driver rows (the driver walk) or as the frame
+    itself (the distributed iterative loop)."""
+    return df.collect() if driver_rows else df
+
+
+# both strategies must match the reference closure
+@pytest.mark.parametrize("driver_rows", [True, False], ids=["driver", "distributed"])
+def test_matches_reference_closure(spark, cats_df, driver_rows):
     got = {
         r["id"]: r["category_path"]
         for r in build_category_paths(
-            cats_df, skip_undefined_names=True, driver_threshold=threshold
+            _dim(cats_df, driver_rows), skip_undefined_names=True
         ).collect()
     }
     categories = {c[0]: c[2] for c in CATS}
@@ -63,11 +68,11 @@ def test_matches_reference_closure(spark, cats_df, threshold):
         assert got[cid] == reference_build_path(cid, categories, parents), cid
 
 
-@pytest.mark.parametrize("threshold", [100_000, 0], ids=["driver", "distributed"])
-def test_full_mode_keeps_undefined(spark, cats_df, threshold):
+@pytest.mark.parametrize("driver_rows", [True, False], ids=["driver", "distributed"])
+def test_full_mode_keeps_undefined(spark, cats_df, driver_rows):
     got = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(cats_df, driver_threshold=threshold).collect()
+        for r in build_category_paths(_dim(cats_df, driver_rows)).collect()
     }
     assert got["3"] == "Root///Mid///Leaf"
     assert got["9"] == "Root///Mid///Undefined///UnderUndef"
@@ -95,11 +100,11 @@ def test_recursive_cte_agrees_on_cycles(spark, cats_df):
     including cycles must agree across all three strategies, and the
     cycle paths must not repeat names up to max_depth."""
     driver = {
-        r["id"]: r["category_path"] for r in build_category_paths(cats_df).collect()
+        r["id"]: r["category_path"]
+        for r in build_category_paths(cats_df.collect()).collect()
     }
     distributed = {
-        r["id"]: r["category_path"]
-        for r in build_category_paths(cats_df, driver_threshold=0).collect()
+        r["id"]: r["category_path"] for r in build_category_paths(cats_df).collect()
     }
     sql = {
         r["id"]: r["category_path"]
@@ -124,13 +129,11 @@ def test_depth_100_chain_parity_all_strategies(spark):
 
     driver = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(chain, max_depth=128).collect()
+        for r in build_category_paths(chain.collect(), max_depth=128).collect()
     }
     distributed = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(
-            chain, max_depth=128, driver_threshold=0
-        ).collect()
+        for r in build_category_paths(chain, max_depth=128).collect()
     }
     prior = spark.conf.get("spark.sql.cteRecursionLevelLimit", "100")
     try:
@@ -150,20 +153,18 @@ def test_deep_chain_truncates_at_cap_identically(spark):
     """A chain deeper than max_depth keeps a partial path (never
     raises) of EXACTLY max_depth leaf-anchored names — identical in all
     three strategies, so results don't shift when the dimension size
-    crosses driver_threshold or a caller switches spellings."""
+    crosses the driver-row cap or a caller switches spellings."""
     depth, cap = 100, 10
     rows = [(str(i), str(i - 1) if i > 0 else None, f"N{i}") for i in range(depth)]
     chain = spark.createDataFrame(rows, ["id", "parent_id", "name"])
 
     driver = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(chain, max_depth=cap).collect()
+        for r in build_category_paths(chain.collect(), max_depth=cap).collect()
     }
     loop = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(
-            chain, max_depth=cap, driver_threshold=0
-        ).collect()
+        for r in build_category_paths(chain, max_depth=cap).collect()
     }
     sql = {
         r["id"]: r["category_path"]
@@ -187,7 +188,7 @@ def test_compiled_lookup_matches_join_spelling(spark, cats_df):
         [(i, str(k)) for i, k in enumerate(["1", "3", "5", "6", "7", "9", "404"])],
         ["fact_id", "cat_id"],
     )
-    paths = build_category_paths(cats_df)
+    paths = build_category_paths(cats_df.collect())
     via_join = {
         (r["fact_id"], r["category_path"])
         for r in facts.join(paths, facts["cat_id"] == paths["id"]).select(

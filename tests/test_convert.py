@@ -101,6 +101,38 @@ def test_json_to_csv_root_discovery(spark, outdir):
     assert rows[0]["name"] == "A"
 
 
+# --- the CSV sink's bytes -----------------------------------------------------
+
+
+def _written(tmp_path, df):
+    from magicxml_spark.sinks.csv_sink import write_csv
+
+    return open(write_csv(df, str(tmp_path / "out.csv")), "rb").read()
+
+
+def test_csv_header_quotes_a_first_column_behind_the_bom(spark, tmp_path):
+    """K1: the BOM comes before the quote of a first column that needs
+    one, as the reference's utf-8-sig writer puts it."""
+    df = spark.createDataFrame([("x", "y", 'q"z', "1")], ["A;B", 'A"B', "available", "b"])
+    assert _written(tmp_path, df) == (
+        b'\xef\xbb\xbf"A;B";"A""B";available;b\nx;y;"q""z";1\n'
+    )
+
+
+def test_csv_of_zero_rows_is_bom_and_header(spark, tmp_path):
+    df = spark.createDataFrame([], "`A;B` string, b string")
+    assert _written(tmp_path, df) == b'\xef\xbb\xbf"A;B";b\n'
+
+
+def test_json_to_csv_keeps_input_order(spark, tmp_path):
+    src = tmp_path / "rows.json"
+    src.write_text(json.dumps([{"k": str(i), "v": f"v{i}"} for i in range(20, 0, -1)]))
+    out = json_to_csv(spark, str(src), str(tmp_path / "rows.csv"))
+    assert open(out, "rb").read() == b"\xef\xbb\xbfk;v\n" + b"".join(
+        f"{i};v{i}\n".encode() for i in range(20, 0, -1)
+    )
+
+
 def test_csv_to_json_array(spark, outdir):
     out = str(outdir / "out.json")
     csv_to_json(spark, f"{FIX}/input.csv", out)
@@ -197,7 +229,7 @@ def test_oversized_category_dimension_stays_uncached(
         return open(out, "rb").read()
 
     baseline = run("cached")  # cap 100k: dimension collected as before
-    assert xml_source.read_categories(spark, str(src)).inputFiles() == []
+    assert isinstance(xml_source.read_categories(spark, str(src)), list)  # driver rows
 
     monkeypatch.setattr(xml_source, "CATEGORY_MAX_ROWS", n - 3)
     capped = run("uncached")  # cap 5 < 8: must stay a lazy frame
@@ -339,6 +371,112 @@ def test_feed_decoded_by_the_cascade(spark, tmp_path, case):
     if case == "declared-1251-bare-amp":
         want[0] = "Диван & 0"
     assert _names(out) == want
+
+
+# --- the category dimension -----------------------------------------------------
+
+
+def _offer_feed(categories, first_name="N1", encoding="UTF-8"):
+    """Two offers in categories 1 and 2, after a <categories> element
+    holding ``categories`` (none when ``categories`` is None)."""
+    offers = "".join(
+        f'<offer id="{i}"><name>{name}</name><price>1{i}</price>'
+        f"<categoryId>{i}</categoryId></offer>"
+        for i, name in ((1, first_name), (2, "N2"))
+    )
+    cats = "" if categories is None else f"<categories>{categories}</categories>"
+    return (
+        f'<?xml version="1.0" encoding="{encoding}"?>\n'
+        f"<yml_catalog><shop>{cats}<offers>{offers}</offers></shop></yml_catalog>"
+    )
+
+
+NO_PATH = "attr_id;available;categoryId;name;price\n1;1;1;{};11\n2;1;2;N2;12\n"
+WITH_PATH = (
+    "attr_id;available;categoryId;category_path;name;price\n1;1;1;{};{};11\n2;1;2;{};N2;12\n"
+)
+CATEGORY_FEEDS = {
+    "no-category": (None, "N1", NO_PATH.format("N1")),
+    "no-id": (
+        '<category>Foo</category><category parentId="1">Bar</category>',
+        "N1",
+        NO_PATH.format("N1"),
+    ),
+    "name-child": (
+        '<category id="1"><name>Phones</name></category>'
+        '<category id="2" parentId="1">Sub</category>',
+        "N1",
+        WITH_PATH.format("Undefined", "N1", "Sub"),
+    ),
+    # the document parses only after repair; the category read is of
+    # the feed as it is, where the bare '&' ends the parse
+    "bare-amp-in-category": (
+        '<category id="1">R & D</category><category id="2" parentId="1">Kid</category>',
+        "A & B",
+        NO_PATH.format("A & B"),
+    ),
+    "bare-amp-in-offer": (
+        '<category id="1">Root</category><category id="2" parentId="1">Kid</category>',
+        "A & B",
+        WITH_PATH.format("Root", "A & B", "Root///Kid"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", CATEGORY_FEEDS)
+def test_category_edge_feeds(spark, tmp_path, case):
+    categories, first_name, want = CATEGORY_FEEDS[case]
+    src = tmp_path / "feed.xml"
+    src.write_text(_offer_feed(categories, first_name), encoding="utf-8")
+    out = xml_to_csv(spark, str(src), str(tmp_path / "feed.csv"))
+    assert open(out, encoding="utf-8", newline="").read() == "\ufeff" + want
+
+
+def test_read_categories_launches_one_job(spark):
+    from magicxml_spark.sources.xml_source import read_categories
+
+    rows, jobs = _jobs_during(spark, lambda: read_categories(spark, f"{FIX}/cat.xml"))
+    assert len(jobs) == 1
+    assert [tuple(r) for r in rows] == [
+        ("1", None, "Мебель"),
+        ("2", "1", "Диваны"),
+        ("3", "2", "Угловые"),
+    ]
+
+
+def test_fresh_offer_conversion_job_count(spark, tmp_path):
+    """The Spark jobs of one fresh cat.xml conversion (records read,
+    one category read, pivot-key scans, Q5 prune aggregate, write): a
+    change that adds or drops an action shows here first."""
+    src = _fresh_copy(tmp_path, "cat.xml")
+    _, jobs = _jobs_during(spark, lambda: xml_to_csv(spark, src, str(tmp_path / "cat.csv")))
+    assert len(jobs) == 12
+
+
+def test_offer_feed_encoding_decided_once(spark, tmp_path, monkeypatch):
+    """S2: one fresh conversion of a windows-1251 offer feed with
+    categories checks the cascade's encodings once, and the record read
+    and the category read share one UTF-8 copy."""
+    from magicxml_spark.sources import xml_source
+
+    checked = []
+    decodes = xml_source._decodes
+
+    def counted(path, encoding):
+        checked.append(encoding)
+        return decodes(path, encoding)
+
+    monkeypatch.setattr(xml_source, "_decodes", counted)
+    src = tmp_path / "w1251.xml"
+    cats = (
+        '<category id="1">Мебель</category><category id="2" parentId="1">Диваны</category>'
+    )
+    src.write_bytes(_offer_feed(cats, encoding="windows-1251").encode("cp1251"))
+    out = xml_to_csv(spark, str(src), str(tmp_path / "w1251.csv"))
+    assert open(out, encoding="utf-8", newline="").read() == "\ufeff" + WITH_PATH.format(
+        "Мебель", "N1", "Мебель///Диваны"
+    )
+    assert checked == ["utf-8", "windows-1251"]
 
 
 # --- the re-ingest memo: an unchanged CSV is copied -------------------------

@@ -77,10 +77,10 @@ def test_schema_drift_falls_back_to_discovery(spark, tmp_path, monkeypatch):
 
 def test_category_row_cache_replays_and_invalidates(spark, tmp_path):
     path = _write(tmp_path, OFFER_DOC)
-    c1 = {(r["id"], r["parent_id"], r["name"]) for r in read_categories(spark, path).collect()}
+    c1 = {(r["id"], r["parent_id"], r["name"]) for r in read_categories(spark, path)}
     assert c1 == {("1", None, "Root"), ("2", "1", "Child")}
     # a re-read returns identical rows
-    c2 = {(r["id"], r["parent_id"], r["name"]) for r in read_categories(spark, path).collect()}
+    c2 = {(r["id"], r["parent_id"], r["name"]) for r in read_categories(spark, path)}
     assert c2 == c1
     # content change -> fresh rows
     time.sleep(0.01)
@@ -90,7 +90,7 @@ def test_category_row_cache_replays_and_invalidates(spark, tmp_path):
             "</categories>", '<category id="3" parentId="1">New</category></categories>'
         ),
     )
-    c3 = {r["id"] for r in read_categories(spark, path).collect()}
+    c3 = {r["id"] for r in read_categories(spark, path)}
     assert c3 == {"1", "2", "3"}
 
 

@@ -79,10 +79,11 @@ def xml_to_csv(
     earlier = INGEST_CACHE.get(ckey, ("csv", dialect))
     if earlier is not None and content_key(earlier[0]) == earlier[1]:
         return _copy_file(earlier[0], dst)
-    # the feed's UTF-8 copy, if it needs one, outlives the persisted
-    # frames read from it: the stack unpersists them first
+    # the feed's UTF-8 copy and its repaired copy, if it needs them,
+    # outlive the persisted frames read from them: the stack unpersists
+    # them first
     with _utf8_feed(src) as feed, contextlib.ExitStack() as persisted:
-        records, detected = read_xml_records(spark, feed, dialect)
+        records, detected, parsed = read_xml_records(spark, feed, dialect, keep=persisted)
         # document order, taken before anything reshuffles the scan: the
         # file is one scan partition, so its ids rise with the document
         records = records.withColumn(ROW_ORDER, F.monotonically_increasing_id())
@@ -102,7 +103,8 @@ def xml_to_csv(
             paths = None
             if detected == "offer":
                 # driver rows, or an oversized (so non-empty) frame
-                cats = read_categories(spark, feed)
+                # read from the text the records came from, repaired or not
+                cats = read_categories(spark, parsed)
                 if isinstance(cats, DataFrame) or cats:
                     paths = build_category_paths(cats, skip_undefined_names=True)
             flat = flatten_offer_records(records, detected, category_paths=paths)
@@ -227,7 +229,7 @@ def _pdf_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
 
 def _xml_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
     with _utf8_feed(src) as feed:
-        records, _ = read_xml_records(spark, feed, options.get("dialect"))
+        records, _, _ = read_xml_records(spark, feed, options.get("dialect"))
         return write_json_documents(xml_records_to_json(records), dst)
 
 

@@ -935,25 +935,32 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE explode pass: the naive n_docs spelling
-    (tok.agg(countDistinct(doc_id))) re-tokenizes AND re-explodes the
-    whole corpus on the second crossJoin branch — Spark re-executes
-    shared DataFrame subtrees per branch. n_docs is just "documents
-    with >= 1 token", computable from a split-only projection (no
-    explode, no token shuffle). Local sf1 times are inside host noise
-    either way (tokenize dominates; BASELINE.md round-5 residue table),
-    but at 100 TB this halves the exploded volume."""
+    """Both per-term counts are partial aggregates, so each shuffle
+    carries one (term, count) row per term and map task, never every
+    distinct (term, doc) pair as ``countDistinct(doc_id)`` would:
+    ``total_tf`` counts the exploded tokens and ``doc_freq`` the
+    exploded per-document distinct terms (``array_distinct``, one hash
+    pass per document, so per-document work stays linear). n_docs is
+    "documents with >= 1 token", computable from a split-only
+    projection (no explode, no token shuffle)."""
     docs = table(spark, sf_dir, "documents")
     words = F.filter(F.split(F.lower(F.col("text")), "\\s+"), lambda t: t != F.lit(""))
-    tok = docs.select("doc_id", F.explode(words).alias("term"))
+    total_tf = (
+        docs.select(F.explode(words).alias("term"))
+        .groupBy("term")
+        .agg(F.count("*").alias("total_tf"))
+    )
+    doc_freq = (
+        docs.select(F.explode(F.array_distinct(words)).alias("term"))
+        .groupBy("term")
+        .agg(F.count("*").alias("doc_freq"))
+    )
     n_docs = docs.agg(
         F.sum(F.when(F.size(words) > 0, 1).otherwise(0)).alias("n_docs")
     )
-    stats = tok.groupBy("term").agg(
-        F.countDistinct("doc_id").alias("doc_freq"), F.count("*").alias("total_tf")
-    )
     return (
-        stats.crossJoin(F.broadcast(n_docs))
+        total_tf.join(doc_freq, "term")
+        .crossJoin(F.broadcast(n_docs))
         .select(
             "term",
             "doc_freq",

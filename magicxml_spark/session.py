@@ -26,6 +26,18 @@ def get_spark(
     cluster every setting here still applies (AQE re-plans shuffles at
     runtime, so ``shuffle_partitions`` is an upper bound, not a tuning
     cliff).
+
+    ``spark.shuffle.sort.bypassMergeThreshold`` is 0, so every exchange
+    takes the serialized writer. With at most 200 reduce partitions and
+    no map-side combine (every SQL exchange at these partition counts)
+    Spark would otherwise pick the bypass-merge writer, which writes one
+    file per reduce partition and then copies them all into the map
+    output: each shuffle byte hit the disk twice. The serialized writer
+    sorts record pointers by partition in memory and, when a map task
+    spills once, renames that spill to the output. A session that this
+    function did not build keeps Spark's default, and so does one whose
+    context was already running: ``getOrCreate`` applies only SQL
+    settings to a running context.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
@@ -54,6 +66,8 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # write each shuffle byte once: see the docstring
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -220,15 +220,22 @@ def read_xml_records(
     path: str,
     dialect: str | None = None,
     sample_bytes: int = 1 << 20,
-) -> tuple[DataFrame, str]:
-    """Read one XML catalog file into a (records_df, dialect) pair.
+    keep: contextlib.ExitStack | None = None,
+) -> tuple[DataFrame, str, str]:
+    """Read one XML catalog file into (records_df, dialect, parsed).
 
     ``path`` is a file Spark reads as the S2 cascade decodes it: UTF-8,
     declaring no other encoding (``_utf8_feed`` gives one for any
     feed). Driver reads a head sample for validate/detect; Spark's XML
     source discovers the schema and parses the records, one plain read
     of the file whatever its size. If that parse yields only corrupt
-    records, the repaired text is re-read (PERMISSIVE + repair pre-pass).
+    records, the repaired text (S3, main.py:1444-1448) is re-read from
+    a UTF-8 copy. ``parsed`` is the file the records came from: ``path``
+    or that copy. Given ``keep``, the copy lives until ``keep`` closes
+    and the records stay lazy, so a category read of ``parsed`` sees
+    the repaired text, as the reference reads categories from its
+    repaired tree (main.py:1477-1484); without it, the records are
+    materialised before the copy is deleted and ``parsed`` is ``path``.
     """
     with open(path, "rb") as f:
         sample = _decode(f.read(sample_bytes), final=False)
@@ -238,25 +245,30 @@ def read_xml_records(
     row_tag = _ROW_TAGS[dialect]
 
     df = _load(spark, row_tag, path)
-    if not _parsed(df):
-        # parse produced nothing usable -> repair and retry
-        with open(path, "rb") as f:
-            text = decode_bytes(f.read())
-        with _utf8_copy([repair_xml_text(clean_xml_text(text))]) as copy:
-            df = _load(spark, row_tag, copy)
-            if not _parsed(df):
-                raise ValueError("XML could not be parsed, even after repair.")
+    if _parsed(df):
+        return df, dialect, path
+    # parse produced nothing usable -> repair and retry
+    with open(path, "rb") as f:
+        text = decode_bytes(f.read())
+    with contextlib.ExitStack() as own:
+        copy = (own if keep is None else keep).enter_context(
+            _utf8_copy([repair_xml_text(clean_xml_text(text))])
+        )
+        df = _load(spark, row_tag, copy)
+        if not _parsed(df):
+            raise ValueError("XML could not be parsed, even after repair.")
+        if keep is None:
             # the scan is lazy: materialise it before the copy is deleted
-            df = df.localCheckpoint(eager=True)
-    return df, dialect
+            return df.localCheckpoint(eager=True), dialect, path
+    return df, dialect, copy
 
 
 def read_categories(spark: SparkSession, path: str) -> list[Row] | DataFrame:
     """Category dimension (id, parent_id, name) from the <category>
-    elements of ``path``, a file as ``read_xml_records`` takes it
-    (reference main.py:1477-1484). One read with an explicit schema, so
-    no inference pass; a category without an id is left out, since no
-    offer can name it. A dimension of at most ``CATEGORY_MAX_ROWS`` rows
+    elements of ``path``, a file as ``read_xml_records`` takes it or
+    the repaired copy it parsed (reference main.py:1477-1484). One read
+    with an explicit schema, so no inference pass; a category without
+    an id is left out, since no offer can name it. A dimension of at most ``CATEGORY_MAX_ROWS`` rows
     is returned as the driver rows of that one collect; an oversized
     one stays a lazy frame (no more than ``CATEGORY_MAX_ROWS + 1`` rows
     ever reach the driver)."""

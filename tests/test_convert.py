@@ -408,12 +408,12 @@ CATEGORY_FEEDS = {
         "N1",
         WITH_PATH.format("Undefined", "N1", "Sub"),
     ),
-    # the document parses only after repair; the category read is of
-    # the feed as it is, where the bare '&' ends the parse
+    # the document parses only after repair, and the categories are
+    # read from the same repaired text
     "bare-amp-in-category": (
         '<category id="1">R & D</category><category id="2" parentId="1">Kid</category>',
         "A & B",
-        NO_PATH.format("A & B"),
+        WITH_PATH.format("R & D", "A & B", "R & D///Kid"),
     ),
     "bare-amp-in-offer": (
         '<category id="1">Root</category><category id="2" parentId="1">Kid</category>',

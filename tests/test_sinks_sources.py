@@ -34,7 +34,7 @@ def test_prune_columns(spark):
 
 
 def test_xml_to_json_conventions(spark):
-    df, _ = __import__(
+    df, _, _ = __import__(
         "magicxml_spark.sources.xml_source", fromlist=["read_xml_records"]
     ).read_xml_records(spark, f"{FIX}/cat.xml")
     docs = [json.loads(r["json"]) for r in xml_records_to_json(df).collect()]

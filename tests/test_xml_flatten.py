@@ -31,7 +31,7 @@ def _rows(df, key):
 
 @pytest.fixture(scope="module")
 def offer_rows(spark):
-    df, dialect = read_xml_records(spark, f"{FIX}/cat.xml")
+    df, dialect, _ = read_xml_records(spark, f"{FIX}/cat.xml")
     assert dialect == "offer"
     cats = read_categories(spark, f"{FIX}/cat.xml")
     paths = build_category_paths(cats, skip_undefined_names=True)
@@ -86,7 +86,7 @@ def product_rows(spark):
     # exists — the reference behaves identically (main.py:1464 probes
     # .//offer first); product mode is reached via the preset_id
     # override (main.py:2292), which maps to the explicit dialect arg.
-    df, dialect = read_xml_records(spark, f"{FIX}/products.xml", dialect="product")
+    df, dialect, _ = read_xml_records(spark, f"{FIX}/products.xml", dialect="product")
     assert dialect == "product"
     return _rows(flatten_offer_records(df, dialect), "attr_id")
 
@@ -115,7 +115,7 @@ def test_product_image_predicate(product_rows):
 
 @pytest.fixture(scope="module")
 def russian_rows(spark):
-    df, dialect = read_xml_records(spark, f"{FIX}/c1.xml")
+    df, dialect, _ = read_xml_records(spark, f"{FIX}/c1.xml")
     assert dialect == "russian"
     return _rows(flatten_russian_records(df), "ID")
 
@@ -157,7 +157,7 @@ def test_russian_plan_stays_small(spark):
     # re-inlined into every rule that reads it grows this plan about
     # fivefold (94,350 characters), and the driver builds, analyses and
     # optimizes that plan on every 1C conversion.
-    df, _ = read_xml_records(spark, f"{FIX}/c1.xml")
+    df, _, _ = read_xml_records(spark, f"{FIX}/c1.xml")
     plan = flatten_russian_records(df)._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan) < 40_000
 
@@ -170,7 +170,7 @@ def test_russian_category_from_site_groups(russian_rows):
 
 @pytest.fixture(scope="module")
 def service_rows(spark):
-    df, dialect = read_xml_records(spark, f"{FIX}/svc.xml")
+    df, dialect, _ = read_xml_records(spark, f"{FIX}/svc.xml")
     assert dialect == "service"
     return {r.asDict().get("id") or r.asDict().get("sid"): {
         k: v for k, v in r.asDict().items() if v is not None
@@ -196,7 +196,7 @@ def test_dialect_detection_order():
 
 @pytest.fixture(scope="module")
 def nested_rows(spark):
-    df, dialect = read_xml_records(spark, f"{FIX}/nested.xml")
+    df, dialect, _ = read_xml_records(spark, f"{FIX}/nested.xml")
     return _rows(flatten_offer_records(df, dialect), "attr_id")
 
 
@@ -267,7 +267,7 @@ def test_russian_stock_empty_rows_and_unparseable(spark, tmp_path):
     )
     p = tmp_path / "stock_edge.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect = read_xml_records(spark, str(p))
+    df, dialect, _ = read_xml_records(spark, str(p))
     assert dialect == "russian"
     rows = _rows(flatten_russian_records(df), "ID")
 
@@ -298,7 +298,7 @@ def test_pinned_divergence_deep_repeated_struct_first_element(spark, tmp_path):
     )
     p = tmp_path / "deep.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect = read_xml_records(spark, str(p))
+    df, dialect, _ = read_xml_records(spark, str(p))
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     d1 = rows["D1"]
     assert d1["xdepth"] == "1"  # first block's subtree fills
@@ -318,7 +318,7 @@ def test_pinned_divergence_param_name_reappend_top_level_only(spark, tmp_path):
     )
     p = tmp_path / "pn.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect = read_xml_records(spark, str(p))
+    df, dialect, _ = read_xml_records(spark, str(p))
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     q1 = rows["Q1"]
     assert q1["param_name_size"] == "42?, 42"  # top-level: quirk applies
@@ -337,7 +337,7 @@ def test_repeated_child_with_text_and_attributes(spark, tmp_path):
     )
     p = tmp_path / "repeated.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect = read_xml_records(spark, str(p))
+    df, dialect, _ = read_xml_records(spark, str(p))
     r1 = _rows(flatten_offer_records(df, dialect), "attr_id")["R1"]
     assert r1["barcode"] == "1///2"
     assert r1["barcode_type"] == "a///b///c"
@@ -353,7 +353,7 @@ def test_self_closing_params_pivot_to_empty(spark, tmp_path):
     )
     p = tmp_path / "empty_params.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect = read_xml_records(spark, str(p))
+    df, dialect, _ = read_xml_records(spark, str(p))
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     assert rows["E1"]["Цвет"] == "" and "Вес" not in rows["E1"]
     assert rows["E2"]["Цвет"] == "" and rows["E2"]["Вес"] == ""
@@ -369,7 +369,7 @@ def test_empty_feature_pivots_to_empty(spark, tmp_path):
     )
     p = tmp_path / "empty_feature.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect = read_xml_records(spark, str(p))
+    df, dialect, _ = read_xml_records(spark, str(p))
     assert dialect == "product"
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     assert rows["F1"]["feature_Стиль"] == ""

@@ -83,7 +83,9 @@ def xml_to_csv(
     # outlive the persisted frames read from them: the stack unpersists
     # them first
     with _utf8_feed(src) as feed, contextlib.ExitStack() as persisted:
-        records, detected, parsed = read_xml_records(spark, feed, dialect, keep=persisted)
+        records, detected = read_xml_records(spark, feed, persisted, dialect)
+        # the file the records parse from: the feed or its repaired copy
+        (parsed,) = records.inputFiles()
         # document order, taken before anything reshuffles the scan: the
         # file is one scan partition, so its ids rise with the document
         records = records.withColumn(ROW_ORDER, F.monotonically_increasing_id())
@@ -103,7 +105,6 @@ def xml_to_csv(
             paths = None
             if detected == "offer":
                 # driver rows, or an oversized (so non-empty) frame
-                # read from the text the records came from, repaired or not
                 cats = read_categories(spark, parsed)
                 if isinstance(cats, DataFrame) or cats:
                     paths = build_category_paths(cats, skip_undefined_names=True)
@@ -228,8 +229,8 @@ def _pdf_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
 
 
 def _xml_to_json(spark: SparkSession, src: str, dst: str, options: dict) -> str:
-    with _utf8_feed(src) as feed:
-        records, _, _ = read_xml_records(spark, feed, options.get("dialect"))
+    with _utf8_feed(src) as feed, contextlib.ExitStack() as keep:
+        records, _ = read_xml_records(spark, feed, keep, options.get("dialect"))
         return write_json_documents(xml_records_to_json(records), dst)
 
 

@@ -218,11 +218,11 @@ def _utf8_feed(path: str) -> Iterator[str]:
 def read_xml_records(
     spark: SparkSession,
     path: str,
+    keep: contextlib.ExitStack,
     dialect: str | None = None,
     sample_bytes: int = 1 << 20,
-    keep: contextlib.ExitStack | None = None,
-) -> tuple[DataFrame, str, str]:
-    """Read one XML catalog file into (records_df, dialect, parsed).
+) -> tuple[DataFrame, str]:
+    """Read one XML catalog file into a (records_df, dialect) pair.
 
     ``path`` is a file Spark reads as the S2 cascade decodes it: UTF-8,
     declaring no other encoding (``_utf8_feed`` gives one for any
@@ -230,12 +230,9 @@ def read_xml_records(
     source discovers the schema and parses the records, one plain read
     of the file whatever its size. If that parse yields only corrupt
     records, the repaired text (S3, main.py:1444-1448) is re-read from
-    a UTF-8 copy. ``parsed`` is the file the records came from: ``path``
-    or that copy. Given ``keep``, the copy lives until ``keep`` closes
-    and the records stay lazy, so a category read of ``parsed`` sees
-    the repaired text, as the reference reads categories from its
-    repaired tree (main.py:1477-1484); without it, the records are
-    materialised before the copy is deleted and ``parsed`` is ``path``.
+    a UTF-8 copy that lives until ``keep`` closes, so the records stay
+    lazy either way; ``records_df.inputFiles()`` names the file they
+    parse from, ``path`` or that copy.
     """
     with open(path, "rb") as f:
         sample = _decode(f.read(sample_bytes), final=False)
@@ -245,33 +242,26 @@ def read_xml_records(
     row_tag = _ROW_TAGS[dialect]
 
     df = _load(spark, row_tag, path)
-    if _parsed(df):
-        return df, dialect, path
-    # parse produced nothing usable -> repair and retry
-    with open(path, "rb") as f:
-        text = decode_bytes(f.read())
-    with contextlib.ExitStack() as own:
-        copy = (own if keep is None else keep).enter_context(
-            _utf8_copy([repair_xml_text(clean_xml_text(text))])
-        )
+    if not _parsed(df):
+        # parse produced nothing usable -> repair and retry
+        with open(path, "rb") as f:
+            text = decode_bytes(f.read())
+        copy = keep.enter_context(_utf8_copy([repair_xml_text(clean_xml_text(text))]))
         df = _load(spark, row_tag, copy)
         if not _parsed(df):
             raise ValueError("XML could not be parsed, even after repair.")
-        if keep is None:
-            # the scan is lazy: materialise it before the copy is deleted
-            return df.localCheckpoint(eager=True), dialect, path
-    return df, dialect, copy
+    return df, dialect
 
 
 def read_categories(spark: SparkSession, path: str) -> list[Row] | DataFrame:
     """Category dimension (id, parent_id, name) from the <category>
     elements of ``path``, a file as ``read_xml_records`` takes it or
-    the repaired copy it parsed (reference main.py:1477-1484). One read
-    with an explicit schema, so no inference pass; a category without
-    an id is left out, since no offer can name it. A dimension of at most ``CATEGORY_MAX_ROWS`` rows
-    is returned as the driver rows of that one collect; an oversized
-    one stays a lazy frame (no more than ``CATEGORY_MAX_ROWS + 1`` rows
-    ever reach the driver)."""
+    the repaired copy it parsed (reference main.py:1477-1484). One
+    read with an explicit schema, so no inference pass; a category
+    without an id is left out, since no offer can name it. A dimension
+    of at most ``CATEGORY_MAX_ROWS`` rows is returned as the driver
+    rows of that one collect; an oversized one stays a lazy frame (no
+    more than ``CATEGORY_MAX_ROWS + 1`` rows ever reach the driver)."""
     dim = (
         spark.read.format("xml")
         .option("rowTag", "category")

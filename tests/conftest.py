@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from magicxml_spark.session import get_spark
@@ -19,3 +21,11 @@ def spark():
     s = get_spark("magicxml-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def keep():
+    """The stack ``read_xml_records`` enters a repaired copy into: it
+    outlives every frame a test reads from a feed."""
+    with contextlib.ExitStack() as stack:
+        yield stack

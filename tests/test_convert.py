@@ -432,6 +432,16 @@ def test_category_edge_feeds(spark, tmp_path, case):
     assert open(out, encoding="utf-8", newline="").read() == "\ufeff" + want
 
 
+def test_xml_to_json_reads_the_repaired_copy(spark, tmp_path):
+    """A feed that parses only after repair is written from its repaired
+    copy, which lives until the route has written the JSON."""
+    src = tmp_path / "feed.xml"
+    src.write_text(_offer_feed('<category id="1">Root</category>', "A & B"), encoding="utf-8")
+    out = convert_file(spark, str(src), str(tmp_path / "feed.json"))
+    with open(out, encoding="utf-8") as f:
+        assert sorted(d["name"] for d in json.load(f)) == ["A & B", "N2"]
+
+
 def test_read_categories_launches_one_job(spark):
     from magicxml_spark.sources.xml_source import read_categories
 
@@ -646,7 +656,7 @@ def _content(path):
     return open(path, "rb").read()
 
 
-def _direct(spark, src, dst):
+def _direct(spark, keep, src, dst):
     """Each new route's converter called directly, writing ``dst``."""
     from magicxml_spark.sinks.csv_sink import write_csv
     from magicxml_spark.sinks.json_sink import (
@@ -672,7 +682,7 @@ def _direct(spark, src, dst):
     if s in (".xlsx", ".xls"):
         return excel_to_pdf(spark, src, dst)
     if s == ".xml":
-        return write_json_documents(xml_records_to_json(read_xml_records(spark, src)[0]), dst)
+        return write_json_documents(xml_records_to_json(read_xml_records(spark, src, keep)[0]), dst)
     binary = bd.read_binary(spark, src)
     if d == ".pdf":
         return payload(bd.image_to_pdf(binary), "pdf_content")
@@ -708,14 +718,14 @@ ROUTE_CASES = [
 @pytest.mark.parametrize(
     "name,target", ROUTE_CASES, ids=[f"{n}->{t}" for n, t in ROUTE_CASES]
 )
-def test_convert_file_route_matches_converter(spark, tmp_path, name, target):
+def test_convert_file_route_matches_converter(spark, keep, tmp_path, name, target):
     _make_sources(tmp_path)
     src = str(tmp_path / name)
     (tmp_path / "via").mkdir()
     (tmp_path / "direct").mkdir()
     stem = os.path.splitext(name)[0]
     got = convert_file(spark, src, str(tmp_path / "via" / f"{stem}{target}"))
-    want = _direct(spark, src, str(tmp_path / "direct" / f"{stem}{target}"))
+    want = _direct(spark, keep, src, str(tmp_path / "direct" / f"{stem}{target}"))
     assert os.path.splitext(got)[1] == os.path.splitext(want)[1]
     assert _content(got) == _content(want)
     if name == "many.pdf":

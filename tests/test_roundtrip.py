@@ -45,10 +45,10 @@ def csv_df(spark):
     )
 
 
-def test_csv_to_yml_to_rows_roundtrip(spark, csv_df, tmp_path_factory):
+def test_csv_to_yml_to_rows_roundtrip(spark, keep, csv_df, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("rt") / "rt.xml")
     write_yml_catalog(csv_df, out)
-    records, dialect, _ = read_xml_records(spark, out)
+    records, dialect = read_xml_records(spark, out, keep)
     assert dialect == "offer"
     # category dimension regenerated with dense ids
     from magicxml_spark.operators.category_path import build_category_paths

@@ -49,6 +49,9 @@ def test_shuffle_map_output_written_once(spark):
     written = _jvm_write_bytes(spark) - w0
     data = sum(n for p, n in _shuffle_data_files(spark).items() if p not in before)
     assert data > 2 << 20, data
+    if written < data // 2:
+        # tmpfs pages never reach block writeback, so write_bytes stays 0
+        pytest.skip(f"local dirs not on a block device: {written} bytes written for {data}")
     assert written / data < 1.5, (written, data)
 
 

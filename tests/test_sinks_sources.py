@@ -33,10 +33,10 @@ def test_prune_columns(spark):
     assert cols == sorted(cols)  # Q8
 
 
-def test_xml_to_json_conventions(spark):
-    df, _, _ = __import__(
+def test_xml_to_json_conventions(spark, keep):
+    df, _ = __import__(
         "magicxml_spark.sources.xml_source", fromlist=["read_xml_records"]
-    ).read_xml_records(spark, f"{FIX}/cat.xml")
+    ).read_xml_records(spark, f"{FIX}/cat.xml", keep)
     docs = [json.loads(r["json"]) for r in xml_records_to_json(df).collect()]
     byid = {d["@id"]: d for d in docs}
     assert byid["101"]["@available"] == "1"  # @attr prefix (K7)

@@ -30,8 +30,8 @@ def _rows(df, key):
 
 
 @pytest.fixture(scope="module")
-def offer_rows(spark):
-    df, dialect, _ = read_xml_records(spark, f"{FIX}/cat.xml")
+def offer_rows(spark, keep):
+    df, dialect = read_xml_records(spark, f"{FIX}/cat.xml", keep)
     assert dialect == "offer"
     cats = read_categories(spark, f"{FIX}/cat.xml")
     paths = build_category_paths(cats, skip_undefined_names=True)
@@ -81,12 +81,12 @@ def test_offer_deep_descendants_and_attr_images(offer_rows):
 
 
 @pytest.fixture(scope="module")
-def product_rows(spark):
+def product_rows(spark, keep):
     # NB: auto-detection says 'offer' here because a nested <offer>
     # exists — the reference behaves identically (main.py:1464 probes
     # .//offer first); product mode is reached via the preset_id
     # override (main.py:2292), which maps to the explicit dialect arg.
-    df, dialect, _ = read_xml_records(spark, f"{FIX}/products.xml", dialect="product")
+    df, dialect = read_xml_records(spark, f"{FIX}/products.xml", keep, dialect="product")
     assert dialect == "product"
     return _rows(flatten_offer_records(df, dialect), "attr_id")
 
@@ -114,8 +114,8 @@ def test_product_image_predicate(product_rows):
 
 
 @pytest.fixture(scope="module")
-def russian_rows(spark):
-    df, dialect, _ = read_xml_records(spark, f"{FIX}/c1.xml")
+def russian_rows(spark, keep):
+    df, dialect = read_xml_records(spark, f"{FIX}/c1.xml", keep)
     assert dialect == "russian"
     return _rows(flatten_russian_records(df), "ID")
 
@@ -151,13 +151,13 @@ def test_russian_renames_and_sanitize(russian_rows):
     assert e["id"] == "E-1"
 
 
-def test_russian_plan_stays_small(spark):
+def test_russian_plan_stays_small(spark, keep):
     # Why a bound: each ТЧ part's rows are stripped once in a projection
     # of their own and R7 re-dedups column references. An expression
     # re-inlined into every rule that reads it grows this plan about
     # fivefold (94,350 characters), and the driver builds, analyses and
     # optimizes that plan on every 1C conversion.
-    df, _, _ = read_xml_records(spark, f"{FIX}/c1.xml")
+    df, _ = read_xml_records(spark, f"{FIX}/c1.xml", keep)
     plan = flatten_russian_records(df)._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan) < 40_000
 
@@ -169,8 +169,8 @@ def test_russian_category_from_site_groups(russian_rows):
 
 
 @pytest.fixture(scope="module")
-def service_rows(spark):
-    df, dialect, _ = read_xml_records(spark, f"{FIX}/svc.xml")
+def service_rows(spark, keep):
+    df, dialect = read_xml_records(spark, f"{FIX}/svc.xml", keep)
     assert dialect == "service"
     return {r.asDict().get("id") or r.asDict().get("sid"): {
         k: v for k, v in r.asDict().items() if v is not None
@@ -195,8 +195,8 @@ def test_dialect_detection_order():
 
 
 @pytest.fixture(scope="module")
-def nested_rows(spark):
-    df, dialect, _ = read_xml_records(spark, f"{FIX}/nested.xml")
+def nested_rows(spark, keep):
+    df, dialect = read_xml_records(spark, f"{FIX}/nested.xml", keep)
     return _rows(flatten_offer_records(df, dialect), "attr_id")
 
 
@@ -244,7 +244,7 @@ def test_pictures_whitespace_padded_urls(spark):
     )
 
 
-def test_russian_stock_empty_rows_and_unparseable(spark, tmp_path):
+def test_russian_stock_empty_rows_and_unparseable(spark, keep, tmp_path):
     """ADVICE r1 parity: an Остатки part whose rows are all empty builds
     an empty tc_data in the reference (main.py:339-347), so NO stock
     columns are emitted and available falls through to the '1' default;
@@ -267,7 +267,7 @@ def test_russian_stock_empty_rows_and_unparseable(spark, tmp_path):
     )
     p = tmp_path / "stock_edge.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect, _ = read_xml_records(spark, str(p))
+    df, dialect = read_xml_records(spark, str(p), keep)
     assert dialect == "russian"
     rows = _rows(flatten_russian_records(df), "ID")
 
@@ -282,7 +282,7 @@ def test_russian_stock_empty_rows_and_unparseable(spark, tmp_path):
     assert e10["stock_details"] == "W: N/A"
 
 
-def test_pinned_divergence_deep_repeated_struct_first_element(spark, tmp_path):
+def test_pinned_divergence_deep_repeated_struct_first_element(spark, keep, tmp_path):
     """PINNED APPROXIMATION (flatten.py module docstring): a repeated
     nested STRUCT uses its FIRST element's subtree for deep first-wins
     fill. The reference's iter() walks every occurrence, so a field
@@ -298,14 +298,14 @@ def test_pinned_divergence_deep_repeated_struct_first_element(spark, tmp_path):
     )
     p = tmp_path / "deep.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect, _ = read_xml_records(spark, str(p))
+    df, dialect = read_xml_records(spark, str(p), keep)
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     d1 = rows["D1"]
     assert d1["xdepth"] == "1"  # first block's subtree fills
     assert "ydepth" not in d1  # second block's subtree is NOT walked
 
 
-def test_pinned_divergence_param_name_reappend_top_level_only(spark, tmp_path):
+def test_pinned_divergence_param_name_reappend_top_level_only(spark, keep, tmp_path):
     """PINNED APPROXIMATION: the P15 'V, V' re-append quirk
     (main.py:268-282) fires for TOP-LEVEL param_name_* tags only. A
     nested one is still flattened (deep first-wins) but without the
@@ -318,14 +318,14 @@ def test_pinned_divergence_param_name_reappend_top_level_only(spark, tmp_path):
     )
     p = tmp_path / "pn.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect, _ = read_xml_records(spark, str(p))
+    df, dialect = read_xml_records(spark, str(p), keep)
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     q1 = rows["Q1"]
     assert q1["param_name_size"] == "42?, 42"  # top-level: quirk applies
     assert q1["param_name_color"] == "red"  # nested: plain fill, no quirk
 
 
-def test_repeated_child_with_text_and_attributes(spark, tmp_path):
+def test_repeated_child_with_text_and_attributes(spark, keep, tmp_path):
     """A repeated direct child with text and attributes: its texts are
     '///'-joined with the reference's order-preserving dedup (P4), its
     attribute values '///'-joined as they come."""
@@ -337,13 +337,13 @@ def test_repeated_child_with_text_and_attributes(spark, tmp_path):
     )
     p = tmp_path / "repeated.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect, _ = read_xml_records(spark, str(p))
+    df, dialect = read_xml_records(spark, str(p), keep)
     r1 = _rows(flatten_offer_records(df, dialect), "attr_id")["R1"]
     assert r1["barcode"] == "1///2"
     assert r1["barcode_type"] == "a///b///c"
 
 
-def test_self_closing_params_pivot_to_empty(spark, tmp_path):
+def test_self_closing_params_pivot_to_empty(spark, keep, tmp_path):
     """Spark infers no ``_VALUE`` for a ``<param>`` that is empty in
     every record; its pivot column reads as an empty value."""
     doc = (
@@ -353,13 +353,13 @@ def test_self_closing_params_pivot_to_empty(spark, tmp_path):
     )
     p = tmp_path / "empty_params.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect, _ = read_xml_records(spark, str(p))
+    df, dialect = read_xml_records(spark, str(p), keep)
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     assert rows["E1"]["Цвет"] == "" and "Вес" not in rows["E1"]
     assert rows["E2"]["Цвет"] == "" and rows["E2"]["Вес"] == ""
 
 
-def test_empty_feature_pivots_to_empty(spark, tmp_path):
+def test_empty_feature_pivots_to_empty(spark, keep, tmp_path):
     """A product whose only ``<feature>`` is empty: no ``_VALUE`` field
     is inferred, and its pivot column reads as an empty value."""
     doc = (
@@ -369,7 +369,7 @@ def test_empty_feature_pivots_to_empty(spark, tmp_path):
     )
     p = tmp_path / "empty_feature.xml"
     p.write_text(doc, encoding="utf-8")
-    df, dialect, _ = read_xml_records(spark, str(p))
+    df, dialect = read_xml_records(spark, str(p), keep)
     assert dialect == "product"
     rows = _rows(flatten_offer_records(df, dialect), "attr_id")
     assert rows["F1"]["feature_Стиль"] == ""

@@ -13,9 +13,9 @@ Scale notes:
   explode of both directions), not a self-union — the candidate-pair
   plan upstream (shingle -> minhash -> band join) is usually the most
   expensive input here and must not execute twice.
-- Iteration parallelism is right-sized to the materialized edge count
-  (``loop_partitions="auto"``): a near-dup graph is orders of magnitude
-  smaller than the corpus, and running every round's shuffles at the
+- Iteration parallelism is right-sized to the materialized edge count:
+  a near-dup graph is orders of magnitude smaller than the corpus, and
+  running every round's shuffles at the
   corpus-sized session parallelism spends more time scheduling empty
   tasks than propagating labels. The heuristic never exceeds the
   session's configured parallelism, so cluster-scale sessions keep
@@ -82,13 +82,10 @@ def _solve_single_task(edges: DataFrame) -> DataFrame:
 def dedup_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
-    id_col: str = "id",
-    max_rounds: int = 64,
-    loop_partitions: int | str | None = "auto",
     local_solve_edges: int = _LOCAL_SOLVE_EDGES,
 ) -> DataFrame:
     """(id, cluster_id) with cluster_id = min node id reachable through
-    the undirected pair graph. ``nodes``: one column ``id_col``;
+    the undirected pair graph. ``nodes``: a column ``id``;
     ``pairs``: columns (id_a, id_b)."""
     spark = nodes.sparkSession
     # both directions in one pass over pairs: the pairs subtree (often a
@@ -114,20 +111,18 @@ def dedup_clusters(
         # an iterative loop; components of nodes outside any pair stay
         # themselves (left join -> coalesce)
         comp = _solve_single_task(edges)
-        return nodes.select(F.col(id_col).alias("id")).join(
-            comp, "id", "left"
-        ).select("id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id"))
-    if loop_partitions == "auto":
-        loop_partitions = max(
-            1, min(int(old_parts), math.ceil(n_edges / _EDGES_PER_PARTITION))
+        return nodes.select("id").join(comp, "id", "left").select(
+            "id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id")
         )
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("cluster_id"))
+    loop_partitions = max(
+        1, min(int(old_parts), math.ceil(n_edges / _EDGES_PER_PARTITION))
+    )
+    labels = nodes.select("id", F.col("id").alias("cluster_id"))
     prev_sum = None
 
-    if loop_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
     try:
-        for _ in range(max_rounds):
+        for _ in range(64):
             # push each node's label to its neighbors, keep the minimum
             pushed = edges.join(labels, edges["src"] == labels["id"]).select(
                 F.col("dst").alias("id"), F.col("cluster_id")

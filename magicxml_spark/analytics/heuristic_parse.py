@@ -158,16 +158,16 @@ def heuristic_dependency_parse(
     )
 
 
-def heuristic_parse_oracle_sql(doc_filter: str = "doc_id % 17 = 0") -> str:
+def heuristic_parse_oracle_sql() -> str:
     """DuckDB twin over the documents table: dialect-specific
     tokenization (range + 1-based list index), then the SHARED rule
-    fragments verbatim. ``doc_filter`` mirrors the gate query's
+    fragments verbatim. ``doc_id % 17 = 0`` mirrors the gate query's
     subsample (token-level output is per-token rows; the sample keeps
     the compared frame a few thousand rows)."""
     return f"""
     WITH w AS (SELECT doc_id,
                       list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS w
-               FROM documents WHERE {doc_filter}),
+               FROM documents WHERE doc_id % 17 = 0),
     ix AS (SELECT doc_id, w, unnest(range(0, len(w))) AS token_index FROM w),
     tok AS (SELECT doc_id, CAST(token_index AS INTEGER) AS token_index,
                    w[token_index + 1] AS token

@@ -17,29 +17,25 @@ from pyspark.sql import functions as F
 
 def tfidf_vectors(
     df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "tfidf",
     num_features: int = 1 << 12,
 ) -> DataFrame:
     """Tokenize -> HashingTF -> IDF. Returns df + a Vector column."""
     from pyspark.ml.feature import IDF, HashingTF, RegexTokenizer
 
     tok = RegexTokenizer(
-        inputCol=text_col, outputCol="_tokens", pattern="\\s+", toLowercase=True
+        inputCol="text", outputCol="_tokens", pattern="\\s+", toLowercase=True
     )
     tf = HashingTF(inputCol="_tokens", outputCol="_tf", numFeatures=num_features)
     with_tf = tf.transform(tok.transform(df))
-    idf = IDF(inputCol="_tf", outputCol=out_col).fit(with_tf)
+    idf = IDF(inputCol="_tf", outputCol="tfidf").fit(with_tf)
     return idf.transform(with_tf).drop("_tokens", "_tf")
 
 
-def pca_project(
-    df: DataFrame, vec_col: str = "tfidf", out_col: str = "pca", k: int = 3
-) -> DataFrame:
+def pca_project(df: DataFrame, k: int = 3) -> DataFrame:
     """PCA(k) over a Vector column (reference projects TF-IDF to 3-D)."""
     from pyspark.ml.feature import PCA
 
-    model = PCA(k=k, inputCol=vec_col, outputCol=out_col).fit(df)
+    model = PCA(k=k, inputCol="tfidf", outputCol="pca").fit(df)
     return model.transform(df)
 
 
@@ -213,11 +209,10 @@ def score_quality(
     v: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    out_col: str = "quality_pred",
 ) -> DataFrame:
     """Apply a trained quality classifier corpus-wide using the
     training vocabulary (term -> idx join, same dense assembly).
-    Adds ``out_col`` (0/1 prediction) and ``quality_prob``
+    Adds ``quality_pred`` (0/1 prediction) and ``quality_prob``
     (P(label=1)). The model is coefficient-sized; scoring is one
     explode + one broadcast join + the JVM model transform — no
     Python UDF anywhere."""
@@ -226,7 +221,7 @@ def score_quality(
     feats = _assemble_bow(df, vocab, v, id_col, text_col)
     scored = model.transform(feats)
     return (
-        scored.withColumn(out_col, F.col("prediction").cast("int"))
+        scored.withColumn("quality_pred", F.col("prediction").cast("int"))
         .withColumn(
             "quality_prob",
             F.round(F.element_at(vector_to_array(F.col("probability")), 2), 6),

@@ -46,25 +46,19 @@ def strip_ws(col: Column | str) -> Column:
 # reference's manual "append if unseen" loop.
 
 
-def distinct_join(items: Column, delimiter: str = "///") -> Column:
+def distinct_join(items: Column) -> Column:
     """P4 over an array: strip each item, drop the empty ones, keep each
-    first occurrence, join on ``delimiter``; null when nothing is left."""
+    first occurrence, join on "///"; null when nothing is left."""
     # NB: lambda must be single-arg — passing F.trim directly binds its
     # optional second parameter to the array index.
     cleaned = F.filter(F.transform(items, lambda x: strip_ws(x)), lambda x: x != F.lit(""))
-    return F.nullif(F.array_join(F.array_distinct(cleaned), delimiter), F.lit(""))
+    return F.nullif(F.array_join(F.array_distinct(cleaned), "///"), F.lit(""))
 
 
-def dedup_delimited(col: Column | str, delimiter: str = "///") -> Column:
+def dedup_delimited(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    # split() takes a Java regex; quote the delimiter so any literal works.
-    items = F.split(c, _regex_quote(delimiter))
-    return F.coalesce(distinct_join(items, delimiter), F.lit(""))
-
-
-def _regex_quote(s: str) -> str:
-    special = r"\.[]{}()*+-?^$|"
-    return "".join(("\\" + ch) if ch in special else ch for ch in s)
+    # split() takes a Java regex; "///" has no metacharacter
+    return F.coalesce(distinct_join(F.split(c, "///")), F.lit(""))
 
 
 # --- P10: sanitize_name ---------------------------------------------------
@@ -139,12 +133,12 @@ def strip_size_question(key: Column | str, value: Column | str) -> Column:
 # coalesce over candidates with ''/'Undefined' treated as missing.
 
 
-def first_wins(*cols: Column | str, default: str = "") -> Column:
+def first_wins(*cols: Column | str) -> Column:
     normed = [
         F.nullif(F.nullif(F.col(c) if isinstance(c, str) else c, F.lit("")), F.lit("Undefined"))
         for c in cols
     ]
-    return F.coalesce(*normed, F.lit(default))
+    return F.coalesce(*normed, F.lit(""))
 
 
 # --- P18: 'available' default --------------------------------------------

@@ -38,27 +38,21 @@ def asof_join_backward(
     left_ts: str,
     right_ts: str,
     payload: list[str],
-    tie_break: str | None = None,
 ) -> DataFrame:
     """For every left row, attach ``payload`` columns from the latest
     right row with the same key and ``right_ts <= left_ts`` (nulls when
-    no such row). Column names: left columns unchanged; payload columns
+    no such row). Right rows with equal key and timestamp have no
+    defined order. Column names: left columns unchanged; payload columns
     keep their right-side names (must not collide)."""
     for c in payload:
         if c in left.columns:
             raise ValueError(f"payload column collides with left side: {c}")
 
-    extra = (
-        [F.col(tie_break).alias("_asof_tie")]
-        if tie_break is not None and tie_break not in payload
-        else []
-    )
     r = right.select(
         F.col(right_on).alias("_asof_key"),
         F.col(right_ts).alias("_asof_ts"),
         F.lit(0).alias("_asof_side"),
         *[F.col(c) for c in payload],
-        *extra,
     )
     l = left.select(
         "*",
@@ -68,15 +62,9 @@ def asof_join_backward(
     )
     both = l.unionByName(r, allowMissingColumns=True)
 
-    order = [F.col("_asof_ts"), F.col("_asof_side")]
-    if tie_break is not None:
-        # right rows order by tie_break within an equal timestamp so
-        # "latest" is well-defined even for exact-duplicate timestamps
-        tb = tie_break if tie_break in payload else "_asof_tie"
-        order.append(F.col(tb).asc_nulls_first())
     w = (
         Window.partitionBy("_asof_key")
-        .orderBy(*order)
+        .orderBy(F.col("_asof_ts"), F.col("_asof_side"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = both.select(
@@ -96,12 +84,11 @@ def interval_lookup_join(
     facts: DataFrame,
     dim: DataFrame | list[dict],
     value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     max_compiled_intervals: int = 256,
 ) -> DataFrame:
     """Range join of a fact table against a SMALL interval dimension
-    (``lo <= value < hi``), compiled to a constant lookup expression.
+    (``lo <= value < hi`` over the dimension's ``lo``/``hi`` columns),
+    compiled to a constant lookup expression.
 
     Spark plans a non-equi join against a broadcast dimension as
     BroadcastNestedLoopJoin — every fact row linearly evaluates every
@@ -139,20 +126,20 @@ def interval_lookup_join(
             f"interval dimension exceeds max_compiled_intervals="
             f"{max_compiled_intervals}; use a plain non-equi join"
         )
-    ivs = sorted(rows, key=lambda r: (r[lo_col], r[hi_col]))
+    ivs = sorted(rows, key=lambda r: (r["lo"], r["hi"]))
     for a, b in zip(ivs, ivs[1:]):
-        if b[lo_col] < a[hi_col]:
+        if b["lo"] < a["hi"]:
             raise ValueError(
-                f"overlapping intervals [{a[lo_col]}, {a[hi_col]}) and "
-                f"[{b[lo_col]}, {b[hi_col]}): compiled lookup would drop "
+                f"overlapping intervals [{a['lo']}, {a['hi']}) and "
+                f"[{b['lo']}, {b['hi']}): compiled lookup would drop "
                 "the duplicate match a join would emit"
             )
     v = F.col(value_col)
-    payload_cols = [c for c in dim_columns if c not in (lo_col, hi_col)]
+    payload_cols = [c for c in dim_columns if c not in ("lo", "hi")]
     # the BNLJ this replaces keeps both sides' columns distinct; a
     # withColumn with a clashing name would silently OVERWRITE the fact
     # column — refuse instead of corrupting
-    clashes = set(facts.columns) & set([*payload_cols, lo_col, hi_col])
+    clashes = set(facts.columns) & set([*payload_cols, "lo", "hi"])
     if clashes:
         raise ValueError(
             f"fact columns {sorted(clashes)} collide with interval-dimension "
@@ -168,10 +155,10 @@ def interval_lookup_join(
     idx = F.lit(None).cast("int")
     for i, r in enumerate(ivs):
         idx = F.when(
-            (v >= F.lit(r[lo_col])) & (v < F.lit(r[hi_col])), F.lit(i)
+            (v >= F.lit(r["lo"])) & (v < F.lit(r["hi"])), F.lit(i)
         ).otherwise(idx)
     out = facts.withColumn("_iv_idx", idx).filter(F.col("_iv_idx").isNotNull())
-    for c in [*payload_cols, lo_col, hi_col]:
+    for c in [*payload_cols, "lo", "hi"]:
         expr = F.lit(None)
         for i, r in enumerate(ivs):
             expr = F.when(F.col("_iv_idx") == i, F.lit(r[c])).otherwise(expr)

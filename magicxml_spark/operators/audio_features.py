@@ -28,13 +28,10 @@ from magicxml_spark.operators.dedup import (  # noqa: E402
 )
 
 
-def mel_filterbank(
-    n_mels: int, n_fft: int, rate: int, fmin: float = 0.0, fmax: float | None = None
-) -> "np.ndarray":
-    """(n_mels, n_fft//2 + 1) triangular filters on the HTK mel scale.
-    Filters peak at 1.0 (no area normalization — matches the classic
-    HTK front-end)."""
-    fmax = fmax if fmax is not None else rate / 2.0
+def mel_filterbank(n_mels: int, n_fft: int, rate: int) -> "np.ndarray":
+    """(n_mels, n_fft//2 + 1) triangular filters on the HTK mel scale,
+    from 0 Hz to Nyquist. Filters peak at 1.0 (no area normalization —
+    matches the classic HTK front-end)."""
 
     def to_mel(f):
         return 2595.0 * np.log10(1.0 + np.asarray(f, dtype=np.float64) / 700.0)
@@ -42,7 +39,7 @@ def mel_filterbank(
     def from_mel(m):
         return 700.0 * (10.0 ** (np.asarray(m, dtype=np.float64) / 2595.0) - 1.0)
 
-    mel_pts = np.linspace(to_mel(fmin), to_mel(fmax), n_mels + 2)
+    mel_pts = np.linspace(0.0, to_mel(rate / 2.0), n_mels + 2)
     hz_pts = from_mel(mel_pts)
     bin_freqs = np.arange(n_fft // 2 + 1) * (rate / n_fft)
     fb = np.zeros((n_mels, n_fft // 2 + 1))
@@ -60,8 +57,6 @@ def logmel_frames(
     n_fft: int = 512,
     hop: int = 256,
     n_mels: int = 40,
-    fmin: float = 0.0,
-    fmax: float | None = None,
 ) -> "np.ndarray":
     """(n_frames, n_mels) log-mel power frames from mono float PCM in
     [-1, 1]. Hann window (periodic), rfft power, triangular mel pool,
@@ -74,7 +69,7 @@ def logmel_frames(
     idx = np.arange(n_fft)[None, :] + hop * np.arange(n_frames)[:, None]
     frames = x[idx] * win[None, :]
     power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-    fb = mel_filterbank(n_mels, n_fft, rate, fmin, fmax)
+    fb = mel_filterbank(n_mels, n_fft, rate)
     return np.log(np.maximum(power @ fb.T, 1e-10))
 
 
@@ -163,7 +158,6 @@ def audio_near_dup_pairs(
     id_col: str = "path",
     content_col: str = "content",
     min_jaccard: float = 0.5,
-    n_bands: int = 4,
     max_bucket_size: int | None = _DEFAULT_CAP,
     **fp_kwargs,
 ) -> DataFrame:
@@ -177,7 +171,7 @@ def audio_near_dup_pairs(
 
     docs = audio_fingerprint_docs(binary_df, id_col, content_col, **fp_kwargs)
     cands = lsh_candidate_pairs(
-        docs, "path", "text", n_bands=n_bands, shingle_k=1,
+        docs, "path", "text", shingle_k=1,
         max_bucket_size=max_bucket_size,
     )
     return jaccard_pairs(

@@ -31,17 +31,22 @@ from pyspark.sql import functions as F
 
 PATH_SEP = "///"
 
+# Chains deeper than this keep a partial path of exactly MAX_DEPTH
+# leaf-anchored names — the same truncation in all three strategies
+# (driver walk, distributed loop, recursive CTE), so results don't
+# shift with the dimension's size. It also bounds a walk over a
+# malformed (cyclic or very deep) dimension.
+MAX_DEPTH = 64
+
 # category_path_lookup ceiling: the pairs become ONE constant-folded
 # map literal in the plan, so the dimension must stay plan-embeddable.
 DEFAULT_MAX_COMPILED_PATHS = 10_000
 
 
-def _driver_walk(
-    rows, max_depth: int, sep: str, skip_undefined_names: bool
-) -> list[tuple[str, str]]:
+def _driver_walk(rows, skip_undefined_names: bool) -> list[tuple[str, str]]:
     """The reference's adjacency walk (main.py:1487-1506) over
     (id, parent_id, name) rows on the driver: root->leaf names joined
-    by ``sep``, visited-set cycle guard, max_depth truncation; an empty
+    by ``PATH_SEP``, visited-set cycle guard, MAX_DEPTH truncation; an empty
     parent is none, a missing name 'Undefined'. The single
     implementation behind both the driver rows of
     ``build_category_paths`` and the compiled lookup column."""
@@ -50,13 +55,13 @@ def _driver_walk(
     out = []
     for cid in names:
         path, current, visited = [], cid, set()
-        # len(visited) < max_depth: identical truncation contract as
-        # the distributed loop and the CTE — at most max_depth names
+        # len(visited) < MAX_DEPTH: identical truncation contract as
+        # the distributed loop and the CTE — at most MAX_DEPTH names
         while (
             current
             and current in names
             and current not in visited
-            and len(visited) < max_depth
+            and len(visited) < MAX_DEPTH
         ):
             visited.add(current)
             name = names[current]
@@ -66,7 +71,7 @@ def _driver_walk(
         if not path:
             value = names[cid]
         else:
-            value = sep.join(reversed(path))
+            value = PATH_SEP.join(reversed(path))
         out.append((cid, value))
     return out
 
@@ -74,12 +79,6 @@ def _driver_walk(
 def category_path_lookup(
     categories: DataFrame,
     key: Column | str,
-    id_col: str = "id",
-    parent_col: str = "parent_id",
-    name_col: str = "name",
-    max_depth: int = 64,
-    sep: str = PATH_SEP,
-    skip_undefined_names: bool = False,
     max_compiled_rows: int = DEFAULT_MAX_COMPILED_PATHS,
 ) -> Column:
     """Compile the (small) category dimension into a single map-literal
@@ -101,7 +100,7 @@ def category_path_lookup(
     literal map must stay small.
     """
     dim = categories.select(
-        *[F.col(c).cast("string") for c in (id_col, parent_col, name_col)]
+        *[F.col(c).cast("string") for c in ("id", "parent_id", "name")]
     )
     rows = dim.take(max_compiled_rows + 1)
     if len(rows) > max_compiled_rows:
@@ -109,7 +108,7 @@ def category_path_lookup(
             f"category dimension exceeds max_compiled_rows={max_compiled_rows}; "
             "use build_category_paths() + a broadcast join instead"
         )
-    pairs = _driver_walk(rows, max_depth, sep, skip_undefined_names)
+    pairs = _driver_walk(rows, False)
     mapping = F.create_map(*[F.lit(x) for p in pairs for x in p])
     key_col = F.col(key) if isinstance(key, str) else key
     return F.element_at(mapping, key_col.cast("string"))
@@ -117,19 +116,12 @@ def category_path_lookup(
 
 def build_category_paths(
     categories: DataFrame | list[Row],
-    id_col: str = "id",
-    parent_col: str = "parent_id",
-    name_col: str = "name",
-    max_depth: int = 64,
-    sep: str = PATH_SEP,
     skip_undefined_names: bool = False,
 ) -> DataFrame:
     """Return (id, category_path) with path = root->leaf names joined by
-    ``sep``. Cycles and orphan parents terminate the walk (reference
-    main.py:1495-1499). Chains deeper than ``max_depth`` keep a partial
-    path of exactly ``max_depth`` leaf-anchored names — the same
-    truncation in all three strategies (driver walk, distributed loop,
-    recursive CTE), so results don't shift with the dimension's size.
+    ``PATH_SEP``. Cycles and orphan parents terminate the walk (reference
+    main.py:1495-1499). Chains deeper than ``MAX_DEPTH`` keep a partial
+    path of exactly ``MAX_DEPTH`` leaf-anchored names.
 
     ``skip_undefined_names=True`` reproduces the reference closure
     exactly (main.py:1487-1506): 'Undefined' names are dropped from the
@@ -144,15 +136,15 @@ def build_category_paths(
     results (tests cross-check them).
     """
     if isinstance(categories, list):
-        rows = [(r[id_col], r[parent_col], r[name_col]) for r in categories]
+        rows = [(r["id"], r["parent_id"], r["name"]) for r in categories]
         return SparkSession.active().createDataFrame(
-            _driver_walk(rows, max_depth, sep, skip_undefined_names),
+            _driver_walk(rows, skip_undefined_names),
             "id string, category_path string",
         )
     dim = categories.select(
-        F.col(id_col).cast("string").alias("_id"),
-        F.nullif(F.col(parent_col).cast("string"), F.lit("")).alias("_parent"),
-        F.coalesce(F.col(name_col).cast("string"), F.lit("Undefined")).alias("_name"),
+        F.col("id").cast("string").alias("_id"),
+        F.nullif(F.col("parent_id").cast("string"), F.lit("")).alias("_parent"),
+        F.coalesce(F.col("name").cast("string"), F.lit("Undefined")).alias("_name"),
     )
 
     # distributed loop: pin the dim so per-iteration joins don't rescan
@@ -170,10 +162,10 @@ def build_category_paths(
     )
     done = state.filter(F.col("_next").isNull()).drop("_next")
 
-    # max_depth - 1 join rounds: the seed row already holds one name, and
-    # every round appends at most one more, capping paths at max_depth
+    # MAX_DEPTH - 1 join rounds: the seed row already holds one name, and
+    # every round appends at most one more, capping paths at MAX_DEPTH
     # names — the same truncation the driver walk and the CTE apply.
-    for _ in range(max_depth - 1):
+    for _ in range(MAX_DEPTH - 1):
         active = state.filter(F.col("_next").isNotNull())
         if active.isEmpty():
             break
@@ -206,28 +198,25 @@ def build_category_paths(
         done = done.unionByName(state.filter(F.col("_next").isNull()).drop("_next"))
         state = state.filter(F.col("_next").isNotNull())
 
-    # anything still active at max_depth keeps its partial path
+    # anything still active at MAX_DEPTH keeps its partial path
     done = done.unionByName(state.drop("_next"))
     if skip_undefined_names:
         kept = F.filter(F.reverse(F.col("_names")), lambda x: x != F.lit("Undefined"))
-        path = F.when(F.size(kept) > 0, F.array_join(kept, sep)).otherwise(
+        path = F.when(F.size(kept) > 0, F.array_join(kept, PATH_SEP)).otherwise(
             # empty path -> the node's own name (reference main.py:1502-1505)
             F.element_at(F.col("_names"), 1)
         )
     else:
-        path = F.array_join(F.reverse(F.col("_names")), sep)
+        path = F.array_join(F.reverse(F.col("_names")), PATH_SEP)
     return done.select("id", path.alias("category_path"))
 
 
-def build_category_paths_sql(
-    spark, categories: DataFrame, sep: str = PATH_SEP, max_depth: int = 64
-) -> DataFrame:
+def build_category_paths_sql(spark, categories: DataFrame) -> DataFrame:
     """Declarative twin using Spark 4 recursive CTE. Expects columns
     (id, parent_id, name). Cycle-safe via depth cap.
 
-    ``max_depth`` mirrors the iterative loop's parameter: a chain deeper
-    than the cap keeps its partial (truncated) path of exactly
-    ``max_depth`` names, identically in both strategies. Cycles carry a
+    A chain deeper than ``MAX_DEPTH`` keeps its partial (truncated)
+    path of exactly ``MAX_DEPTH`` names, identically in both strategies. Cycles carry a
     ``visited`` id array through the recursion and stop at the first
     revisited id — the same visited-set guard as the driver walk and
     the distributed loop (reference main.py:1495), so all three
@@ -236,17 +225,17 @@ def build_category_paths_sql(
     Spark guards recursion independently via
     ``spark.sql.cteRecursionLevelLimit`` (default 100) and *errors*
     when the CTE would iterate past it, so the session limit is raised
-    whenever the requested cap needs more iterations than the limit
+    whenever the cap needs more iterations than a session's limit
     allows — and, to keep the raise from leaking into unrelated queries
     on the same session, the result is materialized eagerly
     (localCheckpoint) inside the escalation branch and the prior limit
-    restored before returning. The default max_depth (64) never
+    restored before returning. At Spark's default limit the CTE never
     escalates and stays fully lazy.
     """
     categories.createOrReplaceTempView("_cat_dim")
     # the visited array is the cycle guard: a parent already on the
     # chain stops the walk exactly where the reference's visited set
-    # does, instead of looping names until max_depth
+    # does, instead of looping names until MAX_DEPTH
     sql = f"""
         WITH RECURSIVE walk (id, path, ancestor, visited, depth) AS (
           SELECT CAST(id AS STRING),
@@ -255,20 +244,20 @@ def build_category_paths_sql(
                  array(CAST(id AS STRING)), 1
           FROM _cat_dim
           UNION ALL
-          SELECT w.id, concat(coalesce(CAST(c.name AS STRING), 'Undefined'), '{sep}', w.path),
+          SELECT w.id, concat(coalesce(CAST(c.name AS STRING), 'Undefined'), '{PATH_SEP}', w.path),
                  CAST(c.parent_id AS STRING),
                  concat(w.visited, array(CAST(c.id AS STRING))), w.depth + 1
           FROM walk w JOIN _cat_dim c ON w.ancestor = CAST(c.id AS STRING)
-          WHERE w.depth < {int(max_depth)}
+          WHERE w.depth < {MAX_DEPTH}
             AND NOT array_contains(w.visited, CAST(c.id AS STRING))
         )
         SELECT id, max_by(path, depth) AS category_path
         FROM walk GROUP BY id
         """
     limit = int(spark.conf.get("spark.sql.cteRecursionLevelLimit", "100"))
-    if max_depth + 1 <= limit:
+    if MAX_DEPTH + 1 <= limit:
         return spark.sql(sql)
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", str(max_depth + 1))
+    spark.conf.set("spark.sql.cteRecursionLevelLimit", str(MAX_DEPTH + 1))
     try:
         # dimension-sized input: eager materialization is cheap and lets
         # the session limit be restored soundly (the plan has executed)

@@ -50,12 +50,11 @@ def paragraph_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = "\n\n",
 ) -> DataFrame:
     """Corpus-wide exact paragraph dedup: split each document on
-    ``sep``, keep only the FIRST occurrence (by ``(id, position)``
-    order) of every distinct paragraph, and reassemble documents from
-    their surviving paragraphs.
+    blank lines (``"\\n\\n"``), keep only the FIRST occurrence (by
+    ``(id, position)`` order) of every distinct paragraph, and
+    reassemble documents from their surviving paragraphs.
 
     This is the Dolma paragraph-granularity dedup pass — distinct from
     ``dedup.dedup_lines`` (which REMOVES every occurrence of lines
@@ -65,7 +64,7 @@ def paragraph_dedup(
 
     Output: one row per input document —
     ``(id, n_paras, n_kept, text_dedup)`` where ``text_dedup`` is the
-    surviving paragraphs re-joined with ``sep`` (empty string when
+    surviving paragraphs re-joined with ``"\\n\\n"`` (empty string when
     every paragraph was a later duplicate).
 
     Scale shape: posexplode -> ONE window shuffle keyed on the
@@ -78,15 +77,11 @@ def paragraph_dedup(
     repeated paragraph's occurrence count, which the window's
     partial-sort handles (same shape as repeated_ngram_spans' gram
     window)."""
-    import re
-
     from pyspark.sql import Window
 
-    # split on the LITERAL separator (F.split takes a regex; "|" or
-    # "." as sep would otherwise split on everything/anything)
     paras = df.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), re.escape(sep), -1)).alias(
+        F.posexplode(F.split(F.col(text_col), "\n\n", -1)).alias(
             "_pos", "_para"
         ),
     )
@@ -121,7 +116,7 @@ def paragraph_dedup(
                     ),
                     lambda s: s["_para"],
                 ),
-                sep,
+                "\n\n",
             ).alias("text_dedup"),
         )
         .select(F.col("_id").alias(id_col), "n_paras", "n_kept", "text_dedup")
@@ -350,10 +345,7 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 def gopher_quality(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
 ) -> DataFrame:
     """Per-document Gopher quality gate — the COMPLETE published
     A1.1 rule set (Rae et al. 2021): the scalar gates and the
@@ -385,7 +377,7 @@ def gopher_quality(
     t = F.coalesce(F.col(text_col), F.lit(""))
     par = df.sparkSession.sparkContext.defaultParallelism
     s1 = (
-        df.select(F.col(id_col).alias("_id"), t.alias("_text"))
+        df.select(F.col("doc_id").alias("_id"), t.alias("_text"))
         .repartition(par)
         .select("_id", "_text", tokens(F.col("_text")).alias("_w"))
     )
@@ -465,8 +457,8 @@ def gopher_quality(
     )
     full_rep_flag = F.coalesce(rep_flag, F.lit(False)) | dup_flag
     keep = (
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
+        (F.col("n_words") >= GOPHER_MIN_WORDS)
+        & (F.col("n_words") <= GOPHER_MAX_WORDS)
         & (F.col("mean_word_len") >= GOPHER_MIN_MEAN_WORD_LEN)
         & (F.col("mean_word_len") <= GOPHER_MAX_MEAN_WORD_LEN)
         & (F.col("symbol_ratio") <= GOPHER_MAX_SYMBOL_RATIO)
@@ -488,7 +480,7 @@ def gopher_quality(
         "ellipsis_line_frac",
     ]
     return joined.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_words",
         "mean_word_len",
         "symbol_ratio",
@@ -532,14 +524,14 @@ def c4_sentences(text: Column) -> Column:
     )
 
 
-def _c4_sents_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _c4_sents_frame(df: DataFrame) -> DataFrame:
     """(_id, _s sentence-array) frame with the pre-explode repartition
     (the gopher_quality/_lm_positions fix): span hashing otherwise
     runs at the scan's split count; the shuffled payload is the
     compact (id, sentence-array) frame."""
     return df.select(
-        F.col(id_col).alias("_id"),
-        c4_sentences(F.col(text_col)).alias("_s"),
+        F.col("doc_id").alias("_id"),
+        c4_sentences(F.col("text")).alias("_s"),
     ).repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
@@ -570,8 +562,6 @@ def _c4_spans_frame(sents: DataFrame) -> DataFrame:
 
 def c4_span_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """C4's OTHER dedup rule — Raffel et al. 2020 §2.2: "we discarded
     all but one of any three-sentence span occurring more than once in
@@ -598,7 +588,7 @@ def c4_span_dedup(
     spans-per-doc) kill list back, and the rebuild is a JVM-side
     indexed filter over the sentence array. No window over the corpus,
     no self-join on text."""
-    sents = _c4_sents_frame(df, id_col, text_col)
+    sents = _c4_sents_frame(df)
     spans = _c4_spans_frame(sents)
     keepers = spans.groupBy("h").agg(
         F.min(F.struct(F.col("_id").alias("kid"), F.col("start").alias("kstart"))).alias(
@@ -623,7 +613,7 @@ def c4_span_dedup(
         ),
     )
     return rebuilt.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.size("_s").cast("bigint").alias("n_sentences"),
         F.when(F.col("_kills").isNull(), F.size("_s"))
         .otherwise(F.size(kept))
@@ -652,19 +642,11 @@ def c4_span_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _paragraph_hashes(
-    corpus: DataFrame, text_col: str, sep: str
-) -> DataFrame:
+def _paragraph_hashes(corpus: DataFrame) -> DataFrame:
     """Distinct md5(paragraph) set of a corpus — the entire snapshot
     payload (column ``ph``)."""
-    import re
-
     return (
-        corpus.select(
-            F.explode(
-                F.split(F.col(text_col), re.escape(sep), -1)
-            ).alias("_para")
-        )
+        corpus.select(F.explode(F.split(F.col("text"), "\n\n", -1)).alias("_para"))
         .select(F.md5("_para").alias("ph"))
         .distinct()
     )
@@ -673,8 +655,6 @@ def _paragraph_hashes(
 def write_paragraph_snapshot(
     corpus: DataFrame,
     path: str,
-    text_col: str = "text",
-    sep: str = "\n\n",
 ) -> None:
     """Persist the corpus's distinct paragraph-hash set to
     ``{path}/paragraphs``. ALL hashes ship (kept and killed alike):
@@ -682,7 +662,7 @@ def write_paragraph_snapshot(
     which is what makes append == rebuild hold as a set union."""
     import os
 
-    _paragraph_hashes(corpus, text_col, sep).write.mode(
+    _paragraph_hashes(corpus).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "paragraphs"))
 
@@ -690,8 +670,6 @@ def write_paragraph_snapshot(
 def append_paragraph_snapshot(
     batch: DataFrame,
     path: str,
-    text_col: str = "text",
-    sep: str = "\n\n",
 ) -> None:
     """Fold a newly ingested batch's paragraph hashes into the
     snapshot (parquet append — O(delta) writes, never a snapshot
@@ -699,7 +677,7 @@ def append_paragraph_snapshot(
     by the reader's distinct)."""
     import os
 
-    _paragraph_hashes(batch, text_col, sep).write.mode("append").parquet(
+    _paragraph_hashes(batch).write.mode("append").parquet(
         os.path.join(path, "paragraphs")
     )
 
@@ -707,9 +685,6 @@ def append_paragraph_snapshot(
 def paragraph_dedup_against_snapshot(
     new_batch: DataFrame,
     snapshot_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
 ) -> DataFrame:
     """:func:`paragraph_dedup` for a re-crawl delta against a frozen
     prior-crawl snapshot: a paragraph whose hash appears in the
@@ -724,7 +699,6 @@ def paragraph_dedup_against_snapshot(
     when not), one id-keyed reassembly aggregate. The snapshot side is
     hash keys only — prior-crawl text is never read."""
     import os
-    import re
 
     from pyspark.sql import Window
 
@@ -736,8 +710,8 @@ def paragraph_dedup_against_snapshot(
         .withColumn("_in_prior", F.lit(1))
     )
     paras = new_batch.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), re.escape(sep), -1)).alias(
+        F.col("doc_id").alias("_id"),
+        F.posexplode(F.split(F.col("text"), "\n\n", -1)).alias(
             "_pos", "_para"
         ),
     ).withColumn("ph", F.md5("_para"))
@@ -769,24 +743,22 @@ def paragraph_dedup_against_snapshot(
                     ),
                     lambda s: s["_para"],
                 ),
-                sep,
+                "\n\n",
             ).alias("text_dedup"),
         )
-        .select(F.col("_id").alias(id_col), "n_paras", "n_kept", "text_dedup")
+        .select(F.col("_id").alias("doc_id"), "n_paras", "n_kept", "text_dedup")
     )
 
 
 def write_span_snapshot(
     corpus: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Persist the corpus's distinct 3-sentence-span hash set
     (:func:`c4_span_dedup`'s keys) to ``{path}/spans``."""
     import os
 
-    spans = _c4_spans_frame(_c4_sents_frame(corpus, id_col, text_col))
+    spans = _c4_spans_frame(_c4_sents_frame(corpus))
     spans.select(F.col("h").alias("sh")).distinct().write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "spans"))
@@ -795,14 +767,12 @@ def write_span_snapshot(
 def append_span_snapshot(
     batch: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Fold a newly ingested batch's span hashes into the snapshot
     (parquet append, O(delta) — see ``append_paragraph_snapshot``)."""
     import os
 
-    spans = _c4_spans_frame(_c4_sents_frame(batch, id_col, text_col))
+    spans = _c4_spans_frame(_c4_sents_frame(batch))
     spans.select(F.col("h").alias("sh")).distinct().write.mode(
         "append"
     ).parquet(os.path.join(path, "spans"))
@@ -811,8 +781,6 @@ def append_span_snapshot(
 def span_dedup_against_snapshot(
     new_batch: DataFrame,
     snapshot_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """:func:`c4_span_dedup` for a re-crawl delta against a frozen
     prior-crawl snapshot: every delta occurrence of a snapshot span is
@@ -834,7 +802,7 @@ def span_dedup_against_snapshot(
         .distinct()
         .withColumn("_in_prior", F.lit(1))
     )
-    sents = _c4_sents_frame(new_batch, id_col, text_col)
+    sents = _c4_sents_frame(new_batch)
     spans = _c4_spans_frame(sents).join(prior, "h", "left")
     fresh = spans.filter(F.col("_in_prior").isNull())
     keepers = fresh.groupBy("h").agg(
@@ -867,7 +835,7 @@ def span_dedup_against_snapshot(
         ),
     )
     return rebuilt.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.size("_s").cast("bigint").alias("n_sentences"),
         F.when(F.col("_kills").isNull(), F.size("_s"))
         .otherwise(F.size(kept))
@@ -884,22 +852,18 @@ def c4_line_filters(
     id_col: str = "doc_id",
     line_col: str = "line",
     pos_col: str = "pos",
-    min_line_words: int = C4_MIN_LINE_WORDS,
-    min_doc_lines: int = C4_MIN_DOC_LINES,
-    brace_scope: str = "document",
 ) -> DataFrame:
     """The C4 cleaning pass over an exploded (id, pos, line) frame:
 
     * keep only lines ending in terminal punctuation (. ! ? ");
-    * drop lines with fewer than ``min_line_words`` words;
+    * drop lines with fewer than ``C4_MIN_LINE_WORDS`` words;
     * drop lines containing a blocklisted fragment ("javascript");
     * documents containing "lorem ipsum" OR a curly bracket ``{``
       ANYWHERE are dropped whole — Raffel et al. 2020 §2.2 removes
       the PAGE for both (the brace is the paper's code tell and its
       scope is the document, same as the lorem-ipsum placeholder
-      tell; ``brace_scope="line"`` opts into the softer line-level
-      drop for callers who only want code LINES removed);
-    * finally drop documents with fewer than ``min_doc_lines``
+      tell);
+    * finally drop documents with fewer than ``C4_MIN_DOC_LINES``
       surviving lines.
 
     Output: one row per SURVIVING document —
@@ -912,25 +876,18 @@ def c4_line_filters(
     the lines frame as input so callers own the line-splitting (real
     newline corpora split on \\n; the test corpus synthesizes lines
     the same way q_line_dedup does)."""
-    if brace_scope not in ("document", "line"):
-        raise ValueError(f"brace_scope must be 'document' or 'line': {brace_scope!r}")
     lc = F.lower(F.col(line_col))
     line_ok = (
         F.col(line_col).rlike("[.!?\"]$")
-        & (F.size(tokens(F.col(line_col))) >= min_line_words)
+        & (F.size(tokens(F.col(line_col))) >= C4_MIN_LINE_WORDS)
         & ~lc.contains("javascript")
     )
-    if brace_scope == "line":
-        line_ok = line_ok & ~lc.contains("{")
     marked = lines.select(
         F.col(id_col).alias("_id"),
         F.col(pos_col).alias("_pos"),
         F.col(line_col).alias("_line"),
         line_ok.alias("_ok"),
-        (
-            lc.contains("lorem ipsum")
-            | (F.lit(brace_scope == "document") & lc.contains("{"))
-        ).alias("_doc_kill"),
+        (lc.contains("lorem ipsum") | lc.contains("{")).alias("_doc_kill"),
     )
     agg = marked.groupBy("_id").agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -949,7 +906,7 @@ def c4_line_filters(
         ).alias("text_clean"),
     )
     return (
-        agg.filter(~F.col("_doc_killed") & (F.col("n_kept") >= min_doc_lines))
+        agg.filter(~F.col("_doc_killed") & (F.col("n_kept") >= C4_MIN_DOC_LINES))
         .select(F.col("_id").alias(id_col), "n_lines", "n_kept", "text_clean")
     )
 
@@ -963,7 +920,6 @@ def two_phase_rank(
     df: DataFrame,
     order_cols: list[str],
     rank_col: str = "rank",
-    n_range_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Exact 1-based global rank over a total order WITHOUT a
     single-task global window: range-partition on the order columns,
@@ -977,7 +933,7 @@ def two_phase_rank(
     ``sampling.seeded_shuffle``."""
     from pyspark.sql import Window
 
-    n = n_range_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) for c in order_cols]
     # localCheckpoint: the offsets collect below is a separate ACTION,
     # and without materialization it re-executes the caller's whole
@@ -1007,7 +963,7 @@ def two_phase_rank(
         offsets[r["_pid"]] = acc
         acc += r["_c"]
     # offsets apply via a broadcast join (the pack_shards pattern), NOT
-    # a literal when-chain: at cluster scale n_range_partitions is
+    # a literal when-chain: at cluster scale the partition count is
     # thousands and a per-partition CASE expression bloats codegen
     off_df = df.sparkSession.createDataFrame(
         [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
@@ -1028,8 +984,6 @@ def exact_ntile(
     df: DataFrame,
     order_cols: list[str],
     n_buckets: int,
-    bucket_col: str = "bucket",
-    n_range_partitions: int | None = None,
 ) -> DataFrame:
     """Exact NTILE(n) over a total order, built on
     :func:`two_phase_rank`. Bucket = floor((rank-1) * n / total) + 1,
@@ -1039,25 +993,20 @@ def exact_ntile(
     both are rank-exact, this one needs no second pass). The order
     must be TOTAL (include a unique tiebreaker column) or bucket
     assignment at boundaries is nondeterministic."""
-    ranked, total = two_phase_rank(df, order_cols, "_rank", n_range_partitions)
+    ranked, total = two_phase_rank(df, order_cols, "_rank")
     return ranked.withColumn(
-        bucket_col,
+        "bucket",
         (((F.col("_rank") - 1) * n_buckets) / F.lit(total)).cast("long") + 1,
     ).drop("_rank")
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 3,
-) -> DataFrame:
+def perplexity_buckets(df: DataFrame) -> DataFrame:
     """CCNet-class corpus partitioning: score every document with the
     unigram-surprisal perplexity proxy (text.unigram_surprisal — exact
     micro-nat arithmetic, engine-reproducible), then split the corpus
-    into ``n_buckets`` rank-exact tiers (CCNet's head/middle/tail for
-    n=3; low surprisal = common/fluent = head). Ties on the score
-    break by id so the order is total.
+    into 3 rank-exact tiers (CCNet's head/middle/tail; low surprisal =
+    common/fluent = head). Ties on the score break by id so the order
+    is total.
 
     Output: one row per document — (id, n_tokens, surprisal, bucket)
     with bucket 1 = head (lowest surprisal).
@@ -1069,9 +1018,9 @@ def perplexity_buckets(
     offset collect). Nothing global-sorts on one task."""
     from magicxml_spark.operators.text import unigram_surprisal
 
-    scored = unigram_surprisal(df, id_col, text_col)
-    return exact_ntile(scored, ["surprisal", id_col], n_buckets).select(
-        id_col, "n_tokens", "surprisal", F.col("bucket").cast("long").alias("bucket")
+    scored = unigram_surprisal(df)
+    return exact_ntile(scored, ["surprisal", "doc_id"], 3).select(
+        "doc_id", "n_tokens", "surprisal", F.col("bucket").cast("long").alias("bucket")
     )
 
 
@@ -1080,12 +1029,17 @@ def perplexity_buckets(
 # scorer one order up from text.unigram_surprisal
 # ---------------------------------------------------------------------------
 
-def bigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = 0.75,
-) -> DataFrame:
+# Jelinek-Mercer interpolation weight of every JM ladder (self-scoring,
+# frozen-snapshot scoring, and the DuckDB oracles that replay them):
+# p_k = LM_LAMBDA * c_k/c(ctx) + (1 - LM_LAMBDA) * p_{k-1}
+LM_LAMBDA = 0.75
+# Count floors prune the JM tables of order >= LM_FLOOR_FROM only. The
+# unigram table is the OOV/total denominator: pruning it would shift
+# n_total and the 1/N floor away from a rebuild.
+LM_FLOOR_FROM = 3
+
+
+def bigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document interpolated bigram language-model surprisal —
     the order-2 rung of :func:`ngram_surprisal` (kept as a named
     operator: its oracle and pins gate the shared ladder, and the
@@ -1095,18 +1049,14 @@ def bigram_surprisal(
     Position 1 scores with the unigram term; the join strategy and
     micro-nat contract are the ladder's (see
     :func:`ngram_surprisal`)."""
-    return ngram_surprisal(df, id_col, text_col, order=2, lam=lam)
+    return ngram_surprisal(df, order=2)
 
 
 
 def ngram_surprisal(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     order: int = 5,
-    lam: float = 0.75,
     count_floor: int = 1,
-    floor_from: int = 3,
     smoothing: str = "jm",
 ) -> DataFrame:
     """Per-document interpolated ORDER-n language-model surprisal —
@@ -1115,15 +1065,15 @@ def ngram_surprisal(
     KenLM; Jelinek & Mercer 1980 define the interpolation).
     ``smoothing='kn'`` switches to interpolated MODIFIED KNESER-NEY
     (:func:`kn_ngram_surprisal` — the family KenLM itself estimates;
-    ``lam``/``count_floor`` do not apply there and must stay at their
-    defaults). The JM math:
+    ``count_floor`` does not apply there and must stay 1). The JM math,
+    with ``lam`` = ``LM_LAMBDA``:
 
     * ``p_1(w)            = c(w) / N``
     * ``p_k(w|ctx_{k-1})  = lam * c_k/c(ctx_{k-1}) + (1-lam) * p_{k-1}``
 
     Position i scores with ``p_min(i, order)`` (the ladder up to the
     available context). ``count_floor`` PRUNES every count table of
-    order >= ``floor_from`` (keep counts >= floor) — the knob that
+    order >= ``LM_FLOOR_FROM`` (keep counts >= floor) — the knob that
     keeps the high-order tables joinable at corpus scale: singleton
     n-grams dominate raw web text and carry almost no smoothing mass,
     and a pruned-away n-gram backs off to ``(1-lam) * p_{k-1}``
@@ -1165,32 +1115,15 @@ def ngram_surprisal(
                 " (store adjusted counts to prune a KN model — KenLM's"
                 " separate prune pass)"
             )
-        # reject (never silently ignore) the JM-only knobs: a caller
-        # who "tuned" lam or floor_from must not get an unrelated model
-        if lam != 0.75:
-            raise ValueError(
-                "lam does not apply to smoothing='kn': KN has no"
-                " interpolation weight — discounts come from"
-                " counts-of-counts (Chen & Goodman eq. 26)"
-            )
-        if floor_from != 3:
-            raise ValueError(
-                "floor_from does not apply to smoothing='kn' (no"
-                " count-floor pruning in KN mode)"
-            )
-        return kn_ngram_surprisal(df, id_col, text_col, order=order)
+        return kn_ngram_surprisal(df, order=order)
     if order < 2:
         raise ValueError(f"order must be >= 2: {order}")
     if count_floor < 1:
         raise ValueError(f"count_floor must be >= 1: {count_floor}")
-    if floor_from < 2:
-        # the unigram table feeds the total-count denominator; floors
-        # apply to higher-order tables only (matches write_lm_snapshot)
-        raise ValueError(f"floor_from must be >= 2: {floor_from}")
     prevs = [f"prev{j}" for j in range(1, order)]  # prev1 = w[i-1], ...
     toks = (
         df.select(
-            F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_w")
+            F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_w")
         )
         .filter(F.size("_w") > 0)
         # pre-explode repartition: the tuple explode below otherwise
@@ -1239,7 +1172,7 @@ def ngram_surprisal(
             .groupBy(*keys)
             .agg(F.count(F.lit(1)).alias(f"_c{k}"))
         )
-        if k >= floor_from and count_floor > 1:
+        if k >= LM_FLOOR_FROM and count_floor > 1:
             t = t.filter(F.col(f"_c{k}") >= count_floor)
         tables[k] = t
     tot = tables[1].agg(F.sum("_c1").alias("_n_total"))
@@ -1273,9 +1206,9 @@ def ngram_surprisal(
     p = F.col("_c1").cast("double") / F.col("_n_total")
     ladder = [p]
     for k in range(2, order + 1):
-        p = F.lit(lam) * F.coalesce(
+        p = F.lit(LM_LAMBDA) * F.coalesce(
             F.col(f"_c{k}").cast("double") / F.col(f"_x{k}"), F.lit(0.0)
-        ) + F.lit(1.0 - lam) * p
+        ) + F.lit(1.0 - LM_LAMBDA) * p
         ladder.append(p)
     expr = ladder[order - 1]
     for k in range(order - 1, 0, -1):
@@ -1290,7 +1223,7 @@ def ngram_surprisal(
             F.count(F.lit(1)).alias("n_tokens"),
             F.round(F.sum("_micro") / F.count(F.lit(1)) / 1e6, 6).alias("surprisal"),
         )
-        .select(F.col("_id").alias(id_col), "n_tokens", "surprisal")
+        .select(F.col("_id").alias("doc_id"), "n_tokens", "surprisal")
     )
 
 
@@ -1359,11 +1292,8 @@ def _lm_table_keys(k: int) -> list[str]:
 def write_lm_snapshot(
     corpus: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     order: int = 3,
     count_floor: int = 1,
-    floor_from: int = 3,
     smoothing: str = "jm",
 ) -> dict:
     """Train and persist an order-n LM: one parquet count table per
@@ -1371,7 +1301,7 @@ def write_lm_snapshot(
     ``{path}/meta`` (order, count_floor, floor_from, n_total,
     smoothing). With the default ``smoothing='jm'`` the tables are raw
     counts and ``count_floor`` prunes tables of order >=
-    ``floor_from`` at WRITE time (KenLM prunes at build).
+    ``LM_FLOOR_FROM`` at WRITE time (KenLM prunes at build).
     ``smoothing='kn'`` persists the modified-Kneser-Ney model instead
     (:func:`kn_ngram_surprisal`'s math): ``t{k}`` hold ADJUSTED counts
     (raw at the top order, continuation counts below), ``c{k}`` the
@@ -1393,11 +1323,6 @@ def write_lm_snapshot(
         raise ValueError(f"order must be >= 2: {order}")
     if count_floor < 1:
         raise ValueError(f"count_floor must be >= 1: {count_floor}")
-    if floor_from < 2:
-        # the unigram table is the OOV/total denominator — pruning it
-        # would shift n_total and the 1/N floor away from a rebuild
-        # (ADVICE r8); floors apply to higher-order tables only
-        raise ValueError(f"floor_from must be >= 2: {floor_from}")
     if smoothing not in ("jm", "kn"):
         raise ValueError(f"smoothing must be 'jm' or 'kn': {smoothing!r}")
     if smoothing == "kn":
@@ -1406,8 +1331,8 @@ def write_lm_snapshot(
                 "count_floor does not apply to smoothing='kn' snapshots"
                 " (continuation counts need the unpruned type inventory)"
             )
-        return _write_kn_snapshot(corpus, path, id_col, text_col, order)
-    pos = _lm_positions(corpus, id_col, text_col, order, materialize=True)
+        return _write_kn_snapshot(corpus, path, "doc_id", "text", order)
+    pos = _lm_positions(corpus, "doc_id", "text", order, materialize=True)
     # The per-order count tables all derive from the SAME materialized
     # position stream and are independent of each other — submit the
     # writes from a thread pool so their jobs overlap instead of each
@@ -1424,7 +1349,7 @@ def write_lm_snapshot(
             .groupBy(*_lm_table_keys(k))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if k >= floor_from and count_floor > 1:
+        if k >= LM_FLOOR_FROM and count_floor > 1:
             t = t.filter(F.col("cnt") >= count_floor)
         tables.append((f"t{k}", t))
 
@@ -1442,7 +1367,7 @@ def write_lm_snapshot(
         list(pool.map(_write_table, tables))
         n_total = int(n_total_f.result())
     spark = corpus.sparkSession
-    _write_lm_meta(spark, path, order, count_floor, floor_from, n_total, "jm")
+    _write_lm_meta(spark, path, order, count_floor, LM_FLOOR_FROM, n_total, "jm")
     return {"order": order, "n_total": n_total}
 
 
@@ -1639,7 +1564,6 @@ def score_with_lm_snapshot(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    lam: float = 0.75,
 ) -> DataFrame:
     """Score a batch against a FROZEN :func:`write_lm_snapshot` LM —
     the CCNet shape (domain-LM surprisal over crawl text). Identical
@@ -1657,7 +1581,7 @@ def score_with_lm_snapshot(
     snapshot shuffle-joins like any equi-join).
 
     A ``smoothing='kn'`` snapshot scores with the modified-Kneser-Ney
-    ladder instead (``lam`` is ignored): adjusted counts + per-context
+    ladder instead: adjusted counts + per-context
     aggregates + the frozen discount scalars, with OOV mass falling
     out of the math itself — an unseen token takes the gamma-chained
     uniform ``1/V`` of the TRAINING vocab, no Laplace floor needed."""
@@ -1707,9 +1631,9 @@ def score_with_lm_snapshot(
     p = F.coalesce(F.col("_c1"), F.lit(1)).cast("double") / F.lit(n_total)
     ladder = [p]
     for k in range(2, order + 1):
-        p = F.lit(lam) * F.coalesce(
+        p = F.lit(LM_LAMBDA) * F.coalesce(
             F.col(f"_c{k}").cast("double") / F.col(f"_x{k}"), F.lit(0.0)
-        ) + F.lit(1.0 - lam) * p
+        ) + F.lit(1.0 - LM_LAMBDA) * p
         ladder.append(p)
     expr = ladder[order - 1]
     for k in range(order - 1, 0, -1):
@@ -1782,18 +1706,13 @@ def _score_kn_snapshot(
 
 def trigram_surprisal(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = 0.75,
     count_floor: int = 1,
 ) -> DataFrame:
     """Order-3 rung of :func:`ngram_surprisal` (kept as a named
     operator: the trigram scorer is the cheapest order that sees past
     bigram structure, and its oracle/pins gate the shared ladder).
-    ``count_floor`` prunes the trigram table only (floor_from=3)."""
-    return ngram_surprisal(
-        df, id_col, text_col, order=3, lam=lam, count_floor=count_floor
-    )
+    ``count_floor`` prunes the trigram table only (LM_FLOOR_FROM=3)."""
+    return ngram_surprisal(df, order=3, count_floor=count_floor)
 
 
 # ---------------------------------------------------------------------------
@@ -1948,8 +1867,6 @@ def _kn_count_of_counts(adj: DataFrame, k: int) -> DataFrame:
 
 def kn_ngram_surprisal(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     order: int = 5,
 ) -> DataFrame:
     """Per-document interpolated MODIFIED KNESER-NEY order-n
@@ -1974,7 +1891,7 @@ def kn_ngram_surprisal(
     commute with them."""
     if order < 2:
         raise ValueError(f"order must be >= 2: {order}")
-    pos = _lm_positions(df, id_col, text_col, order, materialize=True)
+    pos = _lm_positions(df, "doc_id", "text", order, materialize=True)
 
     # adjusted counts from the SHARED builder (_kn_adjusted_checkpointed —
     # raw at the top order, continuation below; r_1 is never needed:
@@ -2053,7 +1970,7 @@ def kn_ngram_surprisal(
                 "surprisal"
             ),
         )
-        .select(F.col("_id").alias(id_col), "n_tokens", "surprisal")
+        .select(F.col("_id").alias("doc_id"), "n_tokens", "surprisal")
     )
 
 
@@ -2067,8 +1984,6 @@ def kn_ngram_surprisal(
 def badwords_filter(
     df: DataFrame,
     terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document blocklist gate: count WHOLE-WORD occurrences of
     the blocklisted terms (C4 matches words, not substrings — 'class'
@@ -2082,10 +1997,10 @@ def badwords_filter(
     the same shape holds, the IN list just grows."""
     if not terms:
         raise ValueError("terms must be non-empty")
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_hits = F.size(F.filter(toks, lambda w: w.isin([t.lower() for t in terms])))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_hits.cast("long").alias("n_hits"),
         (n_hits == 0).alias("keep"),
     )
@@ -2109,31 +2024,24 @@ FINEWEB_NEW_LINE_THR = 0.3
 FINEWEB_STOP_CHARS = (".", "'", '"', "!", "?")
 
 
-def fineweb_quality(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    line_punct_thr: float = FINEWEB_LINE_PUNCT_THR,
-    short_line_thr: float = FINEWEB_SHORT_LINE_THR,
-    short_line_length: int = FINEWEB_SHORT_LINE_LENGTH,
-    char_dup_thr: float = FINEWEB_CHAR_DUP_THR,
-    new_line_thr: float = FINEWEB_NEW_LINE_THR,
-) -> DataFrame:
+def fineweb_quality(df: DataFrame) -> DataFrame:
     """The FineWeb paper's three custom line filters plus its
     new-line-ratio rule — the quality pass FineWeb adds ON TOP of the
     Gopher/C4 batteries this repo already implements:
 
     * ``end_punct_frac`` — fraction of (trim-nonempty) lines ending in
-      a stop char; keep requires ``> line_punct_thr`` (a page whose
+      a stop char; keep requires ``> FINEWEB_LINE_PUNCT_THR`` (a page whose
       lines rarely end in punctuation is nav/boilerplate).
     * ``short_line_frac`` — fraction of lines of at most
-      ``short_line_length`` chars; keep requires ``< short_line_thr``
+      ``FINEWEB_SHORT_LINE_LENGTH`` chars; keep requires
+      ``< FINEWEB_SHORT_LINE_THR``
       (link farms are walls of short lines).
     * ``dup_line_char_frac`` — character mass of duplicate line
       occurrences over line char mass (the Gopher element-mass
-      spelling, documented there); keep requires ``< char_dup_thr``.
+      spelling, documented there); keep requires
+      ``< FINEWEB_CHAR_DUP_THR``.
     * ``new_line_ratio`` — newline count over word count; keep
-      requires ``< new_line_thr`` (list-like pages).
+      requires ``< FINEWEB_NEW_LINE_THR`` (list-like pages).
 
     Output: (id, n_lines, end_punct_frac, short_line_frac,
     dup_line_char_frac, new_line_ratio, keep), fractions rounded 6dp
@@ -2142,10 +2050,10 @@ def fineweb_quality(
     arithmetic — zero shuffles, zero joins, zero UDFs (the
     gopher_line_cols cost class).
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     lines_all = F.split(t, "\n", -1)
     s1 = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.filter(
             F.transform(lines_all, lambda x: F.trim(x)),
             lambda x: x != F.lit(""),
@@ -2163,7 +2071,7 @@ def fineweb_quality(
         )
     )
     short = F.size(
-        F.filter(F.col("_ln"), _short_line_pred(short_line_length))
+        F.filter(F.col("_ln"), _short_line_pred(FINEWEB_SHORT_LINE_LENGTH))
     )
     _, dup_char = _dup_fracs(F.col("_ln"))
     frac = lambda c: F.when(  # noqa: E731
@@ -2181,13 +2089,13 @@ def fineweb_quality(
         nl_ratio.alias("new_line_ratio"),
     )
     keep = (
-        (F.col("end_punct_frac") > line_punct_thr)
-        & (F.col("short_line_frac") < short_line_thr)
-        & (F.col("dup_line_char_frac") < char_dup_thr)
-        & (F.col("new_line_ratio") < new_line_thr)
+        (F.col("end_punct_frac") > FINEWEB_LINE_PUNCT_THR)
+        & (F.col("short_line_frac") < FINEWEB_SHORT_LINE_THR)
+        & (F.col("dup_line_char_frac") < FINEWEB_CHAR_DUP_THR)
+        & (F.col("new_line_ratio") < FINEWEB_NEW_LINE_THR)
     )
     return s2.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_lines",
         "end_punct_frac",
         "short_line_frac",
@@ -2218,13 +2126,10 @@ def _short_line_pred(short_line_length: int):
 def paragraph_signals(
     df: DataFrame,
     lm_path: str | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
     max_chars: int | None = None,
     min_score: float | None = None,
 ) -> DataFrame:
-    """Per-paragraph curation signals: split each document on ``sep``
+    """Per-paragraph curation signals: split each document on blank lines (``"\n\n"``)
     and label every paragraph with its COMPUTED language
     (:func:`~magicxml_spark.operators.langid.with_lang` semantics,
     including the ``min_score`` confidence gate) and its LM surprisal
@@ -2252,10 +2157,10 @@ def paragraph_signals(
     from magicxml_spark.operators.langid import with_lang
 
     paras = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.posexplode(
             F.split(
-                F.coalesce(F.col(text_col), F.lit("")), re.escape(sep), -1
+                F.coalesce(F.col("text"), F.lit("")), re.escape("\n\n"), -1
             )
         ).alias("_pos", "_para"),
     )
@@ -2276,7 +2181,7 @@ def paragraph_signals(
     )
     if lm_path is None:
         return lid.select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.col("_pos").alias("pos"),
             F.col("_para").alias("para"),
             F.col("_lang").alias("lang"),
@@ -2299,7 +2204,7 @@ def paragraph_signals(
         "surprisal",
     )
     return lid.join(scored, ["_id", "_pos"], "left").select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("_pos").alias("pos"),
         F.col("_para").alias("para"),
         F.col("_lang").alias("lang"),
@@ -2312,9 +2217,6 @@ def paragraph_signals(
 def paragraph_curation(
     df: DataFrame,
     lm_path: str | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
     keep_lang: str = "en",
     max_surprisal: float | None = None,
     max_chars: int | None = None,
@@ -2331,7 +2233,7 @@ def paragraph_curation(
 
     Output: one row per input document —
     ``(id, n_paras, n_kept, text_kept)`` with ``text_kept`` the
-    surviving paragraphs re-joined with ``sep`` in original order
+    surviving paragraphs re-joined with blank lines in original order
     (empty string when every paragraph was dropped) — the
     :func:`paragraph_dedup` rebuild shape, so downstream doc-level
     stages (Gopher, FineWeb, dedup, packing) compose unchanged.
@@ -2349,28 +2251,19 @@ def paragraph_curation(
             "max_surprisal requires a frozen LM snapshot (lm_path is "
             "None — the langid-only mode has no surprisal signal)"
         )
-    sig = paragraph_signals(
-        df, lm_path, id_col, text_col, sep,
-        max_chars=max_chars, min_score=min_score,
-    )
+    sig = paragraph_signals(df, lm_path, max_chars=max_chars, min_score=min_score)
     keep = F.col("lang") == keep_lang
     if max_surprisal is not None:
         keep = keep & F.coalesce(
             F.col("surprisal") <= max_surprisal, F.lit(False)
         )
     marked = sig.withColumn("_keep", keep)
-    return rebuild_documents(marked, id_col, "pos", "para", "_keep", sep)
+    return rebuild_documents(marked)
 
 
-def rebuild_documents(
-    marked: DataFrame,
-    id_col: str = "doc_id",
-    pos_col: str = "pos",
-    para_col: str = "para",
-    keep_col: str = "keep",
-    sep: str = "\n\n",
-) -> DataFrame:
-    """Reassemble documents from a marked paragraph frame — the shared
+def rebuild_documents(marked: DataFrame) -> DataFrame:
+    """Reassemble documents from a paragraph frame marked by a boolean
+    ``_keep`` column — the shared
     rebuild tail of every paragraph-granularity pass (langid/LM
     curation, the classifier arm, the dedup family's shape): ONE
     groupBy on the doc id computing totals, kept counts, and the
@@ -2378,17 +2271,17 @@ def rebuild_documents(
     marker column — no kept-vs-totals join, no filter over upstream
     computed columns). Output: ``(id, n_paras, n_kept, text_kept)``
     with ``text_kept`` the surviving paragraphs in original
-    ``pos_col`` order (empty string when every paragraph dropped)."""
+    ``pos`` order (empty string when every paragraph dropped)."""
     return (
-        marked.groupBy(id_col)
+        marked.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_paras"),
-            F.sum(F.col(keep_col).cast("long")).alias("n_kept"),
+            F.sum(F.col("_keep").cast("long")).alias("n_kept"),
             # kept-filter inside the partial aggregate (collect_list
             # skips nulls): dropped paragraphs' text never crosses the
             # rebuild exchange — at CCNet drop rates that halves the
             # reassembly shuffle (guide §2.3). Value-identical:
-            # pos_col is unique per document, so sorting the kept
+            # pos is unique per document, so sorting the kept
             # (pos, text) structs reproduces the old
             # filter-after-sort order, and NULL/false keep dropped the
             # row in both spellings.
@@ -2397,18 +2290,18 @@ def rebuild_documents(
                     F.array_sort(
                         F.collect_list(
                             F.when(
-                                F.col(keep_col),
+                                F.col("_keep"),
                                 F.struct(
-                                    F.col(pos_col).alias("_p"),
-                                    F.col(para_col).alias("_t"),
+                                    F.col("pos").alias("_p"),
+                                    F.col("para").alias("_t"),
                                 ),
                             )
                         )
                     ),
                     lambda s: s["_t"],
                 ),
-                sep,
+                "\n\n",
             ).alias("text_kept"),
         )
-        .select(id_col, "n_paras", "n_kept", "text_kept")
+        .select("doc_id", "n_paras", "n_kept", "text_kept")
     )

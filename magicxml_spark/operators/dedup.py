@@ -97,43 +97,27 @@ def minhash_band_signature(shingles: Column, band: int) -> Column:
     )
 
 
-def minhash_band_signature_array(shingles: Column, n_bands: int = 4) -> Column:
-    """All band minima in ONE pass: array<string> of length n_bands,
+def minhash_band_signature_array(shingles: Column) -> Column:
+    """All 4 band minima in ONE pass: array<string> of length 4,
     element b == minhash_band_signature(shingles, b), null for empty
     shingle arrays.
 
-    Why not n_bands calls to minhash_band_signature: Catalyst performs
-    no cross-expression CSE, so N parallel array_min/transform
-    expressions re-evaluate the shingle array AND re-digest every
-    shingle N times (the round-3 simhash lesson). Here each digest
-    group's md5 runs once per shingle inside a single aggregate whose
-    accumulator holds every band's running minimum; '~' (0x7E, above
+    Why not 4 calls to minhash_band_signature: Catalyst performs no
+    cross-expression CSE, so parallel array_min/transform expressions
+    re-evaluate the shingle array AND re-digest every shingle per band
+    (the round-3 simhash lesson). Here one md5 runs per shingle inside
+    a single aggregate whose accumulator holds every band's running
+    minimum — band b is the digest's 8-hex slice b; '~' (0x7E, above
     any hex char) is the identity sentinel, mapped to null at finish."""
-    n_digests = (n_bands + 3) // 4
-
-    def _digest(group: int):
-        salt = _band_digest_salt(group * 4)
-        return lambda s: F.md5(F.concat(F.lit(salt), s) if salt else s)
-
-    if n_digests == 1:
-        hashed = F.transform(shingles, _digest(0))
-
-        def slot(z: Column, b: int) -> Column:
-            return F.substring(z, 1 + (b % 4) * 8, 8)
-    else:
-        hashed = F.arrays_zip(
-            *[F.transform(shingles, _digest(g)) for g in range(n_digests)]
-        )
-
-        def slot(z: Column, b: int) -> Column:
-            return F.substring(z[str(b // 4)], 1 + (b % 4) * 8, 8)
-
-    init = F.array(*[F.lit("~") for _ in range(n_bands)])
+    hashed = F.transform(shingles, lambda s: F.md5(s))
     return F.aggregate(
         hashed,
-        init,
+        F.array(*[F.lit("~") for _ in range(4)]),
         lambda acc, z: F.array(
-            *[F.least(F.element_at(acc, b + 1), slot(z, b)) for b in range(n_bands)]
+            *[
+                F.least(F.element_at(acc, b + 1), F.substring(z, 1 + b * 8, 8))
+                for b in range(4)
+            ]
         ),
         lambda acc: F.transform(
             acc, lambda v: F.when(v == "~", F.lit(None).cast("string")).otherwise(v)
@@ -746,10 +730,6 @@ def _classify_against_prior(
 def write_dedup_snapshot(
     corpus: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    shingle_k: int = 3,
 ) -> None:
     """Persist the dedup state of a curated corpus: the distinct
     fingerprint set (``{path}/fingerprints``) and the distinct
@@ -764,12 +744,12 @@ def write_dedup_snapshot(
     text."""
     import os
 
-    normed = F.trim(F.regexp_replace(F.lower(F.col(text_col)), _WS, " "))
+    normed = F.trim(F.regexp_replace(F.lower(F.col("text")), _WS, " "))
     corpus.select(F.md5(normed).alias("fp")).distinct().write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "fingerprints"))
     (
-        minhash_signatures(corpus, id_col, text_col, n_bands, shingle_k)
+        minhash_signatures(corpus, "doc_id", "text", 4, 3)
         .select("band", "signature")
         .distinct()
         .write.mode("overwrite")
@@ -780,10 +760,6 @@ def write_dedup_snapshot(
 def incremental_dedup_against_snapshot(
     new_batch: DataFrame,
     snapshot_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """``incremental_dedup`` with the prior side read from a
     ``write_dedup_snapshot`` directory instead of derived from prior
@@ -797,7 +773,7 @@ def incremental_dedup_against_snapshot(
     prior_fp = spark.read.parquet(os.path.join(snapshot_path, "fingerprints"))
     prior_sig = spark.read.parquet(os.path.join(snapshot_path, "signatures"))
     return _classify_against_prior(
-        new_batch, prior_fp, prior_sig, id_col, text_col, n_bands, shingle_k
+        new_batch, prior_fp, prior_sig, "doc_id", "text", 4, 3
     )
 
 
@@ -812,7 +788,6 @@ def contamination_check(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """For each evaluation document, measure k-gram overlap with the
     training corpus: how many corpus docs share at least one k-gram,
@@ -822,17 +797,7 @@ def contamination_check(
     Shape: both sides explode DISTINCT shingles (word_shingles — same
     convention as minhash: short docs contribute one whole-text gram)
     and equi-join on the gram string — bucketed by gram, never
-    all-pairs.
-
-    ``max_doc_freq`` is the stop-gram guard for the 100 TB path: a
-    gram present in more than that many CORPUS documents ("the of the",
-    boilerplate phrases) is dropped from both sides before the join —
-    one extra aggregate over the corpus grams, eliminating exactly the
-    hot keys whose join fan-out (eval_count x corpus_count per gram)
-    dominates at scale. Such grams are also the least informative
-    contamination signal, which is why stop-gram removal is standard in
-    decontamination pipelines. None = keep every gram (the
-    oracle-checked default).
+    all-pairs. Every gram is kept (the oracle-checked semantics).
     """
     ev = eval_set.select(
         F.col(id_col).alias("eval_doc_id"),
@@ -842,17 +807,6 @@ def contamination_check(
         F.col(id_col).alias("corpus_doc_id"),
         F.explode(word_shingles(F.col(text_col), k)).alias("gram"),
     )
-    if max_doc_freq is not None:
-        stop = (
-            corp.groupBy("gram")
-            .agg(F.countDistinct("corpus_doc_id").alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("gram")
-        )
-        # anti-join on the corpus side is enough to kill the fan-out
-        # (a gram missing from one side emits nothing), and stop-gram
-        # sets are small by Zipf, so this broadcasts
-        corp = corp.join(stop, "gram", "left_anti")
     return (
         ev.join(corp, "gram")
         .groupBy("eval_doc_id")
@@ -871,7 +825,6 @@ def decontaminate(
     text_col: str = "text",
     k: int = 3,
     min_shared_ngrams: int = 1,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """The enforcement half of ``contamination_check``: return the
     corpus WITHOUT documents sharing at least ``min_shared_ngrams``
@@ -882,10 +835,7 @@ def decontaminate(
     eval suites are tiny next to a training corpus, so the gram join
     broadcasts), corpus docs aggregate their distinct shared-gram count
     in one groupBy, and removal is a left-anti join on the flagged ids —
-    the corpus body is scanned once and never shuffled on text.
-    ``max_doc_freq`` drops boilerplate stop-grams from both sides first,
-    exactly as in ``contamination_check`` (same Zipf argument, same
-    fan-out guard for the 100 TB path)."""
+    the corpus body is scanned once and never shuffled on text."""
     ev_grams = eval_set.select(
         F.explode(word_shingles(F.col(text_col), k)).alias("gram")
     ).distinct()
@@ -893,15 +843,6 @@ def decontaminate(
         F.col(id_col).alias("_cid"),
         F.explode(word_shingles(F.col(text_col), k)).alias("gram"),
     )
-    if max_doc_freq is not None:
-        stop = (
-            corp.groupBy("gram")
-            .agg(F.countDistinct("_cid").alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("gram")
-        )
-        corp = corp.join(stop, "gram", "left_anti")
-        ev_grams = ev_grams.join(stop, "gram", "left_anti")
     flagged = (
         corp.join(ev_grams, "gram")
         .groupBy("_cid")
@@ -923,8 +864,6 @@ def dedup_lines(
     line_col: str = "line",
     pos_col: str = "pos",
     max_doc_frequency: int = 1,
-    out_col: str = "text_dedup",
-    sep: str = "\n",
 ) -> DataFrame:
     """Remove lines whose document frequency exceeds
     ``max_doc_frequency`` (boilerplate/nav/footer removal a la C4),
@@ -957,14 +896,14 @@ def dedup_lines(
                 ),
                 lambda s: s[line_col],
             ),
-            sep,
-        ).alias(out_col),
+            "\n",
+        ).alias("text_dedup"),
     )
     return total.join(rebuilt, id_col, "left").select(
         id_col,
         "n_lines",
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        F.coalesce(out_col, F.lit("")).alias(out_col),
+        F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
     )
 
 
@@ -973,22 +912,19 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    n_slices: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Hamming-distance SimHash near-dup: distinct (id_a < id_b) pairs
     whose 16-bit sketches differ in at most ``max_hamming`` bits.
 
     Pigeonhole banding makes this bucketed, never all-pairs: the 16-bit
-    sketch splits into ``n_slices`` 4-bit slices, and two sketches
-    within Hamming distance n_slices-1 must agree on at least one
-    slice. Candidates come from an equi-join on (slice index, slice
-    value); the exact popcount filter then removes false candidates.
-    With the defaults (4 slices, max_hamming 3) the result is EXACT —
-    every qualifying pair shares a slice by pigeonhole. A larger
-    ``max_hamming`` than n_slices-1 would make the recall approximate;
-    callers wanting that raise ``n_slices`` (more bands, smaller
-    slices) exactly like minhash banding.
+    sketch splits into 4 4-bit slices, and two sketches within Hamming
+    distance 3 must agree on at least one slice. Candidates come from
+    an equi-join on (slice index, slice value); the exact popcount
+    filter then removes false candidates. Up to ``max_hamming`` 3 the
+    result is EXACT — every qualifying pair shares a slice by
+    pigeonhole; a larger ``max_hamming`` is refused, since its recall
+    would be approximate.
 
     Scale shape mirrors ``lsh_candidate_pairs``: one projection for
     the sketch, a 4-row explode, one shuffle on the slice key. The
@@ -1007,12 +943,12 @@ def simhash_near_dup_pairs(
     defaults ON (``DEFAULT_MAX_BUCKET_SIZE``); ``None`` is the explicit
     opt-out for exact all-pairs emission at oracle/test scale.
     """
-    if max_hamming > n_slices - 1:
+    if max_hamming > 3:
         raise ValueError(
-            f"max_hamming={max_hamming} needs n_slices>={max_hamming + 1} "
-            "for exact pigeonhole coverage"
+            f"max_hamming={max_hamming} exceeds 3, the most 4 slices cover "
+            "exactly by pigeonhole"
         )
-    bits_per = 16 // n_slices
+    bits_per = 4
     mask = (1 << bits_per) - 1
     sk = df.select(
         F.col(id_col).alias("id"), simhash16(F.col(text_col)).alias("sk")
@@ -1029,7 +965,7 @@ def simhash_near_dup_pairs(
                         .bitwiseAND(F.lit(mask))
                         .alias("slice_val"),
                     )
-                    for s in range(n_slices)
+                    for s in range(4)
                 ]
             )
         ).alias("sl"),
@@ -1205,21 +1141,24 @@ def _positional_kgrams(text: Column | str, k: int = 3) -> Column:
     )
 
 
+# Winnowing: WINNOW_K-word grams, the minimum hash of each window of
+# WINNOW_WINDOW consecutive grams.
+WINNOW_K = 3
+WINNOW_WINDOW = 4
+
+
 def winnow_fingerprint_sets(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
-    window: int = 4,
     extra_cols: tuple[str, ...] = (),
-    hash_family: str = "md5",
 ) -> DataFrame:
     """(id, fps) — per-document sorted distinct winnowing fingerprints
     (8-hex md5 slices, the engine-portable hash family used by the
     minhash bands).
 
     Selection rule: the minimum hash of each window; with fewer than
-    ``window`` grams the single fingerprint is the global minimum (the
+    ``WINNOW_WINDOW`` grams the single fingerprint is the global minimum (the
     paper's degenerate case). Lexicographic min over fixed-width hex is
     a uniform order, so the density guarantee (expected 2/(window+1)
     of grams selected) holds.
@@ -1227,49 +1166,37 @@ def winnow_fingerprint_sets(
     Plan shape: TWO stacked projections, zero shuffles. The gram
     hashes are materialized as a concrete attribute in the first
     projection, because the sliding-min spelling references the hash
-    array ``window`` times — Catalyst performs no cross-expression CSE
+    array ``WINNOW_WINDOW`` times — Catalyst performs no cross-expression CSE
     (the round-3 simhash lesson), so referencing an expression that
-    many times would re-digest every gram ``window`` times; referencing
+    many times would re-digest every gram that many times; referencing
     an attribute is free. The sliding min itself is zip_with over
     shifted views with explicit null propagation (``least`` skips
     nulls, which would silently admit partial trailing windows).
     """
-    if hash_family == "md5":
-        gram_hash = lambda g: F.substring(F.md5(g), 1, 8)  # noqa: E731
-        null_t = "string"
-    elif hash_family == "xxhash64":
-        # fast non-oracle family (same contract as minhash_signatures):
-        # bigint fingerprints, min over a uniform order, ~same density
-        # guarantee; DIFFERENT fingerprints get selected, so sets from
-        # one family cannot be compared against the other's
-        # wrapped: *args signatures cannot bind as HOF lambdas
-        gram_hash = lambda g: F.xxhash64(g)  # noqa: E731
-        null_t = "bigint"
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
     hashed = df.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in extra_cols],  # e.g. the streaming event time
         F.transform(
-            _positional_kgrams(F.col(text_col), k), gram_hash
+            _positional_kgrams(F.col(text_col), WINNOW_K),
+            lambda g: F.substring(F.md5(g), 1, 8),
         ).alias("_hs"),
     )
     hs = F.col("_hs")
     m = F.size(hs)
     mins = hs
-    for i in range(1, window):
+    for i in range(1, WINNOW_WINDOW):
         shifted = F.slice(hs, i + 1, F.greatest(m - i, F.lit(1)))
         mins = F.zip_with(
             mins,
             shifted,
-            lambda a, b: F.when(b.isNull(), F.lit(None).cast(null_t)).otherwise(
+            lambda a, b: F.when(b.isNull(), F.lit(None).cast("string")).otherwise(
                 F.least(a, b)
             ),
         )
     full_windows = F.filter(mins, lambda x: x.isNotNull())
     selected = (
-        F.when(m == 0, F.array().cast(f"array<{null_t}>"))
-        .when(m < window, F.array(F.array_min(hs)))
+        F.when(m == 0, F.array().cast("array<string>"))
+        .when(m < WINNOW_WINDOW, F.array(F.array_min(hs)))
         .otherwise(full_windows)
     )
     return hashed.select(
@@ -1281,11 +1208,8 @@ def winnow_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
-    window: int = 4,
     min_shared: int = 2,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints,
     with containment = shared / min(|fps_a|, |fps_b|) — the
@@ -1307,9 +1231,9 @@ def winnow_pairs(
     closure (``dedup_clusters``) recovering full cluster membership.
     ``None`` = exact all-pairs emission (oracle/test scale only).
     """
-    sets_ = winnow_fingerprint_sets(
-        df, id_col, text_col, k, window, hash_family=hash_family
-    ).filter(F.size("fps") > 0)
+    sets_ = winnow_fingerprint_sets(df, id_col, text_col).filter(
+        F.size("fps") > 0
+    )
     long = sets_.select("id", F.size("fps").alias("_n_fps"), F.explode("fps").alias("fp"))
     if max_bucket_size is not None:
         cand = _capped_bucket_pairs(

@@ -12,15 +12,15 @@ resample, not just the argmax documents.
 Published recipe -> Spark mapping:
 
 * hashed n-gram features (paper §3.1: unigrams + bigrams hashed into
-  m buckets): word unigrams + bigrams, bucket = first ``hash_chars``
-  hex digits of md5(gram) -> m = 16**hash_chars buckets. md5-prefix
+  m buckets): word unigrams + bigrams, bucket = first ``HASH_CHARS``
+  hex digits of md5(gram) -> m = 16**HASH_CHARS buckets. md5-prefix
   bucketing (not xxhash64) keeps the bucket function reproducible in
   any engine, the repo-wide oracle-parity rule (sampling.hash_order).
 * both models fit in ONE aggregation pass over the exploded gram
   stream (groupBy bucket: raw count + conditional target count) — at
   100 TB that is a single map-side-combinable shuffle of at most m
   rows per mapper, not two corpus scans.
-* additive (Laplace) ``alpha`` smoothing keeps every bucket's ratio
+* additive (Laplace) ``ALPHA`` smoothing keeps every bucket's ratio
   finite; the paper smooths the hashed multinomials the same way.
 * the per-bucket log ratio is pre-rounded to integer MICRO-NATS in
   the m-bounded bucket table, so each document's weight is an exact
@@ -32,7 +32,7 @@ Published recipe -> Spark mapping:
 
 Scale shape (r12): one explode (pre-repartitioned to
 defaultParallelism — the LM-family scan-parallelism rule) into one
-groupBy(bucket) agg whose output is BOUNDED at m = 16**hash_chars
+groupBy(bucket) agg whose output is BOUNDED at m = 16**HASH_CHARS
 rows; the per-bucket micro-nat ratios then collect to the driver
 (bounded collect — the two_phase_rank class; float math stays on the
 JVM) and per-document scoring is ONE projection summing dense
@@ -50,16 +50,24 @@ from pyspark.sql import functions as F
 from magicxml_spark.operators.text import tokens as _words
 
 
+# Hex digits of md5(gram) that name its bucket: m = 16**HASH_CHARS =
+# 4096 buckets, small enough that the per-bucket ratios collect to the
+# driver and score as one in-row array lookup.
+HASH_CHARS = 3
+M_BUCKETS = 16**HASH_CHARS
+# Additive (Laplace) smoothing of both bucket multinomials.
+ALPHA = 0.5
+
+
 def hashed_ngram_stream(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    hash_chars: int = 3,
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """One row per unigram/bigram INSTANCE (multiset — counts matter
     for the multinomial models, unlike word_shingles' distinct sets):
-    (id, bucket) where bucket = substr(md5(gram), 1, hash_chars).
+    (id, bucket) where bucket = substr(md5(gram), 1, HASH_CHARS).
 
     Repartitions the compact (id, text) projection to
     defaultParallelism before the explode so gram fan-out is not
@@ -93,16 +101,9 @@ def hashed_ngram_stream(
         .select(
             "_id",
             *[c for c in (extra_cols or [])],
-            F.substring(F.md5("_g"), 1, hash_chars).alias("bucket"),
+            F.substring(F.md5("_g"), 1, HASH_CHARS).alias("bucket"),
         )
     )
-
-
-#: Largest bucket space scored via the in-row m-array (16**4). Above
-#: this the array literal would dominate plan build (the bloom-bitmap
-#: lesson bounds the safe literal size) and scoring falls back to the
-#: join spelling.
-_INROW_MAX_BUCKETS = 65536
 
 
 def _gram_array(text_col: str) -> Column:
@@ -134,7 +135,6 @@ def _inrow_scored(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    hash_chars: int,
     m_lit: Column,
 ) -> DataFrame:
     """(id, n_grams, lw_micro) via per-row gram-array lookup into the
@@ -148,7 +148,7 @@ def _inrow_scored(
         .select("_id", _gram_array("_t").alias("_gs"))
     )
     idx = lambda g: (  # noqa: E731
-        F.conv(F.substring(F.md5(g), 1, hash_chars), 16, 10).cast("int") + 1
+        F.conv(F.substring(F.md5(g), 1, HASH_CHARS), 16, 10).cast("int") + 1
     )
     return base.select(
         F.col("_id"),
@@ -169,8 +169,6 @@ def dsir_log_weights(
     id_col: str,
     text_col: str,
     target_flag: Column,
-    hash_chars: int = 3,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Per-document DSIR log importance weight.
 
@@ -184,7 +182,7 @@ def dsir_log_weights(
     Documents with no tokens score 0 (empty product).
 
     Scale shape (r12 rewrite, guide §8's decide-with-small-rows): the
-    bucket table is BOUNDED at m = 16**hash_chars rows by construction
+    bucket table is BOUNDED at ``M_BUCKETS`` rows by construction
     — data size never grows it — so the per-bucket micro-nat ratios
     collect to the driver (the two_phase_rank bounded-collect class)
     and scoring becomes ONE projection: per document, sum the dense
@@ -197,71 +195,29 @@ def dsir_log_weights(
     micro-nat values are bit-identical to the join spelling's
     (m totals enter the JVM expression as literals — the
     score_with_dsir_model precedent)."""
-    m_buckets = 16**hash_chars
     spark = raw.sparkSession
     grams = hashed_ngram_stream(
         raw.withColumn("_is_t", target_flag.cast("int")),
         id_col,
         text_col,
-        hash_chars,
         extra_cols=["_is_t"],
     )
     counts = grams.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("cr"),
         F.sum("_is_t").alias("ct"),
     )
-    if m_buckets > _INROW_MAX_BUCKETS:
-        # join fallback for oversized bucket spaces: the literal-array
-        # plan-build cost would dominate. Same values.
-        counts = counts.localCheckpoint(eager=True)
-        totals = counts.agg(
-            F.sum("cr").alias("n_raw"), F.sum("ct").alias("n_tgt")
-        )
-        ratio = counts.crossJoin(F.broadcast(totals)).select(
-            "bucket",
-            F.round(
-                (
-                    F.log(
-                        (F.col("ct") + alpha)
-                        / (F.col("n_tgt") + alpha * m_buckets)
-                    )
-                    - F.log(
-                        (F.col("cr") + alpha)
-                        / (F.col("n_raw") + alpha * m_buckets)
-                    )
-                )
-                * 1e6
-            )
-            .cast("bigint")
-            .alias("m"),
-        )
-        scored = (
-            grams.join(ratio, "bucket")
-            .groupBy("_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_grams"),
-                F.sum("m").alias("lw_micro"),
-            )
-        )
-        ids = raw.select(F.col(id_col).alias("_id"))
-        return ids.join(scored, "_id", "left").select(
-            F.col("_id").alias(id_col),
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.coalesce("lw_micro", F.lit(0)).alias("lw_micro"),
-        )
-
     # ONE job fits both multinomials (bounded output); exact integer
     # sums happen in Python (no float drift possible on longs)
     counts_rows = counts.collect()
     n_raw = sum(r["cr"] for r in counts_rows)
     n_tgt = sum(r["ct"] for r in counts_rows)
-    vals = [0] * m_buckets  # absent buckets are unreachable: every
+    vals = [0] * M_BUCKETS  # absent buckets are unreachable: every
     # scored gram contributed to counts
     if counts_rows:
         # per-bucket micro-nats computed by the JVM over a
         # LocalRelation (literal totals — the score_with_dsir_model
         # ratio expression, proven engine-exact)
-        am = alpha * m_buckets
+        am = ALPHA * M_BUCKETS
         m_rows = (
             spark.createDataFrame(
                 [(r["bucket"], r["cr"], r["ct"]) for r in counts_rows],
@@ -271,8 +227,8 @@ def dsir_log_weights(
                 "bucket",
                 F.round(
                     (
-                        F.log((F.col("ct") + alpha) / F.lit(n_tgt + am))
-                        - F.log((F.col("cr") + alpha) / F.lit(n_raw + am))
+                        F.log((F.col("ct") + ALPHA) / F.lit(n_tgt + am))
+                        - F.log((F.col("cr") + ALPHA) / F.lit(n_raw + am))
                     )
                     * 1e6
                 )
@@ -284,7 +240,7 @@ def dsir_log_weights(
         for r in m_rows:
             vals[int(r["bucket"], 16)] = r["m"]
     return _inrow_scored(
-        raw, id_col, text_col, hash_chars, _m_array_literal(spark, vals)
+        raw, id_col, text_col, _m_array_literal(spark, vals)
     ).select(
         F.col("_id").alias(id_col), "n_grams", "lw_micro"
     )
@@ -314,25 +270,16 @@ def dsir_select(
     text_col: str,
     target_flag: Column,
     k: int,
-    hash_chars: int = 3,
-    alpha: float = 0.5,
-    gumbel: bool = True,
 ) -> DataFrame:
     """Gumbel-top-k importance resample of ``raw`` toward the target.
 
-    ``gumbel=False`` degrades to plain top-k by importance weight (the
-    paper's "top-k heuristic" baseline). Selection is a distributed
+    Selection is a distributed
     TakeOrdered — orderBy+limit, never a single-task global window.
     Output: (id, n_grams, log_w, sel_key) sorted by sel_key desc.
     """
-    lw = dsir_log_weights(raw, id_col, text_col, target_flag, hash_chars, alpha)
-    key = (
-        gumbel_key(F.col(id_col), F.col("lw_micro"))
-        if gumbel
-        else F.col("lw_micro")
-    )
+    lw = dsir_log_weights(raw, id_col, text_col, target_flag)
     return (
-        lw.withColumn("_key", key)
+        lw.withColumn("_key", gumbel_key(F.col(id_col), F.col("lw_micro")))
         .orderBy(F.desc("_key"), id_col)
         .limit(k)
         .select(
@@ -357,24 +304,19 @@ def write_dsir_model(
     raw: DataFrame,
     path: str,
     target_flag: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_chars: int = 3,
-    alpha: float = 0.5,
 ) -> dict:
     """Fit and persist the DSIR bucket model: ``{path}/counts``
     (bucket, cr, ct — raw and target gram counts) and ``{path}/meta``
     (hash_chars, alpha, n_raw, n_tgt). Counts, never ratios, so
-    appends stay exact and alpha can be rescored without refit.
+    appends stay exact.
     Returns ``{"n_raw", "n_tgt"}``."""
     import os
 
     spark = raw.sparkSession
     grams = hashed_ngram_stream(
         raw.withColumn("_is_t", target_flag.cast("int")),
-        id_col,
-        text_col,
-        hash_chars,
+        "doc_id",
+        "text",
         extra_cols=["_is_t"],
     )
     counts = grams.groupBy("bucket").agg(
@@ -389,7 +331,7 @@ def write_dsir_model(
     n_raw = int(row[0]) if row[0] is not None else 0
     n_tgt = int(row[1]) if row[1] is not None else 0
     spark.createDataFrame(
-        [(hash_chars, float(alpha), n_raw, n_tgt)],
+        [(HASH_CHARS, ALPHA, n_raw, n_tgt)],
         "hash_chars int, alpha double, n_raw long, n_tgt long",
         # repartition(1): 1-row LocalRelation otherwise writes 32
         # tasks / 32 files (write_bpe_model's measured pathology)
@@ -402,8 +344,6 @@ def write_dsir_model(
 def score_with_dsir_model(
     docs: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Score a batch against a frozen DSIR model O(batch).
 
@@ -412,29 +352,25 @@ def score_with_dsir_model(
     (id, n_grams, log_w); docs with no tokens score 0.
 
     Scale shape (r12 rewrite — the dsir_log_weights rationale): the
-    stored bucket table is bounded at 16**hash_chars rows, so its
+    stored bucket table is bounded at ``M_BUCKETS`` rows, so its
     micro-nat ratios (JVM-computed, exactly the join spelling's
     expression) collect once into a dense array whose absent slots
     hold the oov value — the left-join + coalesce(oov) semantics as
     an array fill — and scoring is ONE projection over the batch:
-    no gram explode, no join, no groupBy, no ids left-join. Oversized
-    bucket spaces fall back to the join spelling."""
+    no gram explode, no join, no groupBy, no ids left-join."""
     import os
 
     spark = docs.sparkSession
     meta = spark.read.parquet(os.path.join(path, "meta")).first()
-    hash_chars = int(meta["hash_chars"])
-    alpha = float(meta["alpha"])
     n_raw, n_tgt = int(meta["n_raw"]), int(meta["n_tgt"])
-    m_buckets = 16**hash_chars
-    am = alpha * m_buckets
+    am = ALPHA * M_BUCKETS
     counts = spark.read.parquet(os.path.join(path, "counts"))
     ratio = counts.select(
         "bucket",
         F.round(
             (
-                F.log((F.col("ct") + alpha) / F.lit(n_tgt + am))
-                - F.log((F.col("cr") + alpha) / F.lit(n_raw + am))
+                F.log((F.col("ct") + ALPHA) / F.lit(n_tgt + am))
+                - F.log((F.col("cr") + ALPHA) / F.lit(n_raw + am))
             )
             * 1e6
         )
@@ -444,37 +380,21 @@ def score_with_dsir_model(
     oov = (
         F.round(
             (
-                F.log(F.lit(alpha) / F.lit(n_tgt + am))
-                - F.log(F.lit(alpha) / F.lit(n_raw + am))
+                F.log(F.lit(ALPHA) / F.lit(n_tgt + am))
+                - F.log(F.lit(ALPHA) / F.lit(n_raw + am))
             )
             * 1e6
         )
         .cast("bigint")
     )
-    if m_buckets > _INROW_MAX_BUCKETS:
-        grams = hashed_ngram_stream(docs, id_col, text_col, hash_chars)
-        scored = (
-            grams.join(ratio, "bucket", "left")
-            .groupBy("_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_grams"),
-                F.sum(F.coalesce("m", oov)).alias("lw_micro"),
-            )
-        )
-        ids = docs.select(F.col(id_col).alias("_id"))
-        return ids.join(scored, "_id", "left").select(
-            F.col("_id").alias(id_col),
-            F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-            F.round(F.coalesce("lw_micro", F.lit(0)) / 1e6, 6).alias("log_w"),
-        )
     oov_val = int(spark.range(1).select(oov.alias("v")).first()["v"])
-    vals = [oov_val] * m_buckets
-    for r in ratio.collect():  # bounded: <= m_buckets rows
+    vals = [oov_val] * M_BUCKETS
+    for r in ratio.collect():  # bounded: <= M_BUCKETS rows
         vals[int(r["bucket"], 16)] = r["m"]
     return _inrow_scored(
-        docs, id_col, text_col, hash_chars, _m_array_literal(spark, vals)
+        docs, "doc_id", "text", _m_array_literal(spark, vals)
     ).select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_grams",
         F.round(F.col("lw_micro") / 1e6, 6).alias("log_w"),
     )

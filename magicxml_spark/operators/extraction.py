@@ -124,38 +124,28 @@ def _para_class(p: Column, stopword_member) -> Column:
 
 def justext_boilerplate(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: list[str] | dict[str, list[str]] | None = None,
-    sep: str = "\n\n",
     lang_col: str | None = None,
 ) -> DataFrame:
     """Per-document boilerplate removal. Output:
     (id, n_paras, n_good, main_frac, text_main) — ``text_main`` is the
-    final-good paragraphs re-joined with ``sep`` (empty when nothing
-    survives), ``main_frac`` the surviving char fraction (4 dp).
+    final-good paragraphs re-joined with blank lines (empty when
+    nothing survives), ``main_frac`` the surviving char fraction (4 dp).
 
+    Without ``lang_col`` every document uses JUSTEXT_STOPWORDS.
     ``lang_col`` selects PER-LANGUAGE stopword lists (the paper's
-    multilingual deployment): pass a lang->list dict (default
-    JUSTEXT_STOPWORDS_BY_LANG — keys are lang_id output codes) and the
-    membership test becomes a per-document CASE on ``lang_col``.
+    multilingual deployment): JUSTEXT_STOPWORDS_BY_LANG, keyed by
+    lang_id output codes, and the membership test becomes a
+    per-document CASE on ``lang_col``.
     Documents whose language has no list get zero stopword density
     (everything classifies short/bad — jusText cannot run without a
     list; gate on lang_id upstream)."""
     import re
 
-    if isinstance(stopwords, dict) != (lang_col is not None) and (
-        stopwords is not None
-    ):
-        raise ValueError(
-            "per-language stopword dicts require lang_col (and vice versa)"
-        )
     if lang_col is not None:
-        smap = JUSTEXT_STOPWORDS_BY_LANG if stopwords is None else stopwords
 
         def member(tok: Column) -> Column:
             e = None
-            for lang, words in sorted(smap.items()):
+            for lang, words in sorted(JUSTEXT_STOPWORDS_BY_LANG.items()):
                 cond = F.col(lang_col) == lang
                 e = (
                     F.when(cond, tok.isin(words))
@@ -165,12 +155,11 @@ def justext_boilerplate(
             return e.otherwise(F.lit(False))
 
     else:
-        slist = JUSTEXT_STOPWORDS if stopwords is None else stopwords
 
         def member(tok: Column) -> Column:
-            return tok.isin(slist)
+            return tok.isin(JUSTEXT_STOPWORDS)
 
-    paras = F.split(F.col(text_col), re.escape(sep), -1)
+    paras = F.split(F.col("text"), re.escape("\n\n"), -1)
     cls0 = F.transform(paras, lambda p: _para_class(p, member))
 
     # Nearest context-free full (good/bad) class before/after each
@@ -225,12 +214,12 @@ def justext_boilerplate(
         F.zip_with(paras, final, lambda p, c: F.when(c == "good", p)),
         lambda x: x.isNotNull(),
     )
-    total_chars = F.length(F.col(text_col))
+    total_chars = F.length(F.col("text"))
     kept_chars = F.aggregate(
         kept, F.lit(0), lambda acc, p: acc + F.length(p)
     )
     return df.select(
-        F.col(id_col).alias(id_col),
+        F.col("doc_id").alias("doc_id"),
         F.size(paras).alias("n_paras"),
         F.size(kept).alias("n_good"),
         F.when(
@@ -239,14 +228,12 @@ def justext_boilerplate(
         )
         .otherwise(0.0)
         .alias("main_frac"),
-        F.concat_ws(sep, kept).alias("text_main"),
+        F.concat_ws("\n\n", kept).alias("text_main"),
     )
 
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 64,
     overlap: int = 16,
 ) -> DataFrame:
@@ -275,7 +262,7 @@ def chunk_documents(
             f"overlap must be in [0, chunk_tokens): {overlap} vs {chunk_tokens}"
         )
     step = chunk_tokens - overlap
-    w = _words(F.col(text_col))
+    w = _words(F.col("text"))
     n = F.size(w)
     # number of windows: smallest c with (c-1)*step + chunk >= n and
     # every window start < n  ->  c = ceil(max(n - overlap, 1) / step)
@@ -292,7 +279,7 @@ def chunk_documents(
     # empty docs: the n_chunks formula would yield 1 window of 0
     # tokens — emit nothing instead
     out = df.select(
-        F.col(id_col).alias(id_col),
+        F.col("doc_id").alias("doc_id"),
         F.posexplode(
             F.when(n > 0, chunks).otherwise(
                 F.array().cast(
@@ -302,7 +289,7 @@ def chunk_documents(
         ).alias("chunk_id", "_c"),
     )
     return out.select(
-        id_col,
+        "doc_id",
         "chunk_id",
         F.col("_c.start_tok").alias("start_tok"),
         F.size("_c.toks").alias("n_tokens"),

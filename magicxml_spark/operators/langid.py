@@ -371,29 +371,23 @@ def with_lang(
     )
 
 
-def lang_id(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_score: float | None = None,
-) -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Identify each document's language. Output one row per input:
     (id, script, lang, hits, margin, score, n_letters) where ``script``
     is the dominant Unicode script ('none' when the text has no
-    letters), ``lang`` the ISO-639-1 code ('und' when undecidable or
-    below ``min_score``), ``hits`` the evidence size (function-word
+    letters), ``lang`` the ISO-639-1 code ('und' when undecidable),
+    ``hits`` the evidence size (function-word
     occurrences for voted scripts, script letter count for
     script-determined ones), ``margin``/``score`` the confidence
     semantics documented on :func:`with_lang`, ``n_letters`` the total
     count over all tracked script classes."""
     out = with_lang(
-        df.select(F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        text_col,
+        df.select(F.col("doc_id").alias("doc_id"), F.col("text").alias("text")),
+        "text",
         out_col="lang",
-        min_score=min_score,
     )
     return out.select(
-        id_col,
+        "doc_id",
         F.col("lang_script").alias("script"),
         "lang",
         F.col("lang_hits").alias("hits"),
@@ -537,14 +531,7 @@ def langid_duckdb_ctes(
       FROM lid_mg)"""
 
 
-def lang_id_paragraphs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-    max_chars: int | None = None,
-    min_score: float | None = None,
-) -> DataFrame:
+def lang_id_paragraphs(df: DataFrame) -> DataFrame:
     """Per-PARAGRAPH language identification — the mixed-document
     deployment VERDICT r10 noted as the remaining langid semantics: a
     document-level argmax hides embedded foreign paragraphs (a Russian
@@ -561,17 +548,14 @@ def lang_id_paragraphs(
     import re
 
     paras = df.select(
-        F.col(id_col).alias(id_col),
+        F.col("doc_id").alias("doc_id"),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), re.escape(sep), -1)
+            F.split(F.coalesce(F.col("text"), F.lit("")), re.escape("\n\n"), -1)
         ).alias("pos", "_para"),
     )
-    out = with_lang(
-        paras, "_para", out_col="lang", max_chars=max_chars,
-        min_score=min_score,
-    )
+    out = with_lang(paras, "_para", out_col="lang")
     return out.select(
-        id_col,
+        "doc_id",
         "pos",
         F.col("lang_script").alias("script"),
         "lang",

@@ -184,53 +184,30 @@ def norm_text_col(
 def normalize_text(
     df: DataFrame,
     text_col: str = "text",
-    out_col: str | None = None,
     **knobs,
 ) -> DataFrame:
-    """Normalize ``text_col`` (in place when ``out_col`` is None; all
-    other columns survive). This is the stage to plug AHEAD of every
+    """Normalize ``text_col`` in place (all other columns survive). This is the stage to plug AHEAD of every
     hash-keyed dedup: ``paragraph_dedup(normalize_text(df))`` dedups
     an NFD twin against its NFC original; on raw bytes it escapes."""
-    target = out_col or text_col
-    return df.withColumn(target, norm_text_col(F.col(text_col), **knobs))
+    return df.withColumn(text_col, norm_text_col(F.col(text_col), **knobs))
 
 
 # --- DuckDB oracle generation -----------------------------------------------
 
 
-def normalize_duckdb_expr(
-    expr: str,
-    form: str | None = "NFC",
-    strip_zero_width: bool = True,
-    strip_controls: bool = True,
-    normalize_newlines: bool = True,
-    unify_spaces: bool = True,
-    collapse_spaces: bool = True,
-    trim_lines: bool = True,
-) -> str:
-    """The identical chain as a DuckDB SQL expression, generated from
-    the SAME codepoint tables (the langid generated-oracle pattern).
-    DuckDB ships NFC only (``nfc_normalize``); other forms have no
-    oracle arm and raise here."""
-    if form is not None and form != "NFC":
-        raise ValueError(
-            f"DuckDB oracle supports form='NFC' only, got {form!r}"
-        )
-    if normalize_newlines:
-        expr = f"regexp_replace({expr}, '{_NEWLINE_PATTERN}', chr(10), 'g')"
-    if strip_controls:
-        cls = CONTROL_CLASS.replace("'", "''")
-        expr = f"regexp_replace({expr}, '{cls}', '', 'g')"
-    if strip_zero_width:
-        cls = ZERO_WIDTH_CLASS.replace("'", "''")
-        expr = f"regexp_replace({expr}, '{cls}', '', 'g')"
-    if form is not None:
-        expr = f"nfc_normalize({expr})"
-    if unify_spaces:
-        cls = SPACE_CLASS.replace("'", "''")
-        expr = f"regexp_replace({expr}, '{cls}', ' ', 'g')"
-    if collapse_spaces:
-        expr = f"regexp_replace({expr}, '{_COLLAPSE_PATTERN}', ' ', 'g')"
-    if trim_lines:
-        expr = f"regexp_replace({expr}, '{_TRIM_PATTERN}', '', 'g')"
+def normalize_duckdb_expr(expr: str) -> str:
+    """The identical chain (at the default NFC form) as a DuckDB SQL
+    expression, generated from the SAME codepoint tables (the langid
+    generated-oracle pattern). DuckDB ships NFC only
+    (``nfc_normalize``)."""
+    expr = f"regexp_replace({expr}, '{_NEWLINE_PATTERN}', chr(10), 'g')"
+    cls = CONTROL_CLASS.replace("'", "''")
+    expr = f"regexp_replace({expr}, '{cls}', '', 'g')"
+    cls = ZERO_WIDTH_CLASS.replace("'", "''")
+    expr = f"regexp_replace({expr}, '{cls}', '', 'g')"
+    expr = f"nfc_normalize({expr})"
+    cls = SPACE_CLASS.replace("'", "''")
+    expr = f"regexp_replace({expr}, '{cls}', ' ', 'g')"
+    expr = f"regexp_replace({expr}, '{_COLLAPSE_PATTERN}', ' ', 'g')"
+    expr = f"regexp_replace({expr}, '{_TRIM_PATTERN}', '', 'g')"
     return expr

@@ -150,18 +150,20 @@ def image_near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
+# Frames hashed per video file: bounds the rows one file contributes.
+VIDEO_MAX_FRAMES = 256
+
+
 def video_phash_frames(
     df: DataFrame,
     id_col: str = "path",
     content_col: str = "content",
-    every_n: int = 1,
-    max_frames: int = 256,
 ) -> DataFrame:
-    """(id, frame_idx, phash) per sampled MJPEG-AVI frame: the video
-    arm of the perceptual-hash family. Frame JPEGs decode through
-    jpeg_lite inside the same mapInPandas pass that walks the movi
-    list — one task per video file, no shuffle. ``every_n`` subsamples
-    (frame 0, n, 2n, ...); ``max_frames`` bounds rows per file."""
+    """(id, frame_idx, phash) per MJPEG-AVI frame (the first
+    ``VIDEO_MAX_FRAMES``): the video arm of the perceptual-hash family.
+    Frame JPEGs decode through jpeg_lite inside the same mapInPandas
+    pass that walks the movi list — one task per video file, no
+    shuffle."""
     import pandas as pd
 
     from magicxml_spark.sources.riff_media import iter_mjpeg_frames
@@ -174,9 +176,7 @@ def video_phash_frames(
             for path, content in zip(pdf[id_col], pdf[content_col]):
                 kept = 0
                 for idx, jpg in iter_mjpeg_frames(bytes(content)):
-                    if idx % every_n:
-                        continue
-                    if kept >= max_frames:
+                    if kept >= VIDEO_MAX_FRAMES:
                         break
                     ph = phash64_bytes(jpg)
                     if ph is not None:
@@ -193,8 +193,6 @@ def video_fingerprint_docs(
     df: DataFrame,
     id_col: str = "path",
     content_col: str = "content",
-    every_n: int = 1,
-    max_frames: int = 256,
 ) -> DataFrame:
     """(id, text) where text is the space-joined hex pHash token per
     sampled frame — a video rendered as a DOCUMENT whose tokens are
@@ -203,7 +201,7 @@ def video_fingerprint_docs(
     Re-muxed copies and subset clips share exact frame bytes -> exact
     tokens; per-frame re-encodes need the Hamming path
     (hamming_near_dup_pairs over video_phash_frames) instead."""
-    frames = video_phash_frames(df, id_col, content_col, every_n, max_frames)
+    frames = video_phash_frames(df, id_col, content_col)
     return (
         frames.groupBy("id")
         .agg(
@@ -223,9 +221,6 @@ def video_near_dup_pairs(
     id_col: str = "path",
     content_col: str = "content",
     min_jaccard: float = 0.5,
-    every_n: int = 1,
-    max_frames: int = 256,
-    n_bands: int = 4,
     max_bucket_size: int | None = _DEFAULT_CAP,
 ) -> DataFrame:
     """Video near-duplicate pairs (id_a < id_b, frame-set jaccard >=
@@ -236,9 +231,9 @@ def video_near_dup_pairs(
     convention: capped by default, ``None`` = explicit exact opt-out."""
     from magicxml_spark.operators.dedup import jaccard_pairs, lsh_candidate_pairs
 
-    docs = video_fingerprint_docs(df, id_col, content_col, every_n, max_frames)
+    docs = video_fingerprint_docs(df, id_col, content_col)
     cands = lsh_candidate_pairs(
-        docs, "id", "text", n_bands=n_bands, shingle_k=1,
+        docs, "id", "text", shingle_k=1,
         max_bucket_size=max_bucket_size,
     )
     return jaccard_pairs(docs, cands.select("id_a", "id_b"), "id", "text", shingle_k=1).filter(

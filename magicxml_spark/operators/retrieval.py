@@ -51,8 +51,6 @@ def bm25_topk(
     text_col: str,
     query_terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Top-k documents by BM25 score for a bag of query terms.
 
@@ -93,7 +91,7 @@ def bm25_topk(
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
-    contrib = _bm25_contrib(k1, b)
+    contrib = _bm25_contrib(1.2, 0.75)
 
     scored = (
         tf.join(dfreq, "term")  # <=|Q| rows; AQE broadcasts
@@ -121,11 +119,7 @@ def bm25_topk_per_query(
     id_col: str,
     text_col: str,
     queries: DataFrame,
-    query_id_col: str = "query_id",
-    term_col: str = "term",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     max_compiled_terms: int = 1000,
 ) -> DataFrame:
     """Batch retrieval: top-k documents PER QUERY for a whole queries
@@ -162,8 +156,8 @@ def bm25_topk_per_query(
     # (ADVICE r9 — the two entry points must agree on the same logical
     # query)
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.lower(F.col(term_col)).alias("term"),
+        F.col("query_id").alias("query_id"),
+        F.lower(F.col("term")).alias("term"),
     ).distinct()
     terms_dim = q.select("term").distinct()
     compiled = terms_dim.limit(max_compiled_terms + 1).collect()
@@ -190,7 +184,7 @@ def bm25_topk_per_query(
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
-    contrib = _bm25_contrib(k1, b)
+    contrib = _bm25_contrib(1.2, 0.75)
 
     scored = (
         tf.join(dfreq, "term")
@@ -224,9 +218,6 @@ def bm25_topk_per_query(
 def write_bm25_index(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    count_postings: bool = False,
 ) -> dict:
     """Build and persist the full inverted index: ``{path}/postings``
     (term, id, tf, dl — one row per distinct (term, doc)),
@@ -234,16 +225,14 @@ def write_bm25_index(
     EVERY term (index-time cost, query-time freedom); df(term) is
     derivable (count of postings per term) so it is not stored —
     queries aggregate it from the probed slice, which AQE keeps
-    broadcast-sized. Returns ``{"n_docs"}``, plus ``"n_postings"``
-    when ``count_postings`` (an extra full postings scan — off by
-    default so the build is write-only)."""
+    broadcast-sized. Returns ``{"n_docs"}``; the build is write-only."""
     import os
 
     spark = df.sparkSession
     sc = spark.sparkContext
     words = _tokens(F.col("_t"))
     base = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
+        F.col("doc_id").alias("_id"), F.col("text").alias("_t")
     ).repartition(sc.defaultParallelism)
     # ONE tokenize pass: the (id, dl, words) frame feeds the postings
     # explode AND the corpus stats — without the checkpoint each
@@ -276,22 +265,14 @@ def write_bm25_index(
     with ThreadPoolExecutor(max_workers=3) as pool:
         n_docs_f = pool.submit(pre.count)
         list(pool.map(_write, [("postings", postings), ("stats", stats)]))
-        out = {"n_docs": int(n_docs_f.result())}
-    if count_postings:
-        out["n_postings"] = int(
-            spark.read.parquet(os.path.join(path, "postings")).count()
-        )
-    return out
+        return {"n_docs": int(n_docs_f.result())}
 
 
 def query_bm25_index(
     spark,
     path: str,
     query_terms: list[str],
-    id_col: str = "doc_id",
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Answer one query against a frozen index: probe the postings for
     the query terms (a pushed-down IN filter on the parquet scan — the
@@ -309,7 +290,7 @@ def query_bm25_index(
     stats = spark.read.parquet(os.path.join(path, "stats"))
     dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
-    contrib = _bm25_contrib(k1, b)
+    contrib = _bm25_contrib(1.2, 0.75)
 
     scored = (
         postings.join(dfreq, "term")
@@ -322,7 +303,7 @@ def query_bm25_index(
         scored.orderBy(F.desc("s_micro"), "_id")
         .limit(k)
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_hits",
             F.round(F.col("s_micro") / 1e6, 6).alias("score"),
         )

@@ -30,15 +30,14 @@ def stratified_sample(
     strata: list[str],
     key: str,
     n_per_stratum: int,
-    rank_col: str = "sample_rank",
 ) -> DataFrame:
     """Deterministic n-per-stratum sample: rank rows inside each
     stratum by md5(key) (key itself breaks md5 ties) and keep the
-    first ``n_per_stratum``. ``rank_col`` exposes the rank so callers
+    first ``n_per_stratum``. ``sample_rank`` exposes the rank so callers
     can sub-slice without resampling."""
     w = Window.partitionBy(*strata).orderBy(hash_order(key), F.col(key))
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= n_per_stratum
+    return df.withColumn("sample_rank", F.row_number().over(w)).filter(
+        F.col("sample_rank") <= n_per_stratum
     )
 
 
@@ -48,7 +47,6 @@ def quota_sample(
     key: str,
     quotas: dict[str, int],
     default_quota: int,
-    rank_col: str = "sample_rank",
 ) -> DataFrame:
     """Per-stratum QUOTA sample: like ``stratified_sample`` but each
     stratum gets its own cap (language-balanced corpus mixes: cap 'en'
@@ -67,8 +65,8 @@ def quota_sample(
         cond = F.col(strata_col) == name
         quota = F.when(cond, cap) if quota is None else quota.when(cond, cap)
     quota_col = F.lit(default_quota) if quota is None else quota.otherwise(default_quota)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= quota_col
+    return df.withColumn("sample_rank", F.row_number().over(w)).filter(
+        F.col("sample_rank") <= quota_col
     )
 
 
@@ -76,8 +74,6 @@ def hash_split(
     df: DataFrame,
     key: str,
     fractions: dict[str, float],
-    split_col: str = "split",
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic train/val/test split: bucket each row by the
     first 8 hex digits of md5(salt || key) scaled to [0,1) and assign
@@ -87,7 +83,7 @@ def hash_split(
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
     u = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.col(key).cast("string"))), 1, 8),
+        F.substring(F.md5(F.concat(F.lit(""), F.col(key).cast("string"))), 1, 8),
         16,
         10,
     ).cast("double") / F.lit(float(16**8))
@@ -100,7 +96,7 @@ def hash_split(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = items[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(last)
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)
 
 
 def pack_shards(
@@ -108,8 +104,6 @@ def pack_shards(
     key: str,
     weight_col: str,
     budget: float,
-    shard_col: str = "shard",
-    n_range_partitions: int | None = None,
 ) -> DataFrame:
     """Assign rows (ordered by ``key``) to fixed-budget shards: row i
     lands in shard floor(prefix_weight_i / budget) where prefix_weight
@@ -131,7 +125,7 @@ def pack_shards(
     """
     from pyspark.sql import Window
 
-    n = n_range_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     # localCheckpoint for the same reason as curation.two_phase_rank:
     # the totals collect is a separate action that would otherwise
     # re-execute the caller's upstream plan (persist would leak into
@@ -202,7 +196,7 @@ def pack_shards(
     return (
         local.join(F.broadcast(off_df), "_pid")
         .withColumn(
-            shard_col,
+            "shard",
             F.floor(
                 (F.col("_off") + F.col("_cum_in") - F.col(weight_col)) / F.lit(budget)
             ),
@@ -215,18 +209,15 @@ def mixture_weights(
     df: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    target: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Per-source sampling weights to hit a target token mixture — the
+    """Per-source sampling weights to hit a uniform token mixture — the
     corpus-balancing step of a pre-training pipeline (a Pile-style
     recipe fixes each domain's share of TOKENS, not documents; the
     weight is the rate at which a sampler must take or repeat each
     source's documents to land on it).
 
     * ``actual_share``  — source tokens / corpus tokens
-    * ``target_share``  — ``target[group]`` normalized over the groups
-      present (uniform when ``target`` is None; groups missing from
-      the dict get share 0 and weight 0.0 — dropped from the mix)
+    * ``target_share``  — 1 / the number of groups present
     * ``weight``        — target_share / actual_share; >1 means
       upsample (epochs over that source), <1 downsample
 
@@ -244,19 +235,11 @@ def mixture_weights(
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("_t").alias("n_tokens"))
     )
     everything = Window.partitionBy()
-    # ANSI mode makes x/0 a JOB FAILURE, not a NULL, and degenerate
-    # inputs are expected corpus states: a source whose documents are
-    # all empty (zero tokens), a target dict naming no present group.
+    # ANSI mode makes x/0 a JOB FAILURE, not a NULL, and a source whose
+    # documents are all empty (zero tokens) is an expected corpus state.
     # Every division below is therefore guarded; a zero-token source
-    # gets weight 0 (nothing to sample), an all-zero target mix gets
-    # share 0 everywhere.
-    if target is None:
-        tgt = F.lit(1.0) / F.count(F.lit(1)).over(everything)  # >= 1 group
-    else:
-        m = F.create_map(*[F.lit(x) for kv in target.items() for x in kv])
-        raw = F.coalesce(m[F.col("grp")], F.lit(0.0))
-        raw_sum = F.sum(raw).over(everything)
-        tgt = F.when(raw_sum > 0, raw / raw_sum).otherwise(F.lit(0.0))
+    # gets weight 0 (nothing to sample).
+    tgt = F.lit(1.0) / F.count(F.lit(1)).over(everything)  # >= 1 group
     total = F.sum("n_tokens").over(everything)
     actual = F.when(total > 0, F.col("n_tokens") / total).otherwise(F.lit(0.0))
     weight = F.when(F.col("n_tokens") > 0, tgt / actual).otherwise(F.lit(0.0))
@@ -274,8 +257,6 @@ def seeded_shuffle(
     df: DataFrame,
     key: str,
     seed: int,
-    rank_col: str = "shuffle_rank",
-    n_range_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic pseudo-random permutation of a corpus — the
     training-order shuffle every data pipeline needs before shard
@@ -290,7 +271,7 @@ def seeded_shuffle(
     range shuffle + per-partition window + an offsets collect whose
     row count is the partition count, never a single sorted task.
 
-    Output: the input frame + ``rank_col`` (1-based dense permutation
+    Output: the input frame + ``shuffle_rank`` (1-based dense permutation
     index). Compose with ``pack_shards(out, rank_col, ...)`` to emit
     shuffled fixed-budget training shards."""
     from magicxml_spark.operators.curation import two_phase_rank
@@ -301,7 +282,7 @@ def seeded_shuffle(
         10,
     ).cast("long")
     keyed = df.withColumn("_h", h)
-    ranked, _ = two_phase_rank(keyed, ["_h", key], rank_col, n_range_partitions)
+    ranked, _ = two_phase_rank(keyed, ["_h", key], "shuffle_rank")
     return ranked.drop("_h")
 
 

@@ -35,7 +35,7 @@ def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     ).withColumn("n", norm(F.col("v")))
 
 
-def _collect_index(base: DataFrame, max_rows: int | None = None):
+def _collect_index(base: DataFrame, max_rows: int):
     """Collect (id, vec) to the driver via Arrow (toPandas) — an order
     of magnitude faster than the py4j row path for array columns —
     and return (ids, unit-normalized float64 matrix).
@@ -47,18 +47,15 @@ def _collect_index(base: DataFrame, max_rows: int | None = None):
     the caller is pointed at the blocked / IVF variants instead."""
     import numpy as np
 
-    if max_rows is not None:
-        pdf = base.limit(max_rows + 1).toPandas()
-        if len(pdf) > max_rows:
-            raise ValueError(
-                f"index side exceeds max_index_rows={max_rows}: the "
-                "broadcast-index bruteforce path collects the whole index "
-                "to the driver and is only for bounded catalogs — use "
-                "cosine_topk_blocked / embedding_near_dup_blocked (exact, "
-                "distributed) or cosine_topk(mode='auto') instead"
-            )
-    else:
-        pdf = base.toPandas()
+    pdf = base.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        raise ValueError(
+            f"index side exceeds max_index_rows={max_rows}: the "
+            "broadcast-index bruteforce path collects the whole index "
+            "to the driver and is only for bounded catalogs — use "
+            "cosine_topk_blocked / embedding_near_dup_blocked (exact, "
+            "distributed) or cosine_topk instead"
+        )
     ids = pdf["id"].to_numpy()
     mat = np.array(list(pdf["v"]), dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
@@ -410,54 +407,12 @@ def embedding_near_dup_blocked(
     )
 
 
-def _assign_cells_gemm(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(id, v, cell) — nearest-centroid assignment as one Arrow-batched
-    GEMM pass (``d2 = |c|² - 2 v·c`` per batch, argmin per row; the
-    |v|² term is constant per row so the argmin is unchanged).
-
-    This is the assignment path for ``embedding_cluster_dedup``'s
-    precomputed-centroid arm, where the WHOLE corpus is assigned and
-    the operator's consumers rescan the subtree several times: n_rows x
-    n_cells x dim multiply-adds run at BLAS speed instead of through
-    interpreted higher-order expressions (measured ~40x at 157k rows x
-    396 cells x 64 dims). Deterministic: numpy argmin takes the lowest
-    index on exact ties, and identical vectors produce identical
-    distance rows — exact duplicates still always share a cell, which
-    is what the dedup invariant needs. ``with_probe_cells`` stays the
-    assignment path for the snapshot-search family, whose (d2, cell)
-    tie-break is oracle-pinned to the JVM expression semantics."""
-    import numpy as np
-    import pandas as pd
-
-    id_dtype = dict(base.dtypes)["id"]
-    cmat = np.array([[float(x) for x in c] for c in centroids], dtype=np.float64)
-    cnorm2 = (cmat * cmat).sum(axis=1)
-
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = np.array(list(pdf["v"]), dtype=np.float64)
-            d2 = cnorm2[None, :] - 2.0 * (v @ cmat.T)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "v": pdf["v"], "cell": np.argmin(d2, axis=1)}
-            )
-
-    return base.select("id", "v").mapInPandas(
-        batches, schema=f"id {id_dtype}, v array<double>, cell int"
-    )
-
-
 def embedding_cluster_dedup(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    n_cells: int | None = None,
-    seed: int = 42,
-    fit_sample_rows: int = 200_000,
     block_rows: int = 2048,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup-class semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): KMeans cells bound the quadratic near-duplicate
@@ -476,11 +431,10 @@ def embedding_cluster_dedup(
     contract: near-duplicates split across a cell boundary are missed
     (that is SemDeDup's accepted trade); EXACT duplicates are never
     missed — identical vectors always land in the same cell (cell
-    assignment is a pure function of the vector, in BOTH the KMeans
-    and the precomputed-centroid arms), which is the invariant
-    ``q_embedding_cluster_dedup`` oracle-gates.
+    assignment is a pure function of the vector), which is the
+    invariant ``q_embedding_cluster_dedup`` oracle-gates.
 
-    ``n_cells=None`` (default) derives ~sqrt(n) cells from one count
+    The cell count is ~sqrt(n), derived from one count
     (``auto_n_cells`` — the same rule as the IVF dispatch), so the
     Σ|cell|² bound keeps pace with corpus growth instead of a fixed
     16x reduction. (A small-n clamp to 16 cells was measured and
@@ -489,13 +443,7 @@ def embedding_cluster_dedup(
     min-of-3 warm; the r7 sf0.1 count-mode move that suggested the
     clamp was box noise, and more cells are mildly FASTER even at 2k
     rows because the per-cell grid work shrinks faster than the tiny
-    fit grows. BASELINE.md round-8 records the runs.) ``centroids``
-    (a list of centroid vectors, e.g.
-    read back from ``write_ivf_snapshot``'s ``{path}/centroids``
-    parquet) skips the KMeans fit entirely and assigns by
-    nearest-stored-centroid (``with_probe_cells``, n_probe=1) — the
-    amortization path for repeated runs over a growing corpus,
-    mirroring ``search_ivf_snapshot``.
+    fit grows. BASELINE.md round-8 records the runs.)
 
     The assigned (scan + KMeans transform) subtree feeds the size
     table, both cogroup sides, and the final label join — Catalyst
@@ -509,22 +457,17 @@ def embedding_cluster_dedup(
     import pandas as pd
 
     base = _with_norm(df, id_col, vec_col)
-    if centroids is not None:
-        assigned = _assign_cells_gemm(base, centroids)
-    else:
-        n_rows = base.count()
-        cells = n_cells if n_cells is not None else auto_n_cells(n_rows)
-        model, ml = _fit_centroids(
-            base,
-            cells,
-            seed,
-            fit_sample_rows,
-            n_rows=n_rows,
-            # this operator's invariant is centroid-independent, so it
-            # opts into the parallel fit (see _fit_centroids)
-            fit_partitions=base.sparkSession.sparkContext.defaultParallelism,
-        )
-        assigned = model.transform(ml).select("id", "v", "cell")
+    n_rows = base.count()
+    model, ml = _fit_centroids(
+        base,
+        auto_n_cells(n_rows),
+        IVF_FIT_SAMPLE_ROWS,
+        n_rows=n_rows,
+        # this operator's invariant is centroid-independent, so it
+        # opts into the parallel fit (see _fit_centroids)
+        fit_partitions=base.sparkSession.sparkContext.defaultParallelism,
+    )
+    assigned = model.transform(ml).select("id", "v", "cell")
 
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("_cn"))
     sized = assigned.join(F.broadcast(sizes), "cell")
@@ -638,6 +581,11 @@ def topk_recall(approx: DataFrame, exact: DataFrame) -> DataFrame:
     )
 
 
+# Vectors a centroid fit trains on at most: centroid quality converges
+# long before corpus size, so an O(corpus) iterative fit is waste.
+IVF_FIT_SAMPLE_ROWS = 200_000
+
+
 def cosine_topk_ivf(
     df: DataFrame,
     id_col: str,
@@ -645,8 +593,7 @@ def cosine_topk_ivf(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 2,
-    seed: int = 42,
-    fit_sample_rows: int = 200_000,
+    fit_sample_rows: int = IVF_FIT_SAMPLE_ROWS,
 ) -> DataFrame:
     """IVF variant of approximate top-k: KMeans partitions the corpus
     into cells; each query searches only its n_probe nearest cells.
@@ -664,12 +611,12 @@ def cosine_topk_ivf(
     recorded small-SF recall values reproducible.
     """
     base = _with_norm(df, id_col, vec_col)
-    model, ml = _fit_centroids(base, n_cells, seed, fit_sample_rows)
+    model, ml = _fit_centroids(base, n_cells, fit_sample_rows)
     assigned = model.transform(ml).select("id", "v", "n", "cell")
 
     centroids = [list(map(float, c)) for c in model.clusterCenters()]
     queries = with_probe_cells(
-        assigned.select("id", "v", "n"), centroids, n_probe, id_col="id"
+        assigned.select("id", "v", "n"), centroids, n_probe
     ).select(
         F.col("id").alias("q_id"),
         F.col("v").alias("q_v"),
@@ -735,14 +682,12 @@ def choose_ann_strategy(
                                   BASELINE.md sweep on worst-case
                                   near-uniform embeddings).
 
-    LSH stays an explicit opt-in (``mode="lsh"``): it is the fit-free
-    path — no ML training job — which matters when the corpus is seen
-    once (streaming, single-pass curation), but at equal candidate
-    volume its recall on weakly-clustered embeddings measured below
-    multi-probe IVF, so auto mode never silently picks it.
+    LSH (``cosine_topk_lsh``) is never picked: it is the fit-free path
+    — no ML training job — but at equal candidate volume its recall on
+    weakly-clustered embeddings measured below multi-probe IVF.
     """
     if n_rows <= exact_max_rows:
-        return {"algo": "exact", "block_rows": 2048}
+        return {"algo": "exact"}
     return {"algo": "ivf", "n_cells": auto_n_cells(n_rows), "n_probe": 8}
 
 
@@ -751,61 +696,31 @@ def cosine_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    mode: str = "auto",
-    exact_max_rows: int = ANN_EXACT_MAX_ROWS,
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors with cost-based plan selection — the one
     entry point a user should call.
 
-    ``mode="auto"`` counts the corpus and dispatches per
-    ``choose_ann_strategy``. The count is metadata-only for a bare
+    It counts the corpus and dispatches per ``choose_ann_strategy``.
+    The count is metadata-only for a bare
     parquet scan but a real (column-pruned) scan job for filtered or
     projected inputs — still cheap relative to any ANN backend, and
     both chosen backends count again anyway (the blocked grid sizes
     its blocks, the IVF fit sizes its sample), so auto adds at most
-    one extra count, not a second data pass of the heavy work.
-    ``mode="exact"|"ivf"|"lsh"`` forces a plan. All three backends
-    emit the same (vec_id, neighbor_id, rank, sim) schema with the
-    same deterministic (sim DESC, neighbor_id ASC) tie-break, so
-    callers can switch modes without downstream changes. ``dim`` is
-    only needed for the LSH backend (hyperplane width); it defaults to
-    probing one row.
+    one extra count, not a second data pass of the heavy work. Both
+    backends emit the same (vec_id, neighbor_id, rank, sim) schema with
+    the same deterministic (sim DESC, neighbor_id ASC) tie-break.
     """
-    if mode == "auto":
-        strategy = choose_ann_strategy(df.count(), exact_max_rows)
-    else:
-        strategy = {"algo": mode}
-    algo = strategy["algo"]
-    if algo == "exact":
-        return cosine_topk_blocked(
-            df, id_col, vec_col, k, block_rows=strategy.get("block_rows", 2048)
-        )
-    if algo == "ivf":
-        return cosine_topk_ivf(
-            df,
-            id_col,
-            vec_col,
-            k,
-            n_cells=strategy.get("n_cells", 16),
-            n_probe=strategy.get("n_probe", 8),
-        )
-    if algo == "lsh":
-        if dim is None:
-            # One extra probe job (documented above): read a single row
-            # to learn the vector width. Guard the empty/null case —
-            # first() on an empty frame returns None and a bare len()
-            # would raise an opaque TypeError.
-            head = df.select(vec_col).head(1)
-            if not head or head[0][0] is None:
-                raise ValueError(
-                    "cosine_topk(mode='lsh'): cannot infer vector dim from an "
-                    "empty DataFrame (or a null first vector) — pass dim= "
-                    "explicitly"
-                )
-            dim = len(head[0][0])
-        return cosine_topk_lsh(df, id_col, vec_col, k, dim=dim)
-    raise ValueError(f"unknown ANN mode: {mode!r}")
+    strategy = choose_ann_strategy(df.count())
+    if strategy["algo"] == "exact":
+        return cosine_topk_blocked(df, id_col, vec_col, k)
+    return cosine_topk_ivf(
+        df,
+        id_col,
+        vec_col,
+        k,
+        n_cells=strategy["n_cells"],
+        n_probe=strategy["n_probe"],
+    )
 
 
 def probe_cells(vec: Column, centroids: list[list[float]], n_probe: int) -> Column:
@@ -841,11 +756,10 @@ def with_probe_cells(
     df: DataFrame,
     centroids: list[list[float]],
     n_probe: int,
-    id_col: str = "id",
-    max_literal_cells: int | None = None,
 ) -> DataFrame:
     """Append an exploded ``cell`` column: the ``n_probe`` nearest
-    centroids per row of ``df`` (which must carry the vector as ``v``).
+    centroids per row of ``df`` (which must carry ``id`` and the vector
+    as ``v``).
 
     Two physically different plans, identical result (same
     (distance, cell) tie-break):
@@ -864,9 +778,7 @@ def with_probe_cells(
       (d2, cell) tie-break to the literal arm: array_sort on the struct
       orders by d2 then cell.
     """
-    if max_literal_cells is None:
-        max_literal_cells = MAX_LITERAL_PROBE_CELLS  # read at call time
-    if len(centroids) <= max_literal_cells:
+    if len(centroids) <= MAX_LITERAL_PROBE_CELLS:
         return df.withColumn(
             "cell", F.explode(probe_cells(F.col("v"), centroids, n_probe))
         )
@@ -877,27 +789,26 @@ def with_probe_cells(
     )
     diff = F.zip_with(F.col("v"), F.col("_centroid"), lambda a, b: a - b)
     probes = (
-        df.select(id_col, "v")
+        df.select("id", "v")
         .join(F.broadcast(cdf))
-        .select(id_col, dot(diff, diff).alias("_d2"), "cell")
-        .groupBy(id_col)
+        .select("id", dot(diff, diff).alias("_d2"), "cell")
+        .groupBy("id")
         .agg(
             F.slice(
                 F.array_sort(F.collect_list(F.struct("_d2", "cell"))), 1, n_probe
             ).alias("_pc")
         )
         .select(
-            id_col,
+            "id",
             F.explode(F.transform("_pc", lambda p: p["cell"])).alias("cell"),
         )
     )
-    return df.join(probes, id_col)
+    return df.join(probes, "id")
 
 
 def _fit_centroids(
     base: DataFrame,
     n_cells: int,
-    seed: int,
     fit_sample_rows: int,
     n_rows: int | None = None,
     fit_partitions: int | None = None,
@@ -935,7 +846,7 @@ def _fit_centroids(
     if fit_partitions is not None:
         fit_on = fit_on.repartition(fit_partitions)
     model = KMeans(
-        k=n_cells, seed=seed, featuresCol="features", predictionCol="cell"
+        k=n_cells, seed=42, featuresCol="features", predictionCol="cell"
     ).fit(fit_on)
     return model, ml
 
@@ -948,11 +859,7 @@ def _fit_centroids(
 def write_ivf_snapshot(
     emb: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
-    seed: int = 42,
-    fit_sample_rows: int = 200_000,
 ) -> None:
     """Persist an IVF index of a corpus: ``{path}/centroids`` (cell,
     centroid) and ``{path}/cells`` (id, v, n, cell) as parquet — the
@@ -960,14 +867,14 @@ def write_ivf_snapshot(
     ONCE; every later delta searches only its probe cells
     (``search_ivf_snapshot``) instead of re-fitting or re-scanning.
 
-    The KMeans fit samples at most ``fit_sample_rows`` vectors
+    The KMeans fit samples at most ``IVF_FIT_SAMPLE_ROWS`` vectors
     (hash-deterministic, same rule as ``cosine_topk_ivf``); the cell
     table stores normalized-input vectors so searches skip re-norming.
     """
     import os
 
-    base = _with_norm(emb, id_col, vec_col)
-    model, ml = _fit_centroids(base, n_cells, seed, fit_sample_rows)
+    base = _with_norm(emb, "vec_id", "embedding")
+    model, ml = _fit_centroids(base, n_cells, IVF_FIT_SAMPLE_ROWS)
     spark = emb.sparkSession
     spark.createDataFrame(
         [(i, list(map(float, c))) for i, c in enumerate(model.clusterCenters())],
@@ -984,8 +891,6 @@ def write_ivf_snapshot(
 def search_ivf_snapshot(
     new_emb: DataFrame,
     snapshot_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 2,
 ) -> DataFrame:
@@ -1013,7 +918,7 @@ def search_ivf_snapshot(
         F.col("id").alias("n_id"), F.col("v").alias("n_v"), F.col("n").alias("n_n"), "cell"
     )
     queries = with_probe_cells(
-        _with_norm(new_emb, id_col, vec_col), centroids, n_probe, id_col="id"
+        _with_norm(new_emb, "vec_id", "embedding"), centroids, n_probe
     ).select(
         F.col("id").alias("q_id"),
         F.col("v").alias("q_v"),
@@ -1065,85 +970,21 @@ def ivf_snapshot_balance(spark, snapshot_path: str) -> DataFrame:
     )
 
 
-def refit_ivf_snapshot(
-    spark,
-    snapshot_path: str,
-    n_cells: int | None = None,
-    seed: int = 42,
-    fit_sample_rows: int = 200_000,
-) -> int:
-    """Re-fit a drifted IVF index in place from its stored vectors — the
-    out-of-band maintenance job. Reads the cells table (vectors are
-    stored normalized, so no re-norm), fits fresh centroids on a
-    hash-deterministic sample, re-assigns every vector, and swaps both
-    tables via an old-aside ordering: both tmp dirs are fully written
-    before the first rename, and a recovery preamble completes or rolls
-    back any half-finished swap from a crashed prior run (a crash
-    between ``rename(src, old)`` and ``rename(tmp, src)`` leaves no
-    live ``src`` — the preamble restores it from ``.refit`` when the
-    new table finished writing, else from ``.old``), so re-running
-    after ANY crash point heals the index. A crash between the two
-    table swaps leaves new cells with old centroids for one window —
-    searches then probe suboptimal cells (recall dip, not wrong
-    results: ranking within probed cells is exact, and full-probe
-    remains exhaustive), also healed by re-running.
-
-    ``n_cells=None`` re-derives sqrt(n) clamped to [16, 32768] — the
-    same rule as the cost-based dispatch — so a corpus that grew 100x
-    since the original fit gets a proportionally wider index. Returns
-    the cell count fitted."""
-    import os
-    import shutil
-
-    cells_src = os.path.join(snapshot_path, "cells")
-    cents_src = os.path.join(snapshot_path, "centroids")
-    for src in (cells_src, cents_src):
-        if not os.path.exists(src):
-            if os.path.exists(src + ".refit"):
-                os.rename(src + ".refit", src)  # crashed mid-swap: finish it
-            elif os.path.exists(src + ".old"):
-                os.rename(src + ".old", src)  # crashed pre-swap: roll back
-    stored = spark.read.parquet(cells_src).select("id", "v", "n")
-    if n_cells is None:
-        n_rows = stored.count()
-        n_cells = max(16, min(32768, int(n_rows**0.5)))
-    model, ml = _fit_centroids(stored, n_cells, seed, fit_sample_rows)
-
-    cells_tmp, cents_tmp = cells_src + ".refit", cents_src + ".refit"
-    model.transform(ml).select("id", "v", "n", "cell").write.mode(
-        "overwrite"
-    ).parquet(cells_tmp)
-    spark.createDataFrame(
-        [(i, list(map(float, c))) for i, c in enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>",
-    ).repartition(1).write.mode("overwrite").parquet(cents_tmp)
-    for src, tmp in ((cells_src, cells_tmp), (cents_src, cents_tmp)):
-        old = src + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old)
-    return n_cells
-
-
 def maybe_refit_ivf_snapshot(
     spark,
     snapshot_path: str,
     max_balance_ratio: float = 8.0,
-    seed: int = 42,
-    fit_sample_rows: int = 200_000,
-    dry_run: bool = False,
 ) -> dict:
     """Re-fit policy closing the append-only lifecycle: check
-    ``ivf_snapshot_balance`` and re-fit when the max cell has grown past
+    ``ivf_snapshot_balance`` and call for a re-fit when the max cell has grown past
     ``max_balance_ratio`` x the all-cells mean (the probe cost of the
     fattest cell approaches brute force) OR when sqrt-growth says the
     index is under-celled (appends tripled the corpus -> sqrt(n) wants
-    >2x the fitted cells). One cheap aggregation when healthy; the fit
-    only runs when triggered. Returns the balance row plus the target
-    cell count and the action taken, so ingest jobs can log it.
-    ``dry_run=True`` reports the decision without executing the fit —
-    the shape a scheduler uses to plan maintenance windows."""
+    >2x the fitted cells). One cheap aggregation; nothing is re-fitted
+    here. Returns the balance row plus the target cell count and the
+    action due ("refit" or "none") — the shape a scheduler uses to plan
+    maintenance windows (a re-fit is ``write_ivf_snapshot`` with
+    ``n_cells=target_cells``)."""
     row = ivf_snapshot_balance(spark, snapshot_path).collect()[0]
     target_cells = max(16, min(32768, int(row["n_vectors"] ** 0.5)))
     trigger = (
@@ -1152,13 +993,5 @@ def maybe_refit_ivf_snapshot(
     )
     out = {k: row[k] for k in row.asDict()}
     out["target_cells"] = target_cells
-    if trigger and not dry_run:
-        out["action"] = "refit"
-        # target_cells is already sqrt(n_vectors) from the balance row —
-        # passing it avoids refit_ivf_snapshot re-counting the cells table
-        out["n_cells_fitted"] = refit_ivf_snapshot(
-            spark, snapshot_path, target_cells, seed, fit_sample_rows
-        )
-    else:
-        out["action"] = "refit" if trigger else "none"
+    out["action"] = "refit" if trigger else "none"
     return out

@@ -149,12 +149,12 @@ CM_DEPTH = 4
 CM_WIDTH = 256
 
 
-def _cm_cell(j: int, value: Column, width: int = CM_WIDTH) -> Column:
-    """Row-j cell index: 32-bit md5 slice of 'j|value' mod width."""
-    return _hash32(F.concat(F.lit(f"{j}|"), value)) % width
+def _cm_cell(j: int, value: Column) -> Column:
+    """Row-j cell index: 32-bit md5 slice of 'j|value' mod CM_WIDTH."""
+    return _hash32(F.concat(F.lit(f"{j}|"), value)) % CM_WIDTH
 
 
-def cm_probes(value: Column, depth: int = CM_DEPTH, width: int = CM_WIDTH) -> Column:
+def cm_probes(value: Column) -> Column:
     """ONE definition of the (j, cell) probe fan-out — explode of the
     per-row struct array. Sketch build, batch point-query, and both
     streaming twins all route through this, so the cell addressing can
@@ -162,23 +162,21 @@ def cm_probes(value: Column, depth: int = CM_DEPTH, width: int = CM_WIDTH) -> Co
     return F.explode(
         F.array(
             *[
-                F.struct(F.lit(j).alias("j"), _cm_cell(j, value, width).alias("cell"))
-                for j in range(depth)
+                F.struct(F.lit(j).alias("j"), _cm_cell(j, value).alias("cell"))
+                for j in range(CM_DEPTH)
             ]
         )
     )
 
 
-def countmin_sketch(
-    df: DataFrame, value_col: str, depth: int = CM_DEPTH, width: int = CM_WIDTH
-) -> DataFrame:
+def countmin_sketch(df: DataFrame, value_col: str) -> DataFrame:
     """(row j, cell, cell_count) — the full d x w sketch in long form.
     One explode to d rows per value, one aggregation shuffle onto at
     most d*w grouped keys (map-side combine collapses the stream to
     sketch size before the exchange)."""
     v = F.col(value_col)
     return (
-        df.select(cm_probes(v, depth, width).alias("_r"))
+        df.select(cm_probes(v).alias("_r"))
         .select(F.col("_r.j").alias("j"), F.col("_r.cell").alias("cell"))
         .groupBy("j", "cell")
         .agg(F.count(F.lit(1)).alias("cell_count"))
@@ -189,8 +187,6 @@ def countmin_estimate(
     sketch: DataFrame,
     candidates: DataFrame,
     value_col: str,
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
 ) -> DataFrame:
     """Point-query the sketch for each candidate value: the classic
     min over rows of the value's cell counts (never underestimates).
@@ -199,7 +195,7 @@ def countmin_estimate(
     per value."""
     v = F.col(value_col)
     probes = candidates.select(
-        v.alias("val"), cm_probes(v, depth, width).alias("_p")
+        v.alias("val"), cm_probes(v).alias("_p")
     ).select("val", F.col("_p.j").alias("j"), F.col("_p.cell").alias("cell"))
     return (
         probes.join(F.broadcast(sketch), ["j", "cell"])
@@ -211,15 +207,15 @@ def countmin_estimate(
         # a value absent from the data may miss sketch cells entirely;
         # a partial join must read as absent (dropped), not as the min
         # of foreign cells
-        .filter(F.col("_nj") == depth)
+        .filter(F.col("_nj") == CM_DEPTH)
         .select(F.col("val").alias(value_col), "cm_estimate")
     )
 
 
-def cm_cell_sql(j: int, value_expr: str, width: int = CM_WIDTH) -> str:
+def cm_cell_sql(j: int, value_expr: str) -> str:
     """DuckDB twin of _cm_cell."""
     return (
-        f"('0x' || substr(md5('{j}|' || {value_expr}), 1, 8))::BIGINT % {width}"
+        f"('0x' || substr(md5('{j}|' || {value_expr}), 1, 8))::BIGINT % {CM_WIDTH}"
     )
 
 
@@ -229,22 +225,20 @@ BLOOM_M = 1 << 16
 BLOOM_K = 4
 
 
-def _bloom_bit(j: int, value: Column, m: int = BLOOM_M) -> Column:
-    return _hash32(F.concat(F.lit(f"b{j}|"), value)) % m
+def _bloom_bit(j: int, value: Column) -> Column:
+    return _hash32(F.concat(F.lit(f"b{j}|"), value)) % BLOOM_M
 
 
-def bloom_bits_table(
-    df: DataFrame, value_col: str, k: int = BLOOM_K, m: int = BLOOM_M
-) -> DataFrame:
+def bloom_bits_table(df: DataFrame, value_col: str) -> DataFrame:
     """Build the filter as its distinct set-bit table (single column
-    ``bit``) — at most m rows regardless of the build side's size,
+    ``bit``) — at most BLOOM_M rows regardless of the build side's size,
     hence always broadcastable. The classic 100 TB use: build on the
     small/reference side, broadcast, and prefilter the fact side
     BEFORE its shuffle — only maybe-members pay the exact join."""
     v = F.col(value_col)
     return (
         df.select(
-            F.explode(F.array(*[_bloom_bit(j, v, m) for j in range(k)])).alias("bit")
+            F.explode(F.array(*[_bloom_bit(j, v) for j in range(BLOOM_K)])).alias("bit")
         )
         .distinct()
     )
@@ -255,10 +249,8 @@ def bloom_probe(
     id_cols: list[str],
     value_col: str,
     bits: DataFrame,
-    k: int = BLOOM_K,
-    m: int = BLOOM_M,
 ) -> DataFrame:
-    """Append ``bloom_maybe``: true iff ALL k of the value's bits are
+    """Append ``bloom_maybe``: true iff ALL BLOOM_K of the value's bits are
     set (the Bloom guarantee: never a false negative, bounded false
     positives). Probes explode to k rows, inner-join the broadcast bit
     table, and a count==k per (ids, value) recovers the AND."""
@@ -266,7 +258,7 @@ def bloom_probe(
     probes = df.select(
         *id_cols,
         v.alias("_val"),
-        F.explode(F.array(*[_bloom_bit(j, v, m) for j in range(k)])).alias("bit"),
+        F.explode(F.array(*[_bloom_bit(j, v) for j in range(BLOOM_K)])).alias("bit"),
     )
     hits = (
         probes.join(F.broadcast(bits), "bit")
@@ -279,20 +271,20 @@ def bloom_probe(
         .select(
             *id_cols,
             F.col("_val").alias(value_col),
-            (F.coalesce(F.col("_nbits"), F.lit(0)) == k).alias("bloom_maybe"),
+            (F.coalesce(F.col("_nbits"), F.lit(0)) == BLOOM_K).alias("bloom_maybe"),
         )
     )
 
 
-def bloom_bitmap_hex(bits: DataFrame, m: int = BLOOM_M) -> str:
-    """Collect the set-bit table into an m-bit hex nibble map (one hex
+def bloom_bitmap_hex(bits: DataFrame) -> str:
+    """Collect the set-bit table into a BLOOM_M-bit hex nibble map (one hex
     char per 4 bits, char ``p // 4`` carries bit ``p % 4`` as its
-    ``1 << (p % 4)`` value). The collect is bounded by ``m`` — 16 Ki
-    chars / 8 KiB of bitmap at the default m=65536 — NEVER by the
+    ``1 << (p % 4)`` value). The collect is bounded by ``BLOOM_M`` — 16 Ki
+    chars / 8 KiB of bitmap at m=65536 — NEVER by the
     build side's row count, which is the same guarantee that made the
     bit table broadcastable; materializing it on the driver just
     moves the filter from a join operand into the task binary."""
-    nibbles = [0] * ((m + 3) // 4)
+    nibbles = [0] * ((BLOOM_M + 3) // 4)
     for r in bits.collect():
         p = int(r["bit"])
         nibbles[p // 4] |= 1 << (p % 4)
@@ -303,9 +295,6 @@ def bloom_probe_compiled(
     df: DataFrame,
     value_col: str,
     hexmap: str,
-    k: int = BLOOM_K,
-    m: int = BLOOM_M,
-    out_col: str = "bloom_maybe",
 ) -> DataFrame:
     """The PRODUCTION probe shape: append ``bloom_maybe`` as a pure
     Column expression against a compiled bitmap literal — zero joins,
@@ -330,9 +319,9 @@ def bloom_probe_compiled(
     constant: measured 360 s vs 42 s at sf1 before this spelling.
     Bit (p % 4) extracts via exact small-power division (shiftright
     only takes a literal shift amount)."""
-    if len(hexmap) != (m + 3) // 4:
+    if len(hexmap) != (BLOOM_M + 3) // 4:
         raise ValueError(
-            f"hexmap length {len(hexmap)} does not match m={m}"
+            f"hexmap length {len(hexmap)} does not match m={BLOOM_M}"
         )
     v = F.col(value_col)
     # The nibble array enters the plan as a PARSED SQL literal, not
@@ -345,7 +334,7 @@ def bloom_probe_compiled(
     arr = F.expr(
         "array(" + ",".join(str(int(c, 16)) for c in hexmap) + ")"
     )
-    probes = F.array(*[_bloom_bit(j, v, m) for j in range(k)])
+    probes = F.array(*[_bloom_bit(j, v) for j in range(BLOOM_K)])
 
     def _hit(p: Column) -> Column:
         digit = F.element_at(arr, (p / F.lit(4)).cast("int") + 1)
@@ -355,12 +344,12 @@ def bloom_probe_compiled(
             == 1
         )
 
-    return df.withColumn(out_col, F.forall(probes, _hit))
+    return df.withColumn("bloom_maybe", F.forall(probes, _hit))
 
 
-def bloom_bit_sql(j: int, value_expr: str, m: int = BLOOM_M) -> str:
+def bloom_bit_sql(j: int, value_expr: str) -> str:
     """DuckDB twin of _bloom_bit."""
-    return f"('0x' || substr(md5('b{j}|' || {value_expr}), 1, 8))::BIGINT % {m}"
+    return f"('0x' || substr(md5('b{j}|' || {value_expr}), 1, 8))::BIGINT % {BLOOM_M}"
 
 
 # --- Histogram quantiles (fixed-bin approximate percentiles) ---------------
@@ -371,14 +360,12 @@ HIST_BINS = 1024
 def histogram_quantiles(
     df: DataFrame,
     value_col: str,
-    quantiles: list[float] = (0.5, 0.9, 0.99),
-    bins: int = HIST_BINS,
 ) -> DataFrame:
     """Approximate percentiles by equi-width histogram — the at-scale
     quantile path (Spark's percentile_approx is a similar idea with an
     opaque internal sketch; this one is deterministic and
     oracle-checkable). Two passes: an exact (min, max, count) fold,
-    then one aggregation onto at most ``bins`` keys; the error bound
+    then one aggregation onto at most ``HIST_BINS`` keys; the error bound
     is one bin width, reported alongside.
 
     Output: (quantile, approx_value, bin_width, n_rows) — approx is
@@ -398,11 +385,11 @@ def histogram_quantiles(
             F.when(F.col("_hi") == F.col("_lo"), F.lit(0))
             .otherwise(
                 F.least(
-                    F.lit(bins - 1),
+                    F.lit(HIST_BINS - 1),
                     F.floor(
                         (F.col("_v") - F.col("_lo"))
                         / (F.col("_hi") - F.col("_lo"))
-                        * bins
+                        * HIST_BINS
                     ),
                 )
             )
@@ -425,9 +412,9 @@ def histogram_quantiles(
         ).alias("cum"),
     )
     qs = cum.select(
-        "*", F.explode(F.array(*[F.lit(float(q)) for q in quantiles])).alias("quantile")
+        "*", F.explode(F.array(*[F.lit(float(q)) for q in (0.5, 0.9, 0.99)])).alias("quantile")
     )
-    width = (F.col("_hi") - F.col("_lo")) / bins
+    width = (F.col("_hi") - F.col("_lo")) / HIST_BINS
     return (
         qs.groupBy("quantile", "_lo", "_hi", "_n")
         .agg(
@@ -446,22 +433,19 @@ def histogram_quantiles(
     )
 
 
-def histogram_quantiles_oracle_sql(
-    table_expr: str, value_expr: str, quantiles: list[float] = (0.5, 0.9, 0.99),
-    bins: int = HIST_BINS,
-) -> str:
+def histogram_quantiles_oracle_sql(table_expr: str, value_expr: str) -> str:
     """DuckDB twin — identical arithmetic and parenthesization so the
     doubles agree to the bit."""
-    qlist = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in quantiles)
+    qlist = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in (0.5, 0.9, 0.99))
     return f"""
     WITH mm AS (SELECT min(CAST({value_expr} AS DOUBLE)) AS lo,
                        max(CAST({value_expr} AS DOUBLE)) AS hi,
                        count({value_expr}) AS n
                 FROM {table_expr}),
     b AS (SELECT CASE WHEN mm.hi = mm.lo THEN 0
-                      ELSE CAST(least({bins - 1},
+                      ELSE CAST(least({HIST_BINS - 1},
                            floor((CAST({value_expr} AS DOUBLE) - mm.lo)
-                                 / (mm.hi - mm.lo) * {bins})) AS INTEGER)
+                                 / (mm.hi - mm.lo) * {HIST_BINS})) AS INTEGER)
                  END AS bin, mm.lo, mm.hi, mm.n
           FROM {table_expr}, mm),
     g AS (SELECT bin, lo, hi, n, count(*) AS c FROM b GROUP BY 1, 2, 3, 4),
@@ -473,8 +457,8 @@ def histogram_quantiles_oracle_sql(
           (SELECT unnest([{qlist}]) AS quantile) q)
     SELECT quantile,
            round(lo + (min(CASE WHEN cum >= quantile * n THEN bin END) + 0.5)
-                 * ((hi - lo) / {bins}), 4) AS approx_value,
-           round((hi - lo) / {bins}, 4) AS bin_width,
+                 * ((hi - lo) / {HIST_BINS}), 4) AS approx_value,
+           round((hi - lo) / {HIST_BINS}, 4) AS bin_width,
            CAST(n AS BIGINT) AS n_rows
     FROM q GROUP BY quantile, lo, hi, n
     """

@@ -56,9 +56,9 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
+def stopword_ratio(text: Column | str) -> Column:
     toks = tokens(text)
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
+    markers = F.array(*[F.lit(m) for m in LANG_MARKERS["en"]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
     return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(0.0))
 
@@ -157,13 +157,13 @@ def pii_counts(text: Column | str) -> dict[str, Column]:
     }
 
 
-def redact_pii(text: Column | str, token: str = "[PII]") -> Column:
-    """Replace every PII match with ``token``, applying patterns in
+def redact_pii(text: Column | str) -> Column:
+    """Replace every PII match with ``[PII]``, applying patterns in
     PII_PATTERNS order (email/url first so their digit runs are not
     partially consumed by the looser phone pattern)."""
     c = F.col(text) if isinstance(text, str) else text
     for pat in PII_PATTERNS.values():
-        c = F.regexp_replace(c, pat, token)
+        c = F.regexp_replace(c, pat, "[PII]")
     return c
 
 
@@ -220,9 +220,7 @@ def card_counts_from(cands: Column | str) -> dict[str, Column]:
     }
 
 
-def unigram_surprisal(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document unigram language-model surprisal — the
     perplexity-proxy quality score: avg over the document's tokens of
     ``-ln p(w)`` where ``p(w) = corpus_count(w) / corpus_total``. High
@@ -251,7 +249,7 @@ def unigram_surprisal(
     # queries), same rationale as curation.ngram_surprisal's
     # position-stream checkpoint
     tok = df.select(
-        F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("term")
+        F.col("doc_id").alias("_id"), F.explode(tokens("text")).alias("term")
     ).localCheckpoint(eager=True)
     vocab = tok.groupBy("term").agg(F.count(F.lit(1)).alias("_c"))
     tot = vocab.agg(F.sum("_c").alias("_n_total"))
@@ -264,7 +262,7 @@ def unigram_surprisal(
     return micro.groupBy("_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.round(F.sum("_micro") / F.count(F.lit(1)) / 1e6, 6).alias("surprisal"),
-    ).select(F.col("_id").alias(id_col), "n_tokens", "surprisal")
+    ).select(F.col("_id").alias("doc_id"), "n_tokens", "surprisal")
 
 
 # ---------------------------------------------------------------------------
@@ -273,9 +271,7 @@ def unigram_surprisal(
 # ---------------------------------------------------------------------------
 
 
-def repetition_profile(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_profile(df: DataFrame) -> DataFrame:
     """Per-document repetition metrics:
 
     * ``n_words`` — whitespace token count
@@ -290,31 +286,31 @@ def repetition_profile(
     at dimension scale, shuffle join otherwise; both sides are one row
     per doc). Only docs with at least 2 words qualify (bigram domain).
     """
-    words = tokens(F.col(text_col))
+    words = tokens(F.col("text"))
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.alias("_w"),
     ).filter(F.size("_w") >= 2)
 
     bigram_stats = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_w").alias("n_words"),
         F.transform(
             F.sequence(F.lit(1), F.size("_w") - 1),
             lambda i: F.concat_ws(" ", F.element_at("_w", i), F.element_at("_w", i + 1)),
         ).alias("_bg"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_words",
         F.size("_bg").alias("_n_bg"),
         F.size(F.array_distinct("_bg")).alias("_n_bg_uniq"),
     )
 
     word_stats = (
-        base.select(F.col(id_col), F.explode("_w").alias("_word"))
-        .groupBy(id_col, "_word")
+        base.select(F.col("doc_id"), F.explode("_w").alias("_word"))
+        .groupBy("doc_id", "_word")
         .count()
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("count").alias("_total"),
             F.max("count").alias("_top"),
@@ -322,8 +318,8 @@ def repetition_profile(
         )
     )
 
-    return bigram_stats.join(word_stats, id_col).select(
-        F.col(id_col),
+    return bigram_stats.join(word_stats, "doc_id").select(
+        F.col("doc_id"),
         "n_words",
         F.round(F.col("_uniq") / F.col("_total"), 4).alias("uniq_word_ratio"),
         F.round(F.col("_top") / F.col("_total"), 4).alias("top_word_share"),
@@ -418,8 +414,6 @@ BPE_MAX_COMPILED_MERGES = 256
 
 def bpe_apply(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Apply a ranked BPE merge table to every word of every document
@@ -470,7 +464,7 @@ def bpe_apply(
                 raise ValueError(
                     f"merge symbols must not contain spaces/sentinels: {(a, b)}"
                 )
-    words = tokens(F.col(text_col))
+    words = tokens(F.col("text"))
 
     def segment(word: Column) -> Column:
         wrapped = F.array_join(
@@ -497,7 +491,7 @@ def bpe_apply(
 
     seg = F.transform(words, segment)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words).cast("long").alias("n_words"),
         F.length(F.array_join(words, "")).cast("long").alias("n_chars"),
         F.coalesce(
@@ -514,8 +508,6 @@ def bpe_apply(
 
 def bpe_apply_pandas(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The real-tokenizer-table arm of :func:`bpe_apply` — same
@@ -556,9 +548,9 @@ def bpe_apply_pandas(
                     f"merge symbols must not contain spaces/sentinels: {(a, b)}"
                 )
     ranks = {tuple(m): i for i, m in enumerate(merges)}
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     schema = (
-        f"{id_col} {id_type}, n_words long, n_chars long, "
+        f"doc_id {id_type}, n_words long, n_chars long, "
         f"n_subwords long, seg_fp string"
     )
 
@@ -596,7 +588,7 @@ def bpe_apply_pandas(
 
         for pdf in batches:
             ids, nw, nc, ns, fp = [], [], [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
+            for rid, text in zip(pdf["doc_id"], pdf["text"]):
                 words = [w for w in (text or "").lower().split() if w]
                 segs = [seg(w) for w in words]
                 ids.append(rid)
@@ -607,7 +599,7 @@ def bpe_apply_pandas(
                 fp.append(hashlib.md5(joined.encode("utf-8")).hexdigest())
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "n_words": nw,
                     "n_chars": nc,
                     "n_subwords": ns,
@@ -615,7 +607,7 @@ def bpe_apply_pandas(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -704,8 +696,6 @@ def read_bpe_model(
 def bpe_apply_from_model(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply a FROZEN :func:`write_bpe_model` table — the scoring
     side of the tokenizer lifecycle. Dispatch follows the artifact's
@@ -718,19 +708,24 @@ def bpe_apply_from_model(
     the rank-order/lowest-rank equivalence pinned in tests."""
     merges, level = read_bpe_model(df.sparkSession, path)
     if level == "bytes":
-        return bpe_apply_bytes_pandas(df, id_col, text_col, merges)
+        return bpe_apply_bytes_pandas(df, merges)
     if len(merges) <= BPE_MAX_COMPILED_MERGES:
-        return bpe_apply(df, id_col, text_col, merges)
-    return bpe_apply_pandas(df, id_col, text_col, merges)
+        return bpe_apply(df, merges)
+    return bpe_apply_pandas(df, merges)
+
+
+# BPE training stops once the best pair occurs fewer than
+# BPE_MIN_COUNT times (count-1 merges generalize to nothing).
+BPE_MIN_COUNT = 2
+# The trainer's vocab frame re-checkpoints every this many merges, so
+# plan lineage stays bounded over hundreds of iterations.
+BPE_CHECKPOINT_EVERY = 16
 
 
 def bpe_train(
     df: DataFrame,
     *,
-    text_col: str = "text",
     max_merges: int = 100,
-    min_count: int = 2,
-    checkpoint_every: int = 16,
     with_counts: bool = False,
 ) -> list[tuple[str, str]] | list[tuple[str, str, int]]:
     """Train a BPE merge table (Sennrich et al. 2016, "Neural Machine
@@ -754,14 +749,14 @@ def bpe_train(
       sentinel-anchored replace (the :func:`bpe_apply` correctness
       trick: begin/end sentinels around every symbol make a plain
       non-overlapping replace exact whole-symbol BPE).
-    * vocab re-checkpoints every ``checkpoint_every`` merges so plan
-      lineage stays bounded over hundreds of iterations.
+    * vocab re-checkpoints every ``BPE_CHECKPOINT_EVERY`` merges so
+      plan lineage stays bounded over hundreds of iterations.
 
     Tie-break (deterministic, matched by the plain-Python reference
     twin in tests): highest total count first, then lexicographically
     smallest ``part_a + "\\x01" + part_b`` key (binary collation in
     both engines). Training stops early when the best pair's count
-    drops below ``min_count`` (count-1 merges generalize to nothing).
+    drops below ``BPE_MIN_COUNT``.
 
     Returns the RANKED merge list — feed it straight to
     :func:`bpe_apply` / :func:`bpe_apply_pandas` (``with_counts``
@@ -773,15 +768,13 @@ def bpe_train(
     """
     if max_merges <= 0:
         raise ValueError(f"max_merges must be positive: {max_merges}")
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1: {min_count}")
     sc = df.sparkSession.sparkContext
     words = tokens(F.col("_t"))
     # the single corpus pass: word frequencies, then sentinel-wrapped
     # symbol strings (repartitioned pre-explode per the LM-family
     # scan-parallelism rule; the explode fans out corpus tokens)
     vocab = (
-        df.select(F.col(text_col).alias("_t"))
+        df.select(F.col("text").alias("_t"))
         .repartition(sc.defaultParallelism)
         .select(F.explode(words).alias("_w"))
         .groupBy("_w")
@@ -790,9 +783,7 @@ def bpe_train(
         .select(_bpe_wrap_word(F.col("_w")).alias("_s"), "_freq")
         .localCheckpoint(eager=True)
     )
-    return _bpe_merge_loop(
-        vocab, max_merges, min_count, checkpoint_every, with_counts
-    )
+    return _bpe_merge_loop(vocab, max_merges, with_counts)
 
 
 def _bpe_wrap_word(word: Column) -> Column:
@@ -813,8 +804,6 @@ def _bpe_wrap_word(word: Column) -> Column:
 def _bpe_merge_loop(
     vocab: DataFrame,
     max_merges: int,
-    min_count: int,
-    checkpoint_every: int,
     with_counts: bool,
 ) -> list[tuple[str, str]] | list[tuple[str, str, int]]:
     """The m-bounded trainer iteration shared by :func:`bpe_train`
@@ -844,7 +833,7 @@ def _bpe_merge_loop(
             .limit(1)
             .collect()
         )
-        if not best or best[0]["_c"] < min_count:
+        if not best or best[0]["_c"] < BPE_MIN_COUNT:
             break
         a, b = best[0]["_p"].split("\x01", 1)
         merges.append((a, b, int(best[0]["_c"])) if with_counts else (a, b))
@@ -856,7 +845,7 @@ def _bpe_merge_loop(
                 F.lit(f"\x02{a}{b}\x03"),
             ),
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % BPE_CHECKPOINT_EVERY == 0:
             vocab = vocab.localCheckpoint(eager=True)
     return merges
 
@@ -986,10 +975,7 @@ def byte_words(text: str, b2u: dict[int, str]) -> list[str]:
 def bpe_train_bytes(
     df: DataFrame,
     *,
-    text_col: str = "text",
     max_merges: int = 100,
-    min_count: int = 2,
-    checkpoint_every: int = 16,
     with_counts: bool = False,
 ) -> list[tuple[str, str]] | list[tuple[str, str, int]]:
     """Byte-level BPE trainer: ONE Arrow-batched corpus pass
@@ -1008,8 +994,6 @@ def bpe_train_bytes(
     for, pinned in tests against an independent plain-Python twin."""
     if max_merges <= 0:
         raise ValueError(f"max_merges must be positive: {max_merges}")
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1: {min_count}")
     import pandas as pd
 
     b2u = bytes_to_unicode()
@@ -1019,7 +1003,7 @@ def bpe_train_bytes(
 
         for pdf in batches:
             cnt: Counter = Counter()
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 for w in byte_words(text or "", b2u):
                     if w:
                         cnt[w] += 1
@@ -1029,7 +1013,7 @@ def bpe_train_bytes(
 
     sc = df.sparkSession.sparkContext
     vocab = (
-        df.select(text_col)
+        df.select("text")
         .repartition(sc.defaultParallelism)
         .mapInPandas(run, "_w string, _freq long")
         .groupBy("_w")
@@ -1037,14 +1021,12 @@ def bpe_train_bytes(
         .select(_bpe_wrap_word(F.col("_w")).alias("_s"), "_freq")
         .localCheckpoint(eager=True)
     )
-    return _bpe_merge_loop(
-        vocab, max_merges, min_count, checkpoint_every, with_counts
-    )
+    return _bpe_merge_loop(vocab, max_merges, with_counts)
 
 
 #: FROZEN 40-merge byte-level table, standing in for a published
 #: tokenizer in the driver-gated byte-level query (q_bpe_bytes):
-#: bpe_train_bytes(FIXTURE_CORPUS, max_merges=40, min_count=2) over the
+#: bpe_train_bytes(FIXTURE_CORPUS, max_merges=40) over the
 #: four-line corpus in tests/test_bpe_bytes.py — pinned there against
 #: BOTH the Spark trainer and the independent plain-Python twin, so
 #: this constant cannot rot. The
@@ -1097,8 +1079,6 @@ BPE_BYTES_FROZEN_MERGES: list[tuple[str, str]] = [
 
 def bpe_apply_bytes_pandas(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Apply a ranked BYTE-level merge table (from
@@ -1114,9 +1094,9 @@ def bpe_apply_bytes_pandas(
         raise ValueError("byte-level apply requires a trained merge table")
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     b2u = bytes_to_unicode()
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     schema = (
-        f"{id_col} {id_type}, n_pretokens long, n_bytes long, "
+        f"doc_id {id_type}, n_pretokens long, n_bytes long, "
         f"n_subwords long, seg_fp string"
     )
 
@@ -1154,7 +1134,7 @@ def bpe_apply_bytes_pandas(
 
         for pdf in batches:
             ids, np_, nb, ns, fp = [], [], [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
+            for rid, text in zip(pdf["doc_id"], pdf["text"]):
                 words = [w for w in byte_words(text or "", b2u) if w]
                 segs = [seg(w) for w in words]
                 ids.append(rid)
@@ -1165,7 +1145,7 @@ def bpe_apply_bytes_pandas(
                 fp.append(hashlib.md5(joined.encode("utf-8")).hexdigest())
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "n_pretokens": np_,
                     "n_bytes": nb,
                     "n_subwords": ns,
@@ -1173,4 +1153,4 @@ def bpe_apply_bytes_pandas(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema)

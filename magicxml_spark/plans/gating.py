@@ -41,7 +41,6 @@ def gate_on_computed(
     df: DataFrame,
     cols: Sequence[str],
     predicate: Column,
-    eager: bool = True,
 ) -> DataFrame:
     """Materialize the compact ``cols`` projection of ``df``, then
     filter the MATERIALIZED frame with ``predicate``.
@@ -65,5 +64,5 @@ def gate_on_computed(
             f"gate_on_computed cols not in the frame: {missing} "
             f"(have {df.columns})"
         )
-    compact = df.select(*cols).localCheckpoint(eager=eager)
+    compact = df.select(*cols).localCheckpoint(eager=True)
     return compact.filter(predicate)

@@ -33,10 +33,10 @@ from pyspark.sql import functions as F
 ZORDER_BITS = 10  # per-dimension bucket bits (2 dims -> 20-bit key)
 
 
-def bucketize(col: Column, lo: Column, hi: Column, bits: int = ZORDER_BITS) -> Column:
-    """Min-max bucket to [0, 2^bits): floor((x-lo)/(hi-lo)*2^bits),
+def bucketize(col: Column, lo: Column, hi: Column) -> Column:
+    """Min-max bucket to [0, n = 2^ZORDER_BITS): floor((x-lo)/(hi-lo)*n),
     clamped; degenerate constant columns collapse to bucket 0."""
-    n = 1 << bits
+    n = 1 << ZORDER_BITS
     return (
         F.when(hi == lo, F.lit(0))
         .otherwise(
@@ -49,20 +49,18 @@ def bucketize(col: Column, lo: Column, hi: Column, bits: int = ZORDER_BITS) -> C
     )
 
 
-def interleave_bits(a: Column, b: Column, bits: int = ZORDER_BITS) -> Column:
-    """Morton interleave of two ``bits``-bit integers: a's bit i lands
+def interleave_bits(a: Column, b: Column) -> Column:
+    """Morton interleave of two ``ZORDER_BITS``-bit integers: a's bit i lands
     at position 2i+1, b's at 2i. A sum of shifted masked terms — the
     optimizer folds it into one codegen expression."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i + 1))
         terms.append(F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i))
     return reduce(lambda x, y: x + y, terms)
 
 
-def zorder_key(
-    df: DataFrame, col_a: str, col_b: str, bits: int = ZORDER_BITS
-) -> DataFrame:
+def zorder_key(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Append ``zkey``: the Morton code of the two columns' min-max
     buckets. Bounds come from one exact aggregation broadcast back —
     no collect, no second job."""
@@ -79,27 +77,27 @@ def zorder_key(
     # evaluate the normalization division 2*bits times per row
     bucketed = with_bounds.select(
         *df.columns,
-        bucketize(F.col(col_a), F.col("_alo"), F.col("_ahi"), bits).alias("_ba"),
-        bucketize(F.col(col_b), F.col("_blo"), F.col("_bhi"), bits).alias("_bb"),
+        bucketize(F.col(col_a), F.col("_alo"), F.col("_ahi")).alias("_ba"),
+        bucketize(F.col(col_b), F.col("_blo"), F.col("_bhi")).alias("_bb"),
     )
     return bucketed.select(
         *df.columns,
-        interleave_bits(F.col("_ba"), F.col("_bb"), bits).alias("zkey"),
+        interleave_bits(F.col("_ba"), F.col("_bb")).alias("zkey"),
     )
 
 
-def interleave_sql(a_expr: str, b_expr: str, bits: int = ZORDER_BITS) -> str:
+def interleave_sql(a_expr: str, b_expr: str) -> str:
     """The oracle twin of interleave_bits — generated from the same
     loop so the bit layout cannot drift."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"((({a_expr} >> {i}) & 1) << {2 * i + 1})")
         terms.append(f"((({b_expr} >> {i}) & 1) << {2 * i})")
     return " + ".join(terms)
 
 
-def bucketize_sql(col: str, lo: str, hi: str, bits: int = ZORDER_BITS) -> str:
-    n = 1 << bits
+def bucketize_sql(col: str, lo: str, hi: str) -> str:
+    n = 1 << ZORDER_BITS
     return (
         f"CASE WHEN {hi} = {lo} THEN 0 ELSE CAST(least({n - 1}, "
         f"floor((CAST({col} AS DOUBLE) - {lo}) / ({hi} - {lo}) * {n})) AS BIGINT) END"

@@ -1098,7 +1098,7 @@ def q_ivf_refit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap = _snapshot_scratch(f"ivf_plan{n_cells}")
         write_ivf_snapshot(emb, snap, n_cells=n_cells)
         out = maybe_refit_ivf_snapshot(
-            spark, snap, max_balance_ratio=float("inf"), dry_run=True
+            spark, snap, max_balance_ratio=float("inf")
         )
         rows.append(
             (
@@ -1953,12 +1953,12 @@ def q_trigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The generalized recursive Jelinek-Mercer ladder at order 5 — what
 # Wenzek et al. 2020 actually score with — with the count floor
 # pruning every table of order >= 3. The oracle is GENERATED from the
-# same (order, floor, lam) parameters so the two spellings cannot
+# same (order, floor) parameters and LM constants so the two spellings cannot
 # drift; the ladder's float shape matches the Spark expression tree
 # term for term (micro-nat row-wise rounding as everywhere).
-def _ngram_oracle(
-    order: int, floor: int, floor_from: int = 3, lam: float = 0.75
-) -> str:
+def _ngram_oracle(order: int, floor: int) -> str:
+    from magicxml_spark.operators.curation import LM_FLOOR_FROM, LM_LAMBDA as lam
+
     pos_cols = ",\n".join(
         f"unnest(list_transform(range(1, len(w) + 1),"
         f" i -> CASE WHEN i > {j} THEN w[i - {j}] END)) AS prev{j}"
@@ -1969,7 +1969,7 @@ def _ngram_oracle(
         keys = [f"prev{j}" for j in range(k - 1, 0, -1)] + ["cur"]
         having = (
             f" HAVING count(*) >= {floor}"
-            if k >= floor_from and floor > 1
+            if k >= LM_FLOOR_FROM and floor > 1
             else ""
         )
         tables.append(
@@ -2168,9 +2168,9 @@ def q_5gram_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "crawl" half (odd doc_ids) scores against it — write -> read ->
 # score lifecycle, OOV unigrams at the deterministic 1/N Laplace
 # floor. The oracle replays the split and the frozen ladder in SQL.
-def _lm_snapshot_oracle(
-    order: int, floor: int, floor_from: int = 3, lam: float = 0.75
-) -> str:
+def _lm_snapshot_oracle(order: int, floor: int) -> str:
+    from magicxml_spark.operators.curation import LM_FLOOR_FROM, LM_LAMBDA as lam
+
     pos_cols = ",\n".join(
         f"unnest(list_transform(range(1, len(w) + 1),"
         f" i -> CASE WHEN i > {j} THEN w[i - {j}] END)) AS prev{j}"
@@ -2181,7 +2181,7 @@ def _lm_snapshot_oracle(
         keys = [f"prev{j}" for j in range(k - 1, 0, -1)] + ["cur"]
         having = (
             f" HAVING count(*) >= {floor}"
-            if k >= floor_from and floor > 1
+            if k >= LM_FLOOR_FROM and floor > 1
             else ""
         )
         tables.append(
@@ -3340,7 +3340,8 @@ def q_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_TRAIN_STEPS = 8
 
 
-def _bpe_train_oracle(n_steps: int = _BPE_TRAIN_STEPS) -> str:
+def _bpe_train_oracle() -> str:
+    n_steps = _BPE_TRAIN_STEPS
     wrap = (
         "array_to_string(list_transform(range(1, length(w) + 1), "
         "i -> chr(2) || substring(w, i, 1) || chr(3)), '')"
@@ -4688,7 +4689,8 @@ def q_lang_id_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # any drift lands in seg_fp.
 
 
-def _bpe_model_apply_oracle(n_steps: int = _BPE_TRAIN_STEPS) -> str:
+def _bpe_model_apply_oracle() -> str:
+    n_steps = _BPE_TRAIN_STEPS
     wrap = (
         "array_to_string(list_transform(range(1, length(word) + 1), "
         "i -> chr(2) || substring(word, i, 1) || chr(3)), '')"
@@ -5307,7 +5309,7 @@ def q_quality_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
         labeled, model, vocab, v, id_col="_pid", text_col="para"
     )
     marked = scored.withColumn("_keep", F.col("quality_pred") == 0)
-    out = rebuild_documents(marked, "doc_id", "pos", "para", "_keep")
+    out = rebuild_documents(marked)
     return out.select(
         "doc_id",
         "n_paras",

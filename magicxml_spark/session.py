@@ -16,7 +16,6 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "magicxml-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -41,10 +40,9 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
-    if master is None:
-        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]" if cpus else "local[*]")
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]" if cpus else "local[*]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus or "32"))
+        shuffle_partitions = int(cpus or 32)
 
     builder = (
         SparkSession.builder.appName(app_name)

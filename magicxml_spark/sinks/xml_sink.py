@@ -44,15 +44,14 @@ def xml_escape_attr(c: Column) -> Column:
     return F.regexp_replace(xml_escape(c), '"', "&quot;")
 
 
-def dense_category_ids(df: DataFrame, order_col: Column | None = None) -> DataFrame:
+def dense_category_ids(df: DataFrame) -> DataFrame:
     """Q9 (main.py:535-547): distinct non-empty category_path values get
     sequential ids 1..n. First-seen document order is not reproducible
-    on a distributed scan, so first-seen = minimum source order key."""
-    if order_col is None:
-        order_col = F.monotonically_increasing_id()
+    on a distributed scan, so first-seen = minimum scan order
+    (``monotonically_increasing_id``)."""
     w = W.orderBy("first_seen")
     return (
-        df.withColumn("_ord", order_col)
+        df.withColumn("_ord", F.monotonically_increasing_id())
         .filter(F.col("category_path").isNotNull() & (F.col("category_path") != ""))
         .groupBy("category_path")
         .agg(F.min("_ord").alias("first_seen"))
@@ -218,14 +217,16 @@ def product_fragments(df: DataFrame) -> DataFrame:
     return df.select(F.concat(*parts).alias("fragment"))
 
 
-def write_yml_catalog(
-    df: DataFrame,
-    path: str,
-    shop_name: str = "Generated from CSV",
-    company: str = "MagicXML-Spark",
-    url: str = "https://example.invalid",
-    date: str = "1970-01-01 00:00",
-) -> str:
+# The yml_catalog shop header: fixed values, none of which needs XML
+# escaping.
+_YML_SHOP_HEADER = (
+    '<yml_catalog date="1970-01-01 00:00"><shop>'
+    "<name>Generated from CSV</name><company>MagicXML-Spark</company>"
+    "<url>https://example.invalid</url>"
+)
+
+
+def write_yml_catalog(df: DataFrame, path: str) -> str:
     """Assemble the full yml_catalog document (K3). Bounded driver-side
     wrap; offer fragments AND category header rows stream from
     executors via toLocalIterator — a degenerate catalog whose
@@ -241,22 +242,9 @@ def write_yml_catalog(
         cats = cat_ids
     frags = offer_fragments(df, cat_ids)
 
-    # header values escape like the fragments do (the reference built the
-    # header with ElementTree, which escapes; a shop_name containing '&'
-    # must not produce malformed XML)
-    def esc_text(s: str) -> str:
-        return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-
-    def esc_attr(s: str) -> str:
-        return esc_text(s).replace('"', "&quot;")
-
     def body(f) -> None:
         f.write("<?xml version='1.0' encoding='utf-8'?>\n")
-        f.write(f'<yml_catalog date="{esc_attr(date)}"><shop>')
-        f.write(
-            f"<name>{esc_text(shop_name)}</name>"
-            f"<company>{esc_text(company)}</company><url>{esc_text(url)}</url>"
-        )
+        f.write(_YML_SHOP_HEADER)
         f.write('<currencies><currency id="RUR" rate="1"/></currencies><categories>')
         for r in cats.toLocalIterator():
             esc = (

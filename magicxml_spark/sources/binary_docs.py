@@ -4,11 +4,12 @@ routes single files through them.
 
 The Spark-side plumbing (binaryFile scan, schema, Arrow-batched
 ``mapInPandas`` decode, lineage columns) is real and tested; the
-actual PDF/image codecs (pdfplumber, PIL, fitz, reportlab) are NOT in
-this image, so each decode step is import-gated: with the libraries
-present it runs them; without, ``deterministic_stub=True`` yields a
-deterministic fake derived from the bytes (so pipelines and tests
-exercise the full distributed path), else NotImplementedError.
+third-party PDF/image codecs (pdfplumber, PIL, fitz, reportlab) are
+optional, so each decode step is import-gated: with the libraries
+present it runs them; without, the repo's own lite codecs
+(``pdf_lite``, ``pdf_raster``, ``image_lite``, ``jpeg_lite``) handle
+the inputs they understand, and anything else raises
+NotImplementedError naming the missing library.
 
 This module also stubs ``png_to_jpg`` — the reference CALLS
 process_png_to_jpg (main.py:2078) but never defines it (latent
@@ -17,7 +18,6 @@ NameError); the engine implements the missing operator.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -29,9 +29,9 @@ PDF_TABLE_SCHEMA = (
 PDF_DOC_SCHEMA = "path string, pages_count int, text string, meta_json string"
 
 
-def read_binary(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
+def read_binary(spark: SparkSession, path: str) -> DataFrame:
     """binaryFile scan: (path, modificationTime, length, content)."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
+    return spark.read.format("binaryFile").load(path)
 
 
 def _have(module: str) -> bool:
@@ -42,9 +42,7 @@ def _have(module: str) -> bool:
         return False
 
 
-def extract_pdf_tables(
-    binary_df: DataFrame, deterministic_stub: bool = False
-) -> DataFrame:
+def extract_pdf_tables(binary_df: DataFrame) -> DataFrame:
     """S9 (main.py:914-978): per-page extract_tables with pdf_page /
     table_number lineage columns. Arrow-batched; one PDF per input row."""
 
@@ -82,7 +80,7 @@ def extract_pdf_tables(
                 # 'lattice' analog — cell boundaries from line geometry,
                 # text assigned by Tm/Td position), then the
                 # whitespace-column heuristic; image-only/exotic PDFs
-                # fall on the stub/gate
+                # fall on the gate
                 from magicxml_spark.sources.pdf_raster import (
                     extract_table_rows_ruled,
                 )
@@ -93,13 +91,10 @@ def extract_pdf_tables(
                 if heur:
                     for pageno, tno, rno, cells in heur:
                         rows.append((path, pageno, tno, rno, json.dumps(cells)))
-                elif deterministic_stub:
-                    digest = hashlib.md5(bytes(content)).hexdigest()
-                    rows.append((path, 1, 1, 0, json.dumps([digest[:8], digest[8:16]])))
                 else:
                     raise NotImplementedError(
                         "pdfplumber not installed and no table-like text "
-                        "layout found; pass deterministic_stub=True"
+                        "layout found; install pdfplumber to read this PDF"
                     )
             yield pd.DataFrame(
                 rows, columns=["path", "pdf_page", "table_number", "cell_row", "cell_json"]
@@ -110,7 +105,7 @@ def extract_pdf_tables(
     )
 
 
-def png_to_jpg(binary_df: DataFrame, deterministic_stub: bool = False) -> DataFrame:
+def png_to_jpg(binary_df: DataFrame) -> DataFrame:
     """The operator the reference calls but never defines
     (process_png_to_jpg, main.py:2078). Returns (path, jpg_content)."""
 
@@ -144,12 +139,10 @@ def png_to_jpg(binary_df: DataFrame, deterministic_stub: bool = False) -> DataFr
                     rows.append(
                         (path, jpeg_lite.encode_jpeg(w0, h0, "RGB", rgb, quality=95))
                     )
-                elif deterministic_stub:
-                    rows.append((path, hashlib.md5(bytes(content)).digest()))
                 else:
                     raise NotImplementedError(
                         "PIL not installed and not a lite-decodable "
-                        "PNG/BMP/GIF; pass deterministic_stub=True"
+                        "PNG/BMP/GIF; install Pillow to convert this image"
                     )
             yield pd.DataFrame(rows, columns=["path", "jpg_content"])
 
@@ -158,15 +151,11 @@ def png_to_jpg(binary_df: DataFrame, deterministic_stub: bool = False) -> DataFr
     )
 
 
-def pdf_report_rows(df: DataFrame, style: str = "table") -> DataFrame:
-    """K8 row-capping semantics (main.py:1100, 1133): 'table' keeps the
-    first 50 rows, 'summary' the first 5."""
-    return df.limit(50 if style == "table" else 5)
+# K8 row cap of the reference's table report (main.py:1100).
+PDF_REPORT_ROWS = 50
 
 
-def render_pdf_report(
-    df: DataFrame, out_path: str, style: str = "table", title: str = "Report"
-) -> str:
+def render_pdf_report(df: DataFrame, out_path: str, title: str = "Report") -> str:
     """K8 for real (main.py:1056-1133): capped rows -> a paginated
     text-table PDF on disk. reportlab renders when installed (full
     Unicode fonts); otherwise sources/pdf_lite.py writes the document
@@ -174,7 +163,7 @@ def render_pdf_report(
     .pdf a viewer opens, and extract_pdf_tables reads the lite output
     back (round-trip test-pinned). Driver-side by design: the input is
     already capped at 50 rows, same as the reference's report surface."""
-    capped = pdf_report_rows(df, style)
+    capped = df.limit(PDF_REPORT_ROWS)
     columns = list(capped.columns)
     rows = [["" if v is None else str(v) for v in r] for r in capped.collect()]
     if _have("reportlab"):  # pragma: no cover - library absent in CI image
@@ -191,9 +180,7 @@ def render_pdf_report(
     return out_path
 
 
-def extract_pdf_documents(
-    binary_df: DataFrame, deterministic_stub: bool = False
-) -> DataFrame:
+def extract_pdf_documents(binary_df: DataFrame) -> DataFrame:
     """S10 (main.py:981-1034): whole-document extraction — page count,
     concatenated text, metadata JSON — one nested record per PDF."""
 
@@ -235,15 +222,10 @@ def extract_pdf_documents(
                             json.dumps(pdf_lite.document_info(bytes(content))),
                         )
                     )
-                elif deterministic_stub:
-                    digest = hashlib.md5(bytes(content)).hexdigest()
-                    rows.append(
-                        (path, 1, f"stub text {digest[:12]}", json.dumps({"stub": digest[:8]}))
-                    )
                 else:
                     raise NotImplementedError(
                         "pdfplumber not installed and no text streams found; "
-                        "pass deterministic_stub=True"
+                        "install pdfplumber to read this PDF"
                     )
             yield pd.DataFrame(rows, columns=["path", "pages_count", "text", "meta_json"])
 
@@ -296,15 +278,14 @@ IMAGE_TO_PDF_SCHEMA = (
 )
 
 
-def image_to_pdf(binary_df: DataFrame, deterministic_stub: bool = False) -> DataFrame:
+def image_to_pdf(binary_df: DataFrame) -> DataFrame:
     """K10 image->PDF (main.py:1173-1241): RGBA/LA flattened onto a
     white background, page sized by ``fit_image_to_pdf_page``, image
     centered, one PDF per input image named ``{base}.pdf``.
 
     The geometry columns are computed with the real reference math in
     every mode; only the pixel decode (PIL) and PDF render (reportlab)
-    are import-gated. Stub mode derives image dimensions from
-    md5(content) and emits md5-derived bytes as the pdf payload."""
+    are import-gated."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
@@ -375,17 +356,10 @@ def image_to_pdf(binary_df: DataFrame, deterministic_stub: bool = False) -> Data
                         geo["y_offset_pt"],
                         title=base,
                     )
-                elif deterministic_stub:
-                    digest = hashlib.md5(bytes(content)).digest()
-                    # stub dims scaled up so both fit branches occur
-                    # across inputs
-                    geo = fit_image_to_pdf_page(
-                        (digest[0] + 1) * 8, (digest[1] + 1) * 8
-                    )
-                    payload = hashlib.md5(b"pdf" + bytes(content)).digest()
                 else:
                     raise NotImplementedError(
-                        "PIL/reportlab not installed; pass deterministic_stub=True"
+                        "PIL/reportlab not installed and not a lite-decodable "
+                        "image; install Pillow and reportlab to convert it"
                     )
                 rows.append(
                     (
@@ -431,11 +405,10 @@ PDF_TO_IMAGES_SCHEMA = (
 def pdf_to_images(
     binary_df: DataFrame,
     output_format: str = "png",
-    dpi: int = PDF_DEFAULT_DPI,
-    deterministic_stub: bool = False,
 ) -> DataFrame:
-    """K10 pdf->image (main.py:1244-1381): render every page at ``dpi``
-    (fitz matrix dpi/72, pdf2image fallback), one output row per page.
+    """K10 pdf->image (main.py:1244-1381): render every page at
+    ``PDF_DEFAULT_DPI`` (fitz matrix dpi/72, pdf2image fallback), one
+    output row per page.
 
     Filenames follow the reference: a single-page PDF yields
     ``{base}.{fmt}``; a multipage one yields ``page_{n:03d}.{fmt}``
@@ -451,12 +424,8 @@ def pdf_to_images(
     progressive), FlateDecode samples (PNG/TIFF predictors) in
     DeviceRGB/DeviceGray/Indexed color, 1-bit stencils. Only
     JPX/CCITT/JBIG2/ICC-flavored or encrypted documents still fall
-    through to the fitz gate below.
-
-    Stub mode (codecs absent, foreign PDF): page count =
-    1 + md5(content)[0] % 3 and pixel dims = A4 points x dpi/72 — so
-    the dpi parameter is honored observably and multipage fan-out is
-    exercised."""
+    through to the fitz gate below."""
+    dpi = PDF_DEFAULT_DPI
     fmt = "jpg" if output_format.lower() == "jpg" else "png"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -488,17 +457,11 @@ def pdf_to_images(
                     pages = [
                         (w, h, _encode_raster_png(img, fmt)) for w, h, img in lite
                     ]
-                elif deterministic_stub:
-                    n_pages = 1 + hashlib.md5(bytes(content)).digest()[0] % 3
-                    w = round(PDF_MAX_WIDTH_PT * dpi / 72)
-                    h = round(PDF_MAX_HEIGHT_PT * dpi / 72)
-                    pages = [
-                        (w, h, hashlib.md5(bytes(content) + bytes([p])).digest())
-                        for p in range(n_pages)
-                    ]
                 else:
                     raise NotImplementedError(
-                        "fitz/pdf2image not installed; pass deterministic_stub=True"
+                        "fitz/pdf2image not installed and the PDF needs a "
+                        "codec the lite renderer lacks; install PyMuPDF or "
+                        "pdf2image to render it"
                     )
                 single = len(pages) == 1
                 for pageno, (w, h, img) in enumerate(pages, 1):

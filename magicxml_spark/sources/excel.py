@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from magicxml_spark.sources import xlsx_lite
 
+# Rows written to one sheet; an .xlsx sheet holds at most 1,048,576.
+EXCEL_MAX_ROWS = 1_000_000
+
 
 def _have_openpyxl() -> bool:
     try:
@@ -51,13 +54,13 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame([tuple(r) for r in rows], schema)
 
 
-def write_excel(df: DataFrame, path: str, max_rows: int = 1_000_000) -> str:
+def write_excel(df: DataFrame, path: str) -> str:
     """K5: driver-side writer with the reference's per-column
     auto-width = min(max len + 2, 50) (main.py:683-718)."""
     if _have_openpyxl():
         from openpyxl.utils import get_column_letter
 
-        pdf = df.limit(max_rows).toPandas()
+        pdf = df.limit(EXCEL_MAX_ROWS).toPandas()
         with __import__("pandas").ExcelWriter(path, engine="openpyxl") as writer:
             pdf.to_excel(writer, index=False, sheet_name="Data")
             ws = writer.sheets["Data"]
@@ -68,14 +71,12 @@ def write_excel(df: DataFrame, path: str, max_rows: int = 1_000_000) -> str:
                 ws.column_dimensions[get_column_letter(i)].width = min(width + 2, 50)
         return path
     rows = [
-        ["" if v is None else str(v) for v in r] for r in df.limit(max_rows).collect()
+        ["" if v is None else str(v) for v in r] for r in df.limit(EXCEL_MAX_ROWS).collect()
     ]
     return xlsx_lite.write_rows(path, list(df.columns), rows)
 
 
-def excel_to_pdf(
-    spark: SparkSession, src: str, dst: str, style: str = "table"
-) -> str:
+def excel_to_pdf(spark: SparkSession, src: str, dst: str) -> str:
     """K9 for real (main.py:1155-1170): .xlsx -> paginated PDF report,
     end-to-end executable on stdlib alone (xlsx_lite read +
     render_pdf_report write; reportlab/openpyxl take over when
@@ -83,5 +84,5 @@ def excel_to_pdf(
     from magicxml_spark.sources.binary_docs import render_pdf_report
 
     return render_pdf_report(
-        read_excel(spark, src), dst, style=style, title=src.rsplit("/", 1)[-1]
+        read_excel(spark, src), dst, title=src.rsplit("/", 1)[-1]
     )

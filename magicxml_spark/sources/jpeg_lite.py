@@ -9,9 +9,8 @@ symbols. With numpy (baked into the image) the 8x8 DCT is two matrix
 multiplies, so encoding is vectorized per block row rather than
 per-pixel Python.
 
-Encoder subset: 8-bit RGB or grayscale, 4:4:4 or 4:2:0 chroma
-subsampling, optional DRI/RSTn restart intervals, baseline
-sequential, JFIF APP0. Decoder subset: any baseline sequential
+Encoder subset: 8-bit RGB or grayscale, 4:4:4, baseline sequential,
+JFIF APP0. Decoder subset: any baseline sequential
 stream (SOF0/SOF1) — file-defined tables, arbitrary integer
 sampling factors with nearest chroma upsampling, restart markers —
 plus PROGRESSIVE streams (SOF2, T.81 Annex G: spectral selection +
@@ -159,11 +158,6 @@ class _BitWriter:
             pad = 8 - self.nbits
             self.write((1 << pad) - 1, pad)  # pad with 1s per spec
 
-    def restart(self, n: int) -> None:
-        """Byte-align and emit RSTn — the marker is raw, not stuffed."""
-        self.align()
-        self.buf += bytes((0xFF, 0xD0 + (n & 7)))
-
     def flush(self) -> bytes:
         self.align()
         return bytes(self.buf)
@@ -236,39 +230,17 @@ def _dht(cls: int, dest: int, table) -> bytes:
     return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
 
 
-def _box_downsample2(plane: np.ndarray) -> np.ndarray:
-    """2x2 box average, odd edges replicated first — the 4:2:0 chroma
-    reduction."""
-    h, w = plane.shape
-    padded = np.pad(plane, ((0, h % 2), (0, w % 2)), mode="edge")
-    return (
-        padded[0::2, 0::2] + padded[1::2, 0::2]
-        + padded[0::2, 1::2] + padded[1::2, 1::2]
-    ) / 4.0
-
-
 def encode_jpeg(
     w: int,
     h: int,
     mode: str,
     pixels: bytes,
     quality: int = 95,
-    subsampling: str = "444",
-    restart_interval: int = 0,
 ) -> bytes:
-    """Baseline JFIF encode of 'RGB' or 'L' pixels (row-major).
-
-    ``subsampling``: '444' (every component full resolution — always
-    valid) or '420' (chroma box-averaged 2x2, Y sampling factor 2x2 —
-    the dominant flavor in the wild, ~2x smaller color output).
-    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker
-    every that many MCUs (what camera/scanner pipelines write so one
-    bit error cannot corrupt the rest of the scan)."""
+    """Baseline JFIF encode of 'RGB' or 'L' pixels (row-major), every
+    component at full resolution (4:4:4)."""
     q_lum, q_chrom = _scaled_tables(quality)
     gray = mode == "L"
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    sub420 = subsampling == "420" and not gray
     arr = np.frombuffer(bytes(pixels), dtype=np.uint8).astype(np.float64)
     if gray:
         planes = [arr.reshape(h, w) - 128.0]
@@ -287,64 +259,18 @@ def encode_jpeg(
 
     writer = _BitWriter()
     preds = [0] * len(planes)
-    n_rst = 0
-    mcu_in_interval = 0
-
-    def maybe_restart() -> None:
-        nonlocal n_rst, mcu_in_interval, preds
-        if restart_interval and mcu_in_interval == restart_interval:
-            writer.restart(n_rst)
-            n_rst = (n_rst + 1) & 7
-            mcu_in_interval = 0
-            preds = [0] * len(planes)
-
-    if sub420:
-        # MCU = four Y blocks (2x2) + one Cb + one Cr. Y pads to the
-        # 16-px MCU grid; chroma downsamples then pads to its own 8-px
-        # grid, which is exactly the MCU grid again.
-        mcux, mcuy = (w + 15) // 16, (h + 15) // 16
-        y_pad = np.pad(
-            planes[0],
-            ((0, mcuy * 16 - h), (0, mcux * 16 - w)),
-            mode="edge",
-        )
-        y_rows = _quantized_rows(_component_blocks(y_pad), q_lum)
-        cb_rows = _quantized_rows(
-            _component_blocks(_box_downsample2(planes[1])), q_chrom
-        )
-        cr_rows = _quantized_rows(
-            _component_blocks(_box_downsample2(planes[2])), q_chrom
-        )
-        nbx_y = mcux * 2
-        for my in range(mcuy):
-            for mx in range(mcux):
-                maybe_restart()
-                for dy in (0, 1):
-                    for dx in (0, 1):
-                        idx = (2 * my + dy) * nbx_y + (2 * mx + dx)
-                        preds[0] = _entropy_block(
-                            writer, y_rows[idx], dc_l, ac_l, preds[0]
-                        )
-                cidx = my * mcux + mx
-                preds[1] = _entropy_block(writer, cb_rows[cidx], dc_c, ac_c, preds[1])
-                preds[2] = _entropy_block(writer, cr_rows[cidx], dc_c, ac_c, preds[2])
-                mcu_in_interval += 1
-    else:
-        # interleaved MCU scan: 4:4:4 -> one 8x8 block per component
-        # per MCU. DCT + quantize + zigzag run vectorized over ALL
-        # blocks of a component up front; the Python loop only does
-        # entropy coding.
-        comp_rows = [
-            _quantized_rows(_component_blocks(p), q_lum if ci == 0 else q_chrom)
-            for ci, p in enumerate(planes)
-        ]
-        for m in range(len(comp_rows[0])):
-            maybe_restart()
-            for ci in range(len(planes)):
-                dc = dc_l if ci == 0 else dc_c
-                ac = ac_l if ci == 0 else ac_c
-                preds[ci] = _entropy_block(writer, comp_rows[ci][m], dc, ac, preds[ci])
-            mcu_in_interval += 1
+    # interleaved MCU scan: 4:4:4 -> one 8x8 block per component per
+    # MCU. DCT + quantize + zigzag run vectorized over ALL blocks of a
+    # component up front; the Python loop only does entropy coding.
+    comp_rows = [
+        _quantized_rows(_component_blocks(p), q_lum if ci == 0 else q_chrom)
+        for ci, p in enumerate(planes)
+    ]
+    for m in range(len(comp_rows[0])):
+        for ci in range(len(planes)):
+            dc = dc_l if ci == 0 else dc_c
+            ac = ac_l if ci == 0 else ac_c
+            preds[ci] = _entropy_block(writer, comp_rows[ci][m], dc, ac, preds[ci])
     scan = writer.flush()
 
     def dqt(dest: int, q: np.ndarray) -> bytes:
@@ -355,8 +281,7 @@ def encode_jpeg(
 
     ncomp = 1 if gray else 3
     sof_comps = b"".join(
-        bytes([cid, (0x22 if sub420 else 0x11) if cid == 1 else 0x11,
-               0 if cid == 1 else 1])
+        bytes([cid, 0x11, 0 if cid == 1 else 1])
         for cid in range(1, ncomp + 1)
     )
     sof = b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp) + sof_comps
@@ -377,8 +302,6 @@ def encode_jpeg(
     out += _dht(0, 0, _DC_LUM) + _dht(1, 0, _AC_LUM)
     if not gray:
         out += _dht(0, 1, _DC_CHROM) + _dht(1, 1, _AC_CHROM)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
     out += sos + scan + b"\xff\xd9"  # EOI
     return bytes(out)
 

@@ -29,7 +29,7 @@ def discover_root(sample: str) -> str | None:
     return None
 
 
-def flatten_structs(df: DataFrame, sep: str = ".") -> DataFrame:
+def flatten_structs(df: DataFrame) -> DataFrame:
     """json_normalize-style flatten: nested struct fields become
     dotted top-level columns (arrays are left intact)."""
     cols = []
@@ -37,7 +37,7 @@ def flatten_structs(df: DataFrame, sep: str = ".") -> DataFrame:
     def walk(dt: T.DataType, col, prefix: str) -> None:
         if isinstance(dt, T.StructType):
             for f in dt.fields:
-                walk(f.dataType, col[f.name], f"{prefix}{sep}{f.name}" if prefix else f.name)
+                walk(f.dataType, col[f.name], f"{prefix}.{f.name}" if prefix else f.name)
         else:
             cols.append(col.alias(prefix))
 

@@ -9,9 +9,9 @@ the text back out — is implementable on ``zlib`` + ``re`` alone.
 Writer (``write_table_pdf``): multi-page text report — title line,
 header row, one fixed-layout line per data row — as uncompressed
 content streams using the built-in Helvetica Type1 font (base-14 fonts
-need no embedding), correct xref table + trailer. The row caps
-(50/table, 5/summary) are applied by the CALLER (pdf_report_rows),
-mirroring reference main.py:1100,1133.
+need no embedding), correct xref table + trailer. The row cap
+(50) is applied by the CALLER (binary_docs.render_pdf_report),
+mirroring reference main.py:1100.
 
 Extractor (``extract_text_pages``): walks every stream object in
 document order, inflates /FlateDecode streams with zlib (so PDFs from
@@ -47,6 +47,8 @@ _LEAD = 14  # line leading at 10pt
 _LINES_PER_PAGE = (_PAGE_H - 2 * _MARGIN) // _LEAD
 
 CELL_SEP = " | "
+# Characters each cell is truncated/padded to.
+COL_WIDTH = 20
 
 
 def _esc(s: str) -> str:
@@ -87,16 +89,15 @@ def write_table_pdf(
     columns: list[str],
     rows: list[list[str]],
     title: str = "Report",
-    col_width: int = 20,
 ) -> bytes:
     """Render (columns, rows) as a paginated text-table PDF; returns
-    the document bytes. Cells are truncated/padded to ``col_width`` and
-    joined with ``CELL_SEP``; ``col_width`` is recorded in the Info
+    the document bytes. Cells are truncated/padded to ``COL_WIDTH`` and
+    joined with ``CELL_SEP``; the width is recorded in the Info
     dictionary so the extractor splits cells POSITIONALLY — cell text
     containing the separator sequence itself round-trips intact."""
 
     def fmt(cells: list) -> str:
-        return CELL_SEP.join(str(c)[:col_width].ljust(col_width) for c in cells)
+        return CELL_SEP.join(str(c)[:COL_WIDTH].ljust(COL_WIDTH) for c in cells)
 
     lines = [title, fmt(columns)]
     lines.extend(fmt(r) for r in rows)
@@ -129,7 +130,7 @@ def write_table_pdf(
     info_id = max(objs) + 1
     objs[info_id] = (
         f"<< /Producer ({PRODUCER}) /Title ({_esc(title)}) "
-        f"/MXSColW {int(col_width)} >>"
+        f"/MXSColW {COL_WIDTH} >>"
     ).encode()
     return _serialize(objs, info_id)
 
@@ -287,9 +288,7 @@ def extract_table_rows(data: bytes) -> list[tuple[int, int, list[str]]]:
     return out
 
 
-def extract_table_rows_heuristic(
-    data: bytes, min_rows: int = 2
-) -> list[tuple[int, int, int, list[str]]]:
+def extract_table_rows_heuristic(data: bytes) -> list[tuple[int, int, int, list[str]]]:
     """(page_no, table_no, row_no, cells) for FOREIGN text PDFs — the
     pdfplumber-free arm of S9's table extraction (reference
     main.py:914-978 uses pdfplumber's layout engine; this is the
@@ -302,7 +301,7 @@ def extract_table_rows_heuristic(
     monospace-layout detection), with a per-line 2+-space split as the
     ragged fallback. Cells that are pure table furniture (|, +, -, :)
     are dropped. Returns [] when the bytes yield no text pages or no
-    block qualifies — callers keep their stub path."""
+    block qualifies — callers fall to their library gate."""
     pages = extract_text_pages(data)
     out: list[tuple[int, int, int, list[str]]] = []
     furniture = re.compile(r"^[|+\-:=]*$")
@@ -314,10 +313,10 @@ def extract_table_rows_heuristic(
             if len(segs) >= 2:
                 cur.append(ln)
             else:
-                if len(cur) >= min_rows:
+                if len(cur) >= 2:
                     blocks.append(cur)
                 cur = []
-        if len(cur) >= min_rows:
+        if len(cur) >= 2:
             blocks.append(cur)
         for tno, block in enumerate(blocks, 1):
             width = max(len(ln) for ln in block)

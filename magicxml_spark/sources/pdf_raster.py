@@ -14,7 +14,7 @@ Contract mirrors the other lite codecs: ``rasterize_pdf`` returns a
 page list ONLY for documents carrying the pdf_lite Producer marker
 (rendering a foreign PDF's embedded fonts faithfully is exactly where
 fitz takes over); anything else returns None and the caller keeps its
-gated/stub path.
+library gate.
 
 Glyphs: classic 5x7 dot-matrix patterns (the HD44780-style public
 repertoire) for printable ASCII; lowercase letters reuse the uppercase
@@ -680,8 +680,8 @@ def rasterize_pdf(data: bytes, dpi: int = 72) -> list[tuple[int, int, bytes]] | 
     """Render a pdf_lite-authored document: one (width_px, height_px,
     png_bytes) per page at ``dpi``. Returns None for foreign PDFs (no
     pdf_lite Producer marker) or unparseable structure — the caller
-    falls back to ``rasterize_text_pdf`` then its fitz-gated or stub
-    path, mirroring every other lite codec's bail-out contract."""
+    falls back to ``rasterize_text_pdf`` then its fitz gate,
+    mirroring every other lite codec's bail-out contract."""
     if not data.startswith(b"%PDF") or PRODUCER.encode() not in data:
         return None
     return _rasterize(data, dpi)
@@ -794,18 +794,16 @@ def _ruling_lines(content: bytes) -> tuple[list[tuple], list[tuple]]:
     return h, v
 
 
-def _cluster(vals: list[float], tol: float = 2.0) -> list[float]:
+def _cluster(vals: list[float]) -> list[float]:
     out: list[float] = []
     for val in sorted(vals):
-        if out and val - out[-1] <= tol:
+        if out and val - out[-1] <= 2.0:
             continue
         out.append(val)
     return out
 
 
-def extract_table_rows_ruled(
-    data: bytes, min_rows: int = 2
-) -> list[tuple[int, int, int, list[str]]]:
+def extract_table_rows_ruled(data: bytes) -> list[tuple[int, int, int, list[str]]]:
     """(page_no, table_no, row_no, cells) for FOREIGN text PDFs whose
     tables are drawn with RULING LINES (the pdfplumber 'lattice' case,
     reference main.py:920-931): cell boundaries come from stroked/
@@ -856,7 +854,7 @@ def extract_table_rows_ruled(
             for row in grid
         ]
         filled = [row for row in filled if any(row)]
-        if len(filled) >= min_rows:
+        if len(filled) >= 2:
             for rno, row in enumerate(filled):
                 out.append((pageno, 1, rno, row))
     return out

@@ -48,6 +48,9 @@ import zlib
 from magicxml_spark.sources.png_lite import _unfilter
 
 _OBJ_HEAD_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+# xref sections read per file: bounds a /Prev chain that a malformed or
+# hostile file makes long or cyclic
+MAX_XREF_SECTIONS = 64
 _STREAM_KW_RE = re.compile(rb"\s*stream(\r\n|\n|\r)")
 _STARTXREF_RE = re.compile(rb"startxref\s+(\d+)")
 _INT_AFTER = {
@@ -273,7 +276,7 @@ def _parse_classic_xref(data: bytes, offset: int):
     return entries, (data[span[0] : span[1]] if span else b"")
 
 
-def read_xref_chain(data: bytes, max_sections: int = 64) -> dict[int, tuple]:
+def read_xref_chain(data: bytes) -> dict[int, tuple]:
     """Merged xref entries across the /Prev chain, newest revision
     first (first entry per object number wins — the incremental-update
     shadowing rule). Handles classic tables, XRef streams, and hybrid
@@ -301,7 +304,7 @@ def read_xref_chain(data: bytes, max_sections: int = 64) -> dict[int, tuple]:
         return _int_key(d, b"Prev")
 
     queue = [int(matches[-1].group(1))]
-    while queue and len(seen) < max_sections:
+    while queue and len(seen) < MAX_XREF_SECTIONS:
         off = queue.pop(0)
         if off in seen or off < 0 or off >= len(data):
             continue

@@ -88,7 +88,7 @@ def _unfilter(raw: bytes, off: int, w: int, h: int, bpb: int):
 def decode_png(data: bytes):
     """-> (width, height, mode, pixels) or None when not in-subset OR
     structurally corrupt — the None contract is what lets the Spark
-    operators fall to their stub path instead of failing the task on
+    operators fall to their library gate instead of failing the task on
     one bad file in a binaryFile ingest."""
     try:
         return _decode_png_inner(data)

@@ -103,15 +103,13 @@ def iter_mjpeg_frames(data: bytes):
                         idx += 1
 
 
-def encode_mjpeg_avi(
-    frames: list[bytes], width: int, height: int, fps: int = 30
-) -> bytes:
-    """Minimal single-stream MJPEG AVI writer (hdrl + movi, no index —
-    readers that require idx1 tolerate its absence for sequential
-    decode; ours walks movi directly)."""
+def encode_mjpeg_avi(frames: list[bytes], width: int, height: int) -> bytes:
+    """Minimal single-stream MJPEG AVI writer at 30 fps (hdrl + movi,
+    no index — readers that require idx1 tolerate its absence for
+    sequential decode; ours walks movi directly)."""
     avih = struct.pack(
         "<10I",
-        1_000_000 // max(fps, 1),
+        1_000_000 // 30,
         0,
         0,
         0,
@@ -128,7 +126,7 @@ def encode_mjpeg_avi(
     strh = (
         b"vids"
         + b"MJPG"
-        + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, fps, 0, len(frames), 0, 0, 0)
+        + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, 30, 0, len(frames), 0, 0, 0)
         + struct.pack("<4h", 0, 0, width, height)
     )
     strf = struct.pack(

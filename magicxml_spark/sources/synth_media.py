@@ -48,17 +48,17 @@ def synth_gray(seed: int, w: int = 64, h: int = 48) -> "np.ndarray":
     return np.clip(g, 0, 255).astype(np.uint8)
 
 
-def synth_png(seed: int, w: int = 64, h: int = 48) -> bytes:
+def synth_png(seed: int) -> bytes:
     """Deterministic RGB PNG bytes for one seed (gray replicated to
     3 channels through the repo's own png_lite encoder)."""
     from magicxml_spark.sources.png_lite import encode_png
 
-    g = synth_gray(seed, w, h)
+    g = synth_gray(seed, 64, 48)
     rgb = np.stack([g, g, g], axis=-1)
-    return encode_png(w, h, "RGB", rgb.tobytes())
+    return encode_png(64, 48, "RGB", rgb.tobytes())
 
 
-def synth_wav(seed: int, rate: int = 8000, n_samples: int = 4000) -> bytes:
+def synth_wav(seed: int) -> bytes:
     """Deterministic 16-bit mono PCM WAV: three tones whose frequencies
     come from mixed-radix seed digits (injective over 89*97*101 ~ 872k
     seeds), well under Nyquist at the default 8 kHz rate."""
@@ -67,31 +67,29 @@ def synth_wav(seed: int, rate: int = 8000, n_samples: int = 4000) -> bytes:
     f1 = 220.0 + (seed % 89) * 23.0  # <= 2244 Hz
     f2 = 260.0 + ((seed // 89) % 97) * 17.0  # <= 1892 Hz
     f3 = 310.0 + ((seed // 8633) % 101) * 11.0  # <= 1410 Hz
-    t = np.arange(n_samples, dtype=np.float64) / rate
+    t = np.arange(4000, dtype=np.float64) / 8000
     x = (
         0.5 * np.sin(2 * np.pi * f1 * t)
         + 0.3 * np.sin(2 * np.pi * f2 * t + 1.0)
         + 0.15 * np.sin(2 * np.pi * f3 * t + 2.0)
     )
     pcm = np.clip(x * 20000.0, -32768, 32767).astype("<i2")
-    return encode_wav(rate, 1, 16, pcm.tobytes())
+    return encode_wav(8000, 1, 16, pcm.tobytes())
 
 
-def synth_avi(
-    seed: int, n_frames: int = 4, w: int = 48, h: int = 32, quality: int = 92
-) -> bytes:
-    """Deterministic MJPEG-AVI bytes: ``n_frames`` seed-derived
+def synth_avi(seed: int) -> bytes:
+    """Deterministic MJPEG-AVI bytes: four seed-derived 48x32
     gradient frames JPEG-encoded through jpeg_lite. Frame f of seed s
     uses sub-seed s*31 + f so frames within one video are distinct."""
     from magicxml_spark.sources.jpeg_lite import encode_jpeg
     from magicxml_spark.sources.riff_media import encode_mjpeg_avi
 
     frames = []
-    for f in range(n_frames):
-        g = synth_gray(seed * 31 + f, w, h)
+    for f in range(4):
+        g = synth_gray(seed * 31 + f, 48, 32)
         rgb = np.stack([g, g, g], axis=-1)
-        frames.append(encode_jpeg(w, h, "RGB", rgb.tobytes(), quality=quality))
-    return encode_mjpeg_avi(frames, w, h)
+        frames.append(encode_jpeg(48, 32, "RGB", rgb.tobytes(), quality=92))
+    return encode_mjpeg_avi(frames, 48, 32)
 
 
 _SYNTH_FNS = {"png": synth_png, "wav": synth_wav, "avi": synth_avi}
@@ -100,7 +98,6 @@ _SYNTH_FNS = {"png": synth_png, "wav": synth_wav, "avi": synth_avi}
 def synth_media_df(
     ids: DataFrame,
     kind: str,
-    id_col: str = "doc_id",
     plant_mod: int | None = None,
     **gen_kwargs,
 ) -> DataFrame:
@@ -125,7 +122,7 @@ def synth_media_df(
         for pdf in it:
             out_ids: list[int] = []
             out_content: list[bytes] = []
-            for i in pdf[id_col]:
+            for i in pdf["doc_id"]:
                 i = int(i)
                 data = gen(i, **gen_kwargs)
                 out_ids.append(i)
@@ -135,11 +132,11 @@ def synth_media_df(
                     out_content.append(data)
             yield pd.DataFrame({"id": out_ids, "content": out_content})
 
-    return ids.select(id_col).mapInPandas(batches, schema="id long, content binary")
+    return ids.select("doc_id").mapInPandas(batches, schema="id long, content binary")
 
 
 def planted_invariant_stats(
-    ids: DataFrame, plant_mod: int, pairs: DataFrame, id_col: str = "doc_id"
+    ids: DataFrame, plant_mod: int, pairs: DataFrame
 ) -> DataFrame:
     """One-row (n_input, n_planted, planted_missed) gate shared by the
     multimodal near-dup queries: every planted row (id < 0) must appear
@@ -153,7 +150,7 @@ def planted_invariant_stats(
     broadcast; a spurious pair between two planted copies or two
     originals can neither mask nor fake a specific
     (planted, original) match."""
-    base = ids.select(F.col(id_col).cast("long").alias("id"))
+    base = ids.select(F.col("doc_id").cast("long").alias("id"))
     planted = base.filter(F.col("id") % plant_mod == 0).select(
         (-F.col("id") - 1).alias("id")
     )

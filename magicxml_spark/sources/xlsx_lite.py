@@ -178,28 +178,26 @@ def _esc(s: str) -> str:
     )
 
 
-def column_width(header: str, values: list[str], cap: int = 50) -> int:
+def column_width(header: str, values: list[str]) -> int:
     """The reference's auto-width: min(longest cell + 2, 50)
     (main.py:683-718; width sampling bounded by the caller)."""
     longest = max([len(header)] + [len(v) for v in values]) if values else len(header)
-    return min(longest + 2, cap)
+    return min(longest + 2, 50)
 
 
-def write_rows(
-    path: str,
-    columns: list[str],
-    rows: list[list[str]],
-    sheet_name: str = "Data",
-    width_sample: int = 1000,
-) -> str:
+# Rows the column auto-width rule looks at.
+WIDTH_SAMPLE_ROWS = 1000
+
+
+def write_rows(path: str, columns: list[str], rows: list[list[str]]) -> str:
     """Write (columns, rows) as a single-sheet .xlsx. All cells are
     inline strings; column widths follow the reference auto-width rule
-    computed over the first ``width_sample`` rows."""
+    computed over the first ``WIDTH_SAMPLE_ROWS`` rows."""
     # ragged rows are legal everywhere else in this writer (row_xml
     # emits what it gets) — the width sampler must tolerate them too
     cols_xml = "".join(
         f'<col min="{i + 1}" max="{i + 1}" '
-        f'width="{column_width(str(c), [str(r[i]) for r in rows[:width_sample] if i < len(r)])}" '
+        f'width="{column_width(str(c), [str(r[i]) for r in rows[:WIDTH_SAMPLE_ROWS] if i < len(r)])}" '
         'customWidth="1"/>'
         for i, c in enumerate(columns)
     )
@@ -227,7 +225,7 @@ def write_rows(
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
         zf.writestr("[Content_Types].xml", _CONTENT_TYPES)
         zf.writestr("_rels/.rels", _PKG_RELS)
-        zf.writestr("xl/workbook.xml", _workbook_xml(sheet_name))
+        zf.writestr("xl/workbook.xml", _workbook_xml("Data"))
         zf.writestr("xl/_rels/workbook.xml.rels", _WB_RELS)
         zf.writestr("xl/worksheets/sheet1.xml", sheet)
     return path

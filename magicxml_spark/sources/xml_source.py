@@ -51,6 +51,8 @@ _ROW_TAGS = {
 
 #: read granularity of the encoding check and of the UTF-8 copy
 _CHUNK = 1 << 20
+#: head sample the driver validates and detects the dialect from
+HEAD_SAMPLE_BYTES = 1 << 20
 #: an XML declaration that names an encoding (groups: up to the value,
 #: its quote, the name)
 _DECLARED_ENCODING = re.compile(
@@ -220,7 +222,6 @@ def read_xml_records(
     path: str,
     keep: contextlib.ExitStack,
     dialect: str | None = None,
-    sample_bytes: int = 1 << 20,
 ) -> tuple[DataFrame, str]:
     """Read one XML catalog file into a (records_df, dialect) pair.
 
@@ -235,7 +236,7 @@ def read_xml_records(
     parse from, ``path`` or that copy.
     """
     with open(path, "rb") as f:
-        sample = _decode(f.read(sample_bytes), final=False)
+        sample = _decode(f.read(HEAD_SAMPLE_BYTES), final=False)
     validate_xml_structure(sample)
     if dialect is None:
         dialect = detect_dialect(sample)

@@ -28,10 +28,6 @@ in the testdata); a production feed carries a real ingest timestamp.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,38 +37,29 @@ from magicxml_spark.operators.dedup import (
     word_shingles,
 )
 from magicxml_spark.streaming.events import (
-    _checkpoint_dir,
-    _stream_tuning,
+    STATE_PARTITIONS,
+    _drain_to_memory,
     read_events_stream,
 )
 
 DOCUMENTS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
 
-def read_documents_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "documents.parquet",
-) -> DataFrame:
+def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents parquet with a synthetic ingest
     timestamp (doc_id seconds since epoch): the testdata has no ingest
     time, and stateful operators need an event-time column to bound
     their state. Monotonic in doc_id, so watermarks behave like a real
-    ordered feed. ``max_files_per_trigger`` caps files per micro-batch
-    (multi-batch tests); ``path_glob`` lets tests stream a multi-file
-    layout."""
+    ordered feed."""
     from magicxml_spark.tables import ensure_session_confs
 
     ensure_session_confs(spark)
-    reader = (
+    stream = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .format("parquet")
-        .option("pathGlobFilter", path_glob)
+        .option("pathGlobFilter", "documents.parquet")
+        .load(sf_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(sf_dir)
     # +1: event time must sit strictly above the initial watermark (0 =
     # epoch) — stateful operators with event-time timeouts filter rows
     # whose timestamp is <= the current watermark as late, which would
@@ -84,7 +71,6 @@ def dedup_stream_within_watermark(
     events: DataFrame,
     keys: list[str],
     ts_col: str = "ts",
-    watermark: str = "24 hours",
 ) -> DataFrame:
     """First-occurrence-wins streaming dedup on ``keys``. The output
     carries only the key columns: the surviving row per key is whichever
@@ -101,51 +87,33 @@ def dedup_stream_within_watermark(
     evicts at batch end, so a key re-appearing exactly one batch after
     its horizon passed may still be suppressed — the engine guarantees
     dedup WITHIN the delay and bounded state, not exact re-admission
-    timing beyond it. Size the watermark as 'the longest gap after
-    which a repeat should count as new', not as a precision knob."""
+    timing beyond it. The 24-hour watermark is 'the longest gap after
+    which a repeat should count as new', not a precision knob."""
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(ts_col, "24 hours")
         .dropDuplicatesWithinWatermark(keys)
         .select(*keys)
     )
 
 
-def run_stream_dedup_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    keys: list[str] | None = None,
-    state_partitions: int = 8,
-) -> DataFrame:
-    """Drive exact streaming dedup of the events feed to completion:
-    append mode emits each first-seen key immediately (dedup operators
-    do not gate output on the watermark)."""
-    keys = keys or ["user_id", "event_type"]
-    name = f"events_dedup_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        deduped = dedup_stream_within_watermark(
-            read_events_stream(spark, sf_dir), keys
-        )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+def run_stream_dedup_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drive exact streaming dedup of the events feed on
+    (user_id, event_type) to completion: append mode emits each
+    first-seen key immediately (dedup operators do not gate output on
+    the watermark)."""
+    deduped = dedup_stream_within_watermark(
+        read_events_stream(spark, sf_dir), ["user_id", "event_type"]
+    )
+    return _drain_to_memory(spark, deduped, "events_dedup", "append", STATE_PARTITIONS)
+
+
+# Event-time horizon of the stateful near-dup streams: the longest gap
+# across which a near-dup must still be flagged.
+NEAR_DUP_WATERMARK = "30 days"
 
 
 def minhash_pairs_stateful(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    n_bands: int = 4,
-    shingle_k: int = 3,
-    watermark: str = "30 days",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Streaming LSH candidate emission (applyInPandasWithState).
@@ -182,25 +150,27 @@ def minhash_pairs_stateful(
     caps the bucket COUNT — a bucket whose last arrival has fallen
     behind the advancing watermark is dropped at the end of the batch
     that advances past it. The semantic contract: near-dup pairs are
-    only guaranteed for documents whose event times are within the
-    watermark horizon of each other; a doc matching a bucket evicted
-    longer ago starts a fresh bucket (no pair emitted). That is the
-    standard streaming trade-off — size ``watermark`` as the longest
-    gap across which a near-dup must still be flagged.
+    only guaranteed for documents whose event times are within
+    ``NEAR_DUP_WATERMARK`` of each other; a doc matching a bucket
+    evicted longer ago starts a fresh bucket (no pair emitted). That is
+    the standard streaming trade-off.
+
+    Shingles are word 3-grams and signatures 4 bands, as in the batch
+    ``lsh_candidate_pairs`` defaults.
     """
     # ONE md5 per shingle via the fused band array (the per-band
-    # spelling re-digests every shingle n_bands times — no CSE);
+    # spelling re-digests every shingle once per band — no CSE);
     # posexplode unpivots (band, signature) rows, same values
-    sh = word_shingles(F.col(text_col), shingle_k)
+    sh = word_shingles(F.col("text"), 3)
     sig_rows = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(ts_col).alias("_ts"),
-        F.posexplode(minhash_band_signature_array(sh, n_bands)).alias(
+        F.col("doc_id").alias("id"),
+        F.col("ingest_ts").alias("_ts"),
+        F.posexplode(minhash_band_signature_array(sh)).alias(
             "band", "signature"
         ),
     )
     sig_rows = sig_rows.filter(F.col("signature").isNotNull()).withWatermark(
-        "_ts", watermark
+        "_ts", NEAR_DUP_WATERMARK
     )
     return _stateful_bucket_pairs(sig_rows, ["band", "signature"], max_bucket_size)
 
@@ -270,47 +240,24 @@ def _stateful_bucket_pairs(
 def run_stream_minhash_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    n_bands: int = 4,
-    shingle_k: int = 3,
-    state_partitions: int = 8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    name = f"stream_minhash_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        pairs = minhash_pairs_stateful(
-            read_documents_stream(spark, sf_dir),
-            n_bands=n_bands,
-            shingle_k=shingle_k,
-            max_bucket_size=max_bucket_size,
-        )
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+    pairs = minhash_pairs_stateful(
+        read_documents_stream(spark, sf_dir), max_bucket_size=max_bucket_size
+    )
+    return _drain_to_memory(spark, pairs, "stream_minhash", "append", STATE_PARTITIONS)
 
 
 def simhash_wide_pairs_stateful(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    max_hamming: int = 7,
-    watermark: str = "30 days",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Streaming wide-SimHash near-dup emission — the stateful twin of
     ``operators.dedup.simhash_wide_near_dup_pairs``, shaped exactly
     like ``minhash_pairs_stateful``: group by (slice_idx, slice_val),
     bucket membership in the state store, an arriving doc emits one
-    (id_a, id_b, hamming) row per remembered member within
-    ``max_hamming``, then joins the membership.
+    (id_a, id_b, hamming) row per remembered member within hamming 7,
+    then joins the membership.
 
     The 64-bit sketch travels PACKED into one signed bigint (word g in
     bits [16g, 16g+16)) — state stays flat arrays, and the four
@@ -331,9 +278,9 @@ def simhash_wide_pairs_stateful(
     from magicxml_spark.operators.dedup import simhash_wide
 
     sk_words = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(ts_col).alias("_ts"),
-        simhash_wide(F.col(text_col)).alias("_sw"),
+        F.col("doc_id").alias("id"),
+        F.col("ingest_ts").alias("_ts"),
+        simhash_wide(F.col("text")).alias("_sw"),
     )
     packed = sk_words.select(
         "id",
@@ -366,7 +313,7 @@ def simhash_wide_pairs_stateful(
         "id", "_ts", "sk",
         F.col("sl.slice_idx").alias("slice_idx"),
         F.col("sl.slice_val").alias("slice_val"),
-    ).withWatermark("_ts", watermark)
+    ).withWatermark("_ts", NEAR_DUP_WATERMARK)
 
     mask64 = (1 << 64) - 1
 
@@ -397,7 +344,7 @@ def simhash_wide_pairs_stateful(
                 did, dsk = int(raw_id), int(raw_sk)
                 for oid, osk in zip(ids, sks):
                     h = bin((dsk ^ osk) & mask64).count("1")
-                    if h <= max_hamming:
+                    if h <= 7:
                         lo, hi = (did, oid) if did < oid else (oid, did)
                         out_a.append(lo)
                         out_b.append(hi)
@@ -421,28 +368,14 @@ def simhash_wide_pairs_stateful(
 def run_stream_simhash_wide_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    max_hamming: int = 7,
-    state_partitions: int = 8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    name = f"stream_simhash_wide_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        pairs = simhash_wide_pairs_stateful(
-            read_documents_stream(spark, sf_dir),
-            max_hamming=max_hamming,
-            max_bucket_size=max_bucket_size,
-        )
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+    pairs = simhash_wide_pairs_stateful(
+        read_documents_stream(spark, sf_dir), max_bucket_size=max_bucket_size
+    )
+    return _drain_to_memory(
+        spark, pairs, "stream_simhash_wide", "append", STATE_PARTITIONS
+    )
 
 
 # --- Streaming winnowing: local-overlap candidate emission ------------------
@@ -450,12 +383,6 @@ def run_stream_simhash_wide_to_memory(
 
 def winnow_pairs_stateful(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    k: int = 3,
-    window: int = 4,
-    watermark: str = "30 days",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Streaming winnow-fingerprint candidate pairs — the ingest-time
@@ -472,41 +399,26 @@ def winnow_pairs_stateful(
     from magicxml_spark.operators.dedup import winnow_fingerprint_sets
 
     sets_ = winnow_fingerprint_sets(
-        docs, id_col, text_col, k, window, extra_cols=(ts_col,)
+        docs, "doc_id", "text", extra_cols=("ingest_ts",)
     ).filter(F.size("fps") > 0)
     rows = sets_.select(
-        "id", F.col(ts_col).alias("_ts"), F.explode("fps").alias("fp")
-    ).withWatermark("_ts", watermark)
+        "id", F.col("ingest_ts").alias("_ts"), F.explode("fps").alias("fp")
+    ).withWatermark("_ts", NEAR_DUP_WATERMARK)
     return _stateful_bucket_pairs(rows, ["fp"], max_bucket_size)
 
 
 def run_stream_winnow_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    state_partitions: int = 8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    name = f"stream_winnow_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        pairs = winnow_pairs_stateful(
-            read_documents_stream(spark, sf_dir), max_bucket_size=max_bucket_size
-        )
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+    pairs = winnow_pairs_stateful(
+        read_documents_stream(spark, sf_dir), max_bucket_size=max_bucket_size
+    )
+    return _drain_to_memory(spark, pairs, "stream_winnow", "append", STATE_PARTITIONS)
 
 
-def run_stream_paragraph_dedup_to_memory(
-    spark: SparkSession, sf_dir: str, state_partitions: int = 2
-) -> DataFrame:
+def run_stream_paragraph_dedup_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of curation.paragraph_dedup's dedup core: the
     document feed explodes into paragraph units (the 3-token line
     synthesis documents use corpus-wide — q_line_dedup's convention),
@@ -519,37 +431,25 @@ def run_stream_paragraph_dedup_to_memory(
     paragraph inside the watermark horizon, which is what makes
     corpus-scale streaming paragraph dedup bounded (Dolma's dedup as
     a stream instead of a batch)."""
-    name = f"para_dedup_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        docs = read_documents_stream(spark, sf_dir)
-        w = F.filter(F.split(F.lower("text"), "\\s+"), lambda t: t != F.lit(""))
-        units = (
-            docs.select("ingest_ts", w.alias("_w"))
-            .filter(F.size("_w") > 0)
-            .select(
-                "ingest_ts",
-                F.explode(
-                    F.transform(
-                        F.sequence(
-                            F.lit(1), F.ceil(F.size("_w") / F.lit(3.0)).cast("int")
-                        ),
-                        lambda i: F.array_join(
-                            F.slice("_w", (i - 1) * 3 + 1, 3), " "
-                        ),
-                    )
-                ).alias("para"),
-            )
-            .select("ingest_ts", F.md5("para").alias("para_key"))
+    docs = read_documents_stream(spark, sf_dir)
+    w = F.filter(F.split(F.lower("text"), "\\s+"), lambda t: t != F.lit(""))
+    units = (
+        docs.select("ingest_ts", w.alias("_w"))
+        .filter(F.size("_w") > 0)
+        .select(
+            "ingest_ts",
+            F.explode(
+                F.transform(
+                    F.sequence(
+                        F.lit(1), F.ceil(F.size("_w") / F.lit(3.0)).cast("int")
+                    ),
+                    lambda i: F.array_join(
+                        F.slice("_w", (i - 1) * 3 + 1, 3), " "
+                    ),
+                )
+            ).alias("para"),
         )
-        kept = dedup_stream_within_watermark(units, ["para_key"], "ingest_ts")
-        q = (
-            kept.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+        .select("ingest_ts", F.md5("para").alias("para_key"))
+    )
+    kept = dedup_stream_within_watermark(units, ["para_key"], "ingest_ts")
+    return _drain_to_memory(spark, kept, "para_dedup", "append", 2)

@@ -63,14 +63,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window counts + sums with late-data watermark; works on
     both batch and streaming DataFrames (same Catalyst plan shape)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -109,43 +107,65 @@ def _checkpoint_dir(name: str) -> str:
     return os.path.join(base, "mxs_stream_ckpt", name)
 
 
-def run_stream_to_memory(
-    spark: SparkSession, sf_dir: str, state_partitions: int = 2
+def _drain_to_memory(
+    spark: SparkSession, df: DataFrame, prefix: str, mode: str, state_partitions: int
 ) -> DataFrame:
+    """Drive the streaming ``df`` to completion (availableNow) into a
+    memory sink under ``state_partitions`` (see :func:`_stream_tuning`)
+    and return what the sink holds. The returned frame keeps the rows
+    it resolved, so the sink's temp view is dropped before returning —
+    otherwise every run would leave a table holding its rows on the
+    driver for the rest of the session — and the throwaway checkpoint
+    is removed however the run ends."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    ckpt = _checkpoint_dir(name)
+    try:
+        with _stream_tuning(spark, state_partitions):
+            q = (
+                df.writeStream.outputMode(mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+# State partitions of the windowed aggregation: its state is
+# (windows x types) — a few thousand rows at any SF here — so
+# state-store instances are pure fixed cost (open/commit/fsync each).
+# sf1 forced A/B: 4.64 s at 32, 1.82 s at 8, 1.48 s at 2
+# (hash-identical; BASELINE.md round-6 residues). Scale it with
+# state-key cardinality, not data volume.
+WINDOW_STATE_PARTITIONS = 2
+# State partitions of the other event streams (sessions, joins, sketches
+# and dedup).
+STATE_PARTITIONS = 8
+
+
+def run_stream_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the streaming aggregation to completion (availableNow) and
     return the result as a DataFrame — complete output mode, so the
-    memory table holds the final windows.
-
-    state_partitions=2: the windowed agg's state is (windows x types) —
-    a few thousand rows at any SF here — so state-store instances are
-    pure fixed cost (open/commit/fsync each). sf1 forced A/B: 4.64 s at
-    32, 1.82 s at 8, 1.48 s at 2 (hash-identical; BASELINE.md round-6
-    residues). Scale the knob with state-key cardinality, not data
-    volume."""
-    name = f"events_windows_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        agg = windowed_event_counts(read_events_stream(spark, sf_dir))
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+    memory table holds the final windows."""
+    agg = windowed_event_counts(read_events_stream(spark, sf_dir))
+    return _drain_to_memory(
+        spark, agg, "events_windows", "complete", WINDOW_STATE_PARTITIONS
+    )
 
 
-def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionized_counts(events: DataFrame) -> DataFrame:
     """Native session_window sessionization — same aggregation works on
     batch and streaming inputs (identical Catalyst plan shape). A
     session extends while the next event arrives strictly within
-    ``gap`` of the last; per (user, session) we report the start and
+    30 minutes of the last; per (user, session) we report the start and
     event count."""
     return (
-        events.groupBy(F.session_window("ts", gap), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -157,37 +177,22 @@ def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def run_sessionize_to_memory(
-    spark: SparkSession, sf_dir: str, state_partitions: int = 8
-) -> DataFrame:
+def run_sessionize_to_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive streaming sessionization to completion (availableNow +
     memory sink, complete mode so final merged sessions are emitted).
     Deterministic — the batch session_window SQL is a valid oracle."""
-    name = f"events_sessions_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        agg = sessionized_counts(read_events_stream(spark, sf_dir))
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+    agg = sessionized_counts(read_events_stream(spark, sf_dir))
+    return _drain_to_memory(spark, agg, "events_sessions", "complete", STATE_PARTITIONS)
 
 
 def interval_join_events(
     clicks: DataFrame,
     purchases: DataFrame,
-    within: str = "10 minutes",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream INNER interval join: for every left event, the
-    right-side events of the same user in [left.ts, left.ts + within].
+    right-side events of the same user in [left.ts, left.ts + within],
+    within = 10 minutes under a 2-hour watermark.
     Works identically on batch frames (same plan shape minus state).
 
     Streaming semantics: inner stream-stream joins emit each match as
@@ -211,17 +216,17 @@ def interval_join_events(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
-        ).withWatermark("c_ts", watermark)
+        ).withWatermark("c_ts", "2 hours")
     )
     p = (
         purchases.select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("p_ts"),
-        ).withWatermark("p_ts", watermark)
+        ).withWatermark("p_ts", "2 hours")
     )
     cond = F.expr(
-        f"c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval {within}"
+        "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"
     )
     if how == "left_semi":
         # semi joins also emit eagerly (first match releases the left
@@ -247,11 +252,6 @@ def interval_join_events(
 def run_interval_join_outer_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    within: str = "10 minutes",
-    watermark: str = "2 hours",
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Drive the stream-stream LEFT OUTER interval join to an
     oracle-exact result.
@@ -281,8 +281,7 @@ def run_interval_join_outer_to_memory(
     drains, so this concern is availableNow-specific."""
     import time
 
-    name = f"events_ijo_{uuid.uuid4().hex[:8]}"
-    feed = os.path.join(tempfile.gettempdir(), f"mxs_feed_{name}")
+    feed = os.path.join(tempfile.gettempdir(), f"mxs_feed_{uuid.uuid4().hex[:8]}")
     os.makedirs(feed, exist_ok=True)
     try:
         from magicxml_spark.tables import table
@@ -305,7 +304,7 @@ def run_interval_join_outer_to_memory(
                 F.lit(ida).cast("bigint").alias("event_id"),
                 F.expr(ts).cast("timestamp").alias("ts"),
                 F.lit(ida).cast("bigint").alias("user_id"),
-                F.lit(left_type).alias("event_type"),
+                F.lit("click").alias("event_type"),
                 F.lit(0.0).alias("value"),
                 F.lit("{}").alias("props"),
             ).union(
@@ -313,7 +312,7 @@ def run_interval_join_outer_to_memory(
                     F.lit(idb).cast("bigint").alias("event_id"),
                     F.expr(ts).cast("timestamp").alias("ts"),
                     F.lit(idb).cast("bigint").alias("user_id"),
-                    F.lit(right_type).alias("event_type"),
+                    F.lit("purchase").alias("event_type"),
                     F.lit(0.0).alias("value"),
                     F.lit("{}").alias("props"),
                 )
@@ -326,43 +325,31 @@ def run_interval_join_outer_to_memory(
         os.utime(os.path.join(feed, "b1.parquet"), (now - 60, now - 60))
         os.utime(os.path.join(feed, "b2.parquet"), (now, now))
 
-        with _stream_tuning(spark, state_partitions):
-            schema = EVENTS_SCHEMA_TEMPLATE.format(ts_type="timestamp")
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .format("parquet")
-                .load(feed)
-            )
-            # NOTE: the sentinel filter must NOT be part of the
-            # streaming plan — `click_id >= 0` is a null-rejecting
-            # left-side predicate, so Catalyst pushes it below the
-            # outer join and the watermark node, deleting the sentinel
-            # click before it can advance the left watermark (measured:
-            # the watermark then freezes at the last REAL click and the
-            # tail's outer rows never flush). The memory sink receives
-            # the sentinels' own outer rows and they are filtered
-            # batch-side on return.
-            out = interval_join_events(
-                stream.filter(F.col("event_type") == left_type),
-                stream.filter(F.col("event_type") == right_type),
-                within=within,
-                watermark=watermark,
-                how="left_outer",
-            )
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", _checkpoint_dir(name))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
+        schema = EVENTS_SCHEMA_TEMPLATE.format(ts_type="timestamp")
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .format("parquet")
+            .load(feed)
+        )
+        # NOTE: the sentinel filter must NOT be part of the
+        # streaming plan — `click_id >= 0` is a null-rejecting
+        # left-side predicate, so Catalyst pushes it below the
+        # outer join and the watermark node, deleting the sentinel
+        # click before it can advance the left watermark (measured:
+        # the watermark then freezes at the last REAL click and the
+        # tail's outer rows never flush). The memory sink receives
+        # the sentinels' own outer rows and they are filtered
+        # batch-side on return.
+        out = interval_join_events(
+            stream.filter(F.col("event_type") == "click"),
+            stream.filter(F.col("event_type") == "purchase"),
+            how="left_outer",
+        )
+        drained = _drain_to_memory(spark, out, "events_ijo", "append", STATE_PARTITIONS)
     finally:
         shutil.rmtree(feed, ignore_errors=True)
-    return spark.table(name).filter(F.col("click_id") >= 0)
+    return drained.filter(F.col("click_id") >= 0)
 
 
 def _write_single_parquet(df: DataFrame, dest: str) -> None:
@@ -381,48 +368,26 @@ def _write_single_parquet(df: DataFrame, dest: str) -> None:
 def run_interval_join_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    within: str = "10 minutes",
-    state_partitions: int = 8,
     how: str = "inner",
 ) -> DataFrame:
     """Drive the stream-stream interval join over the events table to
     completion (availableNow, append mode — inner joins emit on match,
     so the memory table holds every pair once the source drains)."""
-    name = f"events_ij_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        ev = read_events_stream(spark, sf_dir)
-        out = interval_join_events(
-            ev.filter(F.col("event_type") == left_type),
-            ev.filter(F.col("event_type") == right_type),
-            within=within,
-            how=how,
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    return spark.table(name)
+    ev = read_events_stream(spark, sf_dir)
+    out = interval_join_events(
+        ev.filter(F.col("event_type") == "click"),
+        ev.filter(F.col("event_type") == "purchase"),
+        how=how,
+    )
+    return _drain_to_memory(spark, out, "events_ij", "append", STATE_PARTITIONS)
 
 
 # --- Streaming HLL: distinct users per window at bounded state --------------
 
 
-def windowed_hll_registers(
-    events: DataFrame,
-    value_col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def windowed_hll_registers(events: DataFrame) -> DataFrame:
     """Streaming HyperLogLog register state: max-rho per (tumbling
-    window, register index) for ``value_col``.
+    window, register index) of ``user_id``.
 
     Exact distinct-count in a stream needs one state row per distinct
     value — unbounded. The HLL register table IS the streaming-safe
@@ -435,10 +400,10 @@ def windowed_hll_registers(
     stateful aggregation."""
     from magicxml_spark.operators.sketches import hll_register
 
-    idx, rho = hll_register(F.col(value_col).cast("string"))
+    idx, rho = hll_register(F.col("user_id").cast("string"))
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), idx.alias("register"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour"), idx.alias("register"))
         .agg(F.max(rho).alias("r"))
     )
 
@@ -446,8 +411,6 @@ def windowed_hll_registers(
 def run_stream_hll_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    value_col: str = "user_id",
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Drive the streaming register aggregation (availableNow,
     complete mode), then fold registers to per-window estimates
@@ -455,20 +418,10 @@ def run_stream_hll_to_memory(
     method)."""
     from magicxml_spark.operators.sketches import hll_fold_registers
 
-    name = f"events_hll_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        regs = windowed_hll_registers(read_events_stream(spark, sf_dir), value_col)
-        q = (
-            regs.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    drained = spark.table(name).select(
+    regs = windowed_hll_registers(read_events_stream(spark, sf_dir))
+    drained = _drain_to_memory(
+        spark, regs, "events_hll", "complete", STATE_PARTITIONS
+    ).select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
             "window_start"
         ),
@@ -480,23 +433,19 @@ def run_stream_hll_to_memory(
 # --- Streaming Count-Min: per-window frequency sketch -----------------------
 
 
-def windowed_cm_cells(
-    events: DataFrame,
-    value_col: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming Count-Min cell state per tumbling window: counts are
+def windowed_cm_cells(events: DataFrame) -> DataFrame:
+    """Streaming Count-Min cell state of ``event_type`` per tumbling
+    window: counts are
     sum-mergeable across micro-batches (the additive dual of the HLL
     twin's max-merge), so state caps at windows x depth x width rows
     and the drained cells equal the batch sketch exactly."""
     from magicxml_spark.operators.sketches import cm_probes
 
-    v = F.col(value_col).cast("string")
+    v = F.col("event_type").cast("string")
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .select("ts", cm_probes(v).alias("_p"))
-        .groupBy(F.window("ts", window), F.col("_p.j").alias("j"), F.col("_p.cell").alias("cell"))
+        .groupBy(F.window("ts", "1 hour"), F.col("_p.j").alias("j"), F.col("_p.cell").alias("cell"))
         .agg(F.count(F.lit(1)).alias("cell_count"))
     )
 
@@ -504,28 +453,16 @@ def windowed_cm_cells(
 def run_stream_cm_to_memory(
     spark: SparkSession,
     sf_dir: str,
-    value_col: str = "event_type",
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Drain the streaming sketch, then point-query it batch-side for
-    every distinct value of ``value_col`` (dimension-bounded) —
+    every distinct ``event_type`` (dimension-bounded) —
     output (window_start, value, cm_estimate)."""
     from magicxml_spark.operators.sketches import CM_DEPTH, cm_probes
 
-    name = f"events_cm_{uuid.uuid4().hex[:8]}"
-    with _stream_tuning(spark, state_partitions):
-        cells = windowed_cm_cells(read_events_stream(spark, sf_dir), value_col)
-        q = (
-            cells.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
-    sketch = spark.table(name).select(
+    cells = windowed_cm_cells(read_events_stream(spark, sf_dir))
+    sketch = _drain_to_memory(
+        spark, cells, "events_cm", "complete", STATE_PARTITIONS
+    ).select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
             "window_start"
         ),
@@ -537,7 +474,7 @@ def run_stream_cm_to_memory(
 
     cands = (
         _table(spark, sf_dir, "events")
-        .select(F.col(value_col).cast("string").alias("_val"))
+        .select(F.col("event_type").cast("string").alias("_val"))
         .distinct()
     )
     v = F.col("_val")
@@ -555,5 +492,5 @@ def run_stream_cm_to_memory(
         # (value absent, some cells never touched) must read as absent,
         # not as the min of whichever cells other values populated
         .filter(F.col("_nj") == CM_DEPTH)
-        .select("window_start", F.col("_val").alias(value_col), "cm_estimate")
+        .select("window_start", F.col("_val").alias("event_type"), "cm_estimate")
     )

@@ -34,9 +34,6 @@ def _run_frozen_score(
     out_dir: str,
     name_prefix: str,
     doc_filter=None,
-    state_partitions: int = 2,
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "documents.parquet",
 ) -> DataFrame:
     """Shared frozen-model stream scorer: stateless map per
     micro-batch (``score_fn(batch_df) -> scored_df``), overwrite-by-
@@ -50,24 +47,21 @@ def _run_frozen_score(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-    with _stream_tuning(spark, state_partitions):
-        docs = read_documents_stream(
-            spark,
-            sf_dir,
-            max_files_per_trigger=max_files_per_trigger,
-            path_glob=path_glob,
-        )
-        if doc_filter is not None:
-            docs = docs.filter(doc_filter)
-        q = (
-            docs.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", _checkpoint_dir(name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
+    docs = read_documents_stream(spark, sf_dir)
+    if doc_filter is not None:
+        docs = docs.filter(doc_filter)
+    try:
+        with _stream_tuning(spark, 2):
+            q = (
+                docs.writeStream.outputMode("append")
+                .foreachBatch(sink)
+                .option("checkpointLocation", _checkpoint_dir(name))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
     return spark.read.parquet(os.path.join(out_dir, "batch=*"))
 
 
@@ -77,18 +71,13 @@ def run_stream_lm_score(
     snapshot_path: str,
     out_dir: str,
     doc_filter=None,
-    lam: float = 0.75,
-    state_partitions: int = 2,
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "documents.parquet",
 ) -> DataFrame:
     """Score the document stream under ``sf_dir`` against the frozen
     LM snapshot at ``snapshot_path``; returns the scored frame
     (doc_id, n_tokens, surprisal) read back from the per-batch parquet
     under ``out_dir``. ``doc_filter`` (a Column predicate) selects the
     streamed subset (e.g. the odd-doc crawl half of a train/score
-    split); ``max_files_per_trigger`` forces multi-batch execution so
-    tests can prove per-batch statelessness.
+    split).
 
     Scale shape: each micro-batch is one pass over the batch joined
     against the snapshot parquet (hint-free — AQE broadcasts the
@@ -100,13 +89,10 @@ def run_stream_lm_score(
     return _run_frozen_score(
         spark,
         sf_dir,
-        lambda batch: score_with_lm_snapshot(batch, snapshot_path, lam=lam),
+        lambda batch: score_with_lm_snapshot(batch, snapshot_path),
         out_dir,
         "lm_score",
         doc_filter=doc_filter,
-        state_partitions=state_partitions,
-        max_files_per_trigger=max_files_per_trigger,
-        path_glob=path_glob,
     )
 
 
@@ -115,13 +101,9 @@ def run_stream_paragraph_curation(
     sf_dir: str,
     snapshot_path: str,
     out_dir: str,
-    doc_filter=None,
     keep_lang: str = "en",
     max_surprisal: float | None = None,
     synth=None,
-    state_partitions: int = 2,
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "documents.parquet",
 ) -> DataFrame:
     """Streaming twin of
     :func:`operators.curation.paragraph_curation` — once the LM is
@@ -160,8 +142,4 @@ def run_stream_paragraph_curation(
         score,
         out_dir,
         "para_cur",
-        doc_filter=doc_filter,
-        state_partitions=state_partitions,
-        max_files_per_trigger=max_files_per_trigger,
-        path_glob=path_glob,
     )

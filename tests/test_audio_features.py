@@ -93,7 +93,7 @@ def test_audio_near_dup_composition(spark, tmp_path):
     (tmp_path / "other.wav").write_bytes(_wav_bytes(other))
 
     pairs = audio_near_dup_pairs(
-        read_binary(spark, str(tmp_path), "*.wav"), min_jaccard=0.3
+        read_binary(spark, str(tmp_path / "*.wav")), min_jaccard=0.3
     ).collect()
     names = {
         tuple(sorted((r["id_a"].rsplit("/", 1)[-1], r["id_b"].rsplit("/", 1)[-1]))): r[

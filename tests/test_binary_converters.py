@@ -1,9 +1,9 @@
 """K10 converter tests: pdf->images per page @ dpi (+ zip assembly),
 image->PDF pt-scaling/centering, and the A5 heuristic dependency parse.
 
-Codecs are absent from this image, so these drive the deterministic
-stub paths — the distributed plumbing (page fan-out, dpi math, zip
-assembly, schema) is the engine behavior under test; the pt-scaling
+Third-party codecs are absent from this image, so these drive the
+repo's lite codecs — the distributed plumbing (page fan-out, dpi math,
+zip assembly, schema) is the engine behavior under test; the pt-scaling
 math is the reference's real formula (main.py:1195-1225) and is
 tested exactly.
 """
@@ -16,7 +16,6 @@ import pytest
 
 from magicxml_spark.analytics.heuristic_parse import heuristic_dependency_parse
 from magicxml_spark.sources.binary_docs import (
-    PDF_DEFAULT_DPI,
     fit_image_to_pdf_page,
     image_to_pdf,
     pdf_to_images,
@@ -55,16 +54,17 @@ def test_fit_tiny_image_page_floored_at_72pt():
     assert geo["x_offset_pt"] == pytest.approx((72.0 - 15.0) / 2)
 
 
-def test_image_to_pdf_stub_geometry_and_naming(spark, tmp_path):
-    # md5-derived stub dims: img-small -> 136x1384 px (scale branch),
-    # img-big -> 152x864 px (own-page branch)
-    (tmp_path / "img-small.png").write_bytes(b"img-small")
-    (tmp_path / "img-big.png").write_bytes(b"img-big")
+def test_image_to_pdf_geometry_and_naming(spark, tmp_path):
+    # img-small is 136x1384 px (taller than A4 at 96 dpi: scale branch),
+    # img-big 152x864 px (fits: own-page branch)
+    from magicxml_spark.sources import png_lite
+
+    for name, (w, h) in {"img-small": (136, 1384), "img-big": (152, 864)}.items():
+        px = bytes(range(256)) * (w * h * 3 // 256) + bytes(w * h * 3 % 256)
+        (tmp_path / f"{name}.png").write_bytes(png_lite.encode_png(w, h, "RGB", px))
     out = {
         r["pdf_filename"]: r
-        for r in image_to_pdf(
-            read_binary(spark, str(tmp_path)), deterministic_stub=True
-        ).collect()
+        for r in image_to_pdf(read_binary(spark, str(tmp_path))).collect()
     }
     small = out["img-small.pdf"]
     assert small["page_height_pt"] == 842.0  # scaled onto A4
@@ -72,16 +72,30 @@ def test_image_to_pdf_stub_geometry_and_naming(spark, tmp_path):
     big = out["img-big.pdf"]
     assert big["page_width_pt"] == pytest.approx(152 * 72 / 96)
     assert big["x_offset_pt"] == pytest.approx(0.0)
-    assert len(bytes(big["pdf_content"])) > 0
+    assert bytes(big["pdf_content"]).startswith(b"%PDF")
 
 
-def test_pdf_to_images_page_fanout_and_dpi(spark, tmp_path):
-    # stub page counts: %PDF-one -> 3 pages, %PDF-two -> 1 page
-    (tmp_path / "one.pdf").write_bytes(b"%PDF-one")
-    (tmp_path / "two.pdf").write_bytes(b"%PDF-two")
-    rows = pdf_to_images(
-        read_binary(spark, str(tmp_path)), output_format="png", deterministic_stub=True
-    ).collect()
+def _fast_dpi(monkeypatch, dpi=36):
+    """Render PDF pages at ``dpi`` (36: A4 at 298x421 px) instead of the
+    300-dpi default, to keep tests fast."""
+    from magicxml_spark.sources import binary_docs
+
+    monkeypatch.setattr(binary_docs, "PDF_DEFAULT_DPI", dpi)
+
+
+def _table_pdfs(d):
+    """one.pdf spans three pages, two.pdf one (pdf_lite table reports)."""
+    from magicxml_spark.sources import pdf_lite
+
+    many = [[str(i), f"row {i}"] for i in range(120)]
+    (d / "one.pdf").write_bytes(pdf_lite.write_table_pdf(["id", "name"], many))
+    (d / "two.pdf").write_bytes(pdf_lite.write_table_pdf(["id", "name"], [["1", "a"]]))
+
+
+def test_pdf_to_images_page_fanout_and_dpi(spark, tmp_path, monkeypatch):
+    _fast_dpi(monkeypatch)
+    _table_pdfs(tmp_path)
+    rows = pdf_to_images(read_binary(spark, str(tmp_path)), output_format="png").collect()
     by_file = {}
     for r in rows:
         by_file.setdefault(r["path"].rsplit("/", 1)[-1], []).append(r)
@@ -93,24 +107,17 @@ def test_pdf_to_images_page_fanout_and_dpi(spark, tmp_path):
         "page_003.png",
     ]
     assert by_file["two.pdf"][0]["page_filename"] == "two.png"
-    # dpi honored: A4 points x 300/72 (reference default, main.py:2245)
-    assert rows[0]["width"] == round(595 * PDF_DEFAULT_DPI / 72)
-    assert rows[0]["height"] == round(842 * PDF_DEFAULT_DPI / 72)
-    # and a non-default dpi changes the rendered dimensions
-    r72 = pdf_to_images(
-        read_binary(spark, str(tmp_path), glob="two.pdf"),
-        dpi=72,
-        deterministic_stub=True,
-    ).collect()
-    assert r72[0]["width"] == 595 and r72[0]["height"] == 842
+    # dpi honored: A4 points x dpi/72
+    assert rows[0]["width"] == round(595 * 36 / 72)
+    assert rows[0]["height"] == round(842 * 36 / 72)
 
 
-def test_write_image_outputs_zip_assembly(spark, tmp_path):
+def test_write_image_outputs_zip_assembly(spark, tmp_path, monkeypatch):
+    _fast_dpi(monkeypatch)
     src = tmp_path / "src"
     src.mkdir()
-    (src / "one.pdf").write_bytes(b"%PDF-one")  # 3 pages -> zip
-    (src / "two.pdf").write_bytes(b"%PDF-two")  # 1 page -> bare file
-    images = pdf_to_images(read_binary(spark, str(src)), deterministic_stub=True)
+    _table_pdfs(src)  # one.pdf: 3 pages -> zip; two.pdf: 1 page -> bare file
+    images = pdf_to_images(read_binary(spark, str(src)))
     out_dir = tmp_path / "out"
     written = sorted(write_image_outputs(images, str(out_dir)))
     assert [p.rsplit("/", 1)[-1] for p in written] == ["one_images.zip", "two.png"]
@@ -120,10 +127,11 @@ def test_write_image_outputs_zip_assembly(spark, tmp_path):
     assert (out_dir / "two.png").stat().st_size > 0
 
 
-def test_jpg_format_naming(spark, tmp_path):
-    (tmp_path / "two.pdf").write_bytes(b"%PDF-two")
+def test_jpg_format_naming(spark, tmp_path, monkeypatch):
+    _fast_dpi(monkeypatch)
+    _table_pdfs(tmp_path)
     rows = pdf_to_images(
-        read_binary(spark, str(tmp_path)), output_format="jpg", deterministic_stub=True
+        read_binary(spark, str(tmp_path / "two.pdf")), output_format="jpg"
     ).collect()
     assert rows[0]["page_filename"] == "two.jpg"
 
@@ -169,12 +177,12 @@ def test_pdf_report_roundtrip_real_path(spark, tmp_path):
         F.concat(F.lit("name-"), F.col("id")).alias("name"),
     )
     out = str(tmp_path / "report.pdf")
-    assert render_pdf_report(df, out, style="table", title="Catalog") == out
+    assert render_pdf_report(df, out, title="Catalog") == out
     raw = open(out, "rb").read()
     assert raw.startswith(b"%PDF") and b"%%EOF" in raw
 
-    bin_df = read_binary(spark, str(tmp_path), glob="report.pdf")
-    tables = extract_pdf_tables(bin_df).collect()  # no stub flag needed
+    bin_df = read_binary(spark, str(tmp_path / "report.pdf"))
+    tables = extract_pdf_tables(bin_df).collect()
     cells = [json.loads(r["cell_json"]) for r in tables]
     assert ["id", "name"] in cells  # header row survives
     assert ["49", "name-49"] in cells  # last capped row present
@@ -200,30 +208,9 @@ def test_excel_to_pdf_end_to_end(spark, tmp_path):
     pdf = str(tmp_path / "cat.pdf")
     assert excel.excel_to_pdf(spark, xlsx, pdf) == pdf
     docs = extract_pdf_documents(
-        read_binary(spark, str(tmp_path), glob="cat.pdf")
+        read_binary(spark, str(tmp_path / "cat.pdf"))
     ).collect()
     assert "chair" in docs[0]["text"] and "table" in docs[0]["text"]
-
-
-def test_pdf_summary_style_caps_at_five(spark, tmp_path):
-    import json
-
-    from pyspark.sql import functions as F
-
-    from magicxml_spark.sources.binary_docs import (
-        extract_pdf_tables,
-        read_binary,
-        render_pdf_report,
-    )
-
-    df = spark.range(20).select(F.col("id").cast("string").alias("id"))
-    out = str(tmp_path / "summary.pdf")
-    render_pdf_report(df, out, style="summary")
-    rows = extract_pdf_tables(
-        read_binary(spark, str(tmp_path), glob="summary.pdf")
-    ).collect()
-    data_rows = [json.loads(r["cell_json"]) for r in rows if json.loads(r["cell_json"]) != ["id"]]
-    assert len(data_rows) == 5  # summary cap (main.py:1133)
 
 
 def _mk_png(w=8, h=6, mode="RGB"):
@@ -320,7 +307,8 @@ def test_jpeg_lite_quality_ladder_and_gray():
 def test_png_lite_corrupt_inputs_return_none_not_raise():
     """Review regression: structurally corrupt PNGs (truncated IHDR,
     bad palette index) must return None — so one bad file in a
-    binaryFile ingest falls to the stub instead of failing the task."""
+    binaryFile ingest falls to the library gate instead of failing the
+    task."""
     import struct
     import zlib
 
@@ -487,10 +475,11 @@ def test_rasterize_no_content_gate_is_per_arm():
     assert rasterize_text_pdf(_serialize(objs, 6), dpi=72) is None
 
 
-def test_pdf_to_images_renders_lite_reports_for_real(spark, tmp_path):
+def test_pdf_to_images_renders_lite_reports_for_real(spark, tmp_path, monkeypatch):
     """End-to-end K10 without fitz: render_pdf_report writes a 2-page
-    pdf_lite report; pdf_to_images (NO stub flag) rasterizes both pages
-    through the distributed mapInPandas path at the requested dpi."""
+    pdf_lite report; pdf_to_images rasterizes both pages through the
+    distributed mapInPandas path at the configured dpi."""
+    _fast_dpi(monkeypatch)
     from magicxml_spark.sources.binary_docs import render_pdf_report
     from magicxml_spark.sources.png_lite import decode_png
 
@@ -506,7 +495,7 @@ def test_pdf_to_images_renders_lite_reports_for_real(spark, tmp_path):
     (tmp_path / "report.pdf").write_bytes(
         pdf_lite.write_table_pdf(["id", "name"], rows, title="Items")
     )
-    out = pdf_to_images(read_binary(spark, str(tmp_path)), dpi=36).collect()
+    out = pdf_to_images(read_binary(spark, str(tmp_path))).collect()
     assert len(out) == 2
     assert sorted(r["page_filename"] for r in out) == ["page_001.png", "page_002.png"]
     for r in out:
@@ -516,7 +505,8 @@ def test_pdf_to_images_renders_lite_reports_for_real(spark, tmp_path):
         assert any(pix[i] == 0 for i in range(0, len(pix), 3))  # drew ink
 
 
-def test_pdf_to_images_jpg_transcode(spark, tmp_path):
+def test_pdf_to_images_jpg_transcode(spark, tmp_path, monkeypatch):
+    _fast_dpi(monkeypatch)
     from magicxml_spark.sources import pdf_lite
     from magicxml_spark.sources.jpeg_lite import decode_jpeg
 
@@ -524,7 +514,7 @@ def test_pdf_to_images_jpg_transcode(spark, tmp_path):
         pdf_lite.write_table_pdf(["a"], [["hello"]], title="J")
     )
     out = pdf_to_images(
-        read_binary(spark, str(tmp_path)), output_format="jpg", dpi=36
+        read_binary(spark, str(tmp_path)), output_format="jpg"
     ).collect()
     assert out[0]["page_filename"] == "r.jpg"
     w, h, mode, pix = decode_jpeg(bytes(out[0]["img_content"]))
@@ -694,8 +684,7 @@ def test_decode_image_dispatch():
 
 
 def test_image_ops_accept_bmp_and_gif(spark, tmp_path):
-    """K10 to-jpg on non-PNG inputs with NO stub flag runs through the
-    lite decoders."""
+    """K10 to-jpg on non-PNG inputs runs through the lite decoders."""
     import hashlib
 
     from magicxml_spark.sources.binary_docs import png_to_jpg
@@ -707,7 +696,7 @@ def test_image_ops_accept_bmp_and_gif(spark, tmp_path):
     idx = bytes((i % 8) for i in range(w * h))
     (tmp_path / "a.bmp").write_bytes(_make_bmp(w, h, rgb))
     (tmp_path / "b.gif").write_bytes(_make_gif(w, h, palette, idx))
-    jpg = png_to_jpg(read_binary(spark, str(tmp_path), glob="b.gif")).collect()
+    jpg = png_to_jpg(read_binary(spark, str(tmp_path / "b.gif"))).collect()
     jw, jh, jmode, _ = decode_jpeg(bytes(jpg[0]["jpg_content"]))
     assert (jw, jh) == (w, h)
 
@@ -737,34 +726,35 @@ def _gradient_rgb(w: int, h: int) -> bytes:
 
 
 def test_jpeg_420_and_restart_roundtrip():
-    """4:2:0 halves chroma resolution (lower but acceptable PSNR on a
-    smooth image); restart intervals change the byte stream (DRI + RSTn
-    markers present), not the decoded pixels."""
+    """Decoder arms the encoder does not write. The fixtures are the
+    37x23 gradient (odd dims: MCU padding on both axes) encoded at
+    quality 90 with restart interval 2, and with 4:2:0 chroma plus
+    restart interval 3. 4:2:0 halves chroma resolution (lower but
+    acceptable PSNR on a smooth image); restart intervals change the
+    byte stream (DRI + RSTn markers present), not the decoded pixels."""
+    import os
+
     from magicxml_spark.sources.jpeg_lite import decode_jpeg, encode_jpeg
 
-    w, h = 37, 23  # odd dims: MCU padding on both axes
+    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+    with open(os.path.join(fixtures, "gradient_rst2.jpg"), "rb") as f:
+        rst = f.read()
+    with open(os.path.join(fixtures, "gradient_420_rst3.jpg"), "rb") as f:
+        both = f.read()
+    w, h = 37, 23
     rgb = _gradient_rgb(w, h)
     plain = encode_jpeg(w, h, "RGB", rgb, quality=90)
-    sub = encode_jpeg(w, h, "RGB", rgb, quality=90, subsampling="420")
-    rst = encode_jpeg(w, h, "RGB", rgb, quality=90, restart_interval=2)
-    both = encode_jpeg(
-        w, h, "RGB", rgb, quality=90, subsampling="420", restart_interval=3
-    )
-    for enc, floor in ((plain, 44), (sub, 35), (rst, 44), (both, 35)):
+    for enc, floor in ((plain, 44), (rst, 44), (both, 35)):
         dw, dh, mode, pix = decode_jpeg(enc)
         assert (dw, dh, mode) == (w, h, "RGB")
         assert _psnr(rgb, pix) > floor
-    assert b"\xff\xdd" in rst and b"\xff\xd0" in rst
+    for enc in (rst, both):
+        assert b"\xff\xdd" in enc and b"\xff\xd0" in enc
     # restart markers are transparent: identical pixels either way
     assert decode_jpeg(plain)[3] == decode_jpeg(rst)[3]
     # 420 sets the Y sampling factor to 2x2 in SOF0
-    sof_at = sub.index(b"\xff\xc0")
-    assert sub[sof_at + 11] == 0x22  # first component's h<<4|v
-
-    import pytest
-
-    with pytest.raises(ValueError, match="subsampling"):
-        encode_jpeg(w, h, "RGB", rgb, subsampling="422")
+    sof_at = both.index(b"\xff\xc0")
+    assert both[sof_at + 11] == 0x22  # first component's h<<4|v
 
 
 def test_jpeg_decode_rejects_arithmetic_and_hierarchical():
@@ -1027,16 +1017,17 @@ def test_rasterize_foreign_text_pdf_layout():
     assert rasterize_text_pdf(b"not a pdf", dpi=72) is None
 
 
-def test_pdf_to_images_renders_foreign_text_pdf(spark, tmp_path):
+def test_pdf_to_images_renders_foreign_text_pdf(spark, tmp_path, monkeypatch):
     """K10 end-to-end: a foreign text PDF now renders through the lite
-    interpreter (no stub flag, no fitz) with dpi honored; the remaining
-    gate is only for PDFs with no extractable text/image content."""
+    interpreter (no fitz) with dpi honored; the remaining gate is only
+    for PDFs with no extractable text/image content."""
+    _fast_dpi(monkeypatch)
     import pytest
 
     from magicxml_spark.sources.png_lite import decode_png
 
     (tmp_path / "foreign.pdf").write_bytes(_foreign_positioned_pdf())
-    out = pdf_to_images(read_binary(spark, str(tmp_path)), dpi=36).collect()
+    out = pdf_to_images(read_binary(spark, str(tmp_path))).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["width"], r["height"]) == (306, 396)
@@ -1044,7 +1035,7 @@ def test_pdf_to_images_renders_foreign_text_pdf(spark, tmp_path):
     assert (dw, dh) == (306, 396)
     assert any(pix[i] == 0 for i in range(0, len(pix), 3))  # drew ink
 
-    # a contentless foreign PDF still requires the stub/gate path
+    # a contentless foreign PDF still requires the library gate
     from magicxml_spark.sources.pdf_lite import _serialize
 
     empty = _serialize(
@@ -1058,7 +1049,7 @@ def test_pdf_to_images_renders_foreign_text_pdf(spark, tmp_path):
     (tmp_path / "sub" ).mkdir()
     (tmp_path / "sub" / "empty.pdf").write_bytes(empty)
     with pytest.raises(Exception, match="fitz|pdf2image|NotImplemented"):
-        pdf_to_images(read_binary(spark, str(tmp_path / "sub")), dpi=36).collect()
+        pdf_to_images(read_binary(spark, str(tmp_path / "sub"))).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -1281,7 +1272,7 @@ def test_ruled_table_extraction_foreign_pdf():
 
 def test_extract_pdf_tables_ruled_arm(spark, tmp_path):
     """S9 end-to-end: the ruled foreign PDF extracts through the
-    distributed path with page/table lineage, no stub flag."""
+    distributed path with page/table lineage."""
     import json
 
     from magicxml_spark.sources.binary_docs import extract_pdf_tables
@@ -1734,12 +1725,13 @@ def test_pdf15_unsupported_filter_keeps_gate():
     assert rasterize_text_pdf(broken, dpi=18) is None  # page dicts unreachable
 
 
-def test_pdf15_spark_documents_tables_and_images(spark, tmp_path):
+def test_pdf15_spark_documents_tables_and_images(spark, tmp_path, monkeypatch):
     """End-to-end S10/S9/K10 on a compressed-xref foreign PDF with NO
     pdf libraries installed: extract_pdf_documents reads text + the
     ObjStm-hidden Info metadata, extract_pdf_tables finds the
     whitespace-aligned table through the heuristic arm, and
-    pdf_to_images (no stub flag) rasterizes real PNG pages."""
+    pdf_to_images rasterizes real PNG pages."""
+    _fast_dpi(monkeypatch)
     import json
 
     from magicxml_spark.sources.binary_docs import (
@@ -1762,7 +1754,7 @@ def test_pdf15_spark_documents_tables_and_images(spark, tmp_path):
         title="Modern Writer Output",
     )
     (tmp_path / "modern.pdf").write_bytes(data)
-    bin_df = read_binary(spark, str(tmp_path), glob="modern.pdf")
+    bin_df = read_binary(spark, str(tmp_path / "modern.pdf"))
 
     docs = extract_pdf_documents(bin_df).collect()
     assert len(docs) == 1 and docs[0]["pages_count"] == 1
@@ -1773,7 +1765,7 @@ def test_pdf15_spark_documents_tables_and_images(spark, tmp_path):
     assert ["region", "units", "revenue"] in cells
     assert ["north", "12", "340.50"] in cells
 
-    pages = pdf_to_images(bin_df, output_format="png", dpi=36).collect()
+    pages = pdf_to_images(bin_df, output_format="png").collect()
     assert len(pages) == 1
     w, h, mode, pix = decode_png(bytes(pages[0]["img_content"]))
     assert (w, h) == (round(595 * 36 / 72), round(842 * 36 / 72))
@@ -1950,10 +1942,11 @@ def test_rasterize_image_pdf_indexed_4bit_and_bilevel():
         assert _px(pix, w, 20 + 5 + tx, top2 + 1) == (0, 0, 0)
 
 
-def test_pdf_to_images_renders_image_only_pdf(spark, tmp_path):
+def test_pdf_to_images_renders_image_only_pdf(spark, tmp_path, monkeypatch):
     """K10 end-to-end: the image-only foreign PDF renders through the
-    lite path (no fitz, no stub flag); an exotic-filter (JPXDecode)
-    document still requires the gate."""
+    lite path (no fitz); an exotic-filter (JPXDecode) document still
+    requires the gate."""
+    _fast_dpi(monkeypatch, 72)
     import pytest
 
     from magicxml_spark.sources.jpeg_lite import encode_jpeg
@@ -1969,7 +1962,7 @@ def test_pdf_to_images_renders_image_only_pdf(spark, tmp_path):
     (tmp_path / "scan.pdf").write_bytes(
         _image_page_pdf([(b"Im0", d, jpg)], b"16 0 0 12 30 40 cm /Im0 Do")
     )
-    out = pdf_to_images(read_binary(spark, str(tmp_path)), dpi=72).collect()
+    out = pdf_to_images(read_binary(spark, str(tmp_path))).collect()
     assert len(out) == 1
     dw, dh, mode, pix = decode_png(bytes(out[0]["img_content"]))
     assert (dw, dh) == (200, 150)
@@ -1988,7 +1981,7 @@ def test_pdf_to_images_renders_image_only_pdf(spark, tmp_path):
         _image_page_pdf([(b"Im0", dj, jpx)], b"4 0 0 4 10 10 cm /Im0 Do")
     )
     with pytest.raises(Exception, match="fitz|pdf2image|NotImplemented"):
-        pdf_to_images(read_binary(spark, str(tmp_path / "sub")), dpi=72).collect()
+        pdf_to_images(read_binary(spark, str(tmp_path / "sub"))).collect()
 
 
 def test_tiff_tiled_decode_matches_strip_twin():

@@ -142,7 +142,7 @@ def test_trainer_multibyte_rejoin_pin(spark):
     # 'ц' is 2 UTF-8 bytes: the FIRST merge on a pure-'ц' corpus must
     # be exactly those two mapped bytes re-joining
     df = spark.createDataFrame([("ц ц ц",)], "text string")
-    got = bpe_train_bytes(df, max_merges=1, min_count=2)
+    got = bpe_train_bytes(df, max_merges=1)
     b2u = bytes_to_unicode()
     b1, b2 = "ц".encode("utf-8")
     assert got == [(b2u[b1], b2u[b2])]

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from magicxml_spark.operators.category_path import (
+    MAX_DEPTH,
     build_category_paths,
     build_category_paths_sql,
 )
@@ -117,58 +118,57 @@ def test_recursive_cte_agrees_on_cycles(spark, cats_df):
 
 def test_depth_100_chain_parity_all_strategies(spark):
     """Depth-100 chain: driver walk, distributed loop, and recursive CTE
-    all return the identical full root->leaf path when the cap allows
-    it. The CTE needs more iterations than Spark's default
-    ``cteRecursionLevelLimit`` (100), so this also pins the
-    limit-raising guard in build_category_paths_sql — without it the
-    statement errors out instead of completing."""
+    all return the identical path of every node. With the session's
+    ``cteRecursionLevelLimit`` below what the MAX_DEPTH cap needs, this
+    also pins the limit-raising guard in build_category_paths_sql —
+    without it the statement errors out instead of completing."""
     depth = 100
     rows = [(str(i), str(i - 1) if i > 0 else None, f"N{i}") for i in range(depth)]
     chain = spark.createDataFrame(rows, ["id", "parent_id", "name"])
-    expected_leaf = "///".join(f"N{i}" for i in range(depth))
 
     driver = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(chain.collect(), max_depth=128).collect()
+        for r in build_category_paths(chain.collect()).collect()
     }
     distributed = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(chain, max_depth=128).collect()
+        for r in build_category_paths(chain).collect()
     }
     prior = spark.conf.get("spark.sql.cteRecursionLevelLimit", "100")
     try:
-        sql_df = build_category_paths_sql(spark, chain, max_depth=128)
+        spark.conf.set("spark.sql.cteRecursionLevelLimit", str(MAX_DEPTH // 2))
+        sql_df = build_category_paths_sql(spark, chain)
         # ADVICE r3: the escalation branch materializes eagerly and
         # restores the session limit — no hidden session-global leak
-        assert spark.conf.get("spark.sql.cteRecursionLevelLimit") == prior
+        assert spark.conf.get("spark.sql.cteRecursionLevelLimit") == str(MAX_DEPTH // 2)
         sql = {r["id"]: r["category_path"] for r in sql_df.collect()}
     finally:
         spark.conf.set("spark.sql.cteRecursionLevelLimit", prior)
 
-    assert driver[str(depth - 1)] == expected_leaf
+    assert driver[str(MAX_DEPTH - 1)] == "///".join(f"N{i}" for i in range(MAX_DEPTH))
     assert driver == distributed == sql
 
 
 def test_deep_chain_truncates_at_cap_identically(spark):
-    """A chain deeper than max_depth keeps a partial path (never
-    raises) of EXACTLY max_depth leaf-anchored names — identical in all
+    """A chain deeper than MAX_DEPTH keeps a partial path (never
+    raises) of EXACTLY MAX_DEPTH leaf-anchored names — identical in all
     three strategies, so results don't shift when the dimension size
     crosses the driver-row cap or a caller switches spellings."""
-    depth, cap = 100, 10
+    depth, cap = 100, MAX_DEPTH
     rows = [(str(i), str(i - 1) if i > 0 else None, f"N{i}") for i in range(depth)]
     chain = spark.createDataFrame(rows, ["id", "parent_id", "name"])
 
     driver = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(chain.collect(), max_depth=cap).collect()
+        for r in build_category_paths(chain.collect()).collect()
     }
     loop = {
         r["id"]: r["category_path"]
-        for r in build_category_paths(chain, max_depth=cap).collect()
+        for r in build_category_paths(chain).collect()
     }
     sql = {
         r["id"]: r["category_path"]
-        for r in build_category_paths_sql(spark, chain, max_depth=cap).collect()
+        for r in build_category_paths_sql(spark, chain).collect()
     }
     assert driver == loop == sql
     leaf = driver[str(depth - 1)]

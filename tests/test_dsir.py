@@ -114,14 +114,15 @@ def test_dsir_select_topk_and_gumbel(spark):
         for i in range(40)
     ]
     df = _docs(spark, rows)
-    # gumbel=False: plain top-k by weight -> all-even (target-like) ids
-    top = dsir_select(df, "doc_id", "text", F.col("is_t"), k=10, gumbel=False)
-    ids = [r["doc_id"] for r in top.collect()]
-    assert len(ids) == 10 and all(i % 2 == 0 for i in ids)
-    # gumbel=True reproduces the reference key exactly and sorts by it
-    sel = dsir_select(df, "doc_id", "text", F.col("is_t"), k=40).collect()
     ref = _py_dsir(rows)
     exp_keys = {i: ref[i][1] + _py_gumbel(i) for i, _, _ in rows}
+    # top-k keeps the k largest Gumbel keys
+    top = dsir_select(df, "doc_id", "text", F.col("is_t"), k=10).collect()
+    assert [r["doc_id"] for r in top] == sorted(
+        exp_keys, key=lambda i: (-exp_keys[i], i)
+    )[:10]
+    # the key reproduces the reference exactly and sorts by it
+    sel = dsir_select(df, "doc_id", "text", F.col("is_t"), k=40).collect()
     got_keys = {r["doc_id"]: round(r["sel_key"] * 1e6) for r in sel}
     assert got_keys == exp_keys
     keys = [round(r["sel_key"] * 1e6) for r in sel]

@@ -113,19 +113,6 @@ def test_ivf_sampled_fit_path(spark):
     assert set(per_query.values()) == {5}
 
 
-def test_pdf_document_stub(spark, tmp_path):
-    from magicxml_spark.sources.binary_docs import extract_pdf_documents, read_binary
-
-    (tmp_path / "a.pdf").write_bytes(b"%PDF-fake-a")
-    (tmp_path / "b.pdf").write_bytes(b"%PDF-fake-b")
-    docs = extract_pdf_documents(
-        read_binary(spark, str(tmp_path)), deterministic_stub=True
-    )
-    rows = docs.collect()
-    assert {r["pages_count"] for r in rows} == {1}
-    assert all(r["text"].startswith("stub text ") for r in rows)
-
-
 def test_blank_documents_excluded_from_dedup(spark):
     """Blank/whitespace docs must produce no shingles, no LSH pairs, and
     no jaccard rows — matching the SQL oracles' semantics."""
@@ -301,9 +288,8 @@ def test_ann_dispatch_cost_model():
 
 
 def test_ann_dispatch_facade_backends(spark):
-    """cosine_topk in auto mode must equal the blocked-exact backend at
-    smoke scale (it is below the crossover), and every forced mode must
-    emit the same schema so callers can switch without changes."""
+    """cosine_topk must equal the blocked-exact backend at smoke scale
+    (it is below the crossover)."""
     from magicxml_spark.operators.similarity import cosine_topk, cosine_topk_blocked
 
     emb = table(spark, SF_SMOKE, "embeddings")
@@ -316,17 +302,6 @@ def test_ann_dispatch_facade_backends(spark):
         for r in cosine_topk(emb, "vec_id", "embedding", k=5).collect()
     }
     assert auto == exact
-
-    schemas = {
-        mode: cosine_topk(emb, "vec_id", "embedding", k=5, mode=mode).schema.simpleString()
-        for mode in ("exact", "ivf", "lsh")
-    }
-    assert len(set(schemas.values())) == 1, schemas
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        cosine_topk(emb, "vec_id", "embedding", mode="bogus")
 
 
 def test_ivf_snapshot_search_exact_at_full_probe(spark, tmp_path):
@@ -434,13 +409,13 @@ def test_ivf_snapshot_append_and_balance(spark, tmp_path):
         assert bal["balance_ratio"] > 1.0
 
 
-def test_probe_cells_join_path_equals_literal(spark, tmp_path):
+def test_probe_cells_join_path_equals_literal(spark, tmp_path, monkeypatch):
     """with_probe_cells must pick identical probe cells through both
     physical plans: the literal-compiled expression (few centroids) and
-    the broadcast-join + window path (many centroids). Forcing
-    max_literal_cells=0 routes the same centroids through the join
-    path; probe sets must match exactly, and the end-to-end snapshot
-    search must stay exact through the join path too."""
+    the broadcast-join + window path (many centroids). Setting
+    MAX_LITERAL_PROBE_CELLS to 0 routes the same centroids through the
+    join path; probe sets must match exactly, and the end-to-end
+    snapshot search must stay exact through the join path too."""
     from magicxml_spark.operators.similarity import (
         _with_norm,
         search_ivf_snapshot,
@@ -455,14 +430,16 @@ def test_probe_cells_join_path_equals_literal(spark, tmp_path):
     ]
     lit_rows = {
         (r["id"], r["cell"])
-        for r in with_probe_cells(base, centroids, 3, id_col="id").collect()
+        for r in with_probe_cells(base, centroids, 3).collect()
     }
-    join_rows = {
-        (r["id"], r["cell"])
-        for r in with_probe_cells(
-            base, centroids, 3, id_col="id", max_literal_cells=0
-        ).collect()
-    }
+    import magicxml_spark.operators.similarity as sim_mod
+
+    with monkeypatch.context() as m:
+        m.setattr(sim_mod, "MAX_LITERAL_PROBE_CELLS", 0)  # read at call time
+        join_rows = {
+            (r["id"], r["cell"])
+            for r in with_probe_cells(base, centroids, 3).collect()
+        }
     assert lit_rows == join_rows and len(lit_rows) > 0
 
     # end-to-end through the join path: exact at full probe
@@ -470,8 +447,6 @@ def test_probe_cells_join_path_equals_literal(spark, tmp_path):
     delta = emb.filter(F.col("vec_id") % 10 >= 8)
     snap = str(tmp_path / "ivf_join")
     write_ivf_snapshot(prior, snap, n_cells=8)
-    import magicxml_spark.operators.similarity as sim_mod
-
     old_cap = sim_mod.MAX_LITERAL_PROBE_CELLS
     try:
         sim_mod.MAX_LITERAL_PROBE_CELLS = 0  # read at call time
@@ -517,19 +492,7 @@ def test_simhash_near_dup_exact_vs_bruteforce(spark):
     assert got == expected and len(got) > 0
 
     with _pytest.raises(ValueError):
-        simhash_near_dup_pairs(docs, max_hamming=4, n_slices=4)
-
-
-def test_cosine_topk_lsh_empty_df_raises_clear_error(spark):
-    """dim inference probes one row; an empty frame (or null first
-    vector) must raise a clear ValueError, not an opaque TypeError."""
-    from magicxml_spark.operators.similarity import cosine_topk
-
-    empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    with pytest.raises(ValueError, match="dim"):
-        cosine_topk(empty, "vec_id", "embedding", 5, mode="lsh")
-    # explicit dim on an empty frame is fine: empty result, no error
-    assert cosine_topk(empty, "vec_id", "embedding", 5, mode="lsh", dim=8).count() == 0
+        simhash_near_dup_pairs(docs, max_hamming=4)
 
 
 def test_batch_lsh_mega_bucket_cap_star_emission(spark):
@@ -608,17 +571,14 @@ def test_batch_simhash_mega_bucket_cap_star_emission(spark):
 
 
 def test_ivf_snapshot_refit_policy(spark, tmp_path):
-    """The index's maintenance close: a healthy index reports action
+    """The index's maintenance decision: a healthy index reports action
     'none' at a loose balance cap; at a cap every index trips (the
-    balance ratio is >= 1 by construction) the re-fit re-derives
-    sqrt(n) cells and the full-probe search stays exact vs numpy brute
-    force over the corpus."""
-    import numpy as np
-
+    balance ratio is >= 1 by construction) it reports 'refit' with
+    sqrt(n) target cells, and reading the decision leaves the index as
+    it was."""
     from magicxml_spark.operators.similarity import (
         ivf_snapshot_balance,
         maybe_refit_ivf_snapshot,
-        search_ivf_snapshot,
         write_ivf_snapshot,
     )
 
@@ -626,6 +586,7 @@ def test_ivf_snapshot_refit_policy(spark, tmp_path):
     prior = emb.filter(F.col("vec_id") % 10 < 6)
     snap = str(tmp_path / "ivf_refit")
     write_ivf_snapshot(prior, snap, n_cells=16)
+    before = ivf_snapshot_balance(spark, snap).collect()[0]
 
     healthy = maybe_refit_ivf_snapshot(spark, snap, max_balance_ratio=50.0)
     assert healthy["action"] == "none"
@@ -634,35 +595,9 @@ def test_ivf_snapshot_refit_policy(spark, tmp_path):
     out = maybe_refit_ivf_snapshot(spark, snap, max_balance_ratio=1.0)
     assert out["action"] == "refit"
     n_total = prior.count()
-    assert out["n_cells_fitted"] == max(16, min(32768, int(n_total**0.5)))
-
-    after = ivf_snapshot_balance(spark, snap).collect()[0]
-    assert after["n_cells_total"] == out["n_cells_fitted"]
-    assert after["n_vectors"] == n_total
-
-    # exactness survives the swap: full-probe search == numpy cross
-    delta2 = emb.filter(F.col("vec_id") % 10 >= 8)
-    got = {
-        (r["vec_id"], r["rank"]): r["neighbor_id"]
-        for r in search_ivf_snapshot(
-            delta2, snap, k=5, n_probe=out["n_cells_fitted"]
-        ).collect()
-    }
-    rows = prior.select("vec_id", "embedding").collect()
-    pid = np.array([r[0] for r in rows])
-    pm = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    pm /= np.linalg.norm(pm, axis=1, keepdims=True)
-    drows = delta2.select("vec_id", "embedding").collect()
-    did = np.array([r[0] for r in drows])
-    dm = np.array([list(r[1]) for r in drows], dtype=np.float64)
-    dm /= np.linalg.norm(dm, axis=1, keepdims=True)
-    sims = dm @ pm.T
-    expected = {}
-    for i, qid in enumerate(did):
-        order = np.lexsort((pid, -sims[i]))[:5]
-        for rank, j in enumerate(order, 1):
-            expected[(qid, rank)] = pid[j]
-    assert got == expected
+    assert out["n_vectors"] == n_total
+    assert out["target_cells"] == max(16, min(32768, int(n_total**0.5)))
+    assert ivf_snapshot_balance(spark, snap).collect()[0] == before
 
 
 def test_simhash_wide_exactness_and_word0_identity(spark):
@@ -916,26 +851,31 @@ def test_hll_accuracy_and_branches(spark):
 
 def test_countmin_never_underestimates(spark):
     """The CM guarantee: min-over-rows estimates are >= the true count
-    for EVERY value, even when the width is squeezed until cells
-    collide; at generous width the estimates are exact."""
+    for EVERY value, even when there are so many distinct values that
+    cells collide in every row; with few values the estimates are
+    exact."""
     from magicxml_spark.operators.sketches import countmin_estimate, countmin_sketch
 
-    vals = spark.createDataFrame(
-        [(f"t{i % 37}",) for i in range(1000)], "v string"
+    def estimates(vals):
+        exact = {
+            r["v"]: r["c"]
+            for r in vals.groupBy("v").agg(F.count("*").alias("c")).collect()
+        }
+        cands = vals.select("v").distinct()
+        got = countmin_estimate(countmin_sketch(vals, "v"), cands, "v").collect()
+        return [(r["cm_estimate"], exact[r["v"]]) for r in got]
+
+    # 4,000 distinct values over 256 cells per row: ~16 per cell
+    crowded = estimates(
+        spark.createDataFrame([(f"t{i % 4000}",) for i in range(8000)], "v string")
     )
-    exact = {r["v"]: r["c"] for r in vals.groupBy("v").agg(F.count("*").alias("c")).collect()}
-    cands = vals.select("v").distinct()
+    assert any(est > n for est, n in crowded)  # collisions real
+    assert all(est >= n for est, n in crowded)
 
-    tight = countmin_estimate(
-        countmin_sketch(vals, "v", depth=2, width=4), cands, "v", depth=2, width=4
-    ).collect()
-    assert any(r["cm_estimate"] > exact[r["v"]] for r in tight)  # collisions real
-    assert all(r["cm_estimate"] >= exact[r["v"]] for r in tight)
-
-    wide = countmin_estimate(
-        countmin_sketch(vals, "v", depth=4, width=512), cands, "v", depth=4, width=512
-    ).collect()
-    assert all(r["cm_estimate"] == exact[r["v"]] for r in wide)
+    sparse = estimates(
+        spark.createDataFrame([(f"t{i % 37}",) for i in range(1000)], "v string")
+    )
+    assert all(est == n for est, n in sparse)
 
 
 def test_stream_hll_equals_batch(spark):
@@ -984,34 +924,33 @@ def test_stream_hll_equals_batch(spark):
 
 
 def test_bloom_filter_guarantees(spark):
-    """No false negatives ever; false positives appear when m is
-    squeezed and vanish at generous m; the bit table is m-bounded."""
-    from magicxml_spark.operators.sketches import bloom_bits_table, bloom_probe
+    """No false negatives ever; false positives appear when the filter
+    is saturated and vanish when it is sparse; the bit table is
+    BLOOM_M-bounded."""
+    from magicxml_spark.operators.sketches import BLOOM_M, bloom_bits_table, bloom_probe
 
-    members = spark.createDataFrame([(f"m{i}",) for i in range(200)], "v string")
     others = spark.createDataFrame([(f"x{i}",) for i in range(500)], "v string")
-    both = members.unionByName(others)
-
-    # tight filter: 64 bits for 200 members -> saturated, heavy FPs
-    tight_bits = bloom_bits_table(members, "v", k=2, m=64)
-    assert tight_bits.count() <= 64
-    tight = {r["v"]: r["bloom_maybe"] for r in bloom_probe(both, [], "v", tight_bits, k=2, m=64).collect()}
-    assert all(tight[f"m{i}"] for i in range(200))  # never a false negative
-    assert any(tight[f"x{i}"] for i in range(500))  # saturation -> FPs
-
-    # generous filter: FP rate ~ (1-e^-kn/m)^k ~ 1e-4 -> none expected here
-    wide_bits = bloom_bits_table(members, "v", k=4, m=1 << 16)
-    wide = {r["v"]: r["bloom_maybe"] for r in bloom_probe(both, [], "v", wide_bits, k=4, m=1 << 16).collect()}
-    assert all(wide[f"m{i}"] for i in range(200))
-    assert not any(wide[f"x{i}"] for i in range(500))
+    for n_members, saturated in ((50_000, True), (200, False)):
+        members = spark.createDataFrame(
+            [(f"m{i}",) for i in range(n_members)], "v string"
+        )
+        bits = bloom_bits_table(members, "v")
+        assert bits.count() <= BLOOM_M
+        got = {
+            r["v"]: r["bloom_maybe"]
+            for r in bloom_probe(members.unionByName(others), [], "v", bits).collect()
+        }
+        assert all(got[f"m{i}"] for i in range(n_members))  # never a false negative
+        # FP rate ~ (1-e^-kn/m)^k: ~0.8 at 50,000 members, ~1e-8 at 200
+        assert any(got[f"x{i}"] for i in range(500)) == saturated
 
 
 def test_bloom_compiled_probe_matches_join_probe(spark):
     """The compiled-bitmap projection (production shape) must agree
     bit-for-bit with the join spelling on the same filter — every
     member true, identical verdicts on non-members (including any
-    false positives), at both a saturated and a generous m — and its
-    plan must contain no Exchange (pure projection)."""
+    false positives), for both a saturated and a sparse filter — and
+    its plan must contain no Exchange (pure projection)."""
     from magicxml_spark.operators.sketches import (
         bloom_bitmap_hex,
         bloom_bits_table,
@@ -1019,23 +958,25 @@ def test_bloom_compiled_probe_matches_join_probe(spark):
         bloom_probe_compiled,
     )
 
-    members = spark.createDataFrame([(f"m{i}",) for i in range(200)], "v string")
     others = spark.createDataFrame([(f"x{i}",) for i in range(500)], "v string")
-    both = members.unionByName(others)
-    for k, m in ((2, 64), (4, 1 << 16)):
-        bits = bloom_bits_table(members, "v", k=k, m=m)
-        hexmap = bloom_bitmap_hex(bits, m=m)
+    for n_members in (50_000, 200):
+        members = spark.createDataFrame(
+            [(f"m{i}",) for i in range(n_members)], "v string"
+        )
+        both = members.unionByName(others)
+        bits = bloom_bits_table(members, "v")
+        hexmap = bloom_bitmap_hex(bits)
         via_join = {
             r["v"]: r["bloom_maybe"]
-            for r in bloom_probe(both, [], "v", bits, k=k, m=m).collect()
+            for r in bloom_probe(both, [], "v", bits).collect()
         }
-        compiled = bloom_probe_compiled(both, "v", hexmap, k=k, m=m)
+        compiled = bloom_probe_compiled(both, "v", hexmap)
         via_lit = {r["v"]: r["bloom_maybe"] for r in compiled.collect()}
         assert via_lit == via_join
     plan = compiled._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     with pytest.raises(ValueError):
-        bloom_probe_compiled(both, "v", "00ff", k=2, m=64)
+        bloom_probe_compiled(both, "v", "00ff")
 
 
 def test_histogram_quantiles_accuracy(spark):
@@ -1259,41 +1200,6 @@ def test_simhash16_table_matches_column_form(spark):
     assert tbl_form[1] == tbl_form[2] != tbl_form[3]
 
 
-def test_winnow_xxhash64_family(spark):
-    """The fast winnow family: bigint fingerprints, identical plan
-    shape, exact duplicates pair under EITHER family (identical texts
-    have identical fingerprint sets whatever the hash), containment
-    1.0 preserved; unknown family rejected."""
-    import pytest
-
-    from magicxml_spark.operators.dedup import winnow_fingerprint_sets, winnow_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the same exact document body appears twice in this corpus today"),
-            (2, "the same exact document body appears twice in this corpus today"),
-            (3, "a completely different text with no overlap whatsoever in here"),
-        ],
-        "doc_id bigint, text string",
-    )
-    sets_ = winnow_fingerprint_sets(docs, "doc_id", "text", hash_family="xxhash64")
-    assert dict(sets_.dtypes)["fps"] == "array<bigint>"
-    got = {r["id"]: tuple(r["fps"]) for r in sets_.collect()}
-    assert got[1] == got[2] != got[3] and len(got[1]) > 0
-
-    pairs = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in winnow_pairs(
-            docs, "doc_id", "text", min_shared=1, hash_family="xxhash64"
-        ).collect()
-    }
-    assert pairs.get((1, 2)) == 1.0
-    assert not any(3 in p for p in pairs)
-
-    with pytest.raises(ValueError, match="hash_family"):
-        winnow_fingerprint_sets(docs, "doc_id", "text", hash_family="crc9")
-
-
 def test_substring_dedup_scrubs_repeated_spans(spark):
     """Exact substring dedup accounting: a shared 10-word passage keeps
     only its global first occurrence; the later doc loses exactly that
@@ -1368,7 +1274,7 @@ def test_substring_dedup_extreme_ids_and_giant_docs(spark):
     assert gstats[2]["tokens_removed"] == 8
 
 
-def test_embedding_cluster_dedup_semantics(spark):
+def test_embedding_cluster_dedup_semantics(spark, monkeypatch):
     """SemDeDup-class dedup: within-cell near-dups above the threshold
     drop the larger id; sub-threshold and cross-cell survivors keep;
     exact duplicates are NEVER missed (the oracle-gated invariant)."""
@@ -1392,10 +1298,13 @@ def test_embedding_cluster_dedup_semantics(spark):
         (11, unit(0.01, 1.0, 0.02)),    # near-dup of 10 -> dropped
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    import magicxml_spark.operators.similarity as sim_mod
+
+    monkeypatch.setattr(sim_mod, "auto_n_cells", lambda n_rows: 2)
     out = {
         r["id"]: r
         for r in embedding_cluster_dedup(
-            df, "vec_id", "embedding", threshold=0.95, n_cells=2, block_rows=2
+            df, "vec_id", "embedding", threshold=0.95, block_rows=2
         ).collect()
     }
     assert len(out) == 5  # one row per input id
@@ -1410,11 +1319,10 @@ def test_embedding_cluster_dedup_semantics(spark):
     # query block) — already asserted by the keep sets above
 
 
-def test_embedding_cluster_dedup_auto_cells_and_snapshot_centroids(spark):
-    """n_cells=None derives ~sqrt(n) cells (shared auto_n_cells rule);
-    precomputed centroids skip the KMeans fit and give the same keep
-    semantics — nearest-centroid assignment is still a pure function of
-    the vector, so exact dups still never escape."""
+def test_embedding_cluster_dedup_auto_cells(spark):
+    """The cell count is ~sqrt(n) (the auto_n_cells rule shared with
+    the IVF dispatch), and exact dups never escape at the floor of 16
+    cells on 5 rows."""
     import math
 
     from magicxml_spark.operators.similarity import (
@@ -1433,22 +1341,10 @@ def test_embedding_cluster_dedup_auto_cells_and_snapshot_centroids(spark):
     rows = [
         (1, unit(1.0, 0.01, 0.0)),
         (2, unit(1.0, 0.01, 0.0)),      # exact dup of 1 -> dropped
-        (3, unit(1.0, 0.5, 0.0)),       # sim ~0.9 < 0.95 -> kept
+        (3, unit(1.0, 0.5, 0.0)),
         (10, unit(0.0, 1.0, 0.02)),
-        (11, unit(0.01, 1.0, 0.02)),    # near-dup of 10 -> dropped
+        (11, unit(0.01, 1.0, 0.02)),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = [unit(1.0, 0.2, 0.0), unit(0.0, 1.0, 0.0)]
-    out = {
-        r["id"]: r
-        for r in embedding_cluster_dedup(
-            df, "vec_id", "embedding", threshold=0.95, block_rows=2,
-            centroids=cents,
-        ).collect()
-    }
-    assert {i for i, r in out.items() if r["keep"] == 1} == {1, 3, 10}
-    assert {i for i, r in out.items() if r["keep"] == 0} == {2, 11}
-    assert out[1]["cell"] == 0 and out[10]["cell"] == 1
-    # auto arm still runs end-to-end (floored at 16 cells on 5 rows)
     auto = embedding_cluster_dedup(df, "vec_id", "embedding", threshold=0.95)
     assert {r["id"]: r["keep"] for r in auto.collect()}[2] == 0

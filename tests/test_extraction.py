@@ -193,13 +193,3 @@ def test_justext_per_language_stopword_lists_flip_verdict(spark):
         for r in justext_boilerplate(both, lang_col="lang").collect()
     }
     assert out == {1: 1, 2: 1}
-
-
-def test_justext_stopwords_lang_col_validation(spark):
-    from magicxml_spark.operators.extraction import justext_boilerplate
-
-    df = spark.createDataFrame([(1, "x", "en")], "doc_id long, text string, lang string")
-    with pytest.raises(ValueError):
-        justext_boilerplate(df, stopwords={"en": ["the"]})  # dict, no lang_col
-    with pytest.raises(ValueError):
-        justext_boilerplate(df, stopwords=["the"], lang_col="lang")

@@ -213,7 +213,7 @@ def test_margin_score_semantics(spark):
 def test_min_score_threshold_maps_to_und(spark):
     # The CCNet-class gate: sub-threshold rows become 'und' while the
     # evidence columns keep their values (auditable gate decisions)
-    from magicxml_spark.operators.langid import lang_id
+    from magicxml_spark.operators.langid import lang_id, with_lang
 
     rows = [
         (0, "the cat sat on the mat and it was the best of the day"),
@@ -222,9 +222,9 @@ def test_min_score_threshold_maps_to_und(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     plain = {r["doc_id"]: r for r in lang_id(df).collect()}
-    gated = {r["doc_id"]: r for r in lang_id(df, min_score=0.05).collect()}
+    gated = {r["doc_id"]: r for r in with_lang(df, min_score=0.05).collect()}
     assert plain[1]["lang"] == "de" and gated[1]["lang"] == "und"
-    assert gated[1]["margin"] == plain[1]["margin"]  # evidence survives
+    assert gated[1]["lang_margin"] == plain[1]["margin"]  # evidence survives
     assert gated[0]["lang"] == "en" and gated[2]["lang"] == "ko"
     # the pinned GATE-DECISION DIFF: exactly doc 1 flips
     flips = {i for i in plain if plain[i]["lang"] != gated[i]["lang"]}
@@ -236,7 +236,7 @@ def test_min_score_cross_engine(spark):
     # generated CTEs)
     import duckdb
 
-    from magicxml_spark.operators.langid import lang_id, langid_duckdb_ctes
+    from magicxml_spark.operators.langid import langid_duckdb_ctes, with_lang
 
     rows = [
         (0, "the cat sat on the mat and it was the best of the day"),
@@ -247,8 +247,8 @@ def test_min_score_cross_engine(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
-        r["doc_id"]: (r["lang"], r["margin"], r["score"])
-        for r in lang_id(df, min_score=0.05).collect()
+        r["doc_id"]: (r["lang"], r["lang_margin"], r["lang_score"])
+        for r in with_lang(df, min_score=0.05).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
@@ -284,9 +284,3 @@ def test_lang_id_paragraphs_mixed_document(spark):
     assert paras[0] == ("en", "latin")
     assert paras[1] == ("ru", "cyrillic")
     assert paras[2] == ("en", "latin")
-    # threshold knob passes through
-    gated = {
-        r["pos"]: r["lang"]
-        for r in lang_id_paragraphs(df, min_score=0.99).collect()
-    }
-    assert set(gated.values()) == {"und"}  # nothing is 99%-margin pure

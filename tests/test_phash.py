@@ -87,7 +87,7 @@ def test_image_near_dup_pairs_end_to_end(spark, tmp_path):
     (tmp_path / "c_far.png").write_bytes(_png(far))
     (tmp_path / "d_junk.png").write_bytes(b"corrupt")
     pairs = image_near_dup_pairs(
-        read_binary(spark, str(tmp_path), "*.png"), max_hamming=7
+        read_binary(spark, str(tmp_path / "*.png")), max_hamming=7
     ).collect()
     names = {
         tuple(sorted((r["id_a"].rsplit("/", 1)[-1], r["id_b"].rsplit("/", 1)[-1])))
@@ -151,7 +151,7 @@ def test_video_near_dup_composition(spark, tmp_path):
     (tmp_path / "clip.avi").write_bytes(encode_mjpeg_avi(clip, w, h))
     (tmp_path / "other.avi").write_bytes(encode_mjpeg_avi(other, w, h))
 
-    vids = read_binary(spark, str(tmp_path), "*.avi")
+    vids = read_binary(spark, str(tmp_path / "*.avi"))
     # frame extraction: right counts, decodable hashes
     per = video_phash_frames(vids).groupBy("id").count().collect()
     counts = {r["id"].rsplit("/", 1)[-1]: r["count"] for r in per}

@@ -45,23 +45,6 @@ def test_asof_join_backward_semantics(spark):
     assert out == {1: "b", 2: "a", 3: None, 4: None}
 
 
-def test_asof_join_tie_break_deterministic(spark):
-    left = spark.createDataFrame(
-        [(1, 10, _ts("2024-01-05T00:00:00"))], "id long, k long, ts timestamp"
-    )
-    right = spark.createDataFrame(
-        [
-            (10, _ts("2024-01-02T00:00:00"), 1, "low"),
-            (10, _ts("2024-01-02T00:00:00"), 7, "high"),
-        ],
-        "rk long, rts timestamp, seq long, v string",
-    )
-    out = asof_join_backward(
-        left, right, "k", "rk", "ts", "rts", payload=["v"], tie_break="seq"
-    ).collect()
-    assert out[0]["v"] == "high"  # highest tie_break wins (last in order)
-
-
 def test_pii_detection_and_redaction(spark):
     df = spark.createDataFrame(
         [
@@ -112,40 +95,6 @@ def test_contamination_check_small(spark):
     assert out[100]["n_shared_pairs"] == 1
 
 
-def test_contamination_stop_gram_cap_drops_hot_grams(spark):
-    """max_doc_freq is the stop-gram guard: a gram present in more than
-    that many corpus docs is excluded from the overlap join entirely,
-    while rarer grams still report."""
-    hot = "common boilerplate phrase"
-    corpus = spark.createDataFrame(
-        [(1, hot), (2, hot), (3, hot), (4, "rare specific wording")],
-        "doc_id long, text string",
-    )
-    eval_set = spark.createDataFrame(
-        [(100, hot), (101, "rare specific wording")],
-        "doc_id long, text string",
-    )
-    # uncapped: the hot gram reports against all 3 corpus docs
-    base = {
-        r["eval_doc_id"]: r for r in contamination_check(corpus, eval_set).collect()
-    }
-    assert base[100]["n_contaminating_docs"] == 3
-    assert base[101]["n_contaminating_docs"] == 1
-    # cap 2: the hot gram (df=3) is dropped; the rare gram (df=1) stays
-    capped = {
-        r["eval_doc_id"]: r
-        for r in contamination_check(corpus, eval_set, max_doc_freq=2).collect()
-    }
-    assert set(capped) == {101}
-    assert capped[101]["n_contaminating_docs"] == 1
-    # cap at exactly the hot gram's df keeps it (strictly-greater drop)
-    at_df = {
-        r["eval_doc_id"]: r
-        for r in contamination_check(corpus, eval_set, max_doc_freq=3).collect()
-    }
-    assert at_df[100]["n_contaminating_docs"] == 3
-
-
 def test_stratified_sample_deterministic_and_bounded(spark):
     df = spark.createDataFrame(
         [(i, "en" if i % 2 else "de") for i in range(100)], "id long, lang string"
@@ -176,16 +125,17 @@ def test_hash_split_fractions_and_stability(spark):
 def test_asof_join_fuzz_vs_bruteforce(spark):
     """Seeded fuzz: asof_join_backward vs a Python brute force over
     random keys/timestamps with deliberate collisions (same-ts left and
-    right rows, duplicate right timestamps, keys on one side only)."""
+    right rows, keys on one side only). Right timestamps are unique per
+    key: the latest right row must be well-defined."""
     import random
 
     rng = random.Random(7)
     left = [
         (i, rng.randrange(0, 8), rng.randrange(0, 50)) for i in range(300)
     ]  # (id, key, t)
+    right_keys = {(rng.randrange(0, 10), rng.randrange(0, 50)) for _ in range(200)}
     right = [
-        (j, rng.randrange(0, 10), rng.randrange(0, 50), f"p{j}")
-        for j in range(200)
+        (j, k, t, f"p{j}") for j, (k, t) in enumerate(sorted(right_keys))
     ]  # (rid, key, t, payload)
 
     ldf = spark.createDataFrame(left, "id long, k long, t long")
@@ -193,13 +143,13 @@ def test_asof_join_fuzz_vs_bruteforce(spark):
     got = {
         r["id"]: r["v"]
         for r in asof_join_backward(
-            ldf, rdf, "k", "rk", "t", "rt", payload=["v"], tie_break="rid"
+            ldf, rdf, "k", "rk", "t", "rt", payload=["v"]
         ).collect()
     }
 
     for i, k, t in left:
         cands = [(rt, rid, v) for rid, rk, rt, v in right if rk == k and rt <= t]
-        want = max(cands)[2] if cands else None  # latest ts, then max rid
+        want = max(cands)[2] if cands else None  # latest ts
         assert got[i] == want, (i, k, t, got[i], want)
 
 
@@ -221,12 +171,10 @@ def test_pack_shards_matches_global_prefix_and_partition_independent(spark):
     for i, w in sorted(rows):
         assert got[i] == acc // 250, (i, got[i], acc)
         acc += w
-    # same result at a different partition count
+    # same result from a different input partitioning
     got4 = {
         r["id"]: r["shard"]
-        for r in pack_shards(
-            df.repartition(3), "id", "w", budget=250.0, n_range_partitions=4
-        ).collect()
+        for r in pack_shards(df.repartition(3), "id", "w", budget=250.0).collect()
     }
     assert got4 == got
 
@@ -366,11 +314,11 @@ def test_chunk_text_reconstruction_property(spark):
         assert rebuilt == words, doc_id
 
 
-def test_decontaminate_removes_leaky_docs_and_respects_stop_grams(spark):
+def test_decontaminate_removes_leaky_docs(spark):
     """Corpus docs sharing >= min_shared_ngrams distinct k-grams with
-    the eval set are dropped; below the threshold they survive; with
-    max_doc_freq a boilerplate gram present in every corpus doc stops
-    counting toward contamination."""
+    the eval set are dropped; below the threshold they survive; a
+    boilerplate gram shared with the eval set flags every doc that
+    carries it."""
     from magicxml_spark.operators.dedup import decontaminate
 
     eval_set = spark.createDataFrame(
@@ -399,8 +347,6 @@ def test_decontaminate_removes_leaky_docs_and_respects_stop_grams(spark):
     }
     assert kept1 == {2}
 
-    # stop-gram arm: a gram in EVERY corpus doc is dropped before the
-    # join, so it cannot flag anything
     boiler = spark.createDataFrame(
         [(i, f"shared footer boilerplate plus unique{i} words") for i in range(4)],
         "doc_id bigint, text string",
@@ -408,14 +354,6 @@ def test_decontaminate_removes_leaky_docs_and_respects_stop_grams(spark):
     ev2 = spark.createDataFrame(
         [(200, "shared footer boilerplate elsewhere")], "doc_id bigint, text string"
     )
-    kept_all = {
-        r["doc_id"]
-        for r in decontaminate(
-            boiler, ev2, min_shared_ngrams=1, max_doc_freq=2
-        ).collect()
-    }
-    assert kept_all == {0, 1, 2, 3}
-    # without the stop-gram cap the shared boilerplate gram flags all
     assert decontaminate(boiler, ev2, min_shared_ngrams=1).count() == 0
 
 
@@ -493,10 +431,10 @@ def test_minhash_band_signature_array_matches_per_band(spark):
         ["doc_id", "text"],
     )
     sh = word_shingles(F.col("text"), 3)
-    n_bands = 6  # crosses a digest-group boundary (bands 4-5 salted)
+    n_bands = 4
     rows = docs.select(
         "doc_id",
-        minhash_band_signature_array(sh, n_bands).alias("fused"),
+        minhash_band_signature_array(sh).alias("fused"),
         *[minhash_band_signature(sh, b).alias(f"b{b}") for b in range(n_bands)],
     ).collect()
     for r in rows:
@@ -507,41 +445,9 @@ def test_minhash_band_signature_array_matches_per_band(spark):
     assert all(v is None for v in empty["fused"]) or len(empty["fused"]) == n_bands
 
 
-def test_mixture_weights_explicit_target(spark):
-    """Dict-target arm: shares normalize over present groups, missing
-    groups get weight 0, and weights invert the token imbalance."""
-    from magicxml_spark.operators.sampling import mixture_weights
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g h", "web"),      # 8 tokens
-            (2, "a b", "web"),                   # 2 tokens -> web 10
-            (3, "x y z w v", "books"),           # books 5
-            (4, "q r s t u", "forums"),          # forums 5
-        ],
-        "doc_id bigint, text string, source string",
-    )
-    out = {
-        r["source"]: r
-        for r in mixture_weights(
-            docs, "source", "text", target={"web": 1.0, "books": 3.0}
-        ).collect()
-    }
-    # normalized targets: web 0.25, books 0.75, forums 0 (absent from dict)
-    assert out["web"]["target_share"] == 0.25
-    assert out["books"]["target_share"] == 0.75
-    assert out["forums"]["weight"] == 0.0
-    # actual shares over 20 tokens: web 0.5, books 0.25
-    assert out["web"]["actual_share"] == 0.5
-    assert out["web"]["weight"] == 0.5       # downsample web
-    assert out["books"]["weight"] == 3.0     # upsample books
-    assert out["web"]["n_docs"] == 2 and out["web"]["n_tokens"] == 10
-
-
 def test_mixture_weights_degenerate_inputs(spark):
     """ANSI mode makes x/0 fatal, so the guards matter: a zero-token
-    source gets weight 0; a target dict naming no present group yields
-    all-zero shares; neither aborts the job."""
+    source gets weight 0 and does not abort the job."""
     from magicxml_spark.operators.sampling import mixture_weights
 
     docs = spark.createDataFrame(
@@ -552,14 +458,7 @@ def test_mixture_weights_degenerate_inputs(spark):
     assert out["empty"]["n_tokens"] == 0
     assert out["empty"]["actual_share"] == 0.0 and out["empty"]["weight"] == 0.0
     assert out["full"]["actual_share"] == 1.0
-
-    absent = {
-        r["source"]: r
-        for r in mixture_weights(
-            docs, "source", "text", target={"nonexistent": 1.0}
-        ).collect()
-    }
-    assert all(r["target_share"] == 0.0 and r["weight"] == 0.0 for r in absent.values())
+    assert out["full"]["target_share"] == 0.5 and out["full"]["weight"] == 0.5
 
 
 def test_pack_sequences_hand_computed(spark):

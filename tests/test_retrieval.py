@@ -153,8 +153,9 @@ def test_bm25_index_query_equals_direct_and_append_rebuild(spark, tmp_path):
     a = mk(0, 60)
     terms = ["w2", "w9"]
     inc = str(tmp_path / "inc")
-    stats = write_bm25_index(_docs(spark, a), inc, count_postings=True)
-    assert stats["n_docs"] == 60 and stats["n_postings"] > 0
+    stats = write_bm25_index(_docs(spark, a), inc)
+    assert stats["n_docs"] == 60
+    assert spark.read.parquet(str(tmp_path / "inc" / "postings")).count() > 0
     # direct == index on the initial corpus
     direct = {
         r["doc_id"]: (r["n_hits"], r["score"])

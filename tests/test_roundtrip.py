@@ -100,29 +100,6 @@ def test_yml_sink_escapes_are_wellformed(spark, csv_df, tmp_path_factory):
     assert "Отличный & <надёжный>" in descs
 
 
-def test_yml_header_escapes_metadata(spark, csv_df, tmp_path_factory):
-    """shop_name/company/url/date with XML-special chars must produce a
-    well-formed document (ADVICE r1: the reference escaped via
-    ElementTree; raw interpolation broke on '&')."""
-    import xml.etree.ElementTree as ET
-
-    out = str(tmp_path_factory.mktemp("esc") / "esc.xml")
-    write_yml_catalog(
-        csv_df,
-        out,
-        shop_name="Bits & <Bobs>",
-        company='A"B & C',
-        url="https://e.invalid/?a=1&b=2",
-        date='2024-01-01 00:00" <',
-    )
-    root = ET.parse(out).getroot()
-    shop = root.find("shop")
-    assert shop.findtext("name") == "Bits & <Bobs>"
-    assert shop.findtext("company") == 'A"B & C'
-    assert shop.findtext("url") == "https://e.invalid/?a=1&b=2"
-    assert root.get("date") == '2024-01-01 00:00" <'
-
-
 def test_yml_header_streams_degenerate_category_set(spark, tmp_path_factory, monkeypatch):
     """A catalog whose category_path is unique per row (categories ~
     rows) must stream the header through toLocalIterator — no full

@@ -10,14 +10,13 @@ bound."""
 from __future__ import annotations
 
 import csv
-import functools
 import os
 import time
 
 import pytest
 
 from magicxml_spark.sources.schema_registry import INGEST_CACHE, content_key
-from magicxml_spark.sources.xml_source import read_categories, read_xml_records
+from magicxml_spark.sources.xml_source import read_categories
 
 OFFER_DOC = """<?xml version='1.0' encoding='utf-8'?>
 <yml_catalog date="2024-01-01"><shop>
@@ -49,6 +48,7 @@ def test_schema_drift_falls_back_to_discovery(spark, tmp_path, monkeypatch):
     same bytes do at a new path — whether the tag shows in the head
     sample or only past it."""
     from magicxml_spark.plans import convert
+    from magicxml_spark.sources import xml_source
 
     vendor = "<vendor>ACME</vendor>"
     grown = {
@@ -59,9 +59,7 @@ def test_schema_drift_falls_back_to_discovery(spark, tmp_path, monkeypatch):
     # the second offer's <vendor>
     head = grown["head"]
     sample = len(head[: head.index('<offer id="11"')].encode())
-    monkeypatch.setattr(
-        convert, "read_xml_records", functools.partial(read_xml_records, sample_bytes=sample)
-    )
+    monkeypatch.setattr(xml_source, "HEAD_SAMPLE_BYTES", sample)
     for case, doc in grown.items():
         path = _write(tmp_path, OFFER_DOC, f"{case}.xml")
         convert.xml_to_csv(spark, path, str(tmp_path / f"{case}_before.csv"))

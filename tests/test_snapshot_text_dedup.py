@@ -121,7 +121,7 @@ def test_span_snapshot_incremental_equals_rebuild(spark, tmp_path):
     snap = str(tmp_path / "ssnap")
     write_span_snapshot(prior, snap)
     inc = _srows(span_dedup_against_snapshot(delta, snap))
-    rebuild = _srows(c4_span_dedup(prior.unionAll(delta), "doc_id", "text"))
+    rebuild = _srows(c4_span_dedup(prior.unionAll(delta)))
     rebuild_delta = {k: v for k, v in rebuild.items() if k >= 10}
     assert inc == rebuild_delta
     # the prior-seen-ONCE kill: doc 10 loses everything even though

@@ -20,6 +20,18 @@ def test_stream_sessionize_equals_batch(spark):
     assert stream == batch and len(stream) > 0
 
 
+def test_stream_drains_leave_the_catalog_unchanged(spark):
+    """A memory-sink drain registers a temp view that would hold its rows
+    on the driver for the rest of the session; the returned frame keeps
+    the rows after the view is gone."""
+    from magicxml_spark.streaming.events import run_stream_to_memory
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    runs = [sorted(run_stream_to_memory(spark, SF_SMOKE).collect()) for _ in range(3)]
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert runs[0] and runs[0] == runs[1] == runs[2]
+
+
 def test_stream_dedup_equals_batch_distinct(spark):
     """dropDuplicatesWithinWatermark over the events feed must emit
     exactly the batch DISTINCT key set."""
@@ -194,11 +206,12 @@ def test_stream_dedup_state_evicts_past_watermark(spark, tmp_path):
 
     feed = str(tmp_path / "evict")
     schema = "ts timestamp, user_id bigint"
+    day = 86_400  # the watermark is 24 hours
     batches = [
         [(ts(0), 1), (ts(5), 1)],   # in-horizon repeat -> one emission
-        [(ts(10_000), 2)],          # watermark jumps to ~9_940
-        [(ts(20_000), 3)],          # watermark ~19_940; key 1+2 evicted at end
-        [(ts(30_000), 1)],          # key 1 again, state long gone -> re-emitted
+        [(ts(10 * day), 2)],        # watermark jumps to day 9
+        [(ts(20 * day), 3)],        # watermark day 19; key 1+2 evicted at end
+        [(ts(30 * day), 1)],        # key 1 again, state long gone -> re-emitted
     ]
     import time
 
@@ -215,9 +228,7 @@ def test_stream_dedup_state_evicts_past_watermark(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(os.path.join(feed, "*"))
         )
-        out = dedup_stream_within_watermark(
-            stream, ["user_id"], ts_col="ts", watermark="60 seconds"
-        )
+        out = dedup_stream_within_watermark(stream, ["user_id"], ts_col="ts")
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -267,15 +278,16 @@ def test_stream_minhash_bucket_state_evicts_past_watermark(spark, tmp_path):
     feed = str(tmp_path / "mh_evict")
     schema = "doc_id bigint, text string"
     dup_text = "the same boilerplate paragraph appears in many documents"
+    gap = 100 * 86_400  # well past the 30-day watermark
     batches = [
         # ingest_ts = doc_id seconds
         [(0, dup_text), (1, dup_text)],          # bucket {0,1}, pairs (0,1)
-        [(1000, "entirely different filler words advance the clock")],
-        # watermark now ~990s > bucket timeout (~1s): idle bucket fires
-        # hasTimedOut during THIS batch (no new data for it) -> removed
-        [(2000, "another unrelated document moves time forward again")],
+        [(gap, "entirely different filler words advance the clock")],
+        # watermark now ~70 days > bucket timeout (~1s): idle bucket
+        # fires hasTimedOut during THIS batch (no new data) -> removed
+        [(2 * gap, "another unrelated document moves time forward again")],
         # same signature as docs 0/1, but their bucket is long gone:
-        [(3000, dup_text)],
+        [(3 * gap, dup_text)],
     ]
     for i, rows in enumerate(batches):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
@@ -292,7 +304,7 @@ def test_stream_minhash_bucket_state_evicts_past_watermark(spark, tmp_path):
             .withColumn("ingest_ts", F.timestamp_seconds(F.col("doc_id") + 1))
         )
         q = (
-            minhash_pairs_stateful(stream, watermark="10 seconds")
+            minhash_pairs_stateful(stream)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
@@ -315,10 +327,10 @@ def test_stream_minhash_bucket_state_evicts_past_watermark(spark, tmp_path):
     assert max(state_rows) >= 4 and state_rows[-1] < max(state_rows), state_rows
 
     got = Counter((r["id_a"], r["id_b"]) for r in spark.table(name).collect())
-    # only the in-horizon pair (0,1) x n_bands; doc 3000 pairs with
+    # only the in-horizon pair (0,1) x n_bands; doc 3 * gap pairs with
     # NOTHING because the matching bucket was evicted before it arrived
     assert set(got) == {(0, 1)}, got
-    assert all(b != 3000 and a != 3000 for a, b in got)
+    assert all(b != 3 * gap and a != 3 * gap for a, b in got)
 
 
 def test_stream_simhash_wide_pairs_incremental_across_batches(spark, tmp_path):
@@ -434,13 +446,13 @@ def test_stream_minhash_state_eviction_under_churn(spark, tmp_path):
 
     feed = str(tmp_path / "mh_churn")
     schema = "doc_id bigint, text string"
-    # 4 waves, 1000 s apart (watermark 10 s): each wave writes TWO docs
+    # 4 waves, 100 days apart (watermark 30 days): each wave writes TWO docs
     # with a wave-unique duplicated text (one bucket per band, pairs
     # within the wave) — by the time wave k+1 arrives, wave k's buckets
     # are idle past the horizon and must time out.
     n_waves = 4
     for wave in range(n_waves):
-        base = wave * 1000
+        base = wave * 100 * 86_400
         # every token is wave-unique: no shared shingles, so no two
         # waves can ever collide on a (band, signature) bucket key —
         # the removed/remaining arithmetic below is then exact
@@ -460,7 +472,7 @@ def test_stream_minhash_state_eviction_under_churn(spark, tmp_path):
             .withColumn("ingest_ts", F.timestamp_seconds(F.col("doc_id") + 1))
         )
         q = (
-            minhash_pairs_stateful(stream, watermark="10 seconds")
+            minhash_pairs_stateful(stream)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
@@ -493,7 +505,9 @@ def test_stream_minhash_state_eviction_under_churn(spark, tmp_path):
     # pairs stay within-wave: each wave emits its own (base, base+1)
     # pair once per band, and never pairs across waves
     got = {(r["id_a"], r["id_b"]) for r in spark.table(name).collect()}
-    assert got == {(w * 1000, w * 1000 + 1) for w in range(n_waves)}, got
+    assert got == {
+        (w * 100 * 86_400, w * 100 * 86_400 + 1) for w in range(n_waves)
+    }, got
 
 
 def test_stream_simhash_wide_state_eviction_under_churn(spark, tmp_path):
@@ -513,7 +527,7 @@ def test_stream_simhash_wide_state_eviction_under_churn(spark, tmp_path):
     schema = "doc_id bigint, text string"
     n_waves = 3
     for wave in range(n_waves):
-        base = wave * 1000
+        base = wave * 100 * 86_400
         # wave-distinct text: waves land in different slice buckets
         text = " ".join(f"wave{wave}tok{i}" for i in range(12))
         rows = [(base, text), (base + 1, text)]
@@ -531,7 +545,7 @@ def test_stream_simhash_wide_state_eviction_under_churn(spark, tmp_path):
             .withColumn("ingest_ts", F.timestamp_seconds(F.col("doc_id") + 1))
         )
         q = (
-            simhash_wide_pairs_stateful(stream, watermark="10 seconds")
+            simhash_wide_pairs_stateful(stream)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
@@ -559,7 +573,9 @@ def test_stream_simhash_wide_state_eviction_under_churn(spark, tmp_path):
     # identical texts within a wave: hamming 0, pairs once per slice;
     # never across waves (those buckets were evicted)
     got = {(r["id_a"], r["id_b"]) for r in spark.table(name).collect()}
-    assert got == {(w * 1000, w * 1000 + 1) for w in range(n_waves)}, got
+    assert got == {
+        (w * 100 * 86_400, w * 100 * 86_400 + 1) for w in range(n_waves)
+    }, got
 
 
 def test_stream_winnow_cap_freezes_bucket(spark, tmp_path):
@@ -649,7 +665,7 @@ def test_stream_default_bucket_cap_engages(spark, tmp_path):
             .withColumn("ingest_ts", F.timestamp_seconds(F.col("doc_id") + 1))
         )
         q = (
-            minhash_pairs_stateful(stream, n_bands=1)  # DEFAULT cap
+            minhash_pairs_stateful(stream)  # DEFAULT cap
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
@@ -661,17 +677,21 @@ def test_stream_default_bucket_cap_engages(spark, tmp_path):
         shutil.rmtree(_checkpoint_dir(name), ignore_errors=True)
 
     got = spark.table(name).count()
-    assert got == cap * (cap - 1) // 2 + (n - cap) * cap  # capped
-    assert got < n * (n - 1) // 2  # NOT the quadratic multiset
+    # identical docs share one bucket in each of the 4 bands
+    assert got == 4 * (cap * (cap - 1) // 2 + (n - cap) * cap)  # capped
+    assert got < 4 * n * (n - 1) // 2  # NOT the quadratic multiset
 
 
-def test_stream_lm_score_multibatch_equals_batch(spark, tmp_path):
+def test_stream_lm_score_multibatch_equals_batch(spark, tmp_path, monkeypatch):
     # Streaming frozen-LM scoring is a STATELESS per-batch map: split
-    # the crawl half over 3 parquet files, force one file per
-    # micro-batch, and the union of per-batch scores must equal the
+    # the crawl half over 3 parquet files, stream them one file per
+    # micro-batch (the scorer's document stream is swapped for one over
+    # that feed), and the union of per-batch scores must equal the
     # batch scorer on the same documents EXACTLY (and the DuckDB
     # frozen ladder via the registered oracle).
     import os
+
+    import magicxml_spark.streaming.lm as lm_mod
 
     from magicxml_spark.operators.curation import (
         score_with_lm_snapshot,
@@ -694,14 +714,14 @@ def test_stream_lm_score_multibatch_equals_batch(spark, tmp_path):
     assert len([f for f in os.listdir(feed) if f.endswith(".parquet")]) >= 2
 
     out = str(tmp_path / "scores")
-    streamed = run_stream_lm_score(
-        spark,
-        feed,
-        snap,
-        out_dir=out,
-        max_files_per_trigger=1,
-        path_glob="*.parquet",
+    monkeypatch.setattr(
+        lm_mod,
+        "read_documents_stream",
+        lambda spark, sf_dir: spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(sf_dir),
     )
+    streamed = run_stream_lm_score(spark, feed, snap, out_dir=out)
     # multiple micro-batches actually happened
     batch_dirs = [d for d in os.listdir(out) if d.startswith("batch=")]
     assert len(batch_dirs) >= 2

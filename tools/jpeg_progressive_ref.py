@@ -60,7 +60,9 @@ class _ScanEmitter:
                 code, length = enc[ev[1]]
                 w.write(code, length)
             elif ev[0] == "rst":
-                w.restart(ev[1])
+                # byte-align, then RSTn — the marker is raw, not stuffed
+                w.align()
+                w.buf += bytes((0xFF, 0xD0 + (ev[1] & 7)))
             else:
                 w.write(ev[1], ev[2])
 
